@@ -25,6 +25,21 @@ def read_config(path: str) -> dict:
         return yaml.safe_load(fh) or {}
 
 
+def _split_by_catalog(df, keep_id: bool = False) -> tuple[list[str], dict]:
+    """Collect a report frame once and split its rows by ``catalog_id``:
+    ``(columns, {catalog_id: [row tuples]})``, with the ``catalog_id``
+    column dropped unless ``keep_id``."""
+    cols = df.columns
+    at = cols.index("catalog_id")
+    rows: dict[str, list[tuple]] = {}
+    for r in df.collect():
+        t = tuple(r)
+        rows.setdefault(t[at], []).append(
+            t if keep_id else t[:at] + t[at + 1:]
+        )
+    return (cols if keep_id else cols[:at] + cols[at + 1:]), rows
+
+
 def run_etl(
     index: dict,
     output_dir: str,
@@ -37,7 +52,6 @@ def run_etl(
     file_resolver=None,
     interactive: bool = False,
     download_config: dict | None = None,
-    max_parallel_catalogs: int = 1,
     email_config: dict | None = None,
     environment: str = "dev",
     email_dry_run: bool = True,
@@ -45,10 +59,17 @@ def run_etl(
     """Run every catalog in the index; returns per-catalog summaries.
 
     ``index`` shape (reference ``index.yaml``): {catalog_id: {metadata_url|
-    metadata_path, formato}}. Catalogs process independently — the natural
-    fleet-scale unit (the reference loops them sequentially,
-    ``base.py:1111-1116``)."""
-    from series_tiempo_ar_scraping_spark.plans.pipeline import CatalogPipeline
+    metadata_path, formato}}. The reference loops the catalogs one at a
+    time (``base.py:1111-1116``); here each catalog's metadata is read on
+    its own, then every catalog that loaded runs through ONE pipeline
+    pass, so the Spark job count does not grow with the catalog count.
+    A catalog whose metadata fails to load gets its own ``error`` entry
+    (V7 at catalog level); if the shared pass raises, each of its
+    catalogs re-runs alone, so an exception costs only its own entry."""
+    from series_tiempo_ar_scraping_spark.plans.pipeline import (
+        CatalogPipeline,
+        read_catalog,
+    )
     from series_tiempo_ar_scraping_spark.sources.landing import download_to_file
 
     spark = spark or get_spark("etl")
@@ -69,8 +90,8 @@ def run_etl(
             # landing path is namespaced by a hash of the FULL url, not
             # just its basename: two distributions whose urls share a
             # basename (data.csv on different hosts — common on portals)
-            # must not overwrite each other's downloads (and concurrent
-            # catalogs share this landing dir).
+            # must not overwrite each other's downloads (and the
+            # catalogs of one pass share this landing dir).
             import hashlib
 
             bucket = hashlib.md5(ref.encode()).hexdigest()[:12]
@@ -85,95 +106,120 @@ def run_etl(
             except Exception:  # noqa: BLE001 — error channel, not crash
                 return None
 
-    def process_catalog(catalog_id: str, cfg: dict) -> dict:
+    def load_catalog(catalog_id: str, cfg: dict) -> dict:
         path = cfg.get("metadata_path")
         if not path and cfg.get("metadata_url"):
             landing = os.path.join(output_dir, "landing", f"{catalog_id}.json")
             path = download_to_file(
                 cfg["metadata_url"], landing, replace=dl_replace, **dl_kw
             )
+        return read_catalog(spark, path, catalog_id)
+
+    def process_pass(loaded: dict[str, dict]) -> dict[str, dict]:
         pipe = CatalogPipeline(
             spark,
-            catalog_path=path,
-            catalog_id=catalog_id,
-            output_dir=output_dir,
+            loaded,
+            None,
+            output_dir,
             file_resolver=file_resolver,
             host=host,
             distribution_id_filter=distribution_id_filter,
             replace=replace,
         )
         if metadata_only:
+            # EP2 — per-catalog counts from one grouped count
+            from pyspark.sql import functions as F
+
             frames = pipe.plan()
-            return {
-                "datasets": frames["datasets"].count(),
-                "distributions": frames["distributions"].count(),
-            }
+            counts = {cid: {"datasets": 0, "distributions": 0} for cid in loaded}
+            kinds = frames["datasets"].select(
+                "catalog_id", F.lit("datasets").alias("kind")
+            ).unionByName(
+                frames["distributions"].select(
+                    "catalog_id", F.lit("distributions").alias("kind")
+                )
+            )
+            for r in kinds.groupBy("catalog_id", "kind").count().collect():
+                counts[r.catalog_id][r.kind] = r["count"]
+            return counts
         res = pipe.run(write_csvs=True)
-        ind = res.indicators.collect()[0].asDict() if res.indicators is not None else {}
+        # Every report frame below is collected once for the whole pass
+        # and split by catalog_id in Python.
+        indicators: dict = {}
+        if res.indicators is not None:
+            ind_cols, ind_rows = _split_by_catalog(res.indicators)
+            indicators = {
+                cid: dict(zip(ind_cols, rows[0]))
+                for cid, rows in ind_rows.items()
+            }
         # K4/K5 — per-catalog report workbooks next to the outputs
         # (reporte-datasets / reporte-distributions, base.py:679-703)
-        from series_tiempo_ar_scraping_spark.sinks.reports import (
-            write_report_xlsx,
-        )
-
-        report_dir = os.path.join(output_dir, "reports", catalog_id)
-        # K5 — metadata validation errors export (the reference's
+        # and the metadata validation errors export (the reference's
         # validate_catalog(only_errors, export_path), base.py:434-441).
-        # Collected exactly once: the same rows feed the xlsx export and
-        # the validation-email error count (small by V1-V3 contract —
-        # one row per metadata rule violation).
-        from series_tiempo_ar_scraping_spark.sources.xlsx import write_xlsx
-
-        meta_err_cols = res.metadata_errors.columns
-        meta_err_rows = [tuple(r) for r in res.metadata_errors.collect()]
-        # keyed by workbook name (the STAGE_ATTACHMENTS manifest
-        # vocabulary), not list position — consumers must never depend
-        # on append order (ADVICE r8)
-        report_files = {
-            "reporte-datasets": write_report_xlsx(
-                res.dataset_report, report_dir, "reporte-datasets"
-            ),
-            "reporte-errores-metadata": write_xlsx(
-                os.path.join(report_dir, "reporte-errores-metadata.xlsx"),
-                {"reporte-errores-metadata": (meta_err_cols, meta_err_rows)},
+        # The metadata-error rows also feed the validation-email error
+        # count (small by V1-V3 contract — one row per rule violation);
+        # that workbook keeps its own catalog_id column.
+        reports = {
+            "reporte-datasets": _split_by_catalog(res.dataset_report),
+            "reporte-errores-metadata": _split_by_catalog(
+                res.metadata_errors, keep_id=True
             ),
         }
         if res.distribution_report is not None:
-            report_files["reporte-distributions"] = write_report_xlsx(
-                res.distribution_report, report_dir, "reporte-distributions"
+            reports["reporte-distributions"] = _split_by_catalog(
+                res.distribution_report
             )
         # EP1 — declarative data contracts over the run's OWN produced
-        # frames (operators/expectations.py): scraped observations must
-        # carry routing ids + a time index, the dataset-status enum
-        # stays closed. Violations export through the same K4 channel
-        # as the other report workbooks and ride the stage emails;
-        # collected once (<= |contracts| rows) for both the export and
-        # the summary count.
+        # frames (operators/expectations.py), per catalog: scraped
+        # observations must carry routing ids + a time index, the
+        # dataset-status enum stays closed. Violations export through
+        # the same K4 channel as the other report workbooks and ride
+        # the stage emails.
         from series_tiempo_ar_scraping_spark.operators.expectations import (
             pipeline_contract_report,
         )
 
-        contracts = pipeline_contract_report(
-            res.observations, res.dataset_report
+        reports["reporte-expectations"] = _split_by_catalog(
+            pipeline_contract_report(
+                res.observations, res.dataset_report, by=["catalog_id"]
+            )
         )
-        contract_violations = 0
-        if contracts is not None:
-            c_cols = contracts.columns
-            c_rows = [tuple(r) for r in contracts.collect()]
-            contract_violations = sum(
-                r[c_cols.index("n_violations")] for r in c_rows
-            )
-            report_files["reporte-expectations"] = write_xlsx(
-                os.path.join(report_dir, "reporte-expectations.xlsx"),
-                {"reporte-expectations": (c_cols, c_rows)},
-            )
-        return {
-            "indicators": ind,
-            "written": len(res.written_files),
-            "reports": report_files,
-            "metadata_error_count": len(meta_err_rows),
-            "contract_violations": contract_violations,
-        }
+
+        from series_tiempo_ar_scraping_spark.sinks.reports import (
+            write_report_xlsx,
+        )
+
+        out: dict[str, dict] = {}
+        for cid in loaded:
+            report_dir = os.path.join(output_dir, "reports", cid)
+            # keyed by workbook name (the STAGE_ATTACHMENTS manifest
+            # vocabulary), not list position — consumers must never
+            # depend on append order (ADVICE r8). A catalog without
+            # time-series distributions has no distribution report.
+            report_files = {
+                name: write_report_xlsx(
+                    (cols, rows.get(cid, [])), report_dir, name
+                )
+                for name, (cols, rows) in reports.items()
+                if name != "reporte-distributions" or cid in rows
+            }
+            c_cols, c_rows = reports["reporte-expectations"]
+            at = c_cols.index("n_violations")
+            prefix = os.path.join(output_dir, "catalog", cid) + os.sep
+            out[cid] = {
+                "indicators": indicators.get(cid, {}),
+                "written": sum(
+                    1 for p in res.written_files if p.startswith(prefix)
+                ),
+                "reports": report_files,
+                "metadata_error_count": len(
+                    reports["reporte-errores-metadata"][1].get(cid, [])
+                ),
+                "contract_violations": sum(
+                    r[at] for r in c_rows.get(cid, [])
+                ),
+            }
+        return out
 
     entries = [
         (catalog_id, cfg)
@@ -185,36 +231,36 @@ def run_etl(
         and not (catalog_id_filter and catalog_id != catalog_id_filter)
     ]
     results: dict = {}
-    if max_parallel_catalogs > 1 and len(entries) > 1:
-        # Catalogs are independent (own output subtrees, own landing
-        # files) and a SparkSession schedules jobs from many threads
-        # concurrently — the reference's sequential `for child in
-        # self.childs` (base.py:1111-1116) becomes a thread pool. Driver
-        # threads only orchestrate; the cluster interleaves the jobs.
-        from concurrent.futures import ThreadPoolExecutor
+    loaded: dict[str, dict] = {}
+    for cid, cfg in entries:
+        try:
+            loaded[cid] = load_catalog(cid, cfg)
+        except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
+            results[cid] = {"error": repr(exc)}
 
-        with ThreadPoolExecutor(max_workers=max_parallel_catalogs) as ex:
-            futures = {
-                cid: ex.submit(process_catalog, cid, cfg)
-                for cid, cfg in entries
-            }
-        for cid, fut in futures.items():
-            try:
-                results[cid] = fut.result()
-            except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
-                results[cid] = {"error": repr(exc)}
-    else:
-        for cid, cfg in entries:
-            try:
-                results[cid] = process_catalog(cid, cfg)
-            except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
-                results[cid] = {"error": repr(exc)}
+    def run_pass(batch: dict[str, dict]) -> bool:
+        try:
+            results.update(process_pass(batch))
+            return True
+        except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
+            results.update({cid: {"error": repr(exc)} for cid in batch})
+            return False
+
+    if loaded and not run_pass(loaded) and len(loaded) > 1:
+        # one catalog's exception must cost only its own entry
+        logging.getLogger(__name__).warning(
+            "pass over %d catalogs failed (%s); re-running each alone",
+            len(loaded), results[next(iter(loaded))]["error"],
+        )
+        for cid, frames in loaded.items():
+            run_pass({cid: frames})
+    results = {cid: results[cid] for cid, _cfg in entries}
 
     # K6 — per-catalog stage emails (reference base.py:1058-1066 sends
     # validation mail after extraction of every catalog, base.py:1121-1130
     # scraping mail after scraping of every catalog; this engine's
-    # pipeline runs both phases inside process_catalog, so the two stage
-    # batches go out after the catalog loop, preserving the reference's
+    # pass runs both phases for every catalog, so the two stage
+    # batches go out after the pass, preserving the reference's
     # ordering: all 'extraccion' mails, then all 'scraping' mails).
     # Skip-with-warning semantics live in send_group_email; a catalog
     # that failed or ran metadata-only sends nothing.
@@ -292,9 +338,6 @@ def run_custom_steps(output_dir: str, script_path: str,
 @click.option("--interactive/--no-interactive", default=False,
               help="reuse already-landed source files instead of "
                    "re-downloading (reference --interactive)")
-@click.option("--parallel-catalogs", default=1, type=int,
-              help="process up to N catalogs concurrently (independent "
-                   "units; Spark interleaves their jobs)")
 @click.option("--email-config", "email_config_path", default=None,
               help="K6: config_email.yaml path (mailer + per-catalog "
                    "destinatarios per stage); omit to skip emails")
@@ -307,8 +350,7 @@ def run_custom_steps(output_dir: str, script_path: str,
 @click.option("--log-level", default="WARN")
 def cli(config_path, output_dir, replace, catalog_id_filter,
         distribution_id_filter, metadata_only, custom_steps, interactive,
-        parallel_catalogs, email_config_path, environment, send_emails,
-        log_level):
+        email_config_path, environment, send_emails, log_level):
     """Run the catalog ETL (reference ``etl`` entry point)."""
     spark = get_spark("etl-cli")
     spark.sparkContext.setLogLevel(log_level)
@@ -331,7 +373,6 @@ def cli(config_path, output_dir, replace, catalog_id_filter,
         metadata_only=metadata_only,
         interactive=interactive,
         download_config=index.get("download_config"),
-        max_parallel_catalogs=parallel_catalogs,
         email_config=(
             read_config(email_config_path) if email_config_path else None
         ),

@@ -42,14 +42,17 @@ def ok_percentage(reports: DataFrame, status_col: str, ok_value: str = "OK") -> 
 
 
 def catalog_indicators(dataset_reports: DataFrame, distribution_reports: DataFrame) -> DataFrame:
-    """A5 — the 7-metric indicator record (``base.py:1007-1018``):
-    datasets / datasets_ok / datasets_error / distributions /
-    distributions_ok / distributions_error / distributions_percentage.
+    """A5 — the 7-metric indicator record (``base.py:1007-1018``) per
+    ``catalog_id``: datasets / datasets_ok / datasets_error /
+    distributions / distributions_ok / distributions_error /
+    distributions_percentage.
 
-    One aggregation pass per report frame (conditional sums), then a single
-    cross of two 1-row frames — no wide shuffle.
+    One grouped aggregation per report frame (conditional sums), joined
+    on the catalog. A catalog gets a record only when its distribution
+    report has rows; one without datasets reads ``datasets`` 0 and null
+    dataset sums, as an aggregate over an empty frame would.
     """
-    ds = dataset_reports.agg(
+    ds = dataset_reports.groupBy("catalog_id").agg(
         F.count("*").alias("datasets"),
         F.sum(F.when(F.col("dataset_status") == "OK", 1).otherwise(0)).alias(
             "datasets_ok"
@@ -58,7 +61,7 @@ def catalog_indicators(dataset_reports: DataFrame, distribution_reports: DataFra
             "datasets_error"
         ),
     )
-    dist = distribution_reports.agg(
+    dist = distribution_reports.groupBy("catalog_id").agg(
         F.count("*").alias("distributions"),
         F.sum(
             F.when(F.col("distribution_status") == "OK", 1).otherwise(0)
@@ -67,14 +70,20 @@ def catalog_indicators(dataset_reports: DataFrame, distribution_reports: DataFra
             F.when(F.col("distribution_status") == "ERROR", 1).otherwise(0)
         ).alias("distributions_error"),
     )
-    return ds.crossJoin(dist).withColumn(
-        "distributions_percentage",
+    return dist.join(F.broadcast(ds), "catalog_id", "left").select(
+        "catalog_id",
+        F.coalesce("datasets", F.lit(0)).alias("datasets"),
+        "datasets_ok",
+        "datasets_error",
+        "distributions",
+        "distributions_ok",
+        "distributions_error",
         F.coalesce(
             F.round(
                 100.0 * F.col("distributions_ok") / F.col("distributions"), 3
             ),
             F.lit(0.0),
-        ),
+        ).alias("distributions_percentage"),
     )
 
 

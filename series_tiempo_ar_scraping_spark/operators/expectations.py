@@ -64,27 +64,34 @@ def _violation_expr(e: Expectation) -> F.Column:
 
 
 def run_expectations(
-    tables: dict[str, DataFrame], specs: list[Expectation]
+    tables: dict[str, DataFrame],
+    specs: list[Expectation],
+    by: list[str] | None = None,
 ) -> DataFrame:
     """Evaluate ``specs`` with one aggregate scan per distinct table;
     returns the long report (table, column, check, n_rows,
-    n_violations, passed)."""
+    n_violations, passed).
+
+    With ``by`` every table reports once per group of those columns,
+    led by them; a group with no rows in a table reports nothing for
+    it."""
     by_table: dict[str, list[Expectation]] = {}
     for e in specs:
         by_table.setdefault(e.table, []).append(e)
+    keys = by or []
     out = None
     for tname, es in by_table.items():
-        df = tables[tname]
-        agg = df.agg(
+        agg = tables[tname].groupBy(*keys).agg(
             F.count("*").cast("long").alias("n_rows"),
             *[
                 _violation_expr(e).cast("long").alias(f"v{i}")
                 for i, e in enumerate(es)
             ],
         )
-        # the 1-row aggregate fans out into |expectations| report rows
+        # each aggregate row fans out into |expectations| report rows
         # via a generator — the table was scanned exactly once
         rows = agg.select(
+            *keys,
             "n_rows",
             F.explode(
                 F.array(
@@ -100,6 +107,7 @@ def run_expectations(
                 )
             ).alias("r"),
         ).select(
+            *keys,
             F.col("r.table_name").alias("table_name"),
             F.col("r.column_name").alias("column_name"),
             F.col("r.check").alias("check"),
@@ -115,7 +123,9 @@ def run_expectations(
 
 
 def pipeline_contract_report(
-    observations: DataFrame | None, dataset_report: DataFrame | None
+    observations: DataFrame | None,
+    dataset_report: DataFrame | None,
+    by: list[str] | None = None,
 ) -> DataFrame | None:
     """EP1 — the default data contracts the nightly ETL applies to its
     OWN produced frames, inside ``main.run_etl`` (not just as a catalog
@@ -125,7 +135,8 @@ def pipeline_contract_report(
     passed) report, or None when the run produced nothing to check
     (metadata-only catalogs). One aggregate scan per frame, as always —
     at fleet scale these contracts ride the scan the reports already
-    paid for."""
+    paid for. ``by`` groups the report as in ``run_expectations``: by
+    ``catalog_id``, each catalog of a pass gets its own rows."""
     tables: dict[str, DataFrame] = {}
     specs: list[Expectation] = []
     if observations is not None:
@@ -148,4 +159,4 @@ def pipeline_contract_report(
         ]
     if not specs:
         return None
-    return run_expectations(tables, specs)
+    return run_expectations(tables, specs, by)

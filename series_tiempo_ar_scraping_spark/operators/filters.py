@@ -26,27 +26,30 @@ def harvestable_datasets(datasets: DataFrame, dataset_errors: DataFrame) -> Data
     """F1 — keep metadata-valid datasets (``base.py:455-463`` →
     pydatajson ``generate_harvestable_catalogs(harvest='valid')``).
 
-    Anti-join against the error set; broadcast the (small) error frame so
-    no shuffle of the dataset frame is needed.
+    Anti-join against the error set on (catalog, dataset): dataset ids
+    are catalog-scoped, so one catalog's invalid dataset must not drop
+    another catalog's same-id dataset. The (small) error frame is
+    broadcast so no shuffle of the dataset frame is needed.
     """
-    errs = dataset_errors.select("dataset_id").distinct()
-    return datasets.join(F.broadcast(errs), on="dataset_id", how="left_anti")
+    keys = ["catalog_id", "dataset_id"]
+    errs = dataset_errors.select(*keys).distinct()
+    return datasets.join(F.broadcast(errs), on=keys, how="left_anti")
 
 
 def time_series_distributions(distributions: DataFrame, fields: DataFrame) -> DataFrame:
     """F2 — distributions having a ``time_index`` field
     (``base.py:478-487,519-528`` → ``get_distributions(only_time_series=True)``).
 
-    Semi-join on distribution_id.
+    Semi-join on (catalog, distribution): distribution ids are
+    catalog-scoped.
     """
+    keys = ["catalog_id", "distribution_id"]
     ts_fields = (
         fields.filter(F.col("specialType") == "time_index")
-        .select("distribution_id")
+        .select(*keys)
         .distinct()
     )
-    return distributions.join(
-        F.broadcast(ts_fields), on="distribution_id", how="left_semi"
-    )
+    return distributions.join(F.broadcast(ts_fields), on=keys, how="left_semi")
 
 
 def filter_distribution_id(df: DataFrame, distribution_id: str | None) -> DataFrame:

@@ -186,17 +186,23 @@ def is_valid_catalog(metadata_errors: DataFrame) -> bool:
 
 
 def datasets_report(datasets: DataFrame, metadata_errors: DataFrame) -> DataFrame:
-    """V3 — per-dataset harvest/validity report (``base.py:443-451``)."""
+    """V3 — per-dataset harvest/validity report (``base.py:443-451``),
+    keyed by ``catalog_id``: dataset ids are catalog-scoped, so errors
+    join on (catalog, dataset)."""
+    keys = ["catalog_id", "dataset_id"]
     bad = (
         metadata_errors.filter(F.col("dataset_id").isNotNull())
-        .select("dataset_id")
+        .select(*keys)
         .distinct()
         .withColumn("dataset_status", F.lit("ERROR"))
     )
     return (
-        datasets.select(F.col("dataset_id").alias("dataset_identifier"), "dataset_id")
-        .join(F.broadcast(bad), "dataset_id", "left")
+        datasets.select(
+            *keys, F.col("dataset_id").alias("dataset_identifier")
+        )
+        .join(F.broadcast(bad), keys, "left")
         .select(
+            "catalog_id",
             "dataset_identifier",
             F.coalesce("dataset_status", F.lit("OK")).alias("dataset_status"),
         )

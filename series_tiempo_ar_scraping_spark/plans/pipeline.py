@@ -5,11 +5,19 @@ already downloads, validates and writes — ``base.py:65-73,376-504``); here
 phase 1 is **pure planning** (build normalized frames + a routed task
 frame, zero side effects) and phase 2 executes DataFrame actions. Statuses
 are data (V7); reports and indicators come out as frames.
+
+One pass runs any number of catalogs: their frames are unioned, every
+join keys on ``catalog_id`` (dataset and distribution ids are
+catalog-scoped), and report frames carry ``catalog_id`` so a caller can
+split them. The Spark job count of a pass does not grow with the number
+of catalogs; a single catalog is the one-entry case of the same pass.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,8 +76,24 @@ _ROUTING_COLLECT_CAP = int(
 )
 
 
+def read_catalog(spark: SparkSession, path: str, catalog_id: str) -> dict[str, DataFrame]:
+    """S4/S5 — one catalog's metadata file → normalized frames: the
+    formato=xlsx branch for workbooks (``base.py:393-421,932-938``),
+    ``data.json`` otherwise."""
+    if path.endswith((".xlsx", ".xls")):
+        from series_tiempo_ar_scraping_spark.sources.xlsx import (
+            read_xlsx_catalog,
+        )
+
+        return read_xlsx_catalog(spark, path, catalog_id)
+    return read_catalog_json(spark, path, catalog_id)
+
+
 def _collect_routing(df: DataFrame, what: str) -> list:
-    rows = df.limit(_ROUTING_COLLECT_CAP + 1).collect()
+    # one partition: a limit collect scans partitions in growing rounds,
+    # one job per round, and the metadata frames hold a partition per
+    # catalog — without it the job count would grow with the index
+    rows = df.coalesce(1).limit(_ROUTING_COLLECT_CAP + 1).collect()
     if len(rows) > _ROUTING_COLLECT_CAP:
         raise RuntimeError(
             f"{what} routing list exceeds {_ROUTING_COLLECT_CAP} rows; "
@@ -97,8 +121,14 @@ class PipelineResult:
 
 
 class CatalogPipeline:
-    """One catalog end-to-end: metadata → validation → routing → per-method
-    extraction → data validation → sinks → reports (SURVEY EP1 steps 3-5).
+    """Catalogs end-to-end in one pass: metadata → validation → routing →
+    per-method extraction → data validation → sinks → reports (SURVEY EP1
+    steps 3-5).
+
+    ``catalog_path`` is one catalog's metadata file (named by
+    ``catalog_id``), or a ``{catalog_id: source}`` mapping of several
+    catalogs (``catalog_id`` None), where a source is a metadata file or
+    the frames ``read_catalog`` already returned for it.
 
     ``file_resolver`` maps a source URL/file reference to a local landing
     path (tests point it at fixtures; production points it at the landing
@@ -108,8 +138,8 @@ class CatalogPipeline:
     def __init__(
         self,
         spark: SparkSession,
-        catalog_path: str,
-        catalog_id: str,
+        catalog_path: str | Mapping[str, str | dict[str, DataFrame]],
+        catalog_id: str | None,
         output_dir: str,
         file_resolver=None,
         host: str = "http://localhost",
@@ -118,8 +148,11 @@ class CatalogPipeline:
         replace: bool = True,
     ):
         self.spark = spark
-        self.catalog_path = catalog_path
-        self.catalog_id = catalog_id
+        self.catalogs = (
+            dict(catalog_path)
+            if isinstance(catalog_path, Mapping)
+            else {catalog_id: catalog_path}
+        )
         self.output_dir = output_dir
         self.file_resolver = file_resolver or (lambda ref: ref)
         self.host = host
@@ -131,19 +164,14 @@ class CatalogPipeline:
     # -- phase 1: pure planning -------------------------------------------
 
     def plan(self) -> dict[str, DataFrame]:
-        if self.catalog_path.endswith((".xlsx", ".xls")):
-            # S5 — formato=xlsx branch (base.py:393-421,932-938)
-            from series_tiempo_ar_scraping_spark.sources.xlsx import (
-                read_xlsx_catalog,
-            )
-
-            frames = read_xlsx_catalog(
-                self.spark, self.catalog_path, self.catalog_id
-            )
-        else:
-            frames = read_catalog_json(
-                self.spark, self.catalog_path, self.catalog_id
-            )
+        parts = [
+            src if isinstance(src, dict) else read_catalog(self.spark, src, cid)
+            for cid, src in self.catalogs.items()
+        ]
+        frames = {
+            k: functools.reduce(DataFrame.unionByName, [p[k] for p in parts])
+            for k in parts[0]
+        }
         frames["fields"] = clean_field_keyspace(frames["fields"])
         frames["datasets"] = filter_catalog_id(
             frames["datasets"], self.catalog_id_filter
@@ -219,21 +247,34 @@ class CatalogPipeline:
                 )
 
         # excel route (S8): extract cells once per distinct workbook (A1),
-        # then scrape every series relationally.
+        # then scrape every series relationally. Cells key on the resolved
+        # path, not the file name: two catalogs' different workbooks may
+        # share one.
         excel_dists = ts_dists.filter(F.col("method") == METHOD_EXCEL)
-        excel_urls = [
-            r.scrapingFileURL
+        workbooks = {
+            r.scrapingFileURL: self.file_resolver(r.scrapingFileURL)
             for r in _collect_routing(
                 excel_dists.select("scrapingFileURL").distinct(),
                 "excel workbook",
             )
-        ]
+        }
         table_ends = None
         header_errors = None
-        if excel_urls:
-            paths = [p for p in (self.file_resolver(u) for u in excel_urls) if p]
-            cells = extract_cells(self.spark, paths).cache()
-            sp, tp = scraping_params(frames["fields"], excel_dists)
+        if workbooks:
+            paths = sorted({p for p in workbooks.values() if p})
+            cells = extract_cells(self.spark, paths, by_path=True).cache()
+            located = excel_dists.join(
+                F.broadcast(
+                    self.spark.createDataFrame(
+                        list(workbooks.items()),
+                        "scrapingFileURL string, workbook string",
+                    )
+                ),
+                "scrapingFileURL",
+            )
+            sp, tp = scraping_params(
+                frames["fields"], located, workbook=F.col("workbook")
+            )
             headered = check_headers(cells, sp).cache()
             header_errors = headered.filter(~F.col("header_ok"))
             obs_sc, table_ends = scrape_observations(
@@ -252,6 +293,7 @@ class CatalogPipeline:
             # distribution as ERROR instead of disappearing
             dist_report = sort_reports_by_status(
                 ts_dists.select(
+                    "catalog_id",
                     F.col("dataset_id").alias("dataset_identifier"),
                     F.col("distribution_id").alias("distribution_identifier"),
                     F.lit("ERROR").alias("distribution_status"),
@@ -269,6 +311,7 @@ class CatalogPipeline:
                 frames["fields"]
                 .filter(F.col("specialType") == "time_index")
                 .select(
+                    "catalog_id",
                     "distribution_id",
                     # built from FREQ_ISO_TO_CODE — the single source of
                     # truth field validation also checks against, so a
@@ -284,7 +327,9 @@ class CatalogPipeline:
                 )
             )
             series_rep = validate_observations(
-                observations.join(F.broadcast(freq), "distribution_id", "left")
+                observations.join(
+                    F.broadcast(freq), ["catalog_id", "distribution_id"], "left"
+                )
             ).cache()
             # Every routed ts-distribution must appear in the report —
             # one that yielded no observations at all is an ERROR (the
@@ -304,9 +349,11 @@ class CatalogPipeline:
             # V6 trim warnings demote OK → WARNING.
             if table_ends is not None:
                 trims = trim_warnings(table_ends).select(
-                    "distribution_id", F.lit(True).alias("_trimmed")
+                    "catalog_id", "distribution_id", F.lit(True).alias("_trimmed")
                 )
-                dist_status = dist_status.join(trims, "distribution_id", "left").withColumn(
+                dist_status = dist_status.join(
+                    trims, ["catalog_id", "distribution_id"], "left"
+                ).withColumn(
                     "distribution_status",
                     F.when(
                         (F.col("distribution_status") == "OK")
@@ -318,9 +365,11 @@ class CatalogPipeline:
             # V5 header failures are ERROR rows regardless of data checks.
             if header_errors is not None:
                 hdr = header_errors.select(
-                    "distribution_id", F.lit(True).alias("_hdr_bad")
+                    "catalog_id", "distribution_id", F.lit(True).alias("_hdr_bad")
                 ).distinct()
-                dist_status = dist_status.join(hdr, "distribution_id", "left").withColumn(
+                dist_status = dist_status.join(
+                    hdr, ["catalog_id", "distribution_id"], "left"
+                ).withColumn(
                     "distribution_status",
                     F.when(F.col("_hdr_bad").isNotNull(), "ERROR").otherwise(
                         F.col("distribution_status")
@@ -329,6 +378,7 @@ class CatalogPipeline:
 
             dist_report = sort_reports_by_status(
                 dist_status.select(
+                    "catalog_id",
                     F.col("dataset_id").alias("dataset_identifier"),
                     F.col("distribution_id").alias("distribution_identifier"),
                     "distribution_status",
@@ -336,10 +386,11 @@ class CatalogPipeline:
             ).cache()
             indicators = catalog_indicators(ds_report, dist_report)
 
-            # K1: all wide CSVs in ONE Spark job (partitionBy text write +
-            # filesystem rename pass) — job count is independent of the
-            # distribution count; the fileName mapping is the only
-            # driver-side metadata (``base.py:266-279`` contract).
+            # K1: every catalog's wide CSVs in one partitionBy text write
+            # plus a filesystem rename pass — the job count grows with
+            # neither the distribution nor the catalog count; the
+            # fileName mapping is the only metadata it collects
+            # (``base.py:266-279`` contract).
             if write_csvs:
                 meta = {
                     (r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
@@ -373,23 +424,30 @@ class CatalogPipeline:
             )
         )
 
-        # K2/K3: rewrite data.json + catalog.xlsx next to the outputs
-        # (base.py:489-504 writes both after filtering).
+        # K2/K3: rewrite data.json + catalog.xlsx next to each catalog's
+        # outputs (base.py:489-504 writes both after filtering); each
+        # writer collects once for every catalog of the pass.
         if write_csvs:
             from series_tiempo_ar_scraping_spark.sinks.metadata import (
                 write_json_catalog,
                 write_xlsx_catalog,
             )
 
-            cat_dir = os.path.join(self.output_dir, "catalog", self.catalog_id)
-            written.append(
-                write_json_catalog(frames, os.path.join(cat_dir, "data.json"))
-            )
-            written.append(
-                write_xlsx_catalog(
-                    frames, os.path.join(cat_dir, "catalog.xlsx")
+            for writer, name in (
+                (write_json_catalog, "data.json"),
+                (write_xlsx_catalog, "catalog.xlsx"),
+            ):
+                written.extend(
+                    writer(
+                        frames,
+                        {
+                            cid: os.path.join(
+                                self.output_dir, "catalog", cid, name
+                            )
+                            for cid in self.catalogs
+                        },
+                    )
                 )
-            )
 
         return PipelineResult(
             frames=frames,

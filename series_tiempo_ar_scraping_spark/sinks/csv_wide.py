@@ -69,7 +69,7 @@ def write_wide_csvs_bulk(
     file_names: dict[tuple[str, str, str], str | None],
     replace: bool = True,
 ) -> list[str]:
-    """K1 at scale: every distribution's wide CSV in ONE Spark job.
+    """K1 at scale: every distribution's wide CSV from one write.
 
     The per-distribution loop (filter + coalesce(1) + write, O(n) jobs)
     dies at metadata scale — thousands of distributions means thousands
@@ -88,7 +88,10 @@ def write_wide_csvs_bulk(
        ``.../download/{fileName}`` contract path (pure filesystem
        metadata — no Spark jobs).
 
-    Job count is 1 regardless of distribution count. V8 skip-if-exists
+    The Spark job count does not grow with the number of distributions,
+    nor with the number of catalogs they come from. It is not 1: AQE
+    query stages, and the lazy frames ``observations`` is built from,
+    run as jobs inside this write. V8 skip-if-exists
     honored by pre-filtering distributions whose target already exists.
     Values are numeric and the fixture titles are comma-free, so no CSV
     quoting is required; a title containing a separator should go

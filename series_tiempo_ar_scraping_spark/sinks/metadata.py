@@ -15,7 +15,6 @@ import json
 
 from series_tiempo_ar_scraping_spark.sinks.atomic import atomic_output_path
 from series_tiempo_ar_scraping_spark.sources.catalog_json import renest_catalog
-from series_tiempo_ar_scraping_spark.sources.xlsx import write_xlsx_frames
 
 
 def _prune_nulls(obj):
@@ -28,45 +27,76 @@ def _prune_nulls(obj):
     return obj
 
 
-def write_json_catalog(frames: dict, path: str) -> str:
-    """K2 — re-nest the (published) frames → one ``data.json``."""
-    nested = renest_catalog(
-        {
-            "catalogs": frames["catalogs"],
-            "datasets": frames["datasets"],
-            "distributions": frames.get(
-                "distributions_published", frames["distributions"]
-            ),
-            "fields": frames.get("fields_published", frames["fields"]),
-            "themes": frames.get("themes"),
-        }
-    )
-    rows = [json.loads(r) for r in nested.toJSON().collect()]
-    doc = _prune_nulls(rows[0]) if rows else {}
-    if "catalog_id" in doc:
-        doc["identifier"] = doc.pop("catalog_id")
-    # stage + atomic replace: a crash mid-dump must never leave a
-    # truncated data.json at the path consumers read
-    with atomic_output_path(path) as tmp:
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(
-                doc, fh, ensure_ascii=False, indent=2, sort_keys=True
-            )
-    return path
-
-
-def write_xlsx_catalog(frames: dict, path: str) -> str:
-    """K3 — 5-sheet ``catalog.xlsx`` in the pydatajson sheet layout
-    (sheet order ``catalog/dataset/distribution/field/theme`` as in
-    ``tests/project/mock/test2.xlsx``)."""
-    sheets = {
-        "catalog": frames["catalogs"],
-        "dataset": frames["datasets"],
-        "distribution": frames.get(
+def _published(frames: dict) -> dict:
+    """The frames K2/K3 publish: the K7/K8-rewritten distributions and
+    fields when the pipeline made them."""
+    return {
+        "catalogs": frames["catalogs"],
+        "datasets": frames["datasets"],
+        "distributions": frames.get(
             "distributions_published", frames["distributions"]
         ),
-        "field": frames.get("fields_published", frames["fields"]),
+        "fields": frames.get("fields_published", frames["fields"]),
+        "themes": frames.get("themes"),
     }
-    if "themes" in frames:
-        sheets["theme"] = frames["themes"]
-    return write_xlsx_frames(path, sheets)
+
+
+def write_json_catalog(frames: dict, path: str | dict[str, str]) -> str | list[str]:
+    """K2 — re-nest the (published) frames → ``data.json``.
+
+    ``path`` is one catalog's file, or ``{catalog_id: path}``: every
+    catalog's document then comes from the same one collect. Returns
+    what it wrote: the path, or the list of paths."""
+    docs = []
+    for r in renest_catalog(_published(frames)).toJSON().collect():
+        doc = _prune_nulls(json.loads(r))
+        if "catalog_id" in doc:
+            doc["identifier"] = doc.pop("catalog_id")
+        docs.append(doc)
+    if isinstance(path, str):
+        targets = [(path, docs[0] if docs else {})]
+    else:
+        by_id = {d.get("identifier"): d for d in docs}
+        targets = [(p, by_id.get(cid, {})) for cid, p in path.items()]
+    for target, doc in targets:
+        # stage + atomic replace: a crash mid-dump must never leave a
+        # truncated data.json at the path consumers read
+        with atomic_output_path(target) as tmp:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                json.dump(
+                    doc, fh, ensure_ascii=False, indent=2, sort_keys=True
+                )
+    return path if isinstance(path, str) else [t for t, _d in targets]
+
+
+def write_xlsx_catalog(frames: dict, path: str | dict[str, str]) -> str | list[str]:
+    """K3 — 5-sheet ``catalog.xlsx`` in the pydatajson sheet layout
+    (sheet order ``catalog/dataset/distribution/field/theme`` as in
+    ``tests/project/mock/test2.xlsx``).
+
+    ``path`` is one catalog's file, or ``{catalog_id: path}``: each sheet
+    is then collected once and split by ``catalog_id``. Returns what it
+    wrote: the path, or the list of paths."""
+    from series_tiempo_ar_scraping_spark.sources import xlsx
+
+    pub = _published(frames)
+    sheets = {
+        "catalog": pub["catalogs"],
+        "dataset": pub["datasets"],
+        "distribution": pub["distributions"],
+        "field": pub["fields"],
+    }
+    if pub["themes"] is not None:
+        sheets["theme"] = pub["themes"]
+    if isinstance(path, str):
+        return xlsx.write_xlsx_frames(path, sheets)
+    split: dict[str, dict] = {cid: {} for cid in path}
+    for name, df in sheets.items():
+        cols = df.columns
+        at = cols.index("catalog_id")
+        for cid in split:
+            split[cid][name] = (cols, [])
+        for r in df.collect():
+            if r[at] in split:
+                split[r[at]][name][1].append(tuple(r))
+    return [xlsx.write_xlsx(path[cid], split[cid]) for cid in path]

@@ -32,14 +32,16 @@ def write_report_csv(report: DataFrame, out_dir: str, name: str) -> str:
     return path
 
 
-def write_report_xlsx(report: DataFrame, out_dir: str, name: str) -> str:
+def write_report_xlsx(
+    report: tuple[list[str], list[tuple]], out_dir: str, name: str
+) -> str:
     """K4 XLSX variant — parity with ``reporte-datasets.xlsx`` /
     ``reporte-distributions.xlsx`` (``base.py:679-703``), via the stdlib
-    OOXML writer (``sources/xlsx.py``)."""
-    from series_tiempo_ar_scraping_spark.sources.xlsx import write_xlsx_frames
+    OOXML writer (``sources/xlsx.py``). ``report`` is the collected
+    ``(columns, rows)`` of one sheet named ``name``."""
+    from series_tiempo_ar_scraping_spark.sources import xlsx
 
-    path = os.path.join(out_dir, f"{name}.xlsx")
-    return write_xlsx_frames(path, {name: report})
+    return xlsx.write_xlsx(os.path.join(out_dir, f"{name}.xlsx"), {name: report})
 
 
 def build_subject(catalog_id: str, stage: str, environment: str,

@@ -39,12 +39,14 @@ CELLS_SCHEMA = T.StructType(
 )
 
 
-def _extract_one(path: str) -> pd.DataFrame:
-    """Parse one workbook file into a cells pandas frame."""
+def _extract_one(path: str, by_path: bool = False) -> pd.DataFrame:
+    """Parse one workbook file into a cells pandas frame whose ``file``
+    is the file name, or the full path when ``by_path``."""
+    fname = path if by_path else path.rsplit("/", 1)[-1]
     if path.endswith(".jsonl"):
         # Fixture format: one JSON object per line with file/sheet/row/col/value.
         df = pd.read_json(path, lines=True)
-        df["file"] = path.rsplit("/", 1)[-1]
+        df["file"] = fname
         return df[["file", "sheet", "row", "col", "value"]].astype(
             {"row": "int32", "value": "string"}
         )
@@ -52,7 +54,6 @@ def _extract_one(path: str) -> pd.DataFrame:
         # Stdlib OOXML parse (sources/xlsx.py) — no openpyxl needed.
         from series_tiempo_ar_scraping_spark.sources.xlsx import iter_cells
 
-        fname = path.rsplit("/", 1)[-1]
         rows = [
             (fname, sheet, row, col, value)
             for sheet, row, col, value in iter_cells(path)
@@ -67,7 +68,6 @@ def _extract_one(path: str) -> pd.DataFrame:
         # reference routes .xls and .xlsx alike (base.py:134,144).
         from series_tiempo_ar_scraping_spark.sources.xls import iter_cells_xls
 
-        fname = path.rsplit("/", 1)[-1]
         rows = [
             (fname, sheet, row, col, value)
             for sheet, row, col, value in iter_cells_xls(path)
@@ -80,11 +80,13 @@ def _extract_one(path: str) -> pd.DataFrame:
     raise NotImplementedError(f"unsupported workbook format: {path}")
 
 
-def extract_cells(spark: SparkSession, paths: list[str]) -> DataFrame:
+def extract_cells(spark: SparkSession, paths: list[str], by_path: bool = False) -> DataFrame:
     """Distributed extraction: one task per workbook via ``mapInPandas``.
 
     The path list is tiny (it's the A1-deduped source set); each file is
     parsed exactly once (the reference's open-once cache, relationally).
+    Cells are keyed by file name, or by full path when ``by_path`` (two
+    catalogs' different workbooks may share a file name).
     """
     from series_tiempo_ar_scraping_spark.session import ensure_package_on_executors
 
@@ -96,6 +98,6 @@ def extract_cells(spark: SparkSession, paths: list[str]) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for p in pdf["path"]:
-                yield _extract_one(p)
+                yield _extract_one(p, by_path)
 
     return paths_df.mapInPandas(run, CELLS_SCHEMA)

@@ -159,7 +159,7 @@ def read_distributions_bulk(
     decimal_comma: bool = False,
 ) -> tuple[DataFrame, list[tuple[str, str, str, str]]]:
     """S6/S7 at metadata scale: ALL same-delimiter distribution files in
-    ONE Spark job.
+    one scan, whose job count does not grow with the file count.
 
     ``items`` is ``[(catalog_id, dataset_id, distribution_id, path)]``.
     The per-file loop (one ``spark.read.csv`` per distribution) is O(n)

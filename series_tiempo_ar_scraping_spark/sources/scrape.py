@@ -18,7 +18,7 @@ analog of xlseries' composed-time handling and the reference's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.functions.calendar import FREQ_CODE_MONTHS
@@ -37,10 +37,14 @@ def _parse_date(c):
     return parsed.cast("date")
 
 
-def scraping_params(fields: DataFrame, distributions: DataFrame) -> tuple[DataFrame, DataFrame]:
+def scraping_params(fields: DataFrame, distributions: DataFrame, workbook: Column | None = None) -> tuple[DataFrame, DataFrame]:
     """Build per-series and per-distribution scraping parameter frames from
     field metadata (the reference's param-dict construction,
     ``processors.py:159-200``, as projections).
+
+    ``workbook`` is each distribution's key into the cells frame's
+    ``file`` column; it defaults to the last segment of
+    ``scrapingFileURL`` (cells keyed by file name).
 
     Returns ``(series_params, time_params)``:
     - series_params: one row per value field — header coord, data start
@@ -52,7 +56,11 @@ def scraping_params(fields: DataFrame, distributions: DataFrame) -> tuple[DataFr
         "catalog_id",
         "dataset_id",
         "distribution_id",
-        F.element_at(F.split(F.col("scrapingFileURL"), "/"), -1).alias("file"),
+        (
+            F.element_at(F.split(F.col("scrapingFileURL"), "/"), -1)
+            if workbook is None
+            else workbook
+        ).alias("file"),
         F.col("scrapingFileSheet").alias("sheet"),
     )
     value_fields = fields.filter(

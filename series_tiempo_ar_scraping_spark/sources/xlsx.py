@@ -167,15 +167,24 @@ def _strip_prefix(rec: dict[str, str], prefix: str) -> dict[str, str]:
 
 def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
     """S5 — 5-sheet XLSX catalog → the same normalized frames as
-    ``read_catalog_json`` (``base.py:932-938``; sheet layout
-    ``tests/project/mock/test2.xlsx``). Driver-parsed (catalog workbooks
-    are small); distributed reading of *data* stays in parquet/CSV land.
+    ``read_catalog_json`` (``base.py:932-938``). Two sheet layouts: the
+    pydatajson one (``tests/project/mock/test2.xlsx``: columns prefixed
+    by entity, ``catalog_title``, ``dataset_identifier``, …) and the one
+    K3 writes (``sinks.metadata.write_xlsx_catalog``: columns named as
+    in the frames), so a published ``catalog.xlsx`` reads back.
+    Parsed in Python, not in Spark (catalog workbooks are small);
+    distributed reading of *data* stays in parquet/CSV land.
     """
     from pyspark.sql import types as T
 
     sheets = read_sheets(path)
     cat_rec = (sheets.get("catalog") or [{}])[0]
-    cid = catalog_id or cat_rec.get("catalog_identifier") or "catalog"
+    own = "catalog_id" in cat_rec  # the K3 layout
+    cid = (
+        catalog_id
+        or cat_rec.get("catalog_id" if own else "catalog_identifier")
+        or "catalog"
+    )
 
     def frame(records: list[dict], columns: list[str]):
         schema = T.StructType(
@@ -184,7 +193,7 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         rows = [tuple(r.get(c) for c in columns) for r in records]
         return spark.createDataFrame(rows, schema)
 
-    cat = _strip_prefix(cat_rec, "catalog_")
+    cat = dict(cat_rec) if own else _strip_prefix(cat_rec, "catalog_")
     catalogs = frame(
         [{**cat, "catalog_id": cid}],
         ["catalog_id", "title", "description", "publisher_name",
@@ -194,9 +203,10 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
 
     ds_recs = []
     for r in sheets.get("dataset", []):
-        d = _strip_prefix(r, "dataset_")
+        d = dict(r) if own else _strip_prefix(r, "dataset_")
         d["catalog_id"] = cid
-        d["dataset_id"] = d.pop("identifier", None)
+        if not own:
+            d["dataset_id"] = d.pop("identifier", None)
         for lf in _LIST_FIELDS:
             if lf in d:
                 d[lf] = [s.strip() for s in str(d[lf]).split(",") if s.strip()]
@@ -216,10 +226,11 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
 
     di_recs = []
     for r in sheets.get("distribution", []):
-        d = _strip_prefix(r, "distribution_")
+        d = dict(r) if own else _strip_prefix(r, "distribution_")
         d["catalog_id"] = cid
-        d["dataset_id"] = r.get("dataset_identifier")
-        d["distribution_id"] = d.pop("identifier", None)
+        if not own:
+            d["dataset_id"] = r.get("dataset_identifier")
+            d["distribution_id"] = d.pop("identifier", None)
         di_recs.append(d)
     distributions = frame(
         di_recs,
@@ -231,11 +242,12 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
     f_recs = []
     order: dict[str, int] = {}
     for r in sheets.get("field", []):
-        d = _strip_prefix(r, "field_")
+        d = dict(r) if own else _strip_prefix(r, "field_")
         d["catalog_id"] = cid
-        d["dataset_id"] = r.get("dataset_identifier")
-        d["distribution_id"] = r.get("distribution_identifier")
-        d["field_id"] = d.pop("id", None)
+        if not own:
+            d["dataset_id"] = r.get("dataset_identifier")
+            d["distribution_id"] = r.get("distribution_identifier")
+            d["field_id"] = d.pop("id", None)
         key = d.get("distribution_id") or ""
         d["field_order"] = order.get(key, 0)
         order[key] = d["field_order"] + 1
@@ -257,8 +269,8 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         th_recs.append({
             "catalog_id": cid,
             "theme_id": r.get("theme_id") or r.get("theme_identifier"),
-            "label": r.get("theme_label"),
-            "description": r.get("theme_description"),
+            "label": r.get("label" if own else "theme_label"),
+            "description": r.get("description" if own else "theme_description"),
         })
     themes = frame(th_recs, ["catalog_id", "theme_id", "label", "description"])
 

@@ -269,7 +269,8 @@ def test_write_json_catalog_every_crash_point(spark, tmp_path):
     )
 
     frames = read_xlsx_catalog(
-        spark, "/root/reference/tests/project/mock/test2.xlsx"
+        spark,
+        os.path.join(os.path.dirname(__file__), "fixtures", "catalog.xlsx"),
     )
     target = str(tmp_path / "data.json")
 
@@ -310,8 +311,8 @@ def test_write_json_catalog_every_crash_point(spark, tmp_path):
     out = write_json_catalog(frames, target)
     doc = read_back()
     assert out == target
-    assert doc["identifier"] == "example_catalog1"
-    assert len(doc["dataset"]) == 2
+    assert doc["identifier"] == "acme"
+    assert len(doc["dataset"]) == 3
     assert _no_part_residue(str(tmp_path))
 
 

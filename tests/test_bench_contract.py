@@ -32,17 +32,15 @@ def _fake_lane(scale: float) -> dict[str, float]:
 
 def _capture(timings, cold, tmp_path):
     os.environ["SPARK_GRAFT_BENCH_HISTORY"] = str(tmp_path / "hist.jsonl")
-    os.environ["SPARK_GRAFT_BENCH_PERQUERY"] = str(
-        tmp_path / "perquery.json"
-    )
     try:
         buf = io.StringIO()
         with redirect_stdout(buf):
-            out = bench.build_output(timings, cold, "0.1")
+            out = bench.build_output(
+                timings, cold, "0.1", str(tmp_path / "perquery.json")
+            )
         return out, buf.getvalue()
     finally:
         del os.environ["SPARK_GRAFT_BENCH_HISTORY"]
-        del os.environ["SPARK_GRAFT_BENCH_PERQUERY"]
 
 
 def test_final_line_fits_driver_tail_window(tmp_path):

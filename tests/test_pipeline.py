@@ -184,7 +184,7 @@ def test_corrupt_data_file_is_error_row_not_crash(spark, tmp_path):
 
 
 def test_bulk_csv_writer_v8_skip_and_header_order(spark, tmp_path):
-    """K1 bulk sink: one Spark job for every distribution, declared
+    """K1 bulk sink: one write for every distribution, declared
     column order in headers, and V8 skip-if-exists honored per file."""
     from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
         write_wide_csvs_bulk,

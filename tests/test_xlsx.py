@@ -1,14 +1,23 @@
 """S5/K3/K4 + S8-xlsx: stdlib OOXML reader/writer.
 
-Read parity is checked against the reference's own fixture workbook
-(``/root/reference/tests/project/mock/test2.xlsx`` — read-only input),
-whose 5-sheet layout is the pydatajson catalog form (SURVEY §2.1-S5).
+The fixture workbook ``tests/fixtures/catalog.xlsx`` is the 5-sheet
+catalog ``sinks.metadata.write_xlsx_catalog`` writes for
+``tests/fixtures/catalog.json`` (``test_catalog_xlsx_fixture_is_current``
+says how to rebuild it). Parity with the pydatajson layout is checked
+against the reference's own workbook (``REF_XLSX``, its
+``tests/project/mock/test2.xlsx`` — read-only input) when that checkout
+is present.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from series_tiempo_ar_scraping_spark.sources.catalog_json import (
+    read_catalog_json,
+)
 from series_tiempo_ar_scraping_spark.sources.xlsx import (
     iter_cells,
     read_sheets,
@@ -16,10 +25,18 @@ from series_tiempo_ar_scraping_spark.sources.xlsx import (
     write_xlsx,
 )
 
+FIX = os.path.join(os.path.dirname(__file__), "fixtures")
+FIX_JSON = os.path.join(FIX, "catalog.json")
+FIX_XLSX = os.path.join(FIX, "catalog.xlsx")
 REF_XLSX = "/root/reference/tests/project/mock/test2.xlsx"
 
 
-def test_read_sheets_reference_fixture():
+@pytest.mark.skipif(
+    not os.path.exists(REF_XLSX), reason="reference checkout not present"
+)
+def test_reference_workbook_parity(spark):
+    """The pydatajson layout: shared strings with accents, prefixed
+    columns, and the normalized frames they read into."""
     sheets = read_sheets(REF_XLSX)
     assert set(sheets) == {"catalog", "dataset", "distribution", "field", "theme"}
     assert len(sheets["dataset"]) == 2
@@ -29,10 +46,38 @@ def test_read_sheets_reference_fixture():
     assert cat["catalog_identifier"] == "example_catalog1"
     # shared strings with accents decode correctly
     assert "Macroecon" in cat["catalog_title"]
+    frames = read_xlsx_catalog(spark, REF_XLSX)
+    assert frames["fields"].count() == 22
+    ti = frames["fields"].filter("specialType = 'time_index'")
+    assert ti.count() == 3  # one per distribution
+
+
+def test_catalog_xlsx_fixture_is_current(spark, tmp_path):
+    """The committed fixture is what K3 writes for the JSON fixture
+    today; rebuild it with ``write_xlsx_catalog(read_catalog_json(spark,
+    FIX_JSON), FIX_XLSX)`` when the writer changes."""
+    from series_tiempo_ar_scraping_spark.sinks.metadata import (
+        write_xlsx_catalog,
+    )
+
+    out = str(tmp_path / "catalog.xlsx")
+    write_xlsx_catalog(read_catalog_json(spark, FIX_JSON), out)
+    assert read_sheets(out) == read_sheets(FIX_XLSX)
+
+
+def test_read_sheets_fixture():
+    sheets = read_sheets(FIX_XLSX)
+    assert list(sheets) == ["catalog", "dataset", "distribution", "field", "theme"]
+    assert len(sheets["dataset"]) == 3
+    assert len(sheets["distribution"]) == 4
+    assert len(sheets["field"]) == 10
+    cat = sheets["catalog"][0]
+    assert cat["catalog_id"] == "acme"
+    assert cat["title"] == "ACME statistics catalog"
 
 
 def test_iter_cells_shape():
-    cells = list(iter_cells(REF_XLSX))
+    cells = list(iter_cells(FIX_XLSX))
     # (sheet, row, col, value) with 1-based rows and letter columns
     sheets = {c[0] for c in cells}
     assert "field" in sheets
@@ -41,20 +86,20 @@ def test_iter_cells_shape():
 
 
 def test_read_xlsx_catalog_normalized(spark):
-    frames = read_xlsx_catalog(spark, REF_XLSX)
-    assert frames["catalogs"].count() == 1
-    assert frames["datasets"].count() == 2
-    assert frames["distributions"].count() == 3
-    assert frames["fields"].count() == 22
-    # same column contract as the JSON reader
-    for col in ("catalog_id", "dataset_id", "distribution_id",
-                "scrapingFileURL", "scrapingFileSheet"):
-        assert col in frames["distributions"].columns
+    """K3's workbook reads back into exactly the frames the JSON reader
+    made it from: same columns, same rows (lists split back to arrays)."""
+    frames = read_xlsx_catalog(spark, FIX_XLSX)
+    want = read_catalog_json(spark, FIX_JSON)
+    assert set(frames) == set(want)
+    for name, df in frames.items():
+        assert df.columns == want[name].columns, name
+        assert sorted(map(str, df.collect())) == sorted(
+            map(str, want[name].collect())
+        ), name
     ti = frames["fields"].filter("specialType = 'time_index'")
-    assert ti.count() == 3  # one per distribution
-    # keyword/theme split to arrays
-    row = frames["datasets"].orderBy("dataset_id").first()
-    assert isinstance(row.theme, list)
+    assert ti.count() == 4  # one per distribution
+    row = frames["datasets"].filter("dataset_id = 'ds-energy'").first()
+    assert row.theme == ["energia"]
 
 
 def test_write_read_roundtrip(tmp_path):
@@ -82,13 +127,17 @@ def test_write_read_roundtrip(tmp_path):
 def test_extract_cells_xlsx(spark):
     from series_tiempo_ar_scraping_spark.sources.cells import extract_cells
 
-    cells = extract_cells(spark, [REF_XLSX]).cache()
-    assert cells.filter("sheet = 'catalog' and row = 1 and col = 'A'")
+    cells = extract_cells(spark, [FIX_XLSX]).cache()
     first = cells.filter(
         "sheet = 'catalog' and row = 1 and col = 'A'"
     ).first()
-    assert first.value == "catalog_identifier"
-    assert cells.count() > 100
+    assert first.value == "catalog_id"
+    assert first.file == "catalog.xlsx"
+    assert cells.count() == len(list(iter_cells(FIX_XLSX)))
+    by_path = extract_cells(spark, [FIX_XLSX], by_path=True)
+    assert {r.file for r in by_path.select("file").distinct().collect()} == {
+        FIX_XLSX
+    }
 
 
 def test_pipeline_runs_from_xlsx_catalog(spark, tmp_path):
@@ -97,13 +146,13 @@ def test_pipeline_runs_from_xlsx_catalog(spark, tmp_path):
 
     pipe = CatalogPipeline(
         spark,
-        catalog_path=REF_XLSX,
-        catalog_id="example_catalog1",
+        catalog_path=FIX_XLSX,
+        catalog_id="acme",
         output_dir=str(tmp_path),
         file_resolver=lambda ref: None,  # no data files in this fixture
     )
     frames = pipe.plan()
-    assert frames["distributions"].count() == 3
+    assert frames["distributions"].count() == 4
     assert "method" in frames["distributions"].columns
 
 
@@ -113,13 +162,13 @@ def test_write_xlsx_catalog_roundtrip(spark, tmp_path):
         write_xlsx_catalog,
     )
 
-    frames = read_xlsx_catalog(spark, REF_XLSX)
+    frames = read_xlsx_catalog(spark, FIX_XLSX)
     out = str(tmp_path / "catalog.xlsx")
     write_xlsx_catalog(frames, out)
     back = read_sheets(out)
     assert set(back) >= {"catalog", "dataset", "distribution", "field"}
-    assert len(back["distribution"]) == 3
-    assert len(back["field"]) == 22
+    assert len(back["distribution"]) == 4
+    assert len(back["field"]) == 10
 
 
 def test_absolute_rel_targets_and_quoted_sheet_names(tmp_path):
