@@ -3,8 +3,9 @@
 ``entry(spark)`` runs the flagship query at sf0.001; ``queries()`` /
 ``oracle_sql()`` expose the engine's full catalog (one entry per
 implemented SURVEY §2 operator / extension) for the DuckDB correctness
-gate at sf0.01. Implementations live in
-``series_tiempo_ar_scraping_spark/queries.py``.
+gate at sf0.01. Importing this module loads the catalog through
+``series_tiempo_ar_scraping_spark.registry.load_queries``, which puts the
+driver-gate names first and fails if any of them is unregistered.
 """
 
 from __future__ import annotations
@@ -17,16 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from series_tiempo_ar_scraping_spark.queries import (  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import (  # noqa: E402
     ORACLES,
-    QUERIES,
-    apply_driver_gate_order,
+    load_queries,
 )
 
-# All query submodules are fully imported by now; apply the authoritative
-# driver-gate ordering. strict=True: every priority name MUST resolve —
-# gate-set drift fails fast instead of silently evicting a green query.
-apply_driver_gate_order(strict=True)
+QUERIES = load_queries()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -36,11 +33,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    apply_driver_gate_order(strict=True)
     return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL for every SQL-expressible query."""
-    apply_driver_gate_order(strict=True)
     return dict(ORACLES)

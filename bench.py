@@ -50,7 +50,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import load_queries  # noqa: E402
 from series_tiempo_ar_scraping_spark.session import get_spark  # noqa: E402
 
 # Heavier, representative subset — full catalog correctness is the gate's
@@ -497,6 +497,7 @@ def main() -> None:
     # JVM boot that has nothing to do with any query).
     spark.range(1000).count()
 
+    QUERIES = load_queries()
     missing = [n for n in BENCH_QUERIES if n not in QUERIES]
     if missing:
         # a renamed/removed headline query must fail loudly — silently

@@ -32,25 +32,6 @@ def expected_next_ts(ts: Column, freq_code: Column) -> Column:
     return expr
 
 
-def period_start(ts: Column, freq_code: Column) -> Column:
-    """Truncate a date to its period start for the given frequency code.
-
-    Semester truncation has no built-in: month → 1 or 7.
-    """
-    return (
-        F.when(freq_code == "Y", F.date_trunc("year", ts).cast("date"))
-        .when(
-            freq_code == "S",
-            F.make_date(
-                F.year(ts), F.when(F.month(ts) <= 6, 1).otherwise(7), F.lit(1)
-            ),
-        )
-        .when(freq_code == "Q", F.date_trunc("quarter", ts).cast("date"))
-        .when(freq_code == "M", F.date_trunc("month", ts).cast("date"))
-        .otherwise(ts)
-    )
-
-
 _SERIES_KEY = ["catalog_id", "dataset_id", "distribution_id", "series_id"]
 
 
@@ -104,28 +85,4 @@ def with_series_checks(obs: DataFrame, freq_code_col: str = "freq_code") -> Data
             ),
         )
         .drop("prev_ts")
-    )
-
-
-def gapfill_daily(df: DataFrame, key_cols: list[str], ts_col: str = "ts",
-                  value_col: str = "value") -> DataFrame:
-    """Fill missing days per key with 0.0 between each key's min and max day.
-
-    Built from ``sequence()`` + ``explode`` + left join — fully JVM-side.
-    The per-key sequence stays bounded (one row per day of that key's span),
-    and the join is an equi-join on (key, ts) so AQE/sort-merge handles
-    scale; no driver-side iteration.
-    """
-    spans = df.groupBy(*key_cols).agg(
-        F.min(ts_col).alias("_min_ts"), F.max(ts_col).alias("_max_ts")
-    )
-    calendar = spans.select(
-        *key_cols,
-        F.explode(
-            F.sequence("_min_ts", "_max_ts", F.expr("interval 1 day"))
-        ).alias(ts_col),
-    )
-    agg = df.groupBy(*key_cols, ts_col).agg(F.sum(value_col).alias(value_col))
-    return calendar.join(agg, on=[*key_cols, ts_col], how="left").withColumn(
-        value_col, F.coalesce(F.col(value_col), F.lit(0.0))
     )

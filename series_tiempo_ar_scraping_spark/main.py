@@ -142,7 +142,14 @@ def run_etl(
             for r in kinds.groupBy("catalog_id", "kind").count().collect():
                 counts[r.catalog_id][r.kind] = r["count"]
             return counts
-        res = pipe.run(write_csvs=True)
+        try:
+            return report_pass(pipe.run(write_csvs=True), loaded)
+        finally:
+            # the pass has written its outputs and its reports are
+            # collected: free its cached frames, raised or not
+            pipe.unpersist()
+
+    def report_pass(res, loaded: dict[str, dict]) -> dict[str, dict]:
         # Every report frame below is collected once for the whole pass
         # and split by catalog_id in Python.
         indicators: dict = {}

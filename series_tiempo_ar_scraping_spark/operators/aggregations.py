@@ -11,34 +11,9 @@ from pyspark.sql import functions as F
 from series_tiempo_ar_scraping_spark.functions.scalars import status_sort_key
 
 
-def distinct_source_urls(distributions: DataFrame, url_col: str = "scrapingFileURL") -> DataFrame:
-    """A1 — distinct download sources before fetching (``base.py:546-572``)."""
-    return (
-        distributions.filter(F.col(url_col).isNotNull())
-        .select(url_col)
-        .distinct()
-    )
-
-
 def count_by_status(reports: DataFrame, status_col: str) -> DataFrame:
     """A3 — counts by status (``base.py:978-992``)."""
     return reports.groupBy(status_col).agg(F.count("*").alias("n"))
-
-
-def ok_percentage(reports: DataFrame, status_col: str, ok_value: str = "OK") -> DataFrame:
-    """A4 — ``round(ok/total*100, 3)``, zero-division → 0
-    (``base.py:994-1005``)."""
-    return reports.agg(
-        F.coalesce(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col(status_col) == ok_value, 1).otherwise(0))
-                / F.count("*"),
-                3,
-            ),
-            F.lit(0.0),
-        ).alias("ok_pct")
-    )
 
 
 def catalog_indicators(dataset_reports: DataFrame, distribution_reports: DataFrame) -> DataFrame:

@@ -91,16 +91,6 @@ def value_fields(fields: DataFrame) -> DataFrame:
     )
 
 
-def time_index_fields(fields: DataFrame) -> DataFrame:
-    """F6 — exactly the time-index field(s) (``processors.py:167-198``)."""
-    return fields.filter(F.col("specialType") == "time_index")
-
-
-def filter_by_status(reports: DataFrame, status: str, status_col: str) -> DataFrame:
-    """F7 — status filter for indicator counts (``base.py:978-992``)."""
-    return reports.filter(F.col(status_col) == F.lit(status))
-
-
 def clean_field_keyspace(fields: DataFrame) -> DataFrame:
     """F8 — strip spaces from every field title / id (``base.py:940-948``)."""
     return fields.withColumn("title", strip_spaces(F.col("title"))).withColumn(

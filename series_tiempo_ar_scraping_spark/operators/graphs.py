@@ -1,5 +1,5 @@
-"""Shared graph constructions (leaf module — batch query modules
-compose these so sibling-batch imports never race the import order).
+"""Shared graph constructions (leaf module the batch query modules
+compose).
 
 The SQL twin of :data:`copurchase_edges` lives in
 ``sqlfrags.COPURCHASE_EDGES_SQL``; change them together or the HITS

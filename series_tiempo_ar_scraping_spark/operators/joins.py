@@ -8,8 +8,6 @@ outer equi-join on ``indice_tiempo``. In long form no join is needed at all
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,34 +28,6 @@ def align_series_wide(obs: DataFrame, series_titles: list[str] | None = None) ->
     return pivoted.agg(F.first("value", ignorenulls=True)).withColumnRenamed(
         "ts", "indice_tiempo"
     )
-
-
-def align_series_outer_join(frames: list[DataFrame], on: str = "ts") -> DataFrame:
-    """J1 (explicit-join formulation) — iterative full-outer equi-join on the
-    time index. Kept for parity demonstration; prefer the long-form pivot.
-    """
-    return reduce(
-        lambda a, b: a.join(b, on=on, how="full_outer"), frames
-    )
-
-
-def lookup_fields(obs: DataFrame, fields: DataFrame, on: str = "series_id") -> DataFrame:
-    """J2 — metadata lookup join (``get_field``, ``processors.py:186-187``).
-
-    Metadata dims are tiny vs the observation fact table → broadcast hash
-    join, no shuffle of the fact side.
-    """
-    return obs.join(
-        F.broadcast(fields.withColumnRenamed("field_id", on)), on=on, how="left"
-    )
-
-
-def datasets_of_distributions(distributions: DataFrame, datasets: DataFrame) -> DataFrame:
-    """J3 — datasets that own at least one listed distribution
-    (``base.py:318-334,519-528``): distinct dataset ids + semi-join.
-    """
-    ids = distributions.select("dataset_id").distinct()
-    return datasets.join(F.broadcast(ids), on="dataset_id", how="left_semi")
 
 
 # J4/V5 (header↔field-id check) lives in sources/scrape.py:check_headers —

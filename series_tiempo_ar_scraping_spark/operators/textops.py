@@ -33,10 +33,6 @@ def tokens(text: Column | str) -> Column:
     )
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text))
-
-
 def bpe_ish_tokens(text: Column | str) -> Column:
     """Sub-word-ish tokenization: split on whitespace AND punctuation
     boundaries — a cheap stand-in for BPE pre-tokenization."""
@@ -142,10 +138,3 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
             ),
         )
     )
-
-
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Convenience single-expression form — fine for one-shot use; hot
-    paths should materialize tokens first and call
-    ``shingles_from_tokens`` (see its docstring)."""
-    return shingles_from_tokens(tokens(normalize_text(text)), n)

@@ -180,11 +180,6 @@ def validate_metadata(frames: dict[str, DataFrame]) -> DataFrame:
     return cat_errs.unionByName(ds_errs).unionByName(dist_errs).unionByName(fld_errs)
 
 
-def is_valid_catalog(metadata_errors: DataFrame) -> bool:
-    """V2 — boolean roll-up (``base.py:453``)."""
-    return metadata_errors.isEmpty()
-
-
 def datasets_report(datasets: DataFrame, metadata_errors: DataFrame) -> DataFrame:
     """V3 — per-dataset harvest/validity report (``base.py:443-451``),
     keyed by ``catalog_id``: dataset ids are catalog-scoped, so errors

@@ -20,6 +20,7 @@ import os
 from collections.abc import Mapping
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -160,6 +161,21 @@ class CatalogPipeline:
         self.distribution_id_filter = distribution_id_filter
         # V8 — skip-if-exists unless replace (base.py:155-163, main.py:52-56)
         self.replace = replace
+        self._cached: list[DataFrame] = []
+
+    def _cache(self, df: DataFrame) -> DataFrame:
+        # the cache is keyed by plan: one the session already holds (the
+        # caller's, or an earlier pass's) stays its owner's to release
+        if df.storageLevel == StorageLevel.NONE:
+            self._cached.append(df)
+        return df.cache()
+
+    def unpersist(self) -> None:
+        """Release every frame ``run`` cached. Never ``clearCache``: the
+        session may hold the caller's own caches."""
+        for df in self._cached:
+            df.unpersist()
+        self._cached.clear()
 
     # -- phase 1: pure planning -------------------------------------------
 
@@ -187,18 +203,18 @@ class CatalogPipeline:
         frames = self.plan()
         # metadata is tiny and re-joined everywhere — cache once
         for k in frames:
-            frames[k] = frames[k].cache()
+            frames[k] = self._cache(frames[k])
 
-        meta_errors = validate_metadata(frames).cache()
+        meta_errors = self._cache(validate_metadata(frames))
         # report over the UNFILTERED datasets: a dataset with metadata
         # errors must appear as an ERROR row (reference base.py:443-451),
         # not vanish — the harvest filter applies only to further
         # processing
         ds_report = datasets_report(frames["datasets"], meta_errors)
         frames["datasets"] = harvestable_datasets(frames["datasets"], meta_errors)
-        ts_dists = time_series_distributions(
-            frames["distributions"], frames["fields"]
-        ).cache()
+        ts_dists = self._cache(
+            time_series_distributions(frames["distributions"], frames["fields"])
+        )
 
         obs_parts: list[DataFrame] = []
         # csv/txt routes (S6/S7): per-distribution file reads. V7: any
@@ -262,7 +278,7 @@ class CatalogPipeline:
         header_errors = None
         if workbooks:
             paths = sorted({p for p in workbooks.values() if p})
-            cells = extract_cells(self.spark, paths, by_path=True).cache()
+            cells = self._cache(extract_cells(self.spark, paths, by_path=True))
             located = excel_dists.join(
                 F.broadcast(
                     self.spark.createDataFrame(
@@ -275,7 +291,7 @@ class CatalogPipeline:
             sp, tp = scraping_params(
                 frames["fields"], located, workbook=F.col("workbook")
             )
-            headered = check_headers(cells, sp).cache()
+            headered = self._cache(check_headers(cells, sp))
             header_errors = headered.filter(~F.col("header_ok"))
             obs_sc, table_ends = scrape_observations(
                 cells, headered.filter(F.col("header_ok")), tp
@@ -291,20 +307,20 @@ class CatalogPipeline:
             # every routed file failed (V7: the reasons are in
             # processor_errors) — the report still lists each routed
             # distribution as ERROR instead of disappearing
-            dist_report = sort_reports_by_status(
+            dist_report = self._cache(sort_reports_by_status(
                 ts_dists.select(
                     "catalog_id",
                     F.col("dataset_id").alias("dataset_identifier"),
                     F.col("distribution_id").alias("distribution_identifier"),
                     F.lit("ERROR").alias("distribution_status"),
                 )
-            ).cache()
+            ))
             indicators = catalog_indicators(ds_report, dist_report)
         if obs_parts:
             observations = obs_parts[0]
             for p in obs_parts[1:]:
                 observations = observations.unionByName(p)
-            observations = observations.cache()
+            observations = self._cache(observations)
 
             # V4: attach frequency from the time-index field, validate.
             freq = (
@@ -326,11 +342,11 @@ class CatalogPipeline:
                     )[F.col("specialTypeDetail")].alias("freq_code"),
                 )
             )
-            series_rep = validate_observations(
+            series_rep = self._cache(validate_observations(
                 observations.join(
                     F.broadcast(freq), ["catalog_id", "distribution_id"], "left"
                 )
-            ).cache()
+            ))
             # Every routed ts-distribution must appear in the report —
             # one that yielded no observations at all is an ERROR (the
             # reference's per-distribution try/except would have caught
@@ -376,14 +392,14 @@ class CatalogPipeline:
                     ),
                 ).drop("_hdr_bad")
 
-            dist_report = sort_reports_by_status(
+            dist_report = self._cache(sort_reports_by_status(
                 dist_status.select(
                     "catalog_id",
                     F.col("dataset_id").alias("dataset_identifier"),
                     F.col("distribution_id").alias("distribution_identifier"),
                     "distribution_status",
                 )
-            ).cache()
+            ))
             indicators = catalog_indicators(ds_report, dist_report)
 
             # K1: every catalog's wide CSVs in one partitionBy text write

@@ -1,30 +1,14 @@
-"""Query catalog — the engine's headline queries with DuckDB oracles.
+"""Query catalog, first module — the engine's headline queries with DuckDB
+oracles.
 
 Every entry maps a SURVEY §2 operator (or an LLM-pipeline extension) onto
-the driver-generated tables (TESTDATA.md). Each query has:
-
-- a Spark implementation ``(spark, sf_dir) -> DataFrame`` registered in
-  ``QUERIES``;
-- an equivalent DuckDB SQL string in ``ORACLES`` (column names aliased
-  identically — the driver's compare hashes values under sorted column
-  names).
-
-Determinism rules used throughout (so Spark and DuckDB hash-match):
-
-- Money/measure sums go through ``CAST(... AS DECIMAL)`` **before** SUM —
-  decimal addition is exact and associative, so shuffle/order differences
-  can't flip low-order bits (double sums are order-dependent).
-- Ratios/averages are computed from those exact sums, then ``round``-ed.
-- Window orderings always carry a unique tiebreak column (event_id, …) —
-  SURVEY §7 hard part (c): the reference is nondeterministic where Python
-  ``set`` iteration leaks; we impose total orders instead.
-- Hashes use md5-derived 60-bit ints (``stable_hash64``) — reproducible in
-  both engines, unlike engine-native hash functions.
+the driver-generated tables (TESTDATA.md). Entries register into
+``registry`` (see its docstring for the determinism rules); the later
+``queries_*`` modules extend the catalog, and ``registry.load_queries()``
+loads them all.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,123 +20,20 @@ from series_tiempo_ar_scraping_spark.functions.scalars import (
     strip_spaces,
     url_basename,
 )
+from series_tiempo_ar_scraping_spark.registry import (
+    _PRICE_DEC,
+    _RATE_DEC,
+    DEC,
+    det_round,
+    register,
+)
 from series_tiempo_ar_scraping_spark.session import load_table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-# Queries that legitimately have no DuckDB oracle, each with a committed
-# justification. tools/check_queries.py fails if an oracle-less query is
-# registered without one — new queries must declare an oracle or a reason.
-NO_ORACLE_REASONS: dict[str, str] = {}
-# Cross-MODULE composed oracles (an oracle built from another batch's
-# registered SQL) cannot render at decoration time: under batchN-first
-# imports the component module may still be mid-import (its registrations
-# pending), so the read KeyErrors — found when classification_f1_report
-# (batch 14) embedded naive_bayes_classify (batch 13) and broke
-# test_import_order[queries_batch13]. Register with ``oracle_fn=`` instead;
-# the thunk resolves lazily at first registry USE (gate ordering /
-# compare), when every module is guaranteed complete.
-DEFERRED_ORACLES: dict[str, Callable[[], str]] = {}
-
-
-def resolve_deferred_oracles(strict: bool = False) -> None:
-    """Render pending ``oracle_fn`` thunks into ``ORACLES``. Tolerant by
-    default (a thunk whose component is not yet registered stays
-    deferred — we may be mid-circular-import); ``strict=True`` (used at
-    the entry points, where registration is known complete) re-raises."""
-    for name, fn in list(DEFERRED_ORACLES.items()):
-        try:
-            ORACLES[name] = fn()
-        except KeyError:
-            if strict:
-                raise
-            continue
-        del DEFERRED_ORACLES[name]
-
-DEC = "decimal(22,4)"  # exact-sum working type for money/measure columns
-
-# Exact-arithmetic revenue: cast *inputs* to decimal (2dp money, 4dp rates
-# — no representable round-half ties from the source doubles), multiply in
-# decimal (exact in both engines), sum exactly, cast to double at the end.
-# Casting the double *product* instead would round differently per engine.
-_PRICE_DEC = "decimal(12,2)"
-_RATE_DEC = "decimal(6,4)"
 
 
 def _revenue_dec() -> F.Column:
     price = F.col("l_extendedprice").cast(_PRICE_DEC)
     disc = F.col("l_discount").cast(_RATE_DEC)
     return price * (F.lit(1) - disc)
-
-
-_REVENUE_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))"
-)
-
-
-
-def det_round(col: F.Column, n: int) -> F.Column:
-    """Deterministic cross-engine rounding: floor(x*10^n + 0.5)/10^n.
-
-    Spark's ``round`` on DOUBLE rounds the value's shortest decimal *string*
-    (HALF_UP on BigDecimal.valueOf), DuckDB rounds the binary value — they
-    disagree whenever the shortest repr lands exactly on a half. floor() is
-    exact on both engines, so this formula is bit-identical everywhere.
-    For negative inputs halves round toward +∞ (see NOTE below) — still
-    deterministic because every oracle mirrors the identical formula.
-    FINITE inputs only: Spark's floor(DOUBLE) returns BIGINT (Infinity
-    saturates, NaN → 0) while DuckDB keeps Inf/NaN as DOUBLE — callers
-    dividing must guard the divisor (NULL it out) before rounding.
-    """
-    p = 10 ** n
-    return (F.floor(col * p + F.lit(0.5)) / p).cast("double")
-
-
-# NOTE on negative inputs: floor(x·10^n + 0.5) rounds halves toward +∞
-# for negatives (-2.00005 → -2.0000, not -2.0001). That convention is
-# unusual but CROSS-ENGINE SAFE — every oracle mirrors the same formula,
-# so both engines land on identical bits; the original "non-negative
-# only" wording described the early catalog, not a correctness limit.
-
-
-def det_round_sql(expr: str, n: int) -> str:
-    p = 10 ** n
-    return f"CAST(FLOOR(({expr}) * {p} + 0.5) / {p} AS DOUBLE)"
-
-
-def register(name: str, oracle: str | None = None,
-             no_oracle_reason: str | None = None,
-             oracle_fn: Callable[[], str] | None = None):
-    """Decorator: add a query (and optionally its oracle) to the catalog.
-
-    A query registered with ``oracle=None`` must either have its oracle
-    assigned later (``ORACLES[name] = ...`` after shared fragments are
-    defined) or carry ``no_oracle_reason`` — the checker treats a reasonless
-    oracle-less query as a failure, so coverage can't silently erode.
-
-    Duplicate names raise: a same-name re-registration silently SHADOWS
-    the earlier query (dict overwrite), shrinking the catalog with every
-    signal still green — exactly what happened to batch4's signup cohort
-    matrix until the r7 review (now ``signup_cohort_retention``).
-    """
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in QUERIES:
-            raise ValueError(
-                f"query {name!r} already registered "
-                f"({QUERIES[name].__module__}) — duplicate registration "
-                "shadows the earlier query; pick a distinct name"
-            )
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        if oracle_fn is not None:
-            DEFERRED_ORACLES[name] = oracle_fn  # see resolve_deferred_oracles
-        if no_oracle_reason is not None:
-            NO_ORACLE_REASONS[name] = no_oracle_reason
-        return fn
-
-    return deco
 
 
 # ---------------------------------------------------------------------------
@@ -846,207 +727,3 @@ def asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFra
         "event_id", "user_id", F.col("ev_ts").alias("ts"), "last_click_ts"
     )
 
-
-# Batch 2 (LLM-pipeline operators) registers itself on import.
-from series_tiempo_ar_scraping_spark import queries_llm  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_ext  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch4  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch5  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch6  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch7  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch8  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch9  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch10  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch11  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch12  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch13  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch14  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch15  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch16  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch17  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch18  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch19  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch20  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch21  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch22  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch23  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch24  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch25  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch26  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch27  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch28  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch29  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch30  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch31  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch32  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch33  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch34  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch35  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch36  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch37  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch38  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch39  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch40  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch41  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch42  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch43  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch44  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch45  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch46  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch47  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch48  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch49  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch50  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch51  # noqa: E402,F401
-from series_tiempo_ar_scraping_spark import queries_batch52  # noqa: E402,F401
-
-# ---------------------------------------------------------------------------
-# Driver-gate ordering. The driver's correctness gate checks the FIRST 50
-# entries of queries() in dict order (observed: CORRECTNESS_r01.json is
-# exactly the first 50 registrations). The first 50 must therefore cover
-# every SURVEY §2 operator AND every graded LLM-pipeline capability
-# (dedup family incl. embedding-cosine, ANN incl. IVF, multimodal,
-# text analysis, chunking/packing). Queries past 50 still carry the
-# strict local mirror (tools/check_queries.py) as their signal.
-# ---------------------------------------------------------------------------
-_DRIVER_GATE_PRIORITY = [
-    # Core §2 exemplars (one per family): scans, filters, joins,
-    # aggregations, windows, validation, scalars.
-    # r12 (VERDICT r11 #6): five redundant stable slots freed for
-    # never-verified backfill — resample_gapfill_daily (V4 stays
-    # covered by series_gap_check), sessionize_events (§2.6 stays
-    # covered by window_rank_suite + topk_orders_per_priority),
-    # tfidf_top_terms (text analysis stays covered by text_stats +
-    # bpe_train_merges), range_join_purchase_context and
-    # asof_nearest_click_to_purchase (showcase extensions,
-    # driver-verified r8-r11, mirror-green every round). Each freed
-    # family keeps at least one driver-gated exemplar.
-    # r13 (VERDICT r12 #5): two more redundant stable slots freed for
-    # never-verified backfill — q05_region_revenue (J2 broadcast
-    # metadata lookups stay covered by meta_field_validation; the
-    # relational-join family by semi/anti/topk) and
-    # tumbling_hourly_counts (time-bucket aggregation stays covered by
-    # count_by_status + series_gap_check + window_rank_suite; the
-    # streaming tumbling form enters the gate via this round's three
-    # rotated-in streaming entries). Both were driver-verified every
-    # round r1-r12 and keep the full mirror signal.
-    "q01_pricing_summary",
-    "semi_orders_with_big_lineitem",
-    "anti_customers_without_orders",
-    "filter_purchase_events",
-    "route_distribution_method",
-    "scalar_suite",
-    "count_by_status",
-    "indicator_assembly",
-    "union_segments",
-    "align_daily_activity",
-    "series_gap_check",
-    "meta_field_validation",
-    "window_rank_suite",
-    # LLM-pipeline exemplars: dedup / similarity / text / multimodal
-    "text_stats",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ivf_ann_topk",
-    "multimodal_features",
-    "stratified_sample_documents",
-    # Showcase relational extensions
-    "topk_orders_per_priority",
-    # Round-8 rotation survivors (VERDICT r7 #1): one exemplar per hard
-    # family stays under the driver gate; siblings verified in r8 rotate
-    # back to the local mirror.
-    "nightly_quality_report",
-    "kmeans_lloyd_clusters",
-    "bpe_train_merges",
-    "spatial_dbscan_clusters",
-    "cdc_apply_roundtrip",
-    "survival_kaplan_meier",
-    "golden_record_survivorship",
-    "split_leakage_audit",
-    # Round-14 rotation (VERDICT r13 #7 + the codified changed-first
-    # rule). The r13 rotation block (50/50 in CORRECTNESS_r13.json)
-    # rotates back to the local mirror. Changed-first: dedup_cc_star
-    # (the r13 CC-star rewrite was that round's least driver-verified
-    # semantic change — VERDICT r13 #6), the two r13-NEW oracled
-    # escalation entries (registered after the r13 gate dry-run), and
-    # the five entries whose Spark text r14 rewrote (one-pass FK
-    # audit, per-row snapshot diff, melted RFM prefix sum, map-side PQ
-    # encode/ADC ×2). nightly_quality_report — also r14-changed via
-    # its components — already holds a stable slot above.
-    "dedup_cc_star",
-    "semantic_cluster_dedup_two_level",
-    "label_noise_knn_two_level",
-    "fk_integrity_audit",
-    "snapshot_diff_report",
-    "rfm_customer_segments",
-    "pq_ann_topk",
-    "ivfpq_ann_topk",
-    # Never-verified backfill (earliest-registered first — the oldest
-    # never-driver-verified code; the staged r14 list from r13).
-    "concurrent_sessions_by_day",
-    "q18_large_volume_orders",
-    "embedding_dim_profile",
-    "skew_salted_join_stats",
-    "trailing_7d_avg",
-    "long_word_extraction",
-    "series_forward_fill",
-    "ordered_string_agg",
-    "series_linear_interpolate",
-    "rolling_median_value",
-    "union_missing_columns",
-    "safe_arithmetic_report",
-    "table_fingerprint",
-    "incremental_dedup",
-]
-# Backlog after the r14 rotation: the union of CORRECTNESS_r1-r13's
-# names, this round's 14 backfills and 2 first-gated new entries puts
-# ~171 of 365 entries driver-verified at least once; ~194 never (all
-# carry the full local-mirror signal at two scales every round; the
-# count is reproducible from the CORRECTNESS_r*.json files + this
-# list). r15 rotation staging, per the changed-first rule: (1) any
-# entry whose oracle/Spark text r15 edits without a driver
-# re-verification, then (2) never-verified backfill,
-# earliest-registered first: embedding_int8_quantization,
-# token_length_histogram, boilerplate_ngram_detection,
-# repetition_score, pii_pattern_scan, dataset_split_assignment,
-# chunk_documents_fixed, tokenize_batch_stats, and onward in
-# registration order.
-# (approx_sketch_stats, the one oracle-less entry, is deliberately
-# skipped by backfill: the driver records only a rows-only check for
-# it — gate it once, last, when the oracled backlog is burned, for
-# that weaker signal.)
-
-
-def apply_driver_gate_order(strict: bool = False) -> None:
-    """Reorder ``QUERIES``/``ORACLES`` so the driver-gate priority list comes
-    first.  Tolerant of partially-initialized registries: during a circular
-    import (e.g. ``tests`` importing ``queries_llm`` before ``queries``) some
-    priority names are not yet registered — those are simply skipped and the
-    caller (``__spark_entry__.queries()``) re-applies the order once every
-    submodule has finished registering.  Idempotent.
-
-    ``strict=True`` (used by ``__spark_entry__``, where registration is
-    known complete) fails fast if any priority name is missing — a rename
-    or deletion must never silently evict a query from the first-50 hard
-    gate."""
-    resolve_deferred_oracles(strict=strict)
-    if strict:
-        missing = [n for n in _DRIVER_GATE_PRIORITY if n not in QUERIES]
-        if missing:  # explicit raise: assert would vanish under python -O
-            raise RuntimeError(
-                f"driver-gate priority names not registered: {missing} — "
-                "a gated query was renamed or deleted; update "
-                "_DRIVER_GATE_PRIORITY in the same change"
-            )
-    order = [n for n in _DRIVER_GATE_PRIORITY if n in QUERIES]
-    prio = set(order)
-    order += [n for n in QUERIES if n not in prio]
-    reordered_q = {n: QUERIES[n] for n in order}
-    reordered_o = {n: ORACLES[n] for n in order if n in ORACLES}
-    QUERIES.clear()
-    QUERIES.update(reordered_q)
-    ORACLES.clear()
-    ORACLES.update(reordered_o)
-
-
-apply_driver_gate_order()

@@ -30,12 +30,13 @@ from pyspark.sql import functions as F
 from series_tiempo_ar_scraping_spark.operators import dedup as D
 from series_tiempo_ar_scraping_spark.operators import similarity as S
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _hex60_seeded,
     _ivf_trained_ctes,
@@ -46,12 +47,6 @@ from series_tiempo_ar_scraping_spark.sqlfrags import (
     _neardup_edges_ctes,
     _planes_sql_b4,
 )
-
-# Spark-side helpers from sibling batches are imported INSIDE the query
-# bodies: a top-level `from queries_llm import _near_corpus` breaks when
-# a test imports that submodule first (the registry cycle leaves it
-# partially initialized while queries' bottom imports this module) —
-# the import-order hazard tests/test_import_order.py pins.
 
 # Lower-median rank: the element at FLOOR((n+1)/2) in the sorted order.
 # Explicit FLOOR on both sides — DuckDB CAST(double AS BIGINT) rounds
@@ -870,8 +865,8 @@ def series_nightly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# _kmeans_ctes lives in sqlfrags (leaf) so later batches can compose it
-# without import-order hazards; re-imported here for the oracle builders.
+# _kmeans_ctes lives in sqlfrags so later batches can compose it;
+# re-imported here for the oracle builders.
 def _kmeans_oracle(k: int = 8, iters: int = 3) -> str:
     return (
         "WITH "
@@ -966,7 +961,6 @@ def ivf_trained_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The embedding-cluster oracle needs the plane fragment rendered with the
 # SAME coefficients the Spark side uses; inject it post-hoc (the format
 # placeholder keeps the f-string above readable).
-from series_tiempo_ar_scraping_spark.queries import ORACLES  # noqa: E402
 
 ORACLES["embedding_dedup_clusters"] = ORACLES[
     "embedding_dedup_clusters"

@@ -27,10 +27,13 @@ from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import similarity as S
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
+    det_round,
+    det_round_sql,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _hex60_seeded,
     _toks_of_norm,
@@ -360,9 +363,8 @@ def semantic_cluster_dedup(
     )
 
 
-# The cluster-dedup oracle chains the unrolled Lloyd CTEs (sqlfrags —
-# leaf, so any import order works) over the planted corpus CTE.
-from series_tiempo_ar_scraping_spark.queries import ORACLES  # noqa: E402
+# The cluster-dedup oracle chains the unrolled Lloyd CTEs (sqlfrags)
+# over the planted corpus CTE.
 from series_tiempo_ar_scraping_spark.sqlfrags import (  # noqa: E402
     _COS64_SQL as _COS,
     _EMB_NEAR_SQL,
@@ -771,8 +773,6 @@ _HLL_C = _hll_est_scale(_HLL_M)
 
 
 def _hll_oracle() -> str:
-    from series_tiempo_ar_scraping_spark.queries import det_round_sql
-
     from series_tiempo_ar_scraping_spark.sqlfrags import _HEX60
 
     hex60 = _HEX60.format(x="'0|' || v")
@@ -851,7 +851,6 @@ def hll_distinct_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from series_tiempo_ar_scraping_spark.operators.dedup import (
         hash64_seeded,
     )
-    from series_tiempo_ar_scraping_spark.queries import det_round
 
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -1786,7 +1785,6 @@ def prefix_filter_jaccard_join(
     shingle lists once per candidate; Jaccard is one same-int
     division."""
     from series_tiempo_ar_scraping_spark.operators import dedup as D
-    from series_tiempo_ar_scraping_spark.queries import det_round
     from series_tiempo_ar_scraping_spark.queries_llm import _near_corpus
 
     from pyspark.sql import Window

@@ -52,11 +52,13 @@ from pyspark.sql import functions as F
 from series_tiempo_ar_scraping_spark.operators import similarity as S
 from series_tiempo_ar_scraping_spark.operators import textops as TX
 from series_tiempo_ar_scraping_spark.operators.dedup import hash64_seeded
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
     det_round,
-    load_table,
+    det_round_sql,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _COS64_SQL,
     _QUALITY_SQL,
@@ -374,7 +376,6 @@ def quality_weighted_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HLL set operations (sketch union / intersection estimates)
 # ---------------------------------------------------------------------------
 
-from series_tiempo_ar_scraping_spark.queries import det_round_sql  # noqa: E402
 from series_tiempo_ar_scraping_spark.sqlfrags import _HEX60  # noqa: E402
 from series_tiempo_ar_scraping_spark.streaming.sketch import (  # noqa: E402
     HLL_M,
@@ -3381,17 +3382,12 @@ def chi_square_independence(
 # Composed nightly data-quality report (third composed pipeline)
 # ---------------------------------------------------------------------------
 
-from series_tiempo_ar_scraping_spark.queries import ORACLES  # noqa: E402
-
 
 def _nqr_oracle() -> str:
     """Compose the COMPONENT ORACLES (verbatim, from the registry) into
     the long-format report — the oracle composes exactly what the Spark
     side composes, so an edit to any component propagates to both.
-    Components are all registered EARLIER IN THIS MODULE, so the
-    registry reads are safe under any batch import order (a
-    cross-module read here broke batchN-first imports — the
-    test_import_order contract)."""
+    Components are all registered earlier in this module."""
     return f"""
     SELECT 'fk_orphans' AS check_name, relationship AS item,
            CAST(n_orphans AS BIGINT) AS metric
@@ -3425,24 +3421,22 @@ def nightly_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the components share no state, so the four branches run as
     independent subtrees under one union (a scheduler can run them
     concurrently); each branch keeps its own audited plan."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    fk = QUERIES["fk_integrity_audit"](spark, sf_dir).select(
+    fk = fk_integrity_audit(spark, sf_dir).select(
         F.lit("fk_orphans").alias("check_name"),
         F.col("relationship").alias("item"),
         F.col("n_orphans").cast("long").alias("metric"),
     )
-    cdc = QUERIES["snapshot_diff_report"](spark, sf_dir).select(
+    cdc = snapshot_diff_report(spark, sf_dir).select(
         F.lit("cdc_diff").alias("check_name"),
         F.col("verdict").alias("item"),
         F.col("n").cast("long").alias("metric"),
     )
-    ben = QUERIES["benford_digit_test"](spark, sf_dir).select(
+    ben = benford_digit_test(spark, sf_dir).select(
         F.lit("benford_absdev").alias("check_name"),
         F.col("digit").cast("string").alias("item"),
         F.abs(F.col("deviation_micro")).cast("long").alias("metric"),
     )
-    chi = QUERIES["chi_square_independence"](spark, sf_dir).select(
+    chi = chi_square_independence(spark, sf_dir).select(
         F.lit("mix_shift_chi2").alias("check_name"),
         F.lit("event_type_x_dow").alias("item"),
         F.col("chi2_micro").cast("long").alias("metric"),

@@ -51,12 +51,12 @@ from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import textops as TX
 from series_tiempo_ar_scraping_spark.operators.dedup import hash64_seeded
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _hex60_seeded,
     _sp_points_sql,
@@ -996,7 +996,7 @@ def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
         " - ({d2} / {d}) * {s2y})"
         " / ({syy} - {sy} * {sy} / {n})"
     ).format(d=d, d0=d0, d1=d1, d2=d2, **v)
-    from series_tiempo_ar_scraping_spark.queries import det_round_sql as drs
+    from series_tiempo_ar_scraping_spark.registry import det_round_sql as drs
 
     return g.selectExpr(
         "l_returnflag",

@@ -84,12 +84,16 @@ from series_tiempo_ar_scraping_spark.operators.dedup import (
     hash64_seeded,
     upper_triangle_pairs,
 )
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.queries_batch13 import (
+    naive_bayes_classify,
+)
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _hex60_seeded,
     _toks_of_norm,
@@ -3035,12 +3039,7 @@ def bitemporal_asof_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _f1_oracle() -> str:
-    """Composes the REGISTERED naive-Bayes oracle (batch 13 — loaded
-    before this module by queries.py's import order, so the registry
-    read is safe under batchN-first imports; test_import_order pins
-    it)."""
-    from series_tiempo_ar_scraping_spark.queries import ORACLES
-
+    """Composes the REGISTERED naive-Bayes oracle (batch 13)."""
     return f"""
     WITH preds AS (
       SELECT actual, predicted
@@ -3091,7 +3090,7 @@ def _f1_oracle() -> str:
     """
 
 
-@register("classification_f1_report", oracle_fn=_f1_oracle)
+@register("classification_f1_report", oracle=_f1_oracle())
 def classification_f1_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3110,10 +3109,8 @@ def classification_f1_report(
     cross of labels x predictions (labels ~ a handful; at larger
     label spaces this becomes a groupBy on (actual, predicted) —
     the confusion matrix — and the per-class rollup reads that)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
     preds = (
-        QUERIES["naive_bayes_classify"](spark, sf_dir)
+        naive_bayes_classify(spark, sf_dir)
         .select("actual", "predicted")
         .localCheckpoint(eager=False)  # reused: class frame + counts
     )

@@ -38,10 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     PII_CORPUS_SQL,
     PII_PATTERNS,
@@ -51,9 +49,8 @@ from series_tiempo_ar_scraping_spark.sqlfrags import (
 
 # ---------------------------------------------------------------------------
 # Planted-PII corpus (shared by detection + redaction; the pattern and
-# corpus-SQL fragments live in sqlfrags — the LEAF — so the batch-17
-# streaming monitor's deferred oracle can compose them under any import
-# order)
+# corpus-SQL fragments live in sqlfrags, shared with the batch-17
+# streaming monitor's oracle)
 # ---------------------------------------------------------------------------
 
 _PII_PATTERNS = PII_PATTERNS

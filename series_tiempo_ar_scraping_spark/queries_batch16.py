@@ -43,10 +43,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
+from series_tiempo_ar_scraping_spark.queries_batch14 import (
+    expectation_suite_report,
 )
+from series_tiempo_ar_scraping_spark.queries_batch15 import (
+    gopher_repetition_report,
+    pii_detection_report,
+    table_profile_report,
+)
+from series_tiempo_ar_scraping_spark.registry import ORACLES, register
+from series_tiempo_ar_scraping_spark.session import load_table
 
 # ---------------------------------------------------------------------------
 # URL canonicalization + dedup (crawl curation)
@@ -748,12 +754,7 @@ def max_concurrent_user_spans(
 
 
 def _gnr_oracle() -> str:
-    """Composes the REGISTERED batch-14/15 oracles (loaded before this
-    module under queries.py's import order; deferred via oracle_fn so
-    batch16-first imports stay safe — the classification_f1_report
-    pattern)."""
-    from series_tiempo_ar_scraping_spark.queries import ORACLES
-
+    """Composes the REGISTERED batch-14/15 oracles."""
     return f"""
     SELECT 'pii_matches' AS check_name, source AS item,
            CAST(email_matches + phone_matches + ssn_matches AS BIGINT)
@@ -775,7 +776,7 @@ def _gnr_oracle() -> str:
     """
 
 
-@register("governance_nightly_report", oracle_fn=_gnr_oracle)
+@register("governance_nightly_report", oracle=_gnr_oracle())
 def governance_nightly_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -792,9 +793,7 @@ def governance_nightly_report(
     branches share no state and run as independent subtrees under one
     union; each keeps its own audited plan. Determinism: inherited
     from the hash-oracled components (exact integers throughout)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    pii = QUERIES["pii_detection_report"](spark, sf_dir).select(
+    pii = pii_detection_report(spark, sf_dir).select(
         F.lit("pii_matches").alias("check_name"),
         F.col("source").alias("item"),
         (
@@ -805,7 +804,7 @@ def governance_nightly_report(
         .cast("long")
         .alias("metric"),
     )
-    rep = QUERIES["gopher_repetition_report"](spark, sf_dir).select(
+    rep = gopher_repetition_report(spark, sf_dir).select(
         F.lit("repetition_flags").alias("check_name"),
         F.col("source").alias("item"),
         (
@@ -816,12 +815,12 @@ def governance_nightly_report(
         .cast("long")
         .alias("metric"),
     )
-    prof = QUERIES["table_profile_report"](spark, sf_dir).select(
+    prof = table_profile_report(spark, sf_dir).select(
         F.lit("profile_ndv").alias("check_name"),
         F.col("column_name").alias("item"),
         F.col("ndv").cast("long").alias("metric"),
     )
-    exp = QUERIES["expectation_suite_report"](spark, sf_dir).select(
+    exp = expectation_suite_report(spark, sf_dir).select(
         F.lit("contract_violations").alias("check_name"),
         F.concat(
             F.col("table_name"),

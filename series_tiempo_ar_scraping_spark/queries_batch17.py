@@ -35,10 +35,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.queries_llm import dedup_ngram_jaccard
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import _neardup_edges_ctes
 
 # ---------------------------------------------------------------------------
@@ -305,7 +304,7 @@ def _csd_oracle() -> str:
     """
 
 
-@register("cross_source_duplication_matrix", oracle_fn=_csd_oracle)
+@register("cross_source_duplication_matrix", oracle=_csd_oracle())
 def cross_source_duplication_matrix(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -324,9 +323,7 @@ def cross_source_duplication_matrix(
     aggregate. Determinism: string least/greatest and exact counts
     only; the oracle composes the SHARED near-dup CTE prefix so both
     engines derive the identical edges."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    edges = QUERIES["dedup_ngram_jaccard"](spark, sf_dir).select(
+    edges = dedup_ngram_jaccard(spark, sf_dir).select(
         "doc_a", "doc_b"
     )
     docs = load_table(spark, sf_dir, "documents").select(
@@ -374,9 +371,8 @@ _PII_EPOCH = 1704067200  # 2024-01-01T00:00:00Z — synthetic arrival clock
 
 
 def _spii_oracle() -> str:
-    """Composes the planted-PII fragments from sqlfrags (the LEAF — a
-    batch-15 read here would see a partially initialized sibling under
-    batch15-first imports; the leaf rule, see test_import_order)."""
+    """Composes the planted-PII corpus and patterns from sqlfrags — the
+    same fragments ``pii_detection_report``'s oracle is built from."""
     from series_tiempo_ar_scraping_spark.sqlfrags import (
         PII_CORPUS_SQL,
         PII_PATTERNS,
@@ -403,7 +399,7 @@ def _spii_oracle() -> str:
     """
 
 
-@register("streaming_pii_window_counts", oracle_fn=_spii_oracle)
+@register("streaming_pii_window_counts", oracle=_spii_oracle())
 def streaming_pii_window_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

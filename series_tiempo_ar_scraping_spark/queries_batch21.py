@@ -27,10 +27,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators.dedup import hash64_seeded
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
+from series_tiempo_ar_scraping_spark.queries_batch15 import (
+    gopher_repetition_report,
+    pii_detection_report,
 )
+from series_tiempo_ar_scraping_spark.registry import ORACLES, register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import _hex60_seeded
 
 # ---------------------------------------------------------------------------
@@ -127,10 +129,7 @@ _REP_W_REPET = 700
 
 
 def _srs_oracle() -> str:
-    """Composes the REGISTERED batch-15 report oracles (deferred via
-    oracle_fn — batch21-first imports stay safe)."""
-    from series_tiempo_ar_scraping_spark.queries import ORACLES
-
+    """Composes the REGISTERED batch-15 report oracles."""
     return f"""
     WITH pii AS (
       SELECT source, n_docs,
@@ -162,7 +161,7 @@ def _srs_oracle() -> str:
     """
 
 
-@register("source_reputation_score", oracle_fn=_srs_oracle)
+@register("source_reputation_score", oracle=_srs_oracle())
 def source_reputation_score(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -179,9 +178,7 @@ def source_reputation_score(
     rows, not on documents. Determinism: per-mille rates are
     truncating divisions of exact counts; the rank tiebreak is the
     source name."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    pii = QUERIES["pii_detection_report"](spark, sf_dir).select(
+    pii = pii_detection_report(spark, sf_dir).select(
         "source",
         "n_docs",
         (
@@ -190,7 +187,7 @@ def source_reputation_score(
             + F.col("ssn_matches")
         ).alias("pii_matches"),
     )
-    rep = QUERIES["gopher_repetition_report"](spark, sf_dir).select(
+    rep = gopher_repetition_report(spark, sf_dir).select(
         "source",
         (
             F.col("n_flagged_top_trigram")

@@ -24,10 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import _hex60_seeded
 
 # ---------------------------------------------------------------------------

@@ -40,10 +40,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators.dedup import hash64_seeded
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
+from series_tiempo_ar_scraping_spark.queries_llm import (
+    dedup_connected_components,
+    dedup_ngram_jaccard,
 )
+from series_tiempo_ar_scraping_spark.registry import ORACLES, register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     COPURCHASE_EDGES_SQL,
     _hex60_seeded,
@@ -234,7 +236,6 @@ def leakage_safe_split_assignment(
     pure function of (seed, component id) via the shared 60-bit hash
     contract — reruns, retries, and both engines assign identically."""
     from series_tiempo_ar_scraping_spark.operators import dedup as D
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
 
     # derive the verified edge list ONCE (eager checkpoint) and feed it
     # to BOTH the component labeling and the cross-split proof — calling
@@ -243,7 +244,7 @@ def leakage_safe_split_assignment(
     # the edges still come from the REGISTERED dedup entry, and the
     # labeling is the same operator that entry uses, so nothing drifts.
     edges = (
-        QUERIES["dedup_ngram_jaccard"](spark, sf_dir)
+        dedup_ngram_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=False)
     )
@@ -564,10 +565,9 @@ def cohens_kappa_agreement(
 
 
 def _dsr_oracle() -> str:
-    """Composes the registered CC oracle (deferred) and the shared
+    """Composes the registered CC oracle and the shared
     near-dup corpus so the clusters provably match the dedup
     family's."""
-    from series_tiempo_ar_scraping_spark.queries import ORACLES
     from series_tiempo_ar_scraping_spark.sqlfrags import _NEAR_CORPUS_SQL
 
     return f"""
@@ -604,7 +604,7 @@ def _dsr_oracle() -> str:
     """
 
 
-@register("dedup_savings_report", oracle_fn=_dsr_oracle)
+@register("dedup_savings_report", oracle=_dsr_oracle())
 def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The storage economics of near-dup collapse: per corpus source,
     how many documents sit in multi-member near-dup clusters, how many
@@ -620,9 +620,7 @@ def dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     size aggregate reused broadcast — no text ever crosses a shuffle
     twice. Determinism: exact byte counts (bigint); canonical choice
     is the min-id rule inherited from the hash-oracled CC entry."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    comp = QUERIES["dedup_connected_components"](spark, sf_dir)
+    comp = dedup_connected_components(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     # the shared near-dup corpus (queries_llm._near_corpus): originals
     # plus +100000 mutants with the first 12 chars sliced off — spelled

@@ -39,10 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators.dedup import hash64_seeded
-from series_tiempo_ar_scraping_spark.queries import (
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     COPURCHASE_EDGES_SQL,
     _hex60_seeded,

@@ -29,12 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.queries_llm import dedup_ngram_jaccard
+from series_tiempo_ar_scraping_spark.registry import (
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _neardup_edges_ctes,
     _toks_of_norm,
@@ -100,9 +101,7 @@ def dedup_eval_precision_recall(
     conditional-sum rollup — the eval costs no more than reading the
     edges. Determinism: exact counts; every rate is one truncating
     division of non-negative bigints."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
-
-    edges = QUERIES["dedup_ngram_jaccard"](spark, sf_dir).select(
+    edges = dedup_ngram_jaccard(spark, sf_dir).select(
         "doc_a", "doc_b"
     )
     docs = load_table(spark, sf_dir, "documents")

@@ -41,11 +41,8 @@ from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import dedup as DD
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import (
-    det_round,
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.registry import det_round, register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _NEAR_CORPUS_SQL,
     _QUALITY_SQL,

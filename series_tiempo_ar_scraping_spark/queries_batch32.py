@@ -34,13 +34,15 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
-    QUERIES,
+from series_tiempo_ar_scraping_spark.queries_llm import (
+    dedup_connected_components,
+)
+from series_tiempo_ar_scraping_spark.registry import (
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import _hex60_seeded
 
 # ---------------------------------------------------------------------------
@@ -432,7 +434,7 @@ def bcubed_cluster_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment frame with equi-joins on bounded cluster keys; the
     final rollup is one row. Determinism: exact integer counts;
     truncating divisions applied in the same order on both sides."""
-    assign = QUERIES["dedup_connected_components"](spark, sf_dir).select(
+    assign = dedup_connected_components(spark, sf_dir).select(
         F.col("doc_id"),
         F.col("component_id").alias("pred"),
         (F.col("doc_id") % 100000).alias("truth"),

@@ -16,12 +16,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import similarity as S
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
     _PRICE_DEC,
     det_round,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 
 # ---------------------------------------------------------------------------
 # §2.8 — set operations over row sets (INTERSECT / EXCEPT)
@@ -333,8 +334,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("sim") >= 0.95)
     )
 
-
-from series_tiempo_ar_scraping_spark.queries import ORACLES  # noqa: E402
 
 ORACLES["dedup_embedding_cosine"] = f"""
     WITH corpus AS ({_EMB_NEAR_SQL}),

@@ -31,12 +31,12 @@ from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import dedup as D
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
     det_round,
     det_round_sql,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _EN,
     _ES,

@@ -27,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import load_table, register
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import _toks_of_norm
 
 # ---------------------------------------------------------------------------
@@ -107,7 +108,7 @@ def _ss_oracle() -> str:
     """
 
 
-@register("symspell_typo_candidates", oracle_fn=_ss_oracle)
+@register("symspell_typo_candidates", oracle=_ss_oracle())
 def symspell_typo_candidates(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.operators import similarity as S
-from series_tiempo_ar_scraping_spark.queries import load_table, register
+from series_tiempo_ar_scraping_spark.registry import register
+from series_tiempo_ar_scraping_spark.session import load_table
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _kmeans_ctes,
     _kmeans_grouped_ctes,

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from series_tiempo_ar_scraping_spark.queries import ORACLES, register
+from series_tiempo_ar_scraping_spark.registry import ORACLES, register
 from series_tiempo_ar_scraping_spark.sqlfrags import (
     _COS64_SQL,
     _EMB_NEAR_SQL,

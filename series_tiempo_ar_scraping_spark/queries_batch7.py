@@ -25,11 +25,12 @@ from series_tiempo_ar_scraping_spark.operators.layout import (
     interleave_bits_sql,
     with_zvalue,
 )
-from series_tiempo_ar_scraping_spark.queries import (
+from series_tiempo_ar_scraping_spark.registry import (
+    ORACLES,
     det_round,
-    load_table,
     register,
 )
+from series_tiempo_ar_scraping_spark.session import load_table
 
 # bucket = top 10 bits of the 32-bit Z-value -> at most 1024 buckets
 _BUCKET_SHIFT = 2 * ZBITS - 10
@@ -150,7 +151,6 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup clusters (tiny by construction), so the window sort is
     bounded per key; the output is one row per cluster, the exact frame
     a curation pipeline anti-joins against the corpus to drop dups."""
-    # runtime import: queries_llm is a sibling batch (import-order safe)
     from series_tiempo_ar_scraping_spark.queries_llm import (
         _near_corpus,
         dedup_connected_components,
@@ -176,8 +176,6 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_members"),
     )
 
-
-from series_tiempo_ar_scraping_spark.queries import ORACLES  # noqa: E402
 
 # _cc_oracle() is itself a WITH RECURSIVE statement; splice it in as the
 # comps subquery (nested CTEs are legal in DuckDB subselects).

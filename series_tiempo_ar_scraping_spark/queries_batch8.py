@@ -14,11 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import (
-    det_round,
-    load_table,
-    register,
-)
+from series_tiempo_ar_scraping_spark.registry import det_round, register
+from series_tiempo_ar_scraping_spark.session import load_table
 
 from series_tiempo_ar_scraping_spark.sqlfrags import (  # noqa: E402
     _DAILY_SERIES_DDAY_SQL as _DAILY_SQL,

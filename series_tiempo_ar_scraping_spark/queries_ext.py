@@ -18,7 +18,7 @@ from series_tiempo_ar_scraping_spark.operators.validation import (
     field_rules,
 )
 from series_tiempo_ar_scraping_spark.functions.scalars import freq_iso_to_code
-from series_tiempo_ar_scraping_spark.queries import det_round, register
+from series_tiempo_ar_scraping_spark.registry import register
 from series_tiempo_ar_scraping_spark.session import load_table
 
 # ---------------------------------------------------------------------------

@@ -21,11 +21,11 @@ from pyspark.sql import functions as F
 from series_tiempo_ar_scraping_spark.operators import dedup as D
 from series_tiempo_ar_scraping_spark.operators import similarity as S
 from series_tiempo_ar_scraping_spark.operators import textops as TX
-from series_tiempo_ar_scraping_spark.queries import det_round, register
+from series_tiempo_ar_scraping_spark.registry import ORACLES, det_round, register
 from series_tiempo_ar_scraping_spark.session import load_table
 
-# Shared SQL fragments live in the leaf module sqlfrags (circular-import
-# safe); re-exported here for existing importers.
+# Shared SQL fragments live in the leaf module sqlfrags; re-exported here
+# for existing importers.
 from series_tiempo_ar_scraping_spark.sqlfrags import (  # noqa: F401
     _EN,
     _ES,
@@ -523,11 +523,9 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(bucket < rate).select("doc_id", "lang", "source")
 
 
-from series_tiempo_ar_scraping_spark.queries import ORACLES as _ORACLES
-
-_ORACLES["dedup_ngram_jaccard"] = _ngram_jaccard_oracle()
-_ORACLES["dedup_connected_components"] = _cc_oracle()
-_ORACLES["dedup_cc_star"] = _cc_oracle()
+ORACLES["dedup_ngram_jaccard"] = _ngram_jaccard_oracle()
+ORACLES["dedup_connected_components"] = _cc_oracle()
+ORACLES["dedup_cc_star"] = _cc_oracle()
 
 
 @register(
@@ -575,7 +573,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs
 
 
-_ORACLES["simhash_hamming_pairs"] = _ORACLES["simhash_hamming_pairs"].replace(
+ORACLES["simhash_hamming_pairs"] = ORACLES["simhash_hamming_pairs"].replace(
     "PLACEHOLDER_TOKS", _toks_of_norm("text")
 ).replace("PLACEHOLDER_SIM", _simhash_sql())
 

@@ -94,13 +94,6 @@ def download_to_file(url: str, file_path: str, replace: bool = True, **kw) -> st
     return file_path
 
 
-def merge_download_config(defaults: dict, per_catalog: dict | None) -> dict:
-    """J5 — per-catalog download config over defaults (``base.py:963-976``)."""
-    out = dict(defaults)
-    out.update(per_catalog or {})
-    return out
-
-
 DOWNLOAD_RESULT_SCHEMA = (
     "url string, file_path string, ok boolean, n_bytes bigint, "
     "attempts int, error string"

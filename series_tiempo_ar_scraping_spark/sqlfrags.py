@@ -1,10 +1,8 @@
 """Shared DuckDB-SQL fragments mirroring the engine's text expressions.
 
-Leaf module (no intra-package imports) so every query batch can use the
-fragments without joining the ``queries*`` circular-import dance: the
-oracle SQL for tokenization/shingling must stay lockstep with
-``operators/textops.py``'s Column expressions, and living in one place
-is what keeps them lockstep.
+Leaf module (no intra-package imports): the oracle SQL for
+tokenization/shingling must stay lockstep with ``operators/textops.py``'s
+Column expressions, and living in one place is what keeps them lockstep.
 """
 
 from __future__ import annotations
@@ -44,8 +42,8 @@ def _toks_of_norm(col: str) -> str:
 
 
 # --- stopword lists + near-dup corpus/minhash/CC fragments ----------------
-# (moved here from queries_llm so later batches can compose them without
-# import-order hazards; textops/dedup are operator leaf modules)
+# (moved here from queries_llm so later batches can compose them;
+# textops/dedup are operator leaf modules)
 
 from series_tiempo_ar_scraping_spark.operators import dedup as _D
 from series_tiempo_ar_scraping_spark.operators import textops as _TX
@@ -55,8 +53,7 @@ _ES = ", ".join(f"'{w}'" for w in _TX.STOPWORDS["es"])
 
 # DuckDB mirror of ``textops.quality_score`` + ``det_round(.., 4)`` over a
 # ``corpus(doc_id, text)`` CTE. Moved here from queries_batch7 so later
-# batches (weighted sampling, funnels) can compose it without sibling-batch
-# imports (test_import_order pins that every batch imports standalone).
+# batches (weighted sampling, funnels) can compose it.
 _QUALITY_SQL = f"""
       SELECT doc_id,
         CAST(FLOOR((
@@ -224,8 +221,7 @@ _DAILY_SERIES_DDAY_SQL = """
 
 
 # Embedding near-dup corpus + hyperplane-bucket fragment (moved here
-# from queries_batch4 so queries_batch10 can compose them without the
-# submodule-first import-order hazard — same rule as the PII fragments).
+# from queries_batch4 so queries_batch10 can compose them).
 _EMB_NEAR_SQL = """
     SELECT vec_id, embedding
     FROM embeddings
@@ -399,8 +395,7 @@ def _ivf_trained_ctes(iters: int = 2) -> str:
     the exact IVF assign/probe/score/rank SQL of ``ivf_ann_topk``
     against the TRAINED codebook. Final CTE: ``ranked`` (query_id,
     neighbor_id, sim, rank). Shared by batch 10's ivf_trained_ann_topk
-    oracle and batch 11's ANN-recall evaluation (leaf module: any
-    import order works)."""
+    oracle and batch 11's ANN-recall evaluation."""
     it = iters
     return f"""{_kmeans_ctes(8, it)},
     cent AS (
@@ -482,9 +477,8 @@ PII_PATTERNS = (
 
 # Deterministic planting: both engines append the IDENTICAL spans to
 # the same docs (pure arithmetic on doc_id), so detection counts have
-# arithmetic ground truth at every scale. Lives in this LEAF module so
-# cross-batch consumers (the streaming monitor's deferred oracle) never
-# read a partially initialized sibling batch.
+# arithmetic ground truth at every scale. Shared with the batch-17
+# streaming monitor's oracle.
 PII_CORPUS_SQL = """
       SELECT doc_id, source,
              text

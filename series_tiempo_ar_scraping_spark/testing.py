@@ -100,16 +100,9 @@ def canonicalize(df: pd.DataFrame) -> list[tuple[str, ...]]:
 
 def compare_query(spark, sf_dir: str, name: str) -> dict:
     """Run one catalog query both ways; return a result dict."""
-    from series_tiempo_ar_scraping_spark.queries import (
-        ORACLES,
-        QUERIES,
-        resolve_deferred_oracles,
-    )
+    from series_tiempo_ar_scraping_spark.registry import ORACLES, load_queries
 
-    # cross-module composed oracles render lazily (import-order safety);
-    # by compare time every module is complete, so force resolution
-    resolve_deferred_oracles(strict=True)
-    sdf = QUERIES[name](spark, sf_dir)
+    sdf = load_queries()[name](spark, sf_dir)
     spark_pd = sdf.toPandas()
     res: dict = {"name": name, "rows": len(spark_pd)}
     if name not in ORACLES:

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import math
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES
+from series_tiempo_ar_scraping_spark.registry import load_queries
+
+QUERIES = load_queries()
 
 SF = "/root/testdata/sf0.001"
 

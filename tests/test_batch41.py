@@ -12,7 +12,10 @@ def _tdiv(a: int, b: int) -> int:
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES, load_table
+from series_tiempo_ar_scraping_spark.registry import load_queries
+from series_tiempo_ar_scraping_spark.session import load_table
+
+QUERIES = load_queries()
 
 SF = "/root/testdata/sf0.001"
 

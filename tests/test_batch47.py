@@ -9,7 +9,10 @@ from collections import defaultdict
 
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES, load_table
+from series_tiempo_ar_scraping_spark.registry import load_queries
+from series_tiempo_ar_scraping_spark.session import load_table
+
+QUERIES = load_queries()
 
 SF = "/root/testdata/sf0.001"
 

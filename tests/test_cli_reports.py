@@ -34,6 +34,38 @@ def test_custom_steps_hook(tmp_path):
     assert run_custom_steps(str(out), str(bad)) == 3
 
 
+def test_run_etl_releases_its_cached_frames(spark, tmp_path):
+    """A pass unpersists the frames it cached, and only those: a
+    long-lived session must not keep each pass's metadata, observations
+    and reports, nor lose a cache the caller holds on the same plans."""
+    from pyspark import StorageLevel
+
+    from series_tiempo_ar_scraping_spark.plans.pipeline import CatalogPipeline
+
+    path = os.path.join(FIX, "catalog.json")
+    # a catalog id no other test caches frames under
+    index = {"released": {"metadata_path": path}}
+    out = str(tmp_path / "out")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    # compare ids, not counts: the context cleaner may drop RDDs that
+    # earlier tests left behind while the pass runs
+    before = set(persistent().keys())
+    results = run_etl(index, out, spark=spark, file_resolver=_resolver)
+    assert results["released"]["written"] == 5
+    assert set(persistent().keys()) <= before
+
+    held = CatalogPipeline(spark, path, "released", out, file_resolver=_resolver)
+    res = held.run(write_csvs=False)
+    mine = [*res.frames.values(), res.metadata_errors, res.observations]
+    cached = [df for df in mine if df.storageLevel != StorageLevel.NONE]
+    try:
+        run_etl(index, out, spark=spark, file_resolver=_resolver)
+        assert len(cached) >= 5
+        assert all(df.storageLevel != StorageLevel.NONE for df in cached)
+    finally:
+        held.unpersist()
+
+
 def test_run_etl_from_index(spark, tmp_path):
     index = read_config(os.path.join(FIX, "index.yaml"))["catalogs"]
     index["acme"]["metadata_path"] = os.path.join(FIX, "catalog.json")

@@ -186,15 +186,13 @@ def test_gate_planning_time_bounded(spark):
 
 
 def test_gate_order_strict_rejects_missing_names():
-    """strict=True must fail fast when a priority name is unregistered."""
-    import pytest
+    """load_queries must fail fast when a priority name is unregistered."""
+    from series_tiempo_ar_scraping_spark.registry import QUERIES, load_queries
 
-    from series_tiempo_ar_scraping_spark import queries as q
-
-    saved = q.QUERIES.pop("q01_pricing_summary")
+    saved = QUERIES.pop("q01_pricing_summary")
     try:
         with pytest.raises(RuntimeError, match="q01_pricing_summary"):
-            q.apply_driver_gate_order(strict=True)
+            load_queries()
     finally:
-        q.QUERIES["q01_pricing_summary"] = saved
-        q.apply_driver_gate_order()
+        QUERIES["q01_pricing_summary"] = saved
+        load_queries()

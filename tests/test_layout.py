@@ -194,7 +194,7 @@ def test_bucketed_join_elides_both_exchanges(spark, sf_dir, tmp_path):
     from series_tiempo_ar_scraping_spark.operators.layout import (
         write_bucketed,
     )
-    from series_tiempo_ar_scraping_spark.queries import load_table
+    from series_tiempo_ar_scraping_spark.session import load_table
     from tests.test_plans import plan_of
 
     orders = load_table(spark, sf_dir, "orders")

@@ -9,6 +9,7 @@ from series_tiempo_ar_scraping_spark.operators import dedup as D
 from series_tiempo_ar_scraping_spark.operators import multimodal as MM
 from series_tiempo_ar_scraping_spark.operators import similarity as S
 from series_tiempo_ar_scraping_spark.queries_llm import _near_corpus
+from series_tiempo_ar_scraping_spark.registry import load_queries
 from series_tiempo_ar_scraping_spark.session import load_table
 
 
@@ -149,7 +150,7 @@ def test_connected_components_chain_and_singleton(spark):
 
 
 def test_approx_sketches_within_error_bounds(spark, sf_dir):
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     approx = {r.event_type: r for r in QUERIES["approx_sketch_stats"](spark, sf_dir).collect()}
     # The exact side is the ORACLED twin query (sketch_exact_twin shares the
@@ -242,7 +243,7 @@ def test_incremental_dedup_classifies_planted_batches(spark, sf_dir):
     """Every planted class lands in its verdict: exact copies ->
     exact_dup matching their source, prefix-stripped copies -> near_dup,
     hash-gibberish docs -> novel with no match."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     rows = {r.new_id: r for r in QUERIES["incremental_dedup"](spark, sf_dir).collect()}
     assert rows
@@ -856,7 +857,7 @@ def test_prefix_filter_join_is_complete_vs_lsh(spark, sf_dir):
     """The lossless-vs-probabilistic contract: prefix filtering finds
     EVERY pair with Jaccard >= t, so its result must be a SUPERSET of
     the banded-MinHash entry's verified pairs (LSH can only miss)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     exact = {
         (r.doc_a, r.doc_b)
@@ -921,7 +922,7 @@ def test_bloom_prune_has_no_false_negatives(spark, sf_dir):
     assert truth, "fixture regression: no build-side members at this scale"
     assert truth <= cand  # one-sided error, by construction
 
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     row = QUERIES["bloom_filter_join_prune"](spark, sf_dir).collect()[0]
     assert row.n_candidates == len(cand) and row.n_true == len(truth)
@@ -1030,7 +1031,7 @@ def test_blocked_kernels_adaptive_codebook_param(spark, sf_dir):
     members - dups per cell) — while (d) generating strictly less
     candidate work than the contract K=8 (more cells -> sparser
     cells)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     ln = QUERIES["label_noise_knn_disagreement"]
     rows = ln(spark, sf_dir, k=16).collect()
@@ -1082,7 +1083,7 @@ def test_blocked_kernels_default_is_adaptive(spark, sf_dir):
     from series_tiempo_ar_scraping_spark.operators.similarity import (
         adaptive_codebook_k,
     )
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     # the rule itself: floor at small n, ceil(n/250) past it
     assert adaptive_codebook_k(spark.range(500)) == 8

@@ -14,7 +14,9 @@ import io
 
 import pytest
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES
+from series_tiempo_ar_scraping_spark.registry import load_queries
+
+QUERIES = load_queries()
 
 
 def plan_of(df, mode: str = "formatted") -> str:

@@ -10,6 +10,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from series_tiempo_ar_scraping_spark.registry import load_queries
 from series_tiempo_ar_scraping_spark.sources.xlsx import (
     _col_to_idx,
     _idx_to_col,
@@ -129,9 +130,9 @@ def test_skyline_is_exactly_the_non_dominated_set(spark, sf_dir):
     """Brute-force dominance check at sf0.001: every returned order is
     non-dominated, and every non-returned order is dominated by some
     returned one (skyline completeness + soundness)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
     from series_tiempo_ar_scraping_spark.session import load_table
 
+    QUERIES = load_queries()
     sky = {
         r.o_orderkey
         for r in QUERIES["skyline_orders_pareto"](spark, sf_dir).collect()
@@ -160,7 +161,7 @@ def test_pagerank_invariants(spark, sf_dir):
     nodes sit at the floor 150000 + damped base; ranks are positive; and
     results are identical across two runs with different partitioning
     (the integer-arithmetic determinism claim)."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     out = {
         r.part_id: r.rank_micro
@@ -187,7 +188,7 @@ def test_quantization_error_bound(spark, sf_dir):
     """int8 symmetric quantization invariant: every reconstruction error
     is bounded by scale/2 (+1 ulp slack) — the property that makes the
     QA report trustworthy; and scale really is max|x|/127."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     rows = QUERIES["embedding_int8_quantization"](spark, sf_dir).collect()
     assert rows
@@ -200,9 +201,9 @@ def test_quantization_error_bound(spark, sf_dir):
 def test_decontamination_is_subset_of_training(spark, sf_dir):
     """Every flagged doc is a training doc, shares at least one shingle,
     and touches at least one eval doc; eval docs never self-flag."""
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
     from series_tiempo_ar_scraping_spark.queries_batch6 import _EVAL_MAX_DOC
 
+    QUERIES = load_queries()
     rows = QUERIES["decontamination_ngram_overlap"](spark, sf_dir).collect()
     assert rows
     for r in rows:
@@ -214,16 +215,16 @@ def test_decontamination_is_subset_of_training(spark, sf_dir):
 def test_token_histogram_accounts_every_document(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
     from series_tiempo_ar_scraping_spark.session import load_table
 
+    QUERIES = load_queries()
     hist = QUERIES["token_length_histogram"](spark, sf_dir)
     total_docs = hist.agg(F.sum("n_docs")).collect()[0][0]
     assert total_docs == load_table(spark, sf_dir, "documents").count()
 
 
 def test_repetition_score_ratios_are_probabilities(spark, sf_dir):
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     rows = QUERIES["repetition_score"](spark, sf_dir).collect()
     assert rows

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import pytest
 
-from series_tiempo_ar_scraping_spark.queries import ORACLES, QUERIES
+from series_tiempo_ar_scraping_spark.registry import ORACLES, load_queries
 from series_tiempo_ar_scraping_spark.testing import compare_query
+
+QUERIES = load_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -17,6 +17,7 @@ from series_tiempo_ar_scraping_spark.operators.validation import (
     dataset_rules,
     distribution_rules,
 )
+from series_tiempo_ar_scraping_spark.registry import load_queries
 
 ENTITY_COLUMNS = {
     "field": ["title", "type", "description"],
@@ -290,7 +291,7 @@ def test_expectation_engine_one_scan_per_table(spark, sf_dir):
     import contextlib
     import io
 
-    from series_tiempo_ar_scraping_spark.queries import QUERIES
+    QUERIES = load_queries()
 
     df = QUERIES["expectation_suite_report"](spark, sf_dir)
     buf = io.StringIO()

@@ -13,7 +13,9 @@ from __future__ import annotations
 
 import pytest
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES
+from series_tiempo_ar_scraping_spark.registry import load_queries
+
+QUERIES = load_queries()
 
 
 @pytest.fixture(scope="module")

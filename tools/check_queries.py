@@ -10,12 +10,14 @@ import sys
 
 sys.path.insert(0, ".")
 
-from series_tiempo_ar_scraping_spark.queries import (  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import (  # noqa: E402
     NO_ORACLE_REASONS,
-    QUERIES,
+    load_queries,
 )
 from series_tiempo_ar_scraping_spark.session import get_spark  # noqa: E402
 from series_tiempo_ar_scraping_spark.testing import compare_query  # noqa: E402
+
+QUERIES = load_queries()
 
 
 def main() -> int:

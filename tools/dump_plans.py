@@ -13,8 +13,10 @@ import sys
 
 sys.path.insert(0, ".")
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import load_queries  # noqa: E402
 from series_tiempo_ar_scraping_spark.session import get_spark  # noqa: E402
+
+QUERIES = load_queries()
 
 # query -> what to look for in its plan (rendered as a checklist)
 SHOWCASE = {

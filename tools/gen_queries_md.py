@@ -7,15 +7,22 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from series_tiempo_ar_scraping_spark import queries as Q  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import (  # noqa: E402
+    ORACLES,
+    load_queries,
+)
+
+OUT = os.path.join(ROOT, "QUERIES.md")
 
 
-def main() -> None:
-    Q.apply_driver_gate_order()
+def render() -> str:
+    """QUERIES.md's text for the catalog in driver-gate order."""
+    queries = load_queries()
     lines = [
-        "# QUERIES — the %d-entry catalog" % len(Q.QUERIES),
+        "# QUERIES — the %d-entry catalog" % len(queries),
         "",
         "Generated from the registry (`python tools/gen_queries_md.py` regenerates).",
         "Order = driver-gate order: the FIRST 50 rows are the driver's hash-checked",
@@ -25,18 +32,22 @@ def main() -> None:
         "| # | Query | Oracle | Module | Summary |",
         "|---|---|---|---|---|",
     ]
-    for i, (name, fn) in enumerate(Q.QUERIES.items(), 1):
+    for i, (name, fn) in enumerate(queries.items(), 1):
         doc = (inspect.getdoc(fn) or "").split("\n\n")[0]
         doc = doc.replace("\n", " ").replace("|", "\\|")
         if len(doc) > 160:
             doc = doc[:157] + "..."
         mod = fn.__module__.rsplit(".", 1)[-1]
-        oracle = "✓" if name in Q.ORACLES else "rows-only"
+        oracle = "✓" if name in ORACLES else "rows-only"
         lines.append(f"| {i} | `{name}` | {oracle} | `{mod}` | {doc} |")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
-    with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote {len(Q.QUERIES)} rows to {out}")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    text = render()
+    with open(OUT, "w") as fh:
+        fh.write(text)
+    print(f"wrote {len(load_queries())} rows to {OUT}")
 
 
 if __name__ == "__main__":

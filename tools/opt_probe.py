@@ -25,8 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import load_queries  # noqa: E402
 from series_tiempo_ar_scraping_spark.session import get_spark, load_table  # noqa: E402
+
+QUERIES = load_queries()
 
 
 def main() -> None:

@@ -31,8 +31,10 @@ sys.path.insert(
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import load_queries  # noqa: E402
 from series_tiempo_ar_scraping_spark.session import get_spark  # noqa: E402
+
+QUERIES = load_queries()
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PIPELINES = (

@@ -28,8 +28,10 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa: E402
+from series_tiempo_ar_scraping_spark.registry import load_queries  # noqa: E402
 from series_tiempo_ar_scraping_spark.session import get_spark  # noqa: E402
+
+QUERIES = load_queries()
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1"

@@ -47,12 +47,13 @@ def main() -> None:
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
     from bench import BENCH_QUERIES, TABLES  # noqa: E402
-    from series_tiempo_ar_scraping_spark.queries import QUERIES  # noqa
+    from series_tiempo_ar_scraping_spark.registry import load_queries
     from series_tiempo_ar_scraping_spark.session import (  # noqa: E402
         get_spark,
         load_table,
     )
 
+    QUERIES = load_queries()
     spark = get_spark("warm-inflation-probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).count()
