@@ -25,21 +25,6 @@ def read_config(path: str) -> dict:
         return yaml.safe_load(fh) or {}
 
 
-def _split_by_catalog(df, keep_id: bool = False) -> tuple[list[str], dict]:
-    """Collect a report frame once and split its rows by ``catalog_id``:
-    ``(columns, {catalog_id: [row tuples]})``, with the ``catalog_id``
-    column dropped unless ``keep_id``."""
-    cols = df.columns
-    at = cols.index("catalog_id")
-    rows: dict[str, list[tuple]] = {}
-    for r in df.collect():
-        t = tuple(r)
-        rows.setdefault(t[at], []).append(
-            t if keep_id else t[:at] + t[at + 1:]
-        )
-    return (cols if keep_id else cols[:at] + cols[at + 1:]), rows
-
-
 def run_etl(
     index: dict,
     output_dir: str,
@@ -150,11 +135,16 @@ def run_etl(
             pipe.unpersist()
 
     def report_pass(res, loaded: dict[str, dict]) -> dict[str, dict]:
+        from series_tiempo_ar_scraping_spark.sinks.reports import (
+            split_by_catalog,
+            write_report_xlsx,
+        )
+
         # Every report frame below is collected once for the whole pass
         # and split by catalog_id in Python.
         indicators: dict = {}
         if res.indicators is not None:
-            ind_cols, ind_rows = _split_by_catalog(res.indicators)
+            ind_cols, ind_rows = split_by_catalog(res.indicators)
             indicators = {
                 cid: dict(zip(ind_cols, rows[0]))
                 for cid, rows in ind_rows.items()
@@ -167,13 +157,13 @@ def run_etl(
         # count (small by V1-V3 contract — one row per rule violation);
         # that workbook keeps its own catalog_id column.
         reports = {
-            "reporte-datasets": _split_by_catalog(res.dataset_report),
-            "reporte-errores-metadata": _split_by_catalog(
+            "reporte-datasets": split_by_catalog(res.dataset_report),
+            "reporte-errores-metadata": split_by_catalog(
                 res.metadata_errors, keep_id=True
             ),
         }
         if res.distribution_report is not None:
-            reports["reporte-distributions"] = _split_by_catalog(
+            reports["reporte-distributions"] = split_by_catalog(
                 res.distribution_report
             )
         # EP1 — declarative data contracts over the run's OWN produced
@@ -186,14 +176,10 @@ def run_etl(
             pipeline_contract_report,
         )
 
-        reports["reporte-expectations"] = _split_by_catalog(
+        reports["reporte-expectations"] = split_by_catalog(
             pipeline_contract_report(
                 res.observations, res.dataset_report, by=["catalog_id"]
             )
-        )
-
-        from series_tiempo_ar_scraping_spark.sinks.reports import (
-            write_report_xlsx,
         )
 
         out: dict[str, dict] = {}

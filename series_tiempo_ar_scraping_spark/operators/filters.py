@@ -60,14 +60,6 @@ def filter_distribution_id(df: DataFrame, distribution_id: str | None) -> DataFr
     return df.filter(F.col("distribution_id") == F.lit(distribution_id))
 
 
-def filter_catalog_id(df: DataFrame, catalog_id: str | None) -> DataFrame:
-    """F4 — CLI ``--catalog-id-filter`` (``base.py:1088-1090``,
-    ``main.py:57-61``)."""
-    if catalog_id is None:
-        return df
-    return df.filter(F.col("catalog_id") == F.lit(catalog_id))
-
-
 def with_method(distributions: DataFrame) -> DataFrame:
     """F5 — scraping-method routing column (``base.py:123-153`` routing +
     series-tiempo-ar ``get_ts_distributions_by_method`` at

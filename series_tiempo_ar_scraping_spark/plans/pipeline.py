@@ -36,7 +36,6 @@ from series_tiempo_ar_scraping_spark.operators.aggregations import (
 )
 from series_tiempo_ar_scraping_spark.operators.filters import (
     clean_field_keyspace,
-    filter_catalog_id,
     filter_distribution_id,
     harvestable_datasets,
     time_series_distributions,
@@ -144,7 +143,6 @@ class CatalogPipeline:
         output_dir: str,
         file_resolver=None,
         host: str = "http://localhost",
-        catalog_id_filter: str | None = None,
         distribution_id_filter: str | None = None,
         replace: bool = True,
     ):
@@ -157,7 +155,6 @@ class CatalogPipeline:
         self.output_dir = output_dir
         self.file_resolver = file_resolver or (lambda ref: ref)
         self.host = host
-        self.catalog_id_filter = catalog_id_filter
         self.distribution_id_filter = distribution_id_filter
         # V8 — skip-if-exists unless replace (base.py:155-163, main.py:52-56)
         self.replace = replace
@@ -189,9 +186,6 @@ class CatalogPipeline:
             for k in parts[0]
         }
         frames["fields"] = clean_field_keyspace(frames["fields"])
-        frames["datasets"] = filter_catalog_id(
-            frames["datasets"], self.catalog_id_filter
-        )
         frames["distributions"] = filter_distribution_id(
             with_method(frames["distributions"]), self.distribution_id_filter
         )

@@ -26,7 +26,6 @@ from series_tiempo_ar_scraping_spark.config import (
     SCRAPING_ONLY_FIELD_KEYS,
 )
 from series_tiempo_ar_scraping_spark.functions.scalars import host_rewrite
-from series_tiempo_ar_scraping_spark.operators.joins import align_series_wide
 
 TIME_INDEX = "indice_tiempo"
 
@@ -45,21 +44,12 @@ def distribution_dir(output_dir: str, catalog_id: str, dataset_id: str, distribu
     )
 
 
-def write_wide_csv(obs_one_dist: DataFrame, out_path: str, series_titles: list[str] | None = None) -> str:
-    """Pivot one distribution's long rows to the wide contract and write a
-    single CSV file (coalesce(1) + rename — the file IS the product)."""
-    wide = align_series_wide(obs_one_dist, series_titles).orderBy(TIME_INDEX)
-    tmp = out_path + "_tmp"
-    wide.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
-    part = next(
-        f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".csv")
-    )
-    os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    os.replace(os.path.join(tmp, part), out_path)
-    for f in os.listdir(tmp):
-        os.remove(os.path.join(tmp, f))
-    os.rmdir(tmp)
-    return out_path
+def _csv_field(text):
+    """Quote one header field as pandas ``to_csv`` does (QUOTE_MINIMAL)."""
+    return F.when(
+        text.rlike('[,"\\r\\n]'),
+        F.concat(F.lit('"'), F.regexp_replace(text, '"', '""'), F.lit('"')),
+    ).otherwise(text)
 
 
 def write_wide_csvs_bulk(
@@ -93,12 +83,11 @@ def write_wide_csvs_bulk(
     query stages, and the lazy frames ``observations`` is built from,
     run as jobs inside this write. V8 skip-if-exists
     honored by pre-filtering distributions whose target already exists.
-    Values are numeric and the fixture titles are comma-free, so no CSV
-    quoting is required; a title containing a separator should go
-    through ``write_wide_csv`` (the Spark CSV writer) instead.
+    Values are numeric; a header title holding ``,``, ``"``, CR or LF is
+    quoted the way pandas ``to_csv`` quotes it (wrapped in ``"``, inner
+    ``"`` doubled), so every line parses to as many fields as the header.
     """
     import shutil
-    import tempfile
 
     # Distribution ids ('1.1', …) are catalog-scoped in the reference, so
     # targets and the V8 skip set key on the FULL (catalog, dataset,
@@ -189,11 +178,16 @@ def write_wide_csvs_bulk(
             F.lit(None).cast(data_lines.schema["ts"].dataType).alias("ts"),
             F.concat_ws(
                 ",",
-                F.concat(F.array(F.lit(TIME_INDEX)), F.col("titles")),
+                F.concat(
+                    F.array(F.lit(TIME_INDEX)),
+                    F.transform("titles", _csv_field),
+                ),
             ).alias("line"),
         )
     )
-    staging = tempfile.mkdtemp(prefix="wide_csv_bulk_")
+    # under output_dir: the rename pass stays on one filesystem, and the
+    # leftover of a run killed mid-pass is overwritten by the next write
+    staging = os.path.join(output_dir, "_wide_csv_staging")
     try:
         (
             header_lines.unionByName(data_lines)

@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 
 from series_tiempo_ar_scraping_spark.sinks.atomic import atomic_output_path
+from series_tiempo_ar_scraping_spark.sinks.reports import split_by_catalog
 from series_tiempo_ar_scraping_spark.sources.catalog_json import renest_catalog
 
 
@@ -41,42 +42,35 @@ def _published(frames: dict) -> dict:
     }
 
 
-def write_json_catalog(frames: dict, path: str | dict[str, str]) -> str | list[str]:
-    """K2 — re-nest the (published) frames → ``data.json``.
-
-    ``path`` is one catalog's file, or ``{catalog_id: path}``: every
-    catalog's document then comes from the same one collect. Returns
-    what it wrote: the path, or the list of paths."""
-    docs = []
+def write_json_catalog(frames: dict, path: dict[str, str]) -> list[str]:
+    """K2 — re-nest the (published) frames → one ``data.json`` per
+    catalog. ``path`` is ``{catalog_id: path}``; every catalog's document
+    comes from the same one collect. Returns the paths written."""
+    by_id = {}
     for r in renest_catalog(_published(frames)).toJSON().collect():
         doc = _prune_nulls(json.loads(r))
         if "catalog_id" in doc:
             doc["identifier"] = doc.pop("catalog_id")
-        docs.append(doc)
-    if isinstance(path, str):
-        targets = [(path, docs[0] if docs else {})]
-    else:
-        by_id = {d.get("identifier"): d for d in docs}
-        targets = [(p, by_id.get(cid, {})) for cid, p in path.items()]
-    for target, doc in targets:
+        by_id[doc.get("identifier")] = doc
+    for cid, target in path.items():
         # stage + atomic replace: a crash mid-dump must never leave a
         # truncated data.json at the path consumers read
         with atomic_output_path(target) as tmp:
             with open(tmp, "w", encoding="utf-8") as fh:
                 json.dump(
-                    doc, fh, ensure_ascii=False, indent=2, sort_keys=True
+                    by_id.get(cid, {}), fh, ensure_ascii=False, indent=2,
+                    sort_keys=True,
                 )
-    return path if isinstance(path, str) else [t for t, _d in targets]
+    return list(path.values())
 
 
-def write_xlsx_catalog(frames: dict, path: str | dict[str, str]) -> str | list[str]:
-    """K3 — 5-sheet ``catalog.xlsx`` in the pydatajson sheet layout
-    (sheet order ``catalog/dataset/distribution/field/theme`` as in
-    ``tests/project/mock/test2.xlsx``).
+def write_xlsx_catalog(frames: dict, path: dict[str, str]) -> list[str]:
+    """K3 — one 5-sheet ``catalog.xlsx`` per catalog in the pydatajson
+    sheet layout (sheet order ``catalog/dataset/distribution/field/theme``
+    as in ``tests/project/mock/test2.xlsx``).
 
-    ``path`` is one catalog's file, or ``{catalog_id: path}``: each sheet
-    is then collected once and split by ``catalog_id``. Returns what it
-    wrote: the path, or the list of paths."""
+    ``path`` is ``{catalog_id: path}``; each sheet is collected once and
+    split by ``catalog_id``. Returns the paths written."""
     from series_tiempo_ar_scraping_spark.sources import xlsx
 
     pub = _published(frames)
@@ -88,15 +82,16 @@ def write_xlsx_catalog(frames: dict, path: str | dict[str, str]) -> str | list[s
     }
     if pub["themes"] is not None:
         sheets["theme"] = pub["themes"]
-    if isinstance(path, str):
-        return xlsx.write_xlsx_frames(path, sheets)
-    split: dict[str, dict] = {cid: {} for cid in path}
-    for name, df in sheets.items():
-        cols = df.columns
-        at = cols.index("catalog_id")
-        for cid in split:
-            split[cid][name] = (cols, [])
-        for r in df.collect():
-            if r[at] in split:
-                split[r[at]][name][1].append(tuple(r))
-    return [xlsx.write_xlsx(path[cid], split[cid]) for cid in path]
+    split = {
+        name: split_by_catalog(df, keep_id=True) for name, df in sheets.items()
+    }
+    return [
+        xlsx.write_xlsx(
+            target,
+            {
+                name: (cols, rows.get(cid, []))
+                for name, (cols, rows) in split.items()
+            },
+        )
+        for cid, target in path.items()
+    ]

@@ -2,10 +2,11 @@
 
 The reference writes XLSX reports (``base.py:679-703``) and sends SMTP
 mail with attachments (``base.py:707-743``); subjects/messages are built
-at ``base.py:836-871``. Here: report frames write as CSV (XLSX needs
-openpyxl — import-gated), mail composition is pure functions over the
-indicator rows, and the SMTP send is a driver-side callable that defaults
-to dry-run (no network in the data plane).
+at ``base.py:836-871``. Here: each report frame is collected once for a
+whole pass and split by catalog, each catalog's sheet writes as XLSX
+through the stdlib OOXML writer, mail composition is pure functions over
+the indicator rows, and the SMTP send is a driver-side callable that
+defaults to dry-run (no network in the data plane).
 """
 
 from __future__ import annotations
@@ -16,20 +17,21 @@ import os
 from pyspark.sql import DataFrame
 
 
-def write_report_csv(report: DataFrame, out_dir: str, name: str) -> str:
-    """K4 — small report frame → one CSV file (reports are inherently
-    small: one row per dataset/distribution). Staged + atomic replace:
-    a crash mid-write must never leave a truncated report at the path
-    a mail attachment or downstream check reads."""
-    from series_tiempo_ar_scraping_spark.sinks.atomic import (
-        atomic_output_path,
-    )
-
-    path = os.path.join(out_dir, f"{name}.csv")
-    pdf = report.toPandas()
-    with atomic_output_path(path) as tmp:
-        pdf.to_csv(tmp, index=False)
-    return path
+def split_by_catalog(
+    df: DataFrame, keep_id: bool = False
+) -> tuple[list[str], dict[str, list[tuple]]]:
+    """Collect a small frame once and split its rows by ``catalog_id``:
+    ``(columns, {catalog_id: [row tuples]})``, with the ``catalog_id``
+    column dropped unless ``keep_id``. Catalogs without rows are absent."""
+    cols = df.columns
+    at = cols.index("catalog_id")
+    rows: dict[str, list[tuple]] = {}
+    for r in df.collect():
+        t = tuple(r)
+        rows.setdefault(t[at], []).append(
+            t if keep_id else t[:at] + t[at + 1:]
+        )
+    return (cols if keep_id else cols[:at] + cols[at + 1:]), rows
 
 
 def write_report_xlsx(

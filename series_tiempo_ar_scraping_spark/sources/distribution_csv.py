@@ -4,8 +4,11 @@ The reference's CSVReader fetches ``downloadURL``, parses the CSV, and sets
 ``indice_tiempo`` as a datetime index (``processors.py:30-48``); the TXT
 path parses a delimited text file (``processors.py:51-80``, series-tiempo-ar
 ``load_ts_distribution``). Both converge on the same wide frame contract
-(SURVEY EP3 narrow waist). Here both are one reader: ``spark.read.csv``
-with a configurable delimiter, melted to the canonical long form.
+(SURVEY EP3 narrow waist). Here both are one bulk reader,
+``read_distributions_bulk``: one text scan per delimiter (TXT files group
+by ``sniff_txt_sep``, with comma-decimal normalization), melted to the
+canonical long form. ``read_distribution_csv`` is the per-file Spark CSV
+reader the tests hold the bulk reader against.
 """
 
 from __future__ import annotations
@@ -98,7 +101,10 @@ def read_distribution_csv(
     distribution_id: str,
     sep: str = ",",
 ) -> DataFrame:
-    """S6 — direct-download CSV → long (``processors.py:30-48``)."""
+    """S6 — one direct-download CSV → long (``processors.py:30-48``)
+    through the Spark CSV reader. The pipeline reads with
+    ``read_distributions_bulk``; this per-file form is the reference
+    implementation its tests compare against."""
     return melt_wide(
         read_wide_csv(spark, path, sep), catalog_id, dataset_id, distribution_id
     )
@@ -118,38 +124,6 @@ def sniff_txt_sep(path: str) -> str:
     counts = {s: header.count(s) for s in _TXT_SEPS}
     best = max(_TXT_SEPS, key=lambda s: counts[s])
     return best if counts[best] > 0 else ","
-
-
-def read_distribution_txt(
-    spark: SparkSession,
-    path: str,
-    catalog_id: str,
-    dataset_id: str,
-    distribution_id: str,
-    sep: str | None = None,
-    encoding: str = "UTF-8",
-) -> DataFrame:
-    """S7 — TXT distribution → long (series-tiempo-ar
-    ``load_ts_distribution`` invoked at ``processors.py:58-80``).
-
-    Fidelity beyond a generic delimited read: the delimiter is sniffed
-    per file (government TXT exports mix tab/semicolon/pipe), values go
-    through the same missing-token cleanse as every other source, and
-    comma-decimal numerics (``1.234,56``) are normalized to dot-decimal
-    so downstream casts agree with the CSV path. ``encoding`` defaults
-    to UTF-8; pass ``ISO-8859-1`` for legacy latin-1 exports.
-    """
-    sep = sep or sniff_txt_sep(path)
-    wide = (
-        spark.read.option("header", True)
-        .option("sep", sep)
-        .option("encoding", encoding)
-        .option("mode", "PERMISSIVE")
-        .csv(path)
-    )
-    return melt_wide(
-        wide, catalog_id, dataset_id, distribution_id, decimal_comma=True
-    )
 
 
 def read_distributions_bulk(
@@ -177,9 +151,9 @@ def read_distributions_bulk(
     reason)`` for the report, never an exception. Returns
     ``(observations, errors)``.
 
-    Same quoting caveat as the bulk writer: values are numeric and the
-    contract headers are separator-free; a quoted-CSV corner case should
-    use the per-file ``read_distribution_csv`` (Spark CSV reader).
+    Lines split on the bare separator, with no CSV quoting: a header line
+    holding a ``"`` is not a parseable header, so a quoted file gets the
+    V7 error tuple instead of series misaligned under split titles.
     """
     import re as _re
 
@@ -209,7 +183,9 @@ def read_distributions_bulk(
     )
     parts = F.split(F.col("value"), _re.escape(sep))
     headers = (
-        raw.filter(parts.getItem(0) == TIME_INDEX)
+        raw.filter(
+            (parts.getItem(0) == TIME_INDEX) & ~F.col("value").contains('"')
+        )
         .groupBy("abspath")
         .agg(F.first(parts).alias("titles"))
     )

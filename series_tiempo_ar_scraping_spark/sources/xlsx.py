@@ -384,13 +384,3 @@ def write_xlsx(path: str, sheets: dict[str, tuple[list[str], list[tuple]]]) -> s
             )
     return path
 
-
-def write_xlsx_frames(path: str, frames: dict) -> str:
-    """Spark frames → one xlsx (collects; callers pass only small report/
-    metadata frames per K3/K4 contract)."""
-    sheets = {}
-    for name, df in frames.items():
-        cols = df.columns
-        rows = [tuple(r) for r in df.collect()]
-        sheets[name] = (cols, rows)
-    return write_xlsx(path, sheets)

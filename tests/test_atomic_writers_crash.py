@@ -1,14 +1,14 @@
 """Crash-point enumeration for the file-shaped publishers (r12,
 VERDICT r11 #3): the atomic-output contract shared by the download
-sink (S2), data.json (K2), catalog/report xlsx (K3/K4) and report CSV
-(K5) via ``sinks/atomic.atomic_output_path``.
+sink (S2), data.json (K2) and catalog/report xlsx (K3/K4) via
+``sinks/atomic.atomic_output_path``, and the wide-CSV rename pass (K1).
 
 The r11 harness (tests/crashlib.py) found three real bugs on its first
 two targets (WAP, observation-store compaction); applying it here
 found three more BEFORE these tests were written: write_json_catalog,
-write_xlsx and write_report_csv all opened the PUBLISHED path directly
-— a crash mid-dump/mid-zip/mid-csv left a truncated or corrupt file at
-the path consumers read. All three now stage to a unique temp and
+write_xlsx and the report CSV writer all opened the PUBLISHED path
+directly — a crash mid-dump/mid-zip/mid-csv left a truncated or corrupt
+file at the path consumers read. All now stage to a unique temp and
 publish with one atomic os.replace; these tests enumerate every
 mutating call of each writer and assert, at every crash point:
 
@@ -229,35 +229,6 @@ def test_write_xlsx_every_crash_point(tmp_path):
     )
 
 
-def test_write_report_csv_every_crash_point(spark, tmp_path):
-    """K5 — the report CSV a mail attachment reads must be old-or-new
-    complete at every crash window."""
-    from series_tiempo_ar_scraping_spark.sinks.reports import (
-        write_report_csv,
-    )
-
-    target = str(tmp_path / "reporte-datasets.csv")
-
-    def write(n):
-        df = spark.range(n).selectExpr("id", "id * 2 AS twice")
-        write_report_csv(df, str(tmp_path), "reporte-datasets")
-
-    def read_back():
-        if not os.path.exists(target):
-            return None
-        with open(target) as fh:
-            return fh.read().strip().splitlines()
-
-    _enumerate_crashes(
-        tmp_path,
-        lambda: write(2),
-        lambda: write(3),
-        read_back,
-        ["id,twice", "0,0", "1,2"],
-        ["id,twice", "0,0", "1,2", "2,4"],
-    )
-
-
 def test_write_json_catalog_every_crash_point(spark, tmp_path):
     """K2 — data.json is THE consumer-facing artifact: at every crash
     window it must parse as the complete old document."""
@@ -291,7 +262,7 @@ def test_write_json_catalog_every_crash_point(spark, tmp_path):
     n_mut_probe = str(tmp_path / "probe.json")
 
     def probe_write():
-        write_json_catalog(frames, n_mut_probe)
+        write_json_catalog(frames, {"acme": n_mut_probe})
 
     n_mut = count_mutations(MonkeyPatch, A, probe_write)
     assert n_mut >= 1
@@ -301,52 +272,72 @@ def test_write_json_catalog_every_crash_point(spark, tmp_path):
         Injector(mp, A, crash_at=k)
         try:
             with pytest.raises(InjectedCrash):
-                write_json_catalog(frames, target)
+                write_json_catalog(frames, {"acme": target})
         finally:
             mp.undo()
         assert read_back() == {"identifier": "old-complete"}, (
             f"torn data.json after crash at call #{k}"
         )
         assert _no_part_residue(str(tmp_path))
-    out = write_json_catalog(frames, target)
+    out = write_json_catalog(frames, {"acme": target})
     doc = read_back()
-    assert out == target
+    assert out == [target]
     assert doc["identifier"] == "acme"
     assert len(doc["dataset"]) == 3
     assert _no_part_residue(str(tmp_path))
 
 
 def test_write_wide_csv_every_crash_point(spark, tmp_path):
-    """K1 — the wide-CSV writer (coalesce(1) into a _tmp dir, replace
-    the part file onto the product path, clean the dir): the published
-    CSV must be old-complete or new-complete at every mutating call,
-    and a re-run must converge even with stale _tmp residue from a
-    crashed predecessor (Spark's overwrite mode clears it)."""
-    import series_tiempo_ar_scraping_spark.sinks.csv_wide as CW
-    from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
-        write_wide_csv,
-    )
+    """K1 — the bulk wide-CSV writer (one partitionBy text write into a
+    staging dir, a rename pass onto the product paths, the staging dir
+    removed): each published CSV must be old-complete or new-complete at
+    every mutating ``os`` call, a plain re-run must converge, and no
+    staging dir may be left behind."""
+    import glob
 
-    target = str(tmp_path / "serie.csv")
+    from pyspark.sql import functions as F
+
+    import series_tiempo_ar_scraping_spark.sinks.csv_wide as CW
+
+    out = str(tmp_path / "out")
+    names = {("c", "d", "r1"): "uno.csv", ("c", "d", "r2"): "dos.csv"}
+    fields = spark.createDataFrame(
+        [("r1", 0, "s1", None), ("r2", 0, "s2", None)],
+        "distribution_id string, field_order int, title string,"
+        " specialType string",
+    )
 
     def obs(v):
         return spark.createDataFrame(
-            [("s1", "2024-01-01", float(v))],
-            "series_title string, ts string, value double",
-        )
+            [
+                ("c", "d", "r1", "s1", "2024-01-01", float(v)),
+                ("c", "d", "r2", "s2", "2024-01-01", float(v) + 10),
+            ],
+            "catalog_id string, dataset_id string, distribution_id string,"
+            " series_title string, ts string, value double",
+        ).withColumn("ts", F.col("ts").cast("date"))
+
+    def expected(v):
+        return {
+            "uno.csv": ["indice_tiempo,s1", f"2024-01-01,{float(v)}"],
+            "dos.csv": ["indice_tiempo,s2", f"2024-01-01,{float(v) + 10}"],
+        }
 
     def write(v):
-        write_wide_csv(obs(v), target, ["s1"])
+        CW.write_wide_csvs_bulk(obs(v), fields, out, names, replace=True)
 
     def read_back():
-        if not os.path.exists(target):
-            return None
-        return open(target).read().splitlines()
+        return {
+            os.path.basename(p): open(p).read().splitlines()
+            for p in glob.glob(
+                os.path.join(out, "catalog", "**", "*.csv"), recursive=True
+            )
+        }
 
     write(1)
-    assert read_back() == ["indice_tiempo,s1", "2024-01-01,1.0"]
+    assert read_back() == expected(1)
     n_mut = count_mutations(MonkeyPatch, CW, lambda: write(2))
-    assert n_mut >= 2  # replace + at least one cleanup call
+    assert n_mut >= 2  # one rename per published CSV
     for k in range(1, n_mut + 1):
         write(1)
         mp = MonkeyPatch()
@@ -357,14 +348,15 @@ def test_write_wide_csv_every_crash_point(spark, tmp_path):
         finally:
             mp.undo()
         got = read_back()
-        assert got in (
-            ["indice_tiempo,s1", "2024-01-01,1.0"],
-            ["indice_tiempo,s1", "2024-01-01,2.0"],
-        ), f"torn wide CSV after crash at call #{k}: {got}"
-        # recovery: a plain re-run converges despite any _tmp residue
+        assert set(got) == {"uno.csv", "dos.csv"}
+        for name, lines in got.items():
+            assert lines in (expected(1)[name], expected(2)[name]), (
+                f"torn {name} after crash at call #{k}: {lines}"
+            )
+        # recovery: a plain re-run converges
         write(2)
-        assert read_back() == ["indice_tiempo,s1", "2024-01-01,2.0"]
-        assert not os.path.exists(target + "_tmp")
+        assert read_back() == expected(2)
+        assert os.listdir(out) == ["catalog"], f"staging left at call #{k}"
 
 
 def test_landing_atomic_write_every_crash_point(tmp_path):

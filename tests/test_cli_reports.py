@@ -10,7 +10,6 @@ from series_tiempo_ar_scraping_spark.sinks.reports import (
     build_message,
     build_subject,
     send_email,
-    write_report_csv,
 )
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -120,12 +119,8 @@ def test_run_etl_from_index(spark, tmp_path):
     assert run_etl(index, out, spark=spark, catalog_id_filter="nope") == {}
 
 
-def test_report_csv_and_mail(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("d1", "OK"), ("d2", "ERROR")], "dataset_identifier string, dataset_status string"
-    )
-    path = write_report_csv(df, str(tmp_path), "reporte-datasets")
-    assert open(path).readline().strip() == "dataset_identifier,dataset_status"
+def test_report_csv_and_mail(tmp_path):
+    path = str(tmp_path / "reporte-datasets.xlsx")
 
     # X7/X9 subject semantics: env tag unless prod
     at = dt.datetime(2024, 6, 30, 14, 5)

@@ -53,13 +53,14 @@ def test_orc_round_trip_matches_parquet(spark, sf_dir, tmp_path):
 
 def test_txt_distribution_matches_csv_twin(spark):
     """S7 fidelity: a semicolon-separated, comma-decimal TXT export must
-    yield the exact observations of its CSV twin — delimiter sniffed,
-    decimals normalized, missing tokens nulled (processors.py:58-80)."""
+    yield, through the pipeline's bulk reader, the exact observations the
+    Spark CSV reader gives its CSV twin — delimiter sniffed, decimals
+    normalized, missing tokens nulled (processors.py:58-80)."""
     import os
 
     from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
         read_distribution_csv,
-        read_distribution_txt,
+        read_distributions_bulk,
         sniff_txt_sep,
     )
 
@@ -67,12 +68,14 @@ def test_txt_distribution_matches_csv_twin(spark):
     txt = os.path.join(fix, "precios_q.txt")
     csv = os.path.join(fix, "precios_q.csv")
     assert sniff_txt_sep(txt) == ";"
-    got = {
-        (r.series_id, r.ts, r.value)
-        for r in read_distribution_txt(
-            spark, txt, "acme", "ds-prices", "2.1"
-        ).collect()
-    }
+    obs, errors = read_distributions_bulk(
+        spark,
+        [("acme", "ds-prices", "2.1", txt)],
+        sep=sniff_txt_sep(txt),
+        decimal_comma=True,
+    )
+    assert errors == []
+    got = {(r.series_id, r.ts, r.value) for r in obs.collect()}
     want = {
         (r.series_id, r.ts, r.value)
         for r in read_distribution_csv(
@@ -82,6 +85,7 @@ def test_txt_distribution_matches_csv_twin(spark):
     # comma-decimal noise like 104,0 normalizes to the same numeric text
     got = {(s, t, v if v is None else str(float(v))) for s, t, v in got}
     want = {(s, t, v if v is None else str(float(v))) for s, t, v in want}
+    assert len(want) == 10
     assert got == want
 
 
@@ -121,7 +125,8 @@ def test_decimal_comma_thousands(spark):
 
 def test_bulk_distribution_read_mixed_schemas(spark, tmp_path):
     """One Spark job reads files with different column sets; corrupt
-    files come back as V7 error tuples, not exceptions."""
+    files and quoted headers (the bare split would misalign their
+    titles) come back as V7 error tuples, not exceptions."""
     from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
         read_distribution_csv,
         read_distributions_bulk,
@@ -133,11 +138,14 @@ def test_bulk_distribution_read_mixed_schemas(spark, tmp_path):
     b.write_text("indice_tiempo,only\n2024-01-01,9.25\n")
     junk = tmp_path / "junk.csv"
     junk.write_bytes(b"\x00\x01 not a csv at all\n")
+    quoted = tmp_path / "q.csv"
+    quoted.write_text('indice_tiempo,"serie, total",x\n2024-01-01,1,2\n')
 
     items = [
         ("c", "d", "ra", str(a)),
         ("c", "d", "rb", str(b)),
         ("c", "d", "rj", str(junk)),
+        ("c", "d", "rq", str(quoted)),
     ]
     obs, errs = read_distributions_bulk(spark, items)
     got = {
@@ -151,7 +159,8 @@ def test_bulk_distribution_read_mixed_schemas(spark, tmp_path):
             want.add((rid, r.series_id, str(r.ts), r.value))
     assert got == want
     assert [(e[2], "no parseable header" in e[3]) for e in errs] == [
-        ("rj", True)
+        ("rj", True),
+        ("rq", True),
     ]
 
 
@@ -248,13 +257,15 @@ def test_parquet_store_schema_evolution(spark, tmp_path):
 
 
 def test_gzip_compressed_distribution_csv(spark, tmp_path):
-    """Portals serve gzip-compressed CSVs; the reader must melt them
-    identically to the plain file (Spark decompresses .gz by extension
-    — pinned here so a reader rewrite never loses it)."""
+    """Portals serve gzip-compressed CSVs; the pipeline's bulk reader
+    must melt them identically to the Spark CSV reader on the plain file
+    (Spark decompresses .gz by extension — pinned here so a reader
+    rewrite never loses it)."""
     import gzip
 
     from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
         read_distribution_csv,
+        read_distributions_bulk,
     )
 
     body = (
@@ -268,16 +279,17 @@ def test_gzip_compressed_distribution_csv(spark, tmp_path):
     with gzip.open(gz, "wt") as f:
         f.write(body)
 
-    def rows(p):
-        return sorted(
-            (r.series_id, str(r.ts), r.value)
-            for r in read_distribution_csv(
-                spark, str(p), "c1", "ds1", "dist1"
-            ).collect()
-        )
+    def rows(df):
+        return sorted((r.series_id, str(r.ts), r.value) for r in df.collect())
 
-    got = rows(gz)
-    assert got == rows(plain)
+    obs, errors = read_distributions_bulk(
+        spark, [("c1", "ds1", "dist1", str(gz))]
+    )
+    assert errors == []
+    got = rows(obs)
+    assert got == rows(
+        read_distribution_csv(spark, str(plain), "c1", "ds1", "dist1")
+    )
     # 2 dates x 2 series; the empty cell melts to an explicit null row
     assert len(got) == 4
     assert ("serie_b", "2024-01-02", None) in [

@@ -229,6 +229,41 @@ def test_bulk_csv_writer_v8_skip_and_header_order(spark, tmp_path):
     assert open(p1).read().splitlines()[-1] == "SENTINEL"
 
 
+def test_bulk_csv_writer_quotes_header_titles(spark, tmp_path):
+    """K1: V1 accepts any non-empty field title, so a title holding a
+    comma, quote or line break is quoted in the header as pandas
+    ``to_csv`` writes it; under ``csv.reader`` every line then has as
+    many fields as the header."""
+    import csv
+
+    from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
+        write_wide_csvs_bulk,
+    )
+
+    titles = ["serie, total", 'dicho "x"', "a\nb", "x"]
+    obs = spark.createDataFrame(
+        [
+            ("c", "d", "r1", t, "2024-01-01", float(i))
+            for i, t in enumerate(titles)
+        ],
+        "catalog_id string, dataset_id string, distribution_id string,"
+        " series_title string, ts string, value double",
+    ).withColumn("ts", F.col("ts").cast("date"))
+    fields = spark.createDataFrame(
+        [("r1", i, t, None) for i, t in enumerate(titles)],
+        "distribution_id string, field_order int, title string,"
+        " specialType string",
+    )
+    (path,) = write_wide_csvs_bulk(
+        obs, fields, str(tmp_path / "out"), {("c", "d", "r1"): "q.csv"}
+    )
+    with open(path, newline="") as fh:
+        rows = list(csv.reader(fh))
+    assert rows[0] == ["indice_tiempo", *titles]
+    assert rows[1] == ["2024-01-01", "0.0", "1.0", "2.0", "3.0"]
+    assert all(len(r) == len(rows[0]) for r in rows)
+
+
 def test_bulk_csv_writer_multi_catalog_same_distribution_id(spark, tmp_path):
     """Distribution ids are catalog-scoped ('1.1' can exist in two
     catalogs): targets and the V8 skip set must key on the full

@@ -55,13 +55,13 @@ def test_reference_workbook_parity(spark):
 def test_catalog_xlsx_fixture_is_current(spark, tmp_path):
     """The committed fixture is what K3 writes for the JSON fixture
     today; rebuild it with ``write_xlsx_catalog(read_catalog_json(spark,
-    FIX_JSON), FIX_XLSX)`` when the writer changes."""
+    FIX_JSON), {"acme": FIX_XLSX})`` when the writer changes."""
     from series_tiempo_ar_scraping_spark.sinks.metadata import (
         write_xlsx_catalog,
     )
 
     out = str(tmp_path / "catalog.xlsx")
-    write_xlsx_catalog(read_catalog_json(spark, FIX_JSON), out)
+    write_xlsx_catalog(read_catalog_json(spark, FIX_JSON), {"acme": out})
     assert read_sheets(out) == read_sheets(FIX_XLSX)
 
 
@@ -164,7 +164,7 @@ def test_write_xlsx_catalog_roundtrip(spark, tmp_path):
 
     frames = read_xlsx_catalog(spark, FIX_XLSX)
     out = str(tmp_path / "catalog.xlsx")
-    write_xlsx_catalog(frames, out)
+    write_xlsx_catalog(frames, {"acme": out})
     back = read_sheets(out)
     assert set(back) >= {"catalog", "dataset", "distribution", "field"}
     assert len(back["distribution"]) == 4

@@ -42,8 +42,8 @@ def main() -> int:
     failed, untested = [], []
     for name in names:
         t0 = time.perf_counter()
-        # Side-output, never throw per-record (the repo's V7 pattern,
-        # operators/errors.py): one broken query must not kill the harness.
+        # Side-output, never throw per-record (the repo's V7 pattern):
+        # one broken query must not kill the harness.
         try:
             r = compare_query(spark, sf_dir, name)
         except Exception as exc:  # noqa: BLE001
