@@ -49,8 +49,10 @@ def run_etl(
     its own, then every catalog that loaded runs through ONE pipeline
     pass, so the Spark job count does not grow with the catalog count.
     A catalog whose metadata fails to load gets its own ``error`` entry
-    (V7 at catalog level); if the shared pass raises, each of its
-    catalogs re-runs alone, so an exception costs only its own entry."""
+    (V7 at catalog level). Inside the pass, a bad input file costs its
+    distribution one ERROR report row (V7 at distribution level). The
+    pass runs once: should it still raise, every catalog in it gets an
+    ``error`` entry, and no catalog runs twice."""
     from series_tiempo_ar_scraping_spark.plans.pipeline import (
         CatalogPipeline,
         read_catalog,
@@ -128,7 +130,7 @@ def run_etl(
                 counts[r.catalog_id][r.kind] = r["count"]
             return counts
         try:
-            return report_pass(pipe.run(write_csvs=True), loaded)
+            return report_pass(pipe.run(), loaded)
         finally:
             # the pass has written its outputs and its reports are
             # collected: free its cached frames, raised or not
@@ -231,22 +233,11 @@ def run_etl(
         except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
             results[cid] = {"error": repr(exc)}
 
-    def run_pass(batch: dict[str, dict]) -> bool:
+    if loaded:
         try:
-            results.update(process_pass(batch))
-            return True
-        except Exception as exc:  # noqa: BLE001 — V7: isolate catalogs
-            results.update({cid: {"error": repr(exc)} for cid in batch})
-            return False
-
-    if loaded and not run_pass(loaded) and len(loaded) > 1:
-        # one catalog's exception must cost only its own entry
-        logging.getLogger(__name__).warning(
-            "pass over %d catalogs failed (%s); re-running each alone",
-            len(loaded), results[next(iter(loaded))]["error"],
-        )
-        for cid, frames in loaded.items():
-            run_pass({cid: frames})
+            results.update(process_pass(loaded))
+        except Exception as exc:  # noqa: BLE001 — V7: the run goes on
+            results.update({cid: {"error": repr(exc)} for cid in loaded})
     results = {cid: results[cid] for cid, _cfg in entries}
 
     # K6 — per-catalog stage emails (reference base.py:1058-1066 sends

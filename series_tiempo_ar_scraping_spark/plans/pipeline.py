@@ -193,7 +193,7 @@ class CatalogPipeline:
 
     # -- phase 2: execution ------------------------------------------------
 
-    def run(self, write_csvs: bool = True) -> PipelineResult:
+    def run(self) -> PipelineResult:
         frames = self.plan()
         # metadata is tiny and re-joined everywhere — cache once
         for k in frames:
@@ -401,28 +401,21 @@ class CatalogPipeline:
             # neither the distribution nor the catalog count; the
             # fileName mapping is the only metadata it collects
             # (``base.py:266-279`` contract).
-            if write_csvs:
-                meta = {
-                    (r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
-                    for r in _collect_routing(
-                        ts_dists.select(
-                            "catalog_id",
-                            "dataset_id",
-                            "distribution_id",
-                            "fileName",
-                        ),
-                        "wide-CSV fileName",
-                    )
-                }
-                written.extend(
-                    write_wide_csvs_bulk(
-                        observations,
-                        frames["fields"],
-                        self.output_dir,
-                        meta,
-                        replace=self.replace,
-                    )
+            meta = {
+                (r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
+                for r in _collect_routing(
+                    ts_dists.select(
+                        "catalog_id", "dataset_id", "distribution_id", "fileName"
+                    ),
+                    "wide-CSV fileName",
                 )
+            }
+            written.extend(
+                write_wide_csvs_bulk(
+                    observations, frames["fields"], self.output_dir, meta,
+                    replace=self.replace,
+                )
+            )
 
         # K7/K8: publishable metadata.
         frames["distributions_published"], frames["fields_published"] = (
@@ -437,27 +430,20 @@ class CatalogPipeline:
         # K2/K3: rewrite data.json + catalog.xlsx next to each catalog's
         # outputs (base.py:489-504 writes both after filtering); each
         # writer collects once for every catalog of the pass.
-        if write_csvs:
-            from series_tiempo_ar_scraping_spark.sinks.metadata import (
-                write_json_catalog,
-                write_xlsx_catalog,
-            )
+        from series_tiempo_ar_scraping_spark.sinks.metadata import (
+            write_json_catalog,
+            write_xlsx_catalog,
+        )
 
-            for writer, name in (
-                (write_json_catalog, "data.json"),
-                (write_xlsx_catalog, "catalog.xlsx"),
-            ):
-                written.extend(
-                    writer(
-                        frames,
-                        {
-                            cid: os.path.join(
-                                self.output_dir, "catalog", cid, name
-                            )
-                            for cid in self.catalogs
-                        },
-                    )
-                )
+        for writer, name in (
+            (write_json_catalog, "data.json"),
+            (write_xlsx_catalog, "catalog.xlsx"),
+        ):
+            targets = {
+                cid: os.path.join(self.output_dir, "catalog", cid, name)
+                for cid in self.catalogs
+            }
+            written.extend(writer(frames, targets))
 
         return PipelineResult(
             frames=frames,

@@ -68,7 +68,7 @@ def write_wide_csvs_bulk(
 
     1. declared column order per distribution from the fields frame
        (K1 contract: field declaration order, ``base.py:266-279``);
-    2. one row per (distribution, ts) holding a title→value map;
+    2. one row per (distribution, ts) holding its title/value pairs;
     3. header + data lines as strings (double→string via the same JVM
        ``Double.toString`` the CSV writer uses, so bytes match);
     4. one ``partitionBy(catalog, dataset, distribution)`` text write —
@@ -139,13 +139,12 @@ def write_wide_csvs_bulk(
             F.transform("ft", lambda s: s["title"]).alias("titles"),
         )
     )
+    # title/value pairs, not a map: a title repeated at one ts (a
+    # duplicate date, or several null-ts lines, both V4 ERRORs) would be
+    # a duplicate map key, which raises
     cells = obs.groupBy(
         "catalog_id", "dataset_id", "distribution_id", "ts"
-    ).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("series_title", "value"))
-        ).alias("m")
-    )
+    ).agg(F.collect_list(F.struct("series_title", "value")).alias("m"))
     with_titles = cells.join(F.broadcast(titles), title_keys)
     data_lines = with_titles.select(
         "catalog_id",
@@ -156,11 +155,15 @@ def write_wide_csvs_bulk(
         F.concat_ws(
             ",",
             F.concat(
-                F.array(F.col("ts").cast("string")),
+                # a null ts (a V4 ERROR) keeps its empty field
+                F.array(F.coalesce(F.col("ts").cast("string"), F.lit(""))),
                 F.transform(
                     "titles",
                     lambda t: F.coalesce(
-                        F.element_at("m", t).cast("string"), F.lit("")
+                        F.get(
+                            F.filter("m", lambda e: e["series_title"] == t), 0
+                        )["value"].cast("string"),
+                        F.lit(""),
                     ),
                 ),
             ),

@@ -15,13 +15,22 @@ Extraction is the engine's one genuinely imperative source. It runs as
 batches out — so a million workbooks on a cluster parallelize trivially
 and each file is opened exactly once.
 
-``.xlsx`` parsing is stdlib-only (``sources/xlsx.py``: zipfile + OOXML
-XML); the JSONL cells fixture format exercises identical Spark-side
-plumbing for grids produced elsewhere.
+One parser, ``iter_file_cells``, serves this extraction and the
+``workbook_cells`` DataSource (``sources/datasource.py``), so both mounts
+see the same cells: ``.xlsx`` (stdlib OOXML, ``sources/xlsx.py``),
+``.xls`` (stdlib BIFF8, ``sources/xls.py``) and the JSONL cells fixture
+format, with only non-empty cells yielded. A file that fails to parse
+(missing, corrupt, unsupported) yields NO cells here: every series
+declared on it then fails the V5 header check, so its distribution costs
+one ERROR report row (V7) instead of the pass. The DataSource raises
+instead.
 """
 
 from __future__ import annotations
 
+import json
+import logging
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -39,45 +48,41 @@ CELLS_SCHEMA = T.StructType(
 )
 
 
-def _extract_one(path: str, by_path: bool = False) -> pd.DataFrame:
-    """Parse one workbook file into a cells pandas frame whose ``file``
-    is the file name, or the full path when ``by_path``."""
-    fname = path if by_path else path.rsplit("/", 1)[-1]
-    if path.endswith(".jsonl"):
-        # Fixture format: one JSON object per line with file/sheet/row/col/value.
-        df = pd.read_json(path, lines=True)
-        df["file"] = fname
-        return df[["file", "sheet", "row", "col", "value"]].astype(
-            {"row": "int32", "value": "string"}
-        )
+def _jsonl_cells(path: str) -> Iterator[tuple[str, int, str, str]]:
+    """The JSONL cells fixture format: one JSON object per line with
+    sheet/row/col/value. Like the workbook readers, null or empty values
+    are absent cells (never the string 'None'); a malformed line is
+    skipped."""
+    with open(path, encoding="utf-8") as fh:
+        for line in fh:
+            try:
+                rec = json.loads(line)
+                value = rec["value"]
+                if value is not None and value != "":
+                    yield rec["sheet"], int(rec["row"]), rec["col"], str(value)
+            except (KeyError, ValueError, TypeError):
+                continue
+
+
+def iter_file_cells(path: str, name: str) -> Iterator[tuple]:
+    """One workbook or JSONL cells file -> ``(name, sheet, row, col,
+    value)`` for every non-empty cell. Raises when the file cannot be
+    opened or its format is unsupported."""
     if path.endswith(".xlsx"):
-        # Stdlib OOXML parse (sources/xlsx.py) — no openpyxl needed.
-        from series_tiempo_ar_scraping_spark.sources.xlsx import iter_cells
-
-        rows = [
-            (fname, sheet, row, col, value)
-            for sheet, row, col, value in iter_cells(path)
-        ]
-        from series_tiempo_ar_scraping_spark.operators.multimodal import (
-            typed_pdf,
+        from series_tiempo_ar_scraping_spark.sources.xlsx import (
+            iter_cells as cells,
         )
-
-        return typed_pdf(rows, CELLS_SCHEMA)
-    if path.endswith(".xls"):
-        # Stdlib BIFF8/CFB parse (sources/xls.py) — no xlrd needed; the
-        # reference routes .xls and .xlsx alike (base.py:134,144).
-        from series_tiempo_ar_scraping_spark.sources.xls import iter_cells_xls
-
-        rows = [
-            (fname, sheet, row, col, value)
-            for sheet, row, col, value in iter_cells_xls(path)
-        ]
-        from series_tiempo_ar_scraping_spark.operators.multimodal import (
-            typed_pdf,
+    elif path.endswith(".xls"):
+        # the reference routes .xls and .xlsx alike (base.py:134,144)
+        from series_tiempo_ar_scraping_spark.sources.xls import (
+            iter_cells_xls as cells,
         )
-
-        return typed_pdf(rows, CELLS_SCHEMA)
-    raise NotImplementedError(f"unsupported workbook format: {path}")
+    elif path.endswith(".jsonl"):
+        cells = _jsonl_cells
+    else:
+        raise NotImplementedError(f"unsupported workbook format: {path}")
+    for cell in cells(path):
+        yield (name, *cell)
 
 
 def extract_cells(spark: SparkSession, paths: list[str], by_path: bool = False) -> DataFrame:
@@ -86,7 +91,8 @@ def extract_cells(spark: SparkSession, paths: list[str], by_path: bool = False) 
     The path list is tiny (it's the A1-deduped source set); each file is
     parsed exactly once (the reference's open-once cache, relationally).
     Cells are keyed by file name, or by full path when ``by_path`` (two
-    catalogs' different workbooks may share a file name).
+    catalogs' different workbooks may share a file name). A file that
+    fails to parse contributes no cells (V7).
     """
     from series_tiempo_ar_scraping_spark.session import ensure_package_on_executors
 
@@ -96,8 +102,20 @@ def extract_cells(spark: SparkSession, paths: list[str], by_path: bool = False) 
     ).repartition(max(1, len(paths)))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from series_tiempo_ar_scraping_spark.operators.multimodal import (
+            typed_pdf,
+        )
+
         for pdf in batches:
             for p in pdf["path"]:
-                yield _extract_one(p, by_path)
+                name = p if by_path else os.path.basename(p)
+                try:
+                    rows = list(iter_file_cells(p, name))
+                except Exception:  # noqa: BLE001 — V7: no cells, ERROR row
+                    logging.getLogger(__name__).warning(
+                        "no cells from unparseable workbook %s", p, exc_info=True
+                    )
+                    rows = []
+                yield typed_pdf(rows, CELLS_SCHEMA)
 
     return paths_df.mapInPandas(run, CELLS_SCHEMA)

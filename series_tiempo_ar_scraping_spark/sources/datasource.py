@@ -16,14 +16,17 @@ planner ships each file to one task, the executor parses it exactly once
 (the reference's open-once cache, ``base.py:574-587``, as partition
 planning), and a million workbooks spread over however many cores exist.
 Glob expansion happens driver-side at planning; no data moves through the
-driver. Supports ``.xlsx`` (stdlib zip+XML) and the ``.jsonl`` cells
-fixture format.
+driver. Cells come from the one parser both mounts share,
+``cells.iter_file_cells`` (``.xlsx``, ``.xls`` and the ``.jsonl`` cells
+fixture format; only non-empty cells). Unlike the pipeline's
+extraction, which turns a bad file into zero cells, this mount raises on
+a file that cannot be parsed: a user reading a path asked for exactly
+that file.
 """
 
 from __future__ import annotations
 
 import glob as _glob
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -32,16 +35,11 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
-CELLS_SCHEMA = StructType(
-    [
-        StructField("file", StringType()),
-        StructField("sheet", StringType()),
-        StructField("row", IntegerType()),
-        StructField("col", StringType()),
-        StructField("value", StringType()),
-    ]
+from series_tiempo_ar_scraping_spark.sources.cells import (
+    CELLS_SCHEMA,
+    iter_file_cells,
 )
 
 
@@ -65,53 +63,8 @@ class WorkbookCellsReader(DataSourceReader):
         return [_FilePartition(p) for p in self._paths]
 
     def read(self, partition: _FilePartition):
-        yield from _iter_file_cells(partition.path)
-
-
-def _iter_file_cells(path: str):
-    """One workbook/jsonl file -> cell tuples (shared by the batch
-    partitions and the streaming micro-batches, so both mounts see
-    identical cell semantics)."""
-    fname = os.path.basename(path)
-    if path.endswith(".jsonl"):
-        with open(path, encoding="utf-8") as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                # mirror the workbook readers' cell semantics: null/
-                # empty values are ABSENT cells (dropped, never the
-                # string 'None'), and a structurally malformed line
-                # is skipped rather than killing the task (V7)
-                try:
-                    rec = json.loads(line)
-                    value = rec["value"]
-                    if value is None or value == "":
-                        continue
-                    yield (
-                        fname,
-                        rec["sheet"],
-                        int(rec["row"]),
-                        rec["col"],
-                        str(value),
-                    )
-                except (KeyError, ValueError, TypeError):
-                    continue
-    elif path.endswith(".xlsx"):
-        from series_tiempo_ar_scraping_spark.sources.xlsx import iter_cells
-
-        for sheet, row, col, value in iter_cells(path):
-            yield (fname, sheet, row, col, value)
-    elif path.endswith(".xls"):
-        from series_tiempo_ar_scraping_spark.sources.xls import (
-            iter_cells_xls,
-        )
-
-        for sheet, row, col, value in iter_cells_xls(path):
-            yield (fname, sheet, row, col, value)
-    else:
-        raise NotImplementedError(
-            f"workbook_cells: unsupported format {path}"
-        )
+        path = partition.path
+        yield from iter_file_cells(path, os.path.basename(path))
 
 
 class WorkbookCellsStreamReader(SimpleDataSourceStreamReader):
@@ -239,7 +192,7 @@ class WorkbookCellsStreamReader(SimpleDataSourceStreamReader):
         # materialized list bounded by one arrival batch
         out = []
         for n in names:
-            out.extend(_iter_file_cells(os.path.join(self._dir, n)))
+            out.extend(iter_file_cells(os.path.join(self._dir, n), n))
         return out
 
 
@@ -267,7 +220,8 @@ def register_workbook_cells(spark) -> None:
     (``ensure_package_on_executors``) — same requirement as every
     pandas-UDF island. The STREAMING plan runner is stricter: it is a
     python worker spawned by the driver JVM that does NOT see
-    addPyFile includes, so the datasource modules are additionally
+    addPyFile includes, so the datasource modules (this one, the
+    ``cells`` parser and the workbook readers) are additionally
     registered for BY-VALUE cloudpickle serialization — the class
     travels inside the pickle and needs no import on the other side
     (caught by the foreign-cwd driver drive; the batch reader masked
@@ -281,11 +235,12 @@ def register_workbook_cells(spark) -> None:
     try:
         from pyspark import cloudpickle
 
+        import series_tiempo_ar_scraping_spark.sources.cells as _cells
         import series_tiempo_ar_scraping_spark.sources.datasource as _ds
         import series_tiempo_ar_scraping_spark.sources.xls as _xls
         import series_tiempo_ar_scraping_spark.sources.xlsx as _xlsx
 
-        for mod in (_ds, _xlsx, _xls):
+        for mod in (_ds, _cells, _xlsx, _xls):
             cloudpickle.register_pickle_by_value(mod)
     except (ImportError, AttributeError):
         # older cloudpickle: fall back to import-by-reference (works

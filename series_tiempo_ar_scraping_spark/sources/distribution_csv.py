@@ -153,7 +153,10 @@ def read_distributions_bulk(
 
     Lines split on the bare separator, with no CSV quoting: a header line
     holding a ``"`` is not a parseable header, so a quoted file gets the
-    V7 error tuple instead of series misaligned under split titles.
+    V7 error tuple instead of series misaligned under split titles. A
+    data line whose index is not a date, or which has more fields than
+    its header, keeps its values under a null ``ts``: V4 marks the
+    distribution ERROR.
     """
     import re as _re
 
@@ -193,12 +196,17 @@ def read_distributions_bulk(
     joined = data.join(F.broadcast(headers), "abspath").join(
         F.broadcast(dim), "abspath"
     )
+    # A non-date index or a line wider than its header gets a null ts,
+    # which V4 reports as ERROR (the reference's pandas parse fails on
+    # both); fields past the header are dropped.
+    width = F.size("titles")
     exploded = joined.select(
         "catalog_id",
         "dataset_id",
         "distribution_id",
-        F.to_date(parts.getItem(0)).alias("ts"),
-        F.posexplode(F.slice(parts, 2, 100000)).alias("pos", "raw_value"),
+        F.when(F.size(parts) <= width, parts.getItem(0).try_cast("date"))
+        .alias("ts"),
+        F.posexplode(F.slice(parts, 2, width - 1)).alias("pos", "raw_value"),
         F.col("titles"),
     )
     raw_val = F.col("raw_value")

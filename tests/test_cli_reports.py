@@ -53,8 +53,10 @@ def test_run_etl_releases_its_cached_frames(spark, tmp_path):
     assert results["released"]["written"] == 5
     assert set(persistent().keys()) <= before
 
-    held = CatalogPipeline(spark, path, "released", out, file_resolver=_resolver)
-    res = held.run(write_csvs=False)
+    held = CatalogPipeline(
+        spark, path, "released", str(tmp_path / "held"), file_resolver=_resolver
+    )
+    res = held.run()
     mine = [*res.frames.values(), res.metadata_errors, res.observations]
     cached = [df for df in mine if df.storageLevel != StorageLevel.NONE]
     try:
@@ -380,6 +382,170 @@ def test_catalog_failure_is_isolated(spark, tmp_path):
     )
     assert "error" in results["broken"]
     assert results["good"]["written"] > 0
+
+
+def _faulted_index(root) -> tuple[dict, object]:
+    """One clean catalog and four that each carry one bad input file: a
+    missing workbook, a corrupt workbook, non-dates in the CSV's time
+    index, and a CSV line one field wider than its header."""
+    with open(os.path.join(FIX, "catalog.json")) as fh:
+        doc = fh.read()
+    with open(os.path.join(FIX, "files", "precios_q.csv")) as fh:
+        csv_text = fh.read()
+    line = "2020-04-01,104.0,90.1\n"
+    plant = {
+        "clean": {},
+        "nowb": {},
+        "badwb": {"wb1.xlsx": b"PK\x03\x04 not a workbook"},
+        # two non-dates: both lines land on one null ts
+        "baddate": {
+            "precios_q.csv": csv_text.replace("2020-04-01", "abril 2020")
+            .replace("2020-07-01", "julio 2020")
+        },
+        "wide": {"precios_q.csv": csv_text.replace(line, line[:-1] + ",\n")},
+    }
+    index = {}
+    for cid, files in plant.items():
+        d = root / cid
+        d.mkdir()
+        for name, data in files.items():
+            mode = "wb" if isinstance(data, bytes) else "w"
+            with open(d / name, mode) as fh:
+                fh.write(data)
+        text = doc.replace("http://example.test/", f"http://{cid}.test/")
+        if cid == "badwb":
+            text = text.replace("wb1.jsonl", "wb1.xlsx")
+        (d / "catalog.json").write_text(text)
+        index[cid] = {"metadata_path": str(d / "catalog.json")}
+
+    def resolver(ref: str) -> str:
+        cid, name = ref.split("/")[2][: -len(".test")], ref.rsplit("/", 1)[-1]
+        missing = (cid, name) == ("nowb", "wb1.jsonl")
+        if missing or (root / cid / name).exists():
+            return str(root / cid / name)
+        return os.path.join(FIX, "files", name)
+
+    return index, resolver
+
+
+def _statuses(result: dict) -> list[tuple[str, str]]:
+    from series_tiempo_ar_scraping_spark.sources.xlsx import read_sheets
+
+    rows = read_sheets(result["reports"]["reporte-distributions"])[
+        "reporte-distributions"
+    ]
+    return sorted(
+        (r["distribution_identifier"], r["distribution_status"]) for r in rows
+    )
+
+
+def _catalog_tree(out: str, cid: str) -> dict:
+    """A catalog's output files: bytes, except the xlsx, read back (zip
+    timestamps differ run to run)."""
+    from series_tiempo_ar_scraping_spark.sources.xlsx import read_sheets
+
+    root = os.path.join(out, "catalog", cid)
+    tree = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            key = os.path.relpath(p, root)
+            if f.endswith(".xlsx"):
+                tree[key] = read_sheets(p)
+            else:
+                with open(p, "rb") as fh:
+                    tree[key] = fh.read()
+    return tree
+
+
+def test_bad_input_files_cost_error_rows_in_one_pass(
+    spark, tmp_path, monkeypatch
+):
+    """V7 at distribution level: four bad input files, spread over four
+    catalogs of one pass, each cost their distributions one ERROR row.
+    The pass runs once and raises nothing, every other distribution keeps
+    the clean catalog's status, every CSV written stays rectangular, and
+    the clean catalog's outputs equal its run alone."""
+    import csv
+
+    from series_tiempo_ar_scraping_spark.plans.pipeline import CatalogPipeline
+
+    (tmp_path / "in").mkdir()
+    index, resolver = _faulted_index(tmp_path / "in")
+    solo_out = str(tmp_path / "solo")
+    solo = run_etl(
+        {"clean": index["clean"]}, solo_out, spark=spark, file_resolver=resolver
+    )
+
+    calls = []
+    run = CatalogPipeline.run
+
+    def counted(self):
+        calls.append(sorted(self.catalogs))
+        return run(self)
+
+    monkeypatch.setattr(CatalogPipeline, "run", counted)
+    out = str(tmp_path / "out")
+    results = run_etl(index, out, spark=spark, file_resolver=resolver)
+
+    assert calls == [sorted(index)]
+    assert all("error" not in r for r in results.values()), results
+    clean = dict(_statuses(results["clean"]))
+    assert _statuses(results["clean"]) == _statuses(solo["clean"])
+    faulted = {
+        "nowb": {"1.1", "1.2", "1.3"},
+        "badwb": {"1.1", "1.2", "1.3"},
+        "baddate": {"2.1"},
+        "wide": {"2.1"},
+    }
+    for cid, bad in faulted.items():
+        rows = _statuses(results[cid])
+        assert [d for d, _s in rows] == sorted(clean), (cid, rows)
+        for dist, status in rows:
+            want = "ERROR" if dist in bad else clean[dist]
+            assert status == want, (cid, dist, status)
+
+    for dirpath, _dirs, files in os.walk(os.path.join(out, "catalog")):
+        for f in files:
+            if f.endswith(".csv"):
+                with open(os.path.join(dirpath, f), newline="") as fh:
+                    lines = list(csv.reader(fh))
+                assert lines and all(
+                    len(row) == len(lines[0]) for row in lines
+                ), (dirpath, f, lines)
+
+    assert _catalog_tree(out, "clean") == _catalog_tree(solo_out, "clean")
+
+
+def test_raising_pass_costs_each_catalog_an_error_entry(
+    spark, tmp_path, monkeypatch
+):
+    """Should the one pass raise, each of its catalogs gets an ``error``
+    entry, the pass is not re-run per catalog, and run_etl returns."""
+    from series_tiempo_ar_scraping_spark.plans.pipeline import CatalogPipeline
+
+    calls = []
+
+    def boom(self):
+        calls.append(sorted(self.catalogs))
+        raise RuntimeError("pass failed")
+
+    monkeypatch.setattr(CatalogPipeline, "run", boom)
+    path = os.path.join(FIX, "catalog.json")
+    index = {
+        "a": {"metadata_path": path},
+        "b": {"metadata_path": path},
+        "gone": {"metadata_path": str(tmp_path / "nope.json")},
+    }
+    results = run_etl(
+        index, str(tmp_path / "out"), spark=spark, file_resolver=_resolver
+    )
+    assert calls == [["a", "b"]]
+    assert list(results) == ["a", "b", "gone"]
+    assert results["a"] == results["b"] == {
+        "error": repr(RuntimeError("pass failed"))
+    }
+    assert "error" in results["gone"]
 
 
 # --- CLI flag parity vs the reference contract ------------------------------

@@ -53,7 +53,7 @@ def result(spark, tmp_path_factory):
         file_resolver=resolver,
         host=HOST,
     )
-    return pipe.run(write_csvs=True), out
+    return pipe.run(), out
 
 
 def _dist_csv_path(out: str, dataset_id: str, dist_id: str) -> str:

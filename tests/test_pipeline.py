@@ -38,7 +38,7 @@ def result(spark, tmp_path_factory):
         file_resolver=resolver,
         host="http://acme.test",
     )
-    return pipe.run(write_csvs=True), out
+    return pipe.run(), out
 
 
 def test_metadata_normalization(result):
@@ -173,7 +173,7 @@ def test_corrupt_data_file_is_error_row_not_crash(spark, tmp_path):
         file_resolver=bad_resolver,
         host="http://acme.test",
     )
-    res = pipe.run(write_csvs=False)
+    res = pipe.run()
     statuses = {
         r.distribution_identifier: r.distribution_status
         for r in res.distribution_report.collect()
@@ -181,6 +181,63 @@ def test_corrupt_data_file_is_error_row_not_crash(spark, tmp_path):
     assert statuses["2.1"] == "ERROR"
     # scraped distributions still process
     assert statuses["1.1"] in ("OK", "WARNING")
+
+
+def test_extract_cells_and_datasource_share_one_parser(spark, tmp_path):
+    """The pipeline's extraction and the ``workbook_cells`` DataSource
+    give the same cells for every format: JSONL null or empty values and
+    malformed lines are absent cells. A file that cannot be parsed
+    yields no cells in the pipeline and raises in the DataSource."""
+    import json
+
+    from series_tiempo_ar_scraping_spark.sources.cells import extract_cells
+    from series_tiempo_ar_scraping_spark.sources.datasource import (
+        register_workbook_cells,
+    )
+    from series_tiempo_ar_scraping_spark.sources.xls import write_xls_cells
+
+    jsonl = os.path.join(FIX, "files", "wb1.jsonl")
+    xls = str(tmp_path / "wb1.xls")
+    grid = []
+    with open(jsonl) as fh:
+        for line in fh:
+            rec = json.loads(line)
+            col = sum(
+                (ord(ch) - 64) * 26**i for i, ch in enumerate(rec["col"][::-1])
+            )
+            grid.append((rec["sheet"], rec["row"], col, rec["value"]))
+    write_xls_cells(xls, grid)
+    gappy = tmp_path / "gappy.jsonl"
+    gappy.write_text(
+        '{"sheet": "s", "row": 1, "col": "A", "value": "Periodo"}\n'
+        '{"sheet": "s", "row": 2, "col": "A", "value": null}\n'
+        '{"sheet": "s", "row": 3, "col": "A", "value": ""}\n'
+        '{"sheet": "s", "row": 4, "col": "A", "value": 7}\n'
+        '{"sheet": "s", "row": 5, "col"\n'
+        "\n"
+    )
+    register_workbook_cells(spark)
+    paths = [
+        jsonl,
+        os.path.join(FIX, "reference_mock", "actividad_ied.xlsx"),
+        xls,
+        str(gappy),
+    ]
+    for p in paths:
+        via_ds = {
+            tuple(r) for r in spark.read.format("workbook_cells").load(p).collect()
+        }
+        via_mip = {tuple(r) for r in extract_cells(spark, [p]).collect()}
+        assert via_ds and via_ds == via_mip, p
+    assert via_mip == {
+        ("gappy.jsonl", "s", 1, "A", "Periodo"),
+        ("gappy.jsonl", "s", 4, "A", "7"),
+    }
+
+    missing = str(tmp_path / "missing.xlsx")
+    assert extract_cells(spark, [missing, str(gappy)]).count() == 2
+    with pytest.raises(Exception):
+        spark.read.format("workbook_cells").load(missing).collect()
 
 
 def test_bulk_csv_writer_v8_skip_and_header_order(spark, tmp_path):

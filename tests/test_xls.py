@@ -124,10 +124,10 @@ def xls_twin_run(spark, tmp_path_factory):
         file_resolver=resolver,
         host="http://acme.test",
     )
-    return pipe.run(write_csvs=False)
+    return pipe.run()
 
 
-def test_xls_scrape_matches_jsonl_twin(spark, xls_twin_run):
+def test_xls_scrape_matches_jsonl_twin(spark, xls_twin_run, tmp_path):
     """E2E parity: scraping the BIFF8 workbook yields the same
     observations (values, nulls, timestamps) as the jsonl cell grid."""
     from series_tiempo_ar_scraping_spark.plans.pipeline import CatalogPipeline
@@ -139,10 +139,10 @@ def test_xls_scrape_matches_jsonl_twin(spark, xls_twin_run):
         spark,
         catalog_path=os.path.join(FIX, "catalog.json"),
         catalog_id="acme",
-        output_dir="/tmp/xls_base_out",
+        output_dir=str(tmp_path),
         file_resolver=resolver,
         host="http://acme.test",
-    ).run(write_csvs=False)
+    ).run()
 
     cols = ["distribution_id", "series_id", "ts", "value"]
     got = {
