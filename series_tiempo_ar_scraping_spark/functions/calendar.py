@@ -50,7 +50,7 @@ def series_window(obs: DataFrame | None = None) -> Window:
     return Window.partitionBy(*keys).orderBy("ts")
 
 
-def with_series_checks(obs: DataFrame, freq_code_col: str = "freq_code") -> DataFrame:
+def with_series_checks(obs: DataFrame) -> DataFrame:
     """Annotate a long observations frame with per-row validation flags
     (V4 semantics — series-tiempo-ar ``validate_distribution`` invoked at
     ``base.py:251-264``):
@@ -78,7 +78,7 @@ def with_series_checks(obs: DataFrame, freq_code_col: str = "freq_code") -> Data
             F.coalesce(
                 (~F.col("is_duplicate_ts"))
                 & (
-                    expected_next_ts(F.col("prev_ts"), F.col(freq_code_col))
+                    expected_next_ts(F.col("prev_ts"), F.col("freq_code"))
                     != F.col("ts")
                 ),
                 F.lit(False),

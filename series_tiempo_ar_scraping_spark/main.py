@@ -144,13 +144,10 @@ def run_etl(
 
         # Every report frame below is collected once for the whole pass
         # and split by catalog_id in Python.
-        indicators: dict = {}
-        if res.indicators is not None:
-            ind_cols, ind_rows = split_by_catalog(res.indicators)
-            indicators = {
-                cid: dict(zip(ind_cols, rows[0]))
-                for cid, rows in ind_rows.items()
-            }
+        ind_cols, ind_rows = split_by_catalog(res.indicators)
+        indicators = {
+            cid: dict(zip(ind_cols, rows[0])) for cid, rows in ind_rows.items()
+        }
         # K4/K5 — per-catalog report workbooks next to the outputs
         # (reporte-datasets / reporte-distributions, base.py:679-703)
         # and the metadata validation errors export (the reference's
@@ -163,11 +160,8 @@ def run_etl(
             "reporte-errores-metadata": split_by_catalog(
                 res.metadata_errors, keep_id=True
             ),
+            "reporte-distributions": split_by_catalog(res.distribution_report),
         }
-        if res.distribution_report is not None:
-            reports["reporte-distributions"] = split_by_catalog(
-                res.distribution_report
-            )
         # EP1 — declarative data contracts over the run's OWN produced
         # frames (operators/expectations.py), per catalog: scraped
         # observations must carry routing ids + a time index, the

@@ -62,10 +62,11 @@ def catalog_indicators(dataset_reports: DataFrame, distribution_reports: DataFra
     )
 
 
-def sort_reports_by_status(reports: DataFrame, status_col: str = "distribution_status") -> DataFrame:
+def sort_reports_by_status(reports: DataFrame) -> DataFrame:
     """O1 — categorical sort ERROR < WARNING < OK (``base.py:903-913``),
     with identifier tiebreak for determinism (the reference's intra-group
     order is pandas-stable-sort incidental; SURVEY §7 hard part (c))."""
     return reports.orderBy(
-        status_sort_key(F.col(status_col)), F.col("distribution_identifier")
+        status_sort_key(F.col("distribution_status")),
+        F.col("distribution_identifier"),
     )

@@ -208,7 +208,7 @@ def datasets_report(datasets: DataFrame, metadata_errors: DataFrame) -> DataFram
 # V4/V6 — time-series data validation
 # ---------------------------------------------------------------------------
 
-def validate_observations(obs: DataFrame, freq_code_col: str = "freq_code") -> DataFrame:
+def validate_observations(obs: DataFrame) -> DataFrame:
     """V4 — per-series semantic validation on the long frame: time index
     parses, strictly increasing, duplicate-free, spacing conforms to the
     declared frequency, series not entirely null.
@@ -217,7 +217,7 @@ def validate_observations(obs: DataFrame, freq_code_col: str = "freq_code") -> D
     series-tiempo-ar ``validate_distribution`` (``base.py:251-264``) but
     set-based: every series of every distribution in one pass.
     """
-    flagged = with_series_checks(obs, freq_code_col)
+    flagged = with_series_checks(obs)
     per_series = flagged.groupBy(
         "catalog_id", "dataset_id", "distribution_id", "series_id"
     ).agg(
@@ -242,16 +242,17 @@ def validate_observations(obs: DataFrame, freq_code_col: str = "freq_code") -> D
     )
 
 
-def distribution_statuses(series_report: DataFrame) -> DataFrame:
-    """Roll series statuses up to distributions (worst status wins —
+def distribution_statuses(events: DataFrame) -> DataFrame:
+    """Roll status events ``(catalog_id, dataset_id, distribution_id,
+    status)`` up to one status per distribution (worst status wins —
     ERROR < WARNING < OK ordering, ``base.py:903-913``)."""
     rank = (
-        F.when(F.col("series_status") == "ERROR", 0)
-        .when(F.col("series_status") == "WARNING", 1)
+        F.when(F.col("status") == "ERROR", 0)
+        .when(F.col("status") == "WARNING", 1)
         .otherwise(2)
     )
     return (
-        series_report.withColumn("_rank", rank)
+        events.withColumn("_rank", rank)
         .groupBy("catalog_id", "dataset_id", "distribution_id")
         .agg(F.min("_rank").alias("_worst"))
         .withColumn(

@@ -74,6 +74,11 @@ from series_tiempo_ar_scraping_spark.sources.scrape import (
 _ROUTING_COLLECT_CAP = int(
     os.environ.get("SPARK_GRAFT_ROUTING_COLLECT_CAP", "1000000")
 )
+# the long frame every reader yields
+_OBSERVATIONS_SCHEMA = (
+    "catalog_id string, dataset_id string, distribution_id string, "
+    "series_id string, series_title string, ts date, value double"
+)
 
 
 def read_catalog(spark: SparkSession, path: str, catalog_id: str) -> dict[str, DataFrame]:
@@ -109,11 +114,11 @@ def _collect_routing(df: DataFrame, what: str) -> list:
 class PipelineResult:
     frames: dict[str, DataFrame]
     metadata_errors: DataFrame
-    observations: DataFrame | None
-    series_report: DataFrame | None
-    distribution_report: DataFrame | None
+    observations: DataFrame
+    series_report: DataFrame
+    distribution_report: DataFrame
     dataset_report: DataFrame
-    indicators: DataFrame | None
+    indicators: DataFrame
     written_files: list[str] = field(default_factory=list)
     processor_errors: list[tuple[str, str, str, str]] = field(
         default_factory=list
@@ -210,6 +215,16 @@ class CatalogPipeline:
             time_series_distributions(frames["distributions"], frames["fields"])
         )
 
+        # ONE routing collect (metadata-plane: one row per routed
+        # distribution) serves every reader and the K1 fileName map.
+        keys = ["catalog_id", "dataset_id", "distribution_id"]
+        routed = _collect_routing(
+            ts_dists.select(
+                *keys, "method", "downloadURL", "scrapingFileURL", "fileName"
+            ),
+            "time-series distribution",
+        )
+
         obs_parts: list[DataFrame] = []
         # csv/txt routes (S6/S7): per-distribution file reads. V7: any
         # per-distribution failure (unreadable/garbage file, no series
@@ -223,10 +238,17 @@ class CatalogPipeline:
         processor_errors: list[tuple[str, str, str, str]] = []
         csv_items: list[tuple[str, str, str, str]] = []
         txt_groups: dict[str, list[tuple[str, str, str, str]]] = {}
-        for row in _collect_routing(
-            ts_dists.filter(F.col("method").isin(METHOD_CSV, METHOD_TXT)),
-            "csv/txt distribution",
-        ):
+        workbooks: dict[str, str | None] = {}
+        for row in routed:
+            if row.method == METHOD_EXCEL:
+                # one resolve (a download, in production) per workbook
+                if row.scrapingFileURL not in workbooks:
+                    workbooks[row.scrapingFileURL] = self.file_resolver(
+                        row.scrapingFileURL
+                    )
+                continue
+            if row.method not in (METHOD_CSV, METHOD_TXT):
+                continue
             ref = row.downloadURL or row.scrapingFileURL
             local = self.file_resolver(ref)
             if local is None or not os.path.exists(local):
@@ -256,24 +278,17 @@ class CatalogPipeline:
                     (c, d, r, repr(exc)) for c, d, r, _p in items
                 )
 
+        # Status events (catalog, dataset, distribution, status), rolled
+        # up worst-first below; the workbook route adds V5/V6 events.
+        events: list[DataFrame] = []
         # excel route (S8): extract cells once per distinct workbook (A1),
         # then scrape every series relationally. Cells key on the resolved
         # path, not the file name: two catalogs' different workbooks may
         # share one.
-        excel_dists = ts_dists.filter(F.col("method") == METHOD_EXCEL)
-        workbooks = {
-            r.scrapingFileURL: self.file_resolver(r.scrapingFileURL)
-            for r in _collect_routing(
-                excel_dists.select("scrapingFileURL").distinct(),
-                "excel workbook",
-            )
-        }
-        table_ends = None
-        header_errors = None
         if workbooks:
             paths = sorted({p for p in workbooks.values() if p})
             cells = self._cache(extract_cells(self.spark, paths, by_path=True))
-            located = excel_dists.join(
+            located = ts_dists.filter(F.col("method") == METHOD_EXCEL).join(
                 F.broadcast(
                     self.spark.createDataFrame(
                         list(workbooks.items()),
@@ -286,136 +301,82 @@ class CatalogPipeline:
                 frames["fields"], located, workbook=F.col("workbook")
             )
             headered = self._cache(check_headers(cells, sp))
-            header_errors = headered.filter(~F.col("header_ok"))
             obs_sc, table_ends = scrape_observations(
                 cells, headered.filter(F.col("header_ok")), tp
             )
             obs_parts.append(obs_sc)
-
-        observations = None
-        series_rep = None
-        dist_report = None
-        indicators = None
-        written: list[str] = []
-        if not obs_parts and ts_dists.limit(1).count() > 0:
-            # every routed file failed (V7: the reasons are in
-            # processor_errors) — the report still lists each routed
-            # distribution as ERROR instead of disappearing
-            dist_report = self._cache(sort_reports_by_status(
-                ts_dists.select(
-                    "catalog_id",
-                    F.col("dataset_id").alias("dataset_identifier"),
-                    F.col("distribution_id").alias("distribution_identifier"),
-                    F.lit("ERROR").alias("distribution_status"),
-                )
-            ))
-            indicators = catalog_indicators(ds_report, dist_report)
-        if obs_parts:
-            observations = obs_parts[0]
-            for p in obs_parts[1:]:
-                observations = observations.unionByName(p)
-            observations = self._cache(observations)
-
-            # V4: attach frequency from the time-index field, validate.
-            freq = (
-                frames["fields"]
-                .filter(F.col("specialType") == "time_index")
-                .select(
-                    "catalog_id",
-                    "distribution_id",
-                    # built from FREQ_ISO_TO_CODE — the single source of
-                    # truth field validation also checks against, so a
-                    # newly supported frequency can't silently disable
-                    # gap checks here
-                    F.create_map(
-                        *[
-                            F.lit(x)
-                            for kv in FREQ_ISO_TO_CODE.items()
-                            for x in kv
-                        ]
-                    )[F.col("specialTypeDetail")].alias("freq_code"),
+            # V5 header failures are ERROR; V6 trims are WARNING
+            events.append(
+                headered.filter(~F.col("header_ok")).select(
+                    *keys, F.lit("ERROR").alias("status")
                 )
             )
-            series_rep = self._cache(validate_observations(
-                observations.join(
-                    F.broadcast(freq), ["catalog_id", "distribution_id"], "left"
-                )
-            ))
-            # Every routed ts-distribution must appear in the report —
-            # one that yielded no observations at all is an ERROR (the
-            # reference's per-distribution try/except would have caught
-            # the processor failure, V7 ``base.py:198-207``).
-            dist_status = ts_dists.select(
-                "catalog_id", "dataset_id", "distribution_id"
-            ).join(
-                distribution_statuses(series_rep),
-                ["catalog_id", "dataset_id", "distribution_id"],
-                "left",
-            ).withColumn(
+            events.append(trim_warnings(table_ends).select(*keys, "status"))
+
+        # every reader failing leaves no frame: V4, the roll-up and K1
+        # still run, over an empty long frame built only then
+        observations = self._cache(
+            functools.reduce(DataFrame.unionByName, obs_parts)
+            if obs_parts
+            else self.spark.createDataFrame([], _OBSERVATIONS_SCHEMA)
+        )
+
+        # V4: attach frequency from the time-index field, validate.
+        freq = (
+            frames["fields"]
+            .filter(F.col("specialType") == "time_index")
+            .select(
+                "catalog_id",
+                "distribution_id",
+                # built from FREQ_ISO_TO_CODE — the single source of
+                # truth field validation also checks against, so a
+                # newly supported frequency can't silently disable
+                # gap checks here
+                F.create_map(
+                    *[F.lit(x) for kv in FREQ_ISO_TO_CODE.items() for x in kv]
+                )[F.col("specialTypeDetail")].alias("freq_code"),
+            )
+        )
+        series_rep = self._cache(validate_observations(
+            observations.join(
+                F.broadcast(freq), ["catalog_id", "distribution_id"], "left"
+            )
+        ))
+        # Every routed ts-distribution appears in the report — one that
+        # yielded no observations at all is an ERROR (the reference's
+        # per-distribution try/except would have caught the processor
+        # failure, V7 ``base.py:198-207``).
+        v4 = series_rep.select(*keys, F.col("series_status").alias("status"))
+        events.append(
+            ts_dists.select(*keys)
+            .join(v4, keys, "left")
+            .fillna("ERROR", subset=["status"])
+        )
+        dist_report = self._cache(sort_reports_by_status(
+            distribution_statuses(
+                functools.reduce(DataFrame.unionByName, events)
+            ).select(
+                "catalog_id",
+                F.col("dataset_id").alias("dataset_identifier"),
+                F.col("distribution_id").alias("distribution_identifier"),
                 "distribution_status",
-                F.coalesce(F.col("distribution_status"), F.lit("ERROR")),
             )
+        ))
+        indicators = catalog_indicators(ds_report, dist_report)
 
-            # V6 trim warnings demote OK → WARNING.
-            if table_ends is not None:
-                trims = trim_warnings(table_ends).select(
-                    "catalog_id", "distribution_id", F.lit(True).alias("_trimmed")
-                )
-                dist_status = dist_status.join(
-                    trims, ["catalog_id", "distribution_id"], "left"
-                ).withColumn(
-                    "distribution_status",
-                    F.when(
-                        (F.col("distribution_status") == "OK")
-                        & F.col("_trimmed").isNotNull(),
-                        "WARNING",
-                    ).otherwise(F.col("distribution_status")),
-                ).drop("_trimmed")
-
-            # V5 header failures are ERROR rows regardless of data checks.
-            if header_errors is not None:
-                hdr = header_errors.select(
-                    "catalog_id", "distribution_id", F.lit(True).alias("_hdr_bad")
-                ).distinct()
-                dist_status = dist_status.join(
-                    hdr, ["catalog_id", "distribution_id"], "left"
-                ).withColumn(
-                    "distribution_status",
-                    F.when(F.col("_hdr_bad").isNotNull(), "ERROR").otherwise(
-                        F.col("distribution_status")
-                    ),
-                ).drop("_hdr_bad")
-
-            dist_report = self._cache(sort_reports_by_status(
-                dist_status.select(
-                    "catalog_id",
-                    F.col("dataset_id").alias("dataset_identifier"),
-                    F.col("distribution_id").alias("distribution_identifier"),
-                    "distribution_status",
-                )
-            ))
-            indicators = catalog_indicators(ds_report, dist_report)
-
-            # K1: every catalog's wide CSVs in one partitionBy text write
-            # plus a filesystem rename pass — the job count grows with
-            # neither the distribution nor the catalog count; the
-            # fileName mapping is the only metadata it collects
-            # (``base.py:266-279`` contract).
-            meta = {
-                (r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
-                for r in _collect_routing(
-                    ts_dists.select(
-                        "catalog_id", "dataset_id", "distribution_id", "fileName"
-                    ),
-                    "wide-CSV fileName",
-                )
-            }
-            written.extend(
-                write_wide_csvs_bulk(
-                    observations, frames["fields"], self.output_dir, meta,
-                    replace=self.replace,
-                )
-            )
+        # K1: every catalog's wide CSVs in one partitionBy text write
+        # plus a filesystem rename pass — the job count grows with
+        # neither the distribution nor the catalog count; the fileName
+        # mapping comes from the routing collect (``base.py:266-279``
+        # contract).
+        written = write_wide_csvs_bulk(
+            observations,
+            frames["fields"],
+            self.output_dir,
+            {(r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
+             for r in routed},
+            replace=self.replace,
+        )
 
         # K7/K8: publishable metadata.
         frames["distributions_published"], frames["fields_published"] = (

@@ -26,6 +26,7 @@ from series_tiempo_ar_scraping_spark.config import (
     SCRAPING_ONLY_FIELD_KEYS,
 )
 from series_tiempo_ar_scraping_spark.functions.scalars import host_rewrite
+from series_tiempo_ar_scraping_spark.operators.filters import value_fields
 
 TIME_INDEX = "indice_tiempo"
 
@@ -124,10 +125,7 @@ def write_wide_csvs_bulk(
         if k in fields.columns
     ]
     titles = (
-        fields.filter(
-            F.col("specialType").isNull()
-            | (F.col("specialType") != "time_index")
-        )
+        value_fields(fields)
         .groupBy(*title_keys)
         .agg(
             F.array_sort(

@@ -155,7 +155,9 @@ class WorkbookCellsStreamReader(SimpleDataSourceStreamReader):
         self._check_consumed(names, start, "read")
         new = [n for n in names if n > start.get("last", "")]
         if not new:
-            return [], start
+            # an iterator, not a list: the simple-reader wrapper calls
+            # next() on an idle read to check it is empty
+            return iter(()), start
         end = {"last": new[-1], "n": len(names), "files": new}
         return self._rows(new), end
 

@@ -28,6 +28,7 @@ from series_tiempo_ar_scraping_spark.functions.scalars import (
     freq_iso_to_code,
     missing_to_null,
 )
+from series_tiempo_ar_scraping_spark.operators.filters import value_fields
 
 DATE_FORMATS = ["yyyy-MM-dd", "dd/MM/yyyy", "yyyy-MM", "yyyy"]
 
@@ -63,9 +64,7 @@ def scraping_params(fields: DataFrame, distributions: DataFrame, workbook: Colum
         ).alias("file"),
         F.col("scrapingFileSheet").alias("sheet"),
     )
-    value_fields = fields.filter(
-        F.col("specialType").isNull() | (F.col("specialType") != "time_index")
-    ).select(
+    series_fields = value_fields(fields).select(
         "catalog_id",
         "dataset_id",
         "distribution_id",
@@ -83,7 +82,7 @@ def scraping_params(fields: DataFrame, distributions: DataFrame, workbook: Colum
         cell_coord_row("scrapingDataStartCell").alias("time_start_row"),
         freq_iso_to_code(F.col("specialTypeDetail")).alias("freq_code"),
     )
-    series_params = value_fields.join(
+    series_params = series_fields.join(
         F.broadcast(dist_src), ["catalog_id", "dataset_id", "distribution_id"]
     )
     time_params = time_fields.join(

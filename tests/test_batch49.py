@@ -38,7 +38,8 @@ def test_stream_reader_offsets_and_replay(tmp_path):
     assert off1 == {"last": "000.jsonl", "n": 1, "files": ["000.jsonl"]}
     # nothing new: offset must NOT advance
     rows2, off2 = rdr.read(off1)
-    assert list(rows2) == [] and off2 == off1
+    # an iterator: the simple-reader wrapper calls next() on it
+    assert next(rows2, None) is None and off2 == off1
     # a new arrival: only it is read
     _write_cells(os.path.join(d, "001.jsonl"), "s1", [(3, "c")])
     rows3, off3 = rdr.read(off1)
@@ -48,6 +49,35 @@ def test_stream_reader_offsets_and_replay(tmp_path):
     # replay of the committed first window is exact
     replay = list(rdr.readBetweenOffsets(start, off1))
     assert [r[2] for r in replay] == [1, 2]
+
+
+def test_stream_default_trigger_survives_idle_reads(spark, tmp_path):
+    """Under the default trigger the query keeps polling between
+    arrivals: an idle read is an empty batch, not a failed query, and a
+    file landing later is still read."""
+    register_workbook_cells(spark)
+    d = str(tmp_path / "landing")
+    os.makedirs(d)
+    _write_cells(os.path.join(d, "000.jsonl"), "s1", [(1, "a"), (2, "b")])
+    q = (
+        spark.readStream.format("workbook_cells")
+        .load(d)
+        .writeStream.format("memory")
+        .queryName("workbook_cells_default_trigger")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        _write_cells(os.path.join(d, "001.jsonl"), "s1", [(3, "c")])
+        q.processAllAvailable()
+        got = spark.table("workbook_cells_default_trigger").collect()
+        assert sorted((r.row, r.value) for r in got) == [
+            (1, "a"), (2, "b"), (3, "c")
+        ]
+        assert q.exception() is None
+    finally:
+        q.stop()
 
 
 def test_stream_reader_detects_late_file(tmp_path):

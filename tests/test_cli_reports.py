@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
 from series_tiempo_ar_scraping_spark.main import read_config, run_etl
@@ -385,13 +386,22 @@ def test_catalog_failure_is_isolated(spark, tmp_path):
 
 
 def _faulted_index(root) -> tuple[dict, object]:
-    """One clean catalog and four that each carry one bad input file: a
+    """One clean catalog and five that each carry one bad input file: a
     missing workbook, a corrupt workbook, non-dates in the CSV's time
-    index, and a CSV line one field wider than its header."""
+    index, a CSV line one field wider than its header, and a workbook
+    whose ``trimestral`` sheet lost its time column (column A from row
+    3 on), which leaves 1.2 no observations but a V6 trim event."""
     with open(os.path.join(FIX, "catalog.json")) as fh:
         doc = fh.read()
     with open(os.path.join(FIX, "files", "precios_q.csv")) as fh:
         csv_text = fh.read()
+    with open(os.path.join(FIX, "files", "wb1.jsonl")) as fh:
+        cells = [json.loads(ln) for ln in fh]
+    untimed = "".join(
+        json.dumps(c) + "\n"
+        for c in cells
+        if (c["sheet"], c["col"]) != ("trimestral", "A") or c["row"] < 3
+    )
     line = "2020-04-01,104.0,90.1\n"
     plant = {
         "clean": {},
@@ -403,6 +413,7 @@ def _faulted_index(root) -> tuple[dict, object]:
             .replace("2020-07-01", "julio 2020")
         },
         "wide": {"precios_q.csv": csv_text.replace(line, line[:-1] + ",\n")},
+        "notime": {"wb1.jsonl": untimed},
     }
     index = {}
     for cid, files in plant.items():
@@ -461,7 +472,7 @@ def _catalog_tree(out: str, cid: str) -> dict:
 def test_bad_input_files_cost_error_rows_in_one_pass(
     spark, tmp_path, monkeypatch
 ):
-    """V7 at distribution level: four bad input files, spread over four
+    """V7 at distribution level: five bad input files, spread over five
     catalogs of one pass, each cost their distributions one ERROR row.
     The pass runs once and raises nothing, every other distribution keeps
     the clean catalog's status, every CSV written stays rectangular, and
@@ -497,6 +508,7 @@ def test_bad_input_files_cost_error_rows_in_one_pass(
         "badwb": {"1.1", "1.2", "1.3"},
         "baddate": {"2.1"},
         "wide": {"2.1"},
+        "notime": {"1.2"},
     }
     for cid, bad in faulted.items():
         rows = _statuses(results[cid])
@@ -515,6 +527,45 @@ def test_bad_input_files_cost_error_rows_in_one_pass(
                 ), (dirpath, f, lines)
 
     assert _catalog_tree(out, "clean") == _catalog_tree(solo_out, "clean")
+
+
+def test_pass_with_no_observation_frame(spark, tmp_path):
+    """One filtered pass (distribution 2.1) in which no reader yields a
+    frame: ``acme``'s CSV resolves to a missing file, and ``nots`` has no
+    time-series distribution. ``acme`` still reports 2.1 as ERROR and
+    counts it in its indicators; ``nots`` gets no distribution report,
+    no indicators; neither writes a CSV."""
+    with open(os.path.join(FIX, "catalog.json")) as fh:
+        doc = json.load(fh)
+    for ds in doc["dataset"]:
+        for dist in ds["distribution"]:
+            for f in dist["field"]:
+                f.pop("specialType", None)
+    (tmp_path / "nots.json").write_text(json.dumps(doc))
+    index = {
+        "acme": {"metadata_path": os.path.join(FIX, "catalog.json")},
+        "nots": {"metadata_path": str(tmp_path / "nots.json")},
+    }
+
+    def resolver(ref: str) -> str:
+        return str(tmp_path / "missing" / ref.rsplit("/", 1)[-1])
+
+    out = str(tmp_path / "out")
+    results = run_etl(
+        index, out, spark=spark, file_resolver=resolver,
+        distribution_id_filter="2.1",
+    )
+    assert _statuses(results["acme"]) == [("2.1", "ERROR")]
+    ind = results["acme"]["indicators"]
+    assert (ind["distributions"], ind["distributions_error"]) == (1, 1)
+    assert "reporte-distributions" not in results["nots"]["reports"]
+    assert results["nots"]["indicators"] == {}
+    assert [
+        f
+        for _dir, _sub, files in os.walk(out)
+        for f in files
+        if f.endswith(".csv")
+    ] == []
 
 
 def test_raising_pass_costs_each_catalog_an_error_entry(

@@ -151,9 +151,9 @@ def runs(spark, inputs):
         solo_jobs += jobs
     out = os.path.join(root, "pass")
     res, pass_jobs = _run(spark, index, out, resolver, "multi-pass")
-    # a pass that raised falls back to one run per catalog, whose
-    # outputs would match trivially; it launches more jobs than both
-    # solo runs together
+    # one pass launches fewer jobs than both solo runs together; a pass
+    # that raised is not re-run per catalog, it costs each catalog an
+    # error entry, which the tests below reject
     assert pass_jobs < solo_jobs, (pass_jobs, solo_jobs)
     shared = {cid: _outputs(out, cid, res[cid]) for cid in index}
     return solo, shared, res

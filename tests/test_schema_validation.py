@@ -304,10 +304,9 @@ def test_expectation_engine_one_scan_per_table(spark, sf_dir):
 
 
 def test_pipeline_contract_report_frame_availability(spark):
-    """EP1 wiring contract: the pipeline suite adapts to which frames
-    the run produced — observations-only, report-only, both, neither
-    (metadata-only catalogs return None, not an empty frame) — and a
-    planted violation in either frame surfaces in the long report."""
+    """EP1 wiring contract: empty produced frames (a pass whose readers
+    all failed) violate nothing, and a planted violation in either frame
+    surfaces in the long report."""
     from series_tiempo_ar_scraping_spark.operators.expectations import (
         pipeline_contract_report,
     )
@@ -316,22 +315,18 @@ def test_pipeline_contract_report_frame_availability(spark):
         [("d1", "s1", "2024-01-01"), ("d2", None, "2024-01-02")],
         "distribution_id string, series_id string, ts string",
     )
-    # an EMPTY produced frame violates nothing — the conditional sums
-    # must coalesce to 0, not surface SUM-over-nothing NULLs (which
-    # would crash the run_etl summary sum)
-    empty_rows = pipeline_contract_report(obs.limit(0), None).collect()
-    assert len(empty_rows) == 3
-    assert {r.n_violations for r in empty_rows} == {0}
-    assert {r.n_rows for r in empty_rows} == {0}
-    assert {r.passed for r in empty_rows} == {1}
     rep = spark.createDataFrame(
         [("a", "OK"), ("b", "BOGUS")],
         "dataset_identifier string, dataset_status string",
     )
-    assert pipeline_contract_report(None, None) is None
-
-    only_obs = pipeline_contract_report(obs, None).collect()
-    assert {r.table_name for r in only_obs} == {"observations"}
+    # an EMPTY produced frame violates nothing — the conditional sums
+    # must coalesce to 0, not surface SUM-over-nothing NULLs (which
+    # would crash the run_etl summary sum)
+    empty_rows = pipeline_contract_report(obs.limit(0), rep.limit(0)).collect()
+    assert len(empty_rows) == 5
+    assert {r.n_violations for r in empty_rows} == {0}
+    assert {r.n_rows for r in empty_rows} == {0}
+    assert {r.passed for r in empty_rows} == {1}
 
     both = {
         (r.table_name, r.column_name, r.check): r.n_violations
