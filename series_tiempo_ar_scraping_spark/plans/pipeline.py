@@ -11,6 +11,15 @@ join keys on ``catalog_id`` (dataset and distribution ids are
 catalog-scoped), and report frames carry ``catalog_id`` so a caller can
 split them. The Spark job count of a pass does not grow with the number
 of catalogs; a single catalog is the one-entry case of the same pass.
+
+Metadata is tiny and joined everywhere, so planning collects each
+metadata frame once (under the driver-memory cap) and hands it on as an
+Arrow local relation (``session.local_frame``): downstream plans start
+at a ``LocalRelation`` instead of carrying the JSON scan and its
+explodes, and no metadata frame is cached. Every other frame the driver
+builds on the pass (the bulk reader's path dimension, the workbook path
+list and map, the empty observation frame) is a local relation too, so
+none runs a Python-worker job.
 """
 
 from __future__ import annotations
@@ -48,6 +57,7 @@ from series_tiempo_ar_scraping_spark.operators.validation import (
     validate_metadata,
     validate_observations,
 )
+from series_tiempo_ar_scraping_spark.session import local_frame
 from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
     rewrite_download_urls,
     scrub_scraping_metadata,
@@ -65,12 +75,13 @@ from series_tiempo_ar_scraping_spark.sources.scrape import (
     scraping_params,
 )
 
-# Routing lists (which distribution goes to which reader) are metadata-
-# plane driver state — one row per distribution, thousands at reference
-# scale. This cap turns "someone pointed the ETL at a 10M-distribution
-# catalog" into a clear error naming the fleet path (SCALE.md §Routing
-# collects) instead of a silent driver OOM. Override via env when a
-# bigger metadata plane is genuinely intended.
+# The metadata frames (and the routing list, one row per routed
+# distribution, drawn from them) are metadata-plane driver state —
+# thousands of rows at reference scale. This cap turns "someone pointed
+# the ETL at a 10M-distribution catalog" into a clear error naming the
+# fleet path (SCALE.md §Routing collects) instead of a silent driver
+# OOM. Override via env when a bigger metadata plane is genuinely
+# intended.
 _ROUTING_COLLECT_CAP = int(
     os.environ.get("SPARK_GRAFT_ROUTING_COLLECT_CAP", "1000000")
 )
@@ -95,13 +106,14 @@ def read_catalog(spark: SparkSession, path: str, catalog_id: str) -> dict[str, D
 
 
 def _collect_routing(df: DataFrame, what: str) -> list:
+    """The capped driver-side collect of a metadata-plane frame."""
     # one partition: a limit collect scans partitions in growing rounds,
     # one job per round, and the metadata frames hold a partition per
     # catalog — without it the job count would grow with the index
     rows = df.coalesce(1).limit(_ROUTING_COLLECT_CAP + 1).collect()
     if len(rows) > _ROUTING_COLLECT_CAP:
         raise RuntimeError(
-            f"{what} routing list exceeds {_ROUTING_COLLECT_CAP} rows; "
+            f"{what} exceeds {_ROUTING_COLLECT_CAP} rows; "
             "this driver-side collect is metadata-plane only — use the "
             "executor-side fleet path (sources.landing.download_many) or "
             "raise SPARK_GRAFT_ROUTING_COLLECT_CAP (SCALE.md: Routing "
@@ -182,6 +194,8 @@ class CatalogPipeline:
     # -- phase 1: pure planning -------------------------------------------
 
     def plan(self) -> dict[str, DataFrame]:
+        """The pass's normalized metadata frames, each collected once
+        (capped) and returned as a local relation."""
         parts = [
             src if isinstance(src, dict) else read_catalog(self.spark, src, cid)
             for cid, src in self.catalogs.items()
@@ -194,16 +208,20 @@ class CatalogPipeline:
         frames["distributions"] = filter_distribution_id(
             with_method(frames["distributions"]), self.distribution_id_filter
         )
-        return frames
+        return {
+            k: local_frame(
+                self.spark,
+                _collect_routing(df, f"catalog metadata frame '{k}'"),
+                df.schema,
+            )
+            for k, df in frames.items()
+        }
 
     # -- phase 2: execution ------------------------------------------------
 
     def run(self) -> PipelineResult:
+        # local relations: no metadata frame needs a cache
         frames = self.plan()
-        # metadata is tiny and re-joined everywhere — cache once
-        for k in frames:
-            frames[k] = self._cache(frames[k])
-
         meta_errors = self._cache(validate_metadata(frames))
         # report over the UNFILTERED datasets: a dataset with metadata
         # errors must appear as an ERROR row (reference base.py:443-451),
@@ -215,15 +233,13 @@ class CatalogPipeline:
             time_series_distributions(frames["distributions"], frames["fields"])
         )
 
-        # ONE routing collect (metadata-plane: one row per routed
-        # distribution) serves every reader and the K1 fileName map.
+        # ONE routing collect (one row per routed distribution, bounded
+        # by the distributions plan() capped) serves every reader and the
+        # K1 fileName map.
         keys = ["catalog_id", "dataset_id", "distribution_id"]
-        routed = _collect_routing(
-            ts_dists.select(
-                *keys, "method", "downloadURL", "scrapingFileURL", "fileName"
-            ),
-            "time-series distribution",
-        )
+        routed = ts_dists.select(
+            *keys, "method", "downloadURL", "scrapingFileURL", "fileName"
+        ).collect()
 
         obs_parts: list[DataFrame] = []
         # csv/txt routes (S6/S7): per-distribution file reads. V7: any
@@ -234,24 +250,31 @@ class CatalogPipeline:
         # CSV sink): job count independent of distribution count. TXT
         # files group by their sniffed delimiter (driver-side header
         # peek, metadata-scale); corrupt/headerless files surface as
-        # error tuples from the bulk reader, never exceptions.
+        # error tuples from the bulk reader, never exceptions, and a file
+        # the resolver cannot produce as one from here.
         processor_errors: list[tuple[str, str, str, str]] = []
         csv_items: list[tuple[str, str, str, str]] = []
         txt_groups: dict[str, list[tuple[str, str, str, str]]] = {}
         workbooks: dict[str, str | None] = {}
         for row in routed:
             if row.method == METHOD_EXCEL:
+                ref = row.scrapingFileURL
                 # one resolve (a download, in production) per workbook
-                if row.scrapingFileURL not in workbooks:
-                    workbooks[row.scrapingFileURL] = self.file_resolver(
-                        row.scrapingFileURL
-                    )
+                if ref not in workbooks:
+                    workbooks[ref] = self.file_resolver(ref)
+                local = workbooks[ref]
+            elif row.method in (METHOD_CSV, METHOD_TXT):
+                ref = row.downloadURL or row.scrapingFileURL
+                local = self.file_resolver(ref)
+            else:
                 continue
-            if row.method not in (METHOD_CSV, METHOD_TXT):
-                continue
-            ref = row.downloadURL or row.scrapingFileURL
-            local = self.file_resolver(ref)
             if local is None or not os.path.exists(local):
+                processor_errors.append((
+                    row.catalog_id, row.dataset_id, row.distribution_id,
+                    f"file not found: {ref}",
+                ))
+                continue
+            if row.method == METHOD_EXCEL:
                 continue
             tup = (row.catalog_id, row.dataset_id, row.distribution_id, local)
             if row.method == METHOD_TXT:
@@ -290,7 +313,8 @@ class CatalogPipeline:
             cells = self._cache(extract_cells(self.spark, paths, by_path=True))
             located = ts_dists.filter(F.col("method") == METHOD_EXCEL).join(
                 F.broadcast(
-                    self.spark.createDataFrame(
+                    local_frame(
+                        self.spark,
                         list(workbooks.items()),
                         "scrapingFileURL string, workbook string",
                     )
@@ -318,7 +342,7 @@ class CatalogPipeline:
         observations = self._cache(
             functools.reduce(DataFrame.unionByName, obs_parts)
             if obs_parts
-            else self.spark.createDataFrame([], _OBSERVATIONS_SCHEMA)
+            else local_frame(self.spark, [], _OBSERVATIONS_SCHEMA)
         )
 
         # V4: attach frequency from the time-index field, validate.

@@ -3,14 +3,16 @@
 Local testing runs ``local[N]``; the conf below is chosen so the same code
 scales to a multi-executor cluster: AQE on (runtime coalescing + skew-join
 splitting), small broadcast threshold for the tiny metadata dims, Arrow for
-the few pandas-UDF islands.
+the few pandas-UDF islands. ``local_frame`` turns driver-side rows into
+Arrow local relations.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # One constant drives BOTH the AQE advisory partition size and the
 # SMJ->SHJ local-map threshold (which must be >= the advisory size to
@@ -78,6 +80,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """Driver-side rows -> a frame planned as a bare ``LocalRelation``.
+
+    A Python list handed to ``createDataFrame`` becomes a PythonRDD, so
+    every action over it runs a job of Python-worker tasks. An Arrow
+    table becomes a local relation, empty or not: the optimizer folds
+    filters and projections into it, a collect of it runs no job, and a
+    scan of it runs in the JVM alone. The Arrow table path has no silent
+    fallback to the list path and does not depend on the session's
+    Arrow setting.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _SHIPPED_SESSIONS: set[int] = set()

@@ -6,7 +6,10 @@ via pydatajson ``write_json_catalog`` (``base.py:494-498``) and
 normalized frames re-nest via ``renest_catalog`` (collect_list(struct)
 bottom-up) for the JSON form, and the 5-sheet relational form writes
 directly through the stdlib OOXML writer. Catalog metadata is tiny, so
-both sinks are driver-side collects by design.
+both sinks are driver-side collects by design. On a pipeline pass the
+metadata frames are Arrow local relations (``CatalogPipeline.plan``), so
+collecting a sheet that is still one (or a projection of one) runs no
+Spark job; the K2 re-nest's joins and aggregates still do.
 """
 
 from __future__ import annotations

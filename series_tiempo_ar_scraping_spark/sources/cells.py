@@ -94,12 +94,15 @@ def extract_cells(spark: SparkSession, paths: list[str], by_path: bool = False) 
     catalogs' different workbooks may share a file name). A file that
     fails to parse contributes no cells (V7).
     """
-    from series_tiempo_ar_scraping_spark.session import ensure_package_on_executors
+    from series_tiempo_ar_scraping_spark.session import (
+        ensure_package_on_executors,
+        local_frame,
+    )
 
     ensure_package_on_executors(spark)
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(max(1, len(paths)))
+    paths_df = local_frame(spark, [(p,) for p in paths], "path string").repartition(
+        max(1, len(paths))
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from series_tiempo_ar_scraping_spark.operators.multimodal import (

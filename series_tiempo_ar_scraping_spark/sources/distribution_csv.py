@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from series_tiempo_ar_scraping_spark.functions.scalars import missing_to_null
+from series_tiempo_ar_scraping_spark.session import local_frame
 
 TIME_INDEX = "indice_tiempo"
 
@@ -162,11 +163,9 @@ def read_distributions_bulk(
 
     if not items:
         raise ValueError("read_distributions_bulk: empty item list")
-    dim = spark.createDataFrame(
-        [
-            (os.path.abspath(p), cid, did, rid)
-            for cid, did, rid, p in items
-        ],
+    dim = local_frame(
+        spark,
+        [(os.path.abspath(p), cid, did, rid) for cid, did, rid, p in items],
         "abspath string, catalog_id string, dataset_id string,"
         " distribution_id string",
     )

@@ -177,6 +177,8 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
     """
     from pyspark.sql import types as T
 
+    from series_tiempo_ar_scraping_spark.session import local_frame
+
     sheets = read_sheets(path)
     cat_rec = (sheets.get("catalog") or [{}])[0]
     own = "catalog_id" in cat_rec  # the K3 layout
@@ -191,7 +193,7 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
             [T.StructField(c, T.StringType()) for c in columns]
         )
         rows = [tuple(r.get(c) for c in columns) for r in records]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     cat = dict(cat_rec) if own else _strip_prefix(cat_rec, "catalog_")
     catalogs = frame(
@@ -219,7 +221,8 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         + [T.StructField(c, T.ArrayType(T.StringType())) for c in
            ["superTheme", "theme", "keyword"]]
     )
-    datasets = spark.createDataFrame(
+    datasets = local_frame(
+        spark,
         [tuple(d.get(f.name) for f in ds_schema.fields) for d in ds_recs],
         ds_schema,
     )
@@ -260,8 +263,8 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         [T.StructField(c, T.IntegerType() if c == "field_order" else T.StringType())
          for c in f_cols]
     )
-    fields = spark.createDataFrame(
-        [tuple(d.get(c) for c in f_cols) for d in f_recs], f_schema
+    fields = local_frame(
+        spark, [tuple(d.get(c) for c in f_cols) for d in f_recs], f_schema
     )
 
     th_recs = []

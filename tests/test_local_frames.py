@@ -1,0 +1,179 @@
+"""Driver-side frames of the one-pass ETL are Arrow local relations.
+
+``CatalogPipeline.plan`` collects each metadata frame once and returns
+it as a ``LocalRelation``; the bulk reader's path dimension and the
+workbook path list are local relations too. Arrow conversion can fall
+back to a list-built (Python-worker) frame without a word, so the plan
+shape is read here from the optimized plan, node by node.
+"""
+
+from __future__ import annotations
+
+import functools
+import json
+import os
+
+import pytest
+from pyspark.sql import DataFrame
+
+from series_tiempo_ar_scraping_spark.operators.filters import (
+    clean_field_keyspace,
+    with_method,
+)
+from series_tiempo_ar_scraping_spark.plans import pipeline as P
+from series_tiempo_ar_scraping_spark.sources.catalog_json import read_catalog_json
+from series_tiempo_ar_scraping_spark.sources.cells import extract_cells
+from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
+    read_distributions_bulk,
+)
+
+FIX = os.path.join(os.path.dirname(__file__), "fixtures")
+CATALOG = os.path.join(FIX, "catalog.json")
+
+
+def _nodes(plan) -> list:
+    """Every node of a JVM logical plan, pre-order."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        out.append(node)
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def _optimized(df: DataFrame):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def _is_bare_local_relation(df: DataFrame) -> bool:
+    return _optimized(df).nodeName() == "LocalRelation"
+
+
+def _leaves(df: DataFrame) -> list[tuple[str, list[str]]]:
+    """(node name, output column names) of every leaf of the plan."""
+    leaves = []
+    for node in _nodes(_optimized(df)):
+        if node.children().isEmpty():
+            out = node.output()
+            leaves.append(
+                (node.nodeName(), [out.apply(i).name() for i in range(out.size())])
+            )
+    return leaves
+
+
+def _bare_catalog(tmp_path) -> str:
+    """The fixture catalog without ``themeTaxonomy`` and with one
+    dataset's ``keyword`` set to null."""
+    with open(CATALOG) as fh:
+        doc = json.load(fh)
+    doc.pop("themeTaxonomy")
+    doc["dataset"][0]["keyword"] = None
+    path = tmp_path / "bare.json"
+    path.write_text(json.dumps(doc))
+    return str(path)
+
+
+def _pipeline(spark, catalogs, tmp_path, **kw) -> P.CatalogPipeline:
+    return P.CatalogPipeline(
+        spark, catalogs, None, str(tmp_path / "out"), **kw
+    )
+
+
+def test_plan_frames_are_local_relations(spark, tmp_path):
+    catalogs = {"acme": CATALOG, "bare": _bare_catalog(tmp_path)}
+    frames = _pipeline(spark, catalogs, tmp_path).plan()
+    assert sorted(frames) == [
+        "catalogs", "datasets", "distributions", "fields", "themes",
+    ]
+    for name, df in frames.items():
+        assert _is_bare_local_relation(df), (name, _leaves(df))
+    # a projection or filter folds into the relation: no job needed
+    dists = frames["distributions"].filter("method is not null")
+    assert _is_bare_local_relation(dists.select("distribution_id"))
+
+
+def test_plan_frames_equal_the_json_read(spark, tmp_path):
+    """Row for row (order included) and column for column, the local
+    frames hold what the JSON reader's frames hold, for a catalog with
+    no ``themeTaxonomy`` (empty themes) and a null ``keyword``."""
+    catalogs = {"acme": CATALOG, "bare": _bare_catalog(tmp_path)}
+    parts = [read_catalog_json(spark, p, cid) for cid, p in catalogs.items()]
+    read = {
+        k: functools.reduce(DataFrame.unionByName, [p[k] for p in parts])
+        for k in parts[0]
+    }
+    read["fields"] = clean_field_keyspace(read["fields"])
+    read["distributions"] = with_method(read["distributions"])
+    local = _pipeline(spark, catalogs, tmp_path).plan()
+    assert sorted(local) == sorted(read)
+    for name in read:
+        assert local[name].schema == read[name].schema, name
+        assert local[name].collect() == read[name].collect(), name
+    assert local["themes"].filter("catalog_id = 'bare'").count() == 0
+    assert local["themes"].count() == 2
+    keywords = {
+        (r.catalog_id, r.dataset_id): r.keyword
+        for r in local["datasets"].collect()
+    }
+    assert keywords[("bare", "ds-energy")] is None
+    assert keywords[("acme", "ds-energy")] == ["energia", "produccion"]
+    assert local["distributions"].count() == 8
+
+
+def test_plan_collect_is_capped(spark, tmp_path, monkeypatch):
+    """The driver-memory cap guards the metadata collect, before any row
+    reaches the driver-side relation."""
+    monkeypatch.setattr(P, "_ROUTING_COLLECT_CAP", 1)
+    with pytest.raises(RuntimeError, match="download_many"):
+        _pipeline(spark, {"acme": CATALOG}, tmp_path).plan()
+
+
+def test_reader_frames_are_local_relations(spark, tmp_path):
+    """The workbook path list under ``extract_cells`` and the bulk
+    reader's path dimension are local relations, not list-built RDDs."""
+    wb = os.path.join(FIX, "files", "wb1.jsonl")
+    cell_leaves = _leaves(extract_cells(spark, [wb], by_path=True))
+    assert cell_leaves == [("LocalRelation", ["path"])]
+
+    csv = os.path.join(FIX, "files", "precios_q.csv")
+    obs, errors = read_distributions_bulk(
+        spark, [("acme", "ds-prices", "2.1", csv)]
+    )
+    assert errors == []
+    leaves = _leaves(obs)
+    dims = [cols for name, cols in leaves if "catalog_id" in cols]
+    assert dims == [["abspath", "catalog_id", "dataset_id", "distribution_id"]]
+    assert ("LocalRelation", dims[0]) in leaves
+    assert all(name in ("LocalRelation", "LogicalRelation") for name, _c in leaves)
+
+
+@pytest.mark.parametrize(
+    "dist_id, ref",
+    [
+        ("2.1", "http://example.test/files/precios_q.csv"),
+        ("1.1", "http://example.test/files/wb1.jsonl"),
+    ],
+)
+def test_unresolvable_file_records_a_reason(spark, tmp_path, dist_id, ref):
+    """A file the resolver cannot produce costs its distribution an
+    ERROR row and a ``processor_errors`` reason, on the CSV route (a
+    missing path) and on the workbook route (``None``, as a failed
+    download gives)."""
+
+    def resolver(r: str) -> str | None:
+        if r.endswith(".jsonl"):
+            return None
+        return str(tmp_path / "missing" / r.rsplit("/", 1)[-1])
+
+    ds = "ds-prices" if dist_id == "2.1" else "ds-energy"
+    res = P.CatalogPipeline(
+        spark, CATALOG, "acme", str(tmp_path / "out"),
+        file_resolver=resolver, distribution_id_filter=dist_id,
+    ).run()
+    assert res.processor_errors == [
+        ("acme", ds, dist_id, f"file not found: {ref}")
+    ]
+    assert [tuple(r) for r in res.distribution_report.collect()] == [
+        ("acme", ds, dist_id, "ERROR")
+    ]
