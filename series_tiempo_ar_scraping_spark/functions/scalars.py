@@ -17,6 +17,16 @@ from series_tiempo_ar_scraping_spark.config import (
 )
 
 
+# ASCII case maps for ``F.translate``. Spark 4 routes lower()/upper()
+# through ICU, whose first use in a JVM builds its break-iterator tables:
+# about 2.9 GB of short-lived allocation in a second (JFR allocation
+# samples of one ETL pass), which set the driver heap's growth for the
+# rest of the pass. The pass only folds ASCII: A1 column letters and the
+# file extensions it routes on.
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+_LOWER = _UPPER.lower()
+
+
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
@@ -36,7 +46,9 @@ def cell_coord_col(coord: Column | str) -> Column:
     """A1-style coordinate → column letters (e.g. ``'AB12'`` → ``'AB'``)."""
     c = _col(coord)
     letters = F.regexp_extract(c, r"^([A-Za-z]+)\d+$", 1)
-    return F.when(letters != "", F.upper(letters)).otherwise(F.lit(None))
+    return F.when(letters != "", F.translate(letters, _LOWER, _UPPER)).otherwise(
+        F.lit(None)
+    )
 
 
 def freq_iso_to_code(freq: Column | str) -> Column:
@@ -53,9 +65,10 @@ def freq_iso_to_code(freq: Column | str) -> Column:
 
 def file_extension(url: Column | str) -> Column:
     """X3 — lowercased extension: ``url.split('.')[-1].lower()``
-    (``base.py:134,144``)."""
+    (``base.py:134,144``), folding ASCII letters only: the extensions
+    routing compares against are ASCII."""
     c = _col(url)
-    return F.lower(F.element_at(F.split(c, r"\."), -1))
+    return F.translate(F.element_at(F.split(c, r"\."), -1), _UPPER, _LOWER)
 
 
 def url_basename(url: Column | str) -> Column:

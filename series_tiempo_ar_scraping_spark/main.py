@@ -100,7 +100,7 @@ def run_etl(
             path = download_to_file(
                 cfg["metadata_url"], landing, replace=dl_replace, **dl_kw
             )
-        return read_catalog(spark, path, catalog_id)
+        return read_catalog(path, catalog_id)
 
     def process_pass(loaded: dict[str, dict]) -> dict[str, dict]:
         pipe = CatalogPipeline(
@@ -114,20 +114,13 @@ def run_etl(
             replace=replace,
         )
         if metadata_only:
-            # EP2 — per-catalog counts from one grouped count
-            from pyspark.sql import functions as F
-
+            # EP2 — per-catalog counts from the plan's local relations:
+            # a collect of one column each, no Spark job
             frames = pipe.plan()
             counts = {cid: {"datasets": 0, "distributions": 0} for cid in loaded}
-            kinds = frames["datasets"].select(
-                "catalog_id", F.lit("datasets").alias("kind")
-            ).unionByName(
-                frames["distributions"].select(
-                    "catalog_id", F.lit("distributions").alias("kind")
-                )
-            )
-            for r in kinds.groupBy("catalog_id", "kind").count().collect():
-                counts[r.catalog_id][r.kind] = r["count"]
+            for kind in ("datasets", "distributions"):
+                for r in frames[kind].select("catalog_id").collect():
+                    counts[r.catalog_id][kind] += 1
             return counts
         try:
             return report_pass(pipe.run(), loaded)

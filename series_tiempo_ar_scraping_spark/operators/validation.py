@@ -23,6 +23,7 @@ from series_tiempo_ar_scraping_spark.config import (
     FREQ_ISO_TO_CODE,
 )
 from series_tiempo_ar_scraping_spark.functions.calendar import with_series_checks
+from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
 # ---------------------------------------------------------------------------
 # V1 — metadata rules
@@ -31,23 +32,9 @@ from series_tiempo_ar_scraping_spark.functions.calendar import with_series_check
 EMAIL_REGEX = r"^[^@\s]+@[^@\s]+\.[^@\s]+$"
 URI_REGEX = r"^https?://\S+$"
 
-
-# Normalized-frame columns each entity materializes (catalog_json.py /
-# xlsx.py) — compile_rules skips schema properties without a column.
-_CATALOG_COLUMNS = [
-    "title", "description", "publisher_name", "publisher_mbox",
-    "superThemeTaxonomy", "issued", "modified", "license", "homepage",
-    "rights",
-]
-_DATASET_COLUMNS = [
-    "title", "description", "publisher_name", "publisher_mbox",
-    "accrualPeriodicity", "issued", "modified", "temporal", "landingPage",
-    "superTheme", "theme", "keyword",
-]
-_DISTRIBUTION_COLUMNS = [
-    "title", "description", "fileName", "format", "downloadURL",
-    "accessURL", "issued", "byteSize",
-]
+# Rules compile over the normalized frames' columns (``SCHEMAS``): a
+# schema property without a column yields no rule, and a column no
+# schema declares (the ids, ``source``, the scraping keys) gets none.
 
 
 def catalog_rules() -> dict[str, Column]:
@@ -59,7 +46,7 @@ def catalog_rules() -> dict[str, Column]:
         compile_rules,
     )
 
-    return compile_rules("catalog", _CATALOG_COLUMNS)
+    return compile_rules("catalog", SCHEMAS["catalogs"].names)
 
 
 def dataset_rules() -> dict[str, Column]:
@@ -71,7 +58,7 @@ def dataset_rules() -> dict[str, Column]:
         compile_rules,
     )
 
-    return compile_rules("dataset", _DATASET_COLUMNS)
+    return compile_rules("dataset", SCHEMAS["datasets"].names)
 
 
 def distribution_rules() -> dict[str, Column]:
@@ -83,15 +70,12 @@ def distribution_rules() -> dict[str, Column]:
         compile_rules,
     )
 
-    rules = compile_rules("distribution", _DISTRIBUTION_COLUMNS)
+    rules = compile_rules("distribution", SCHEMAS["distributions"].names)
     rules["distribution_has_source_url"] = (
         F.col("downloadURL").isNotNull()
         | F.col("scrapingFileURL").isNotNull()
     )
     return rules
-
-
-_FIELD_COLUMNS = ["title", "type", "description"]
 
 
 def field_rules() -> dict[str, Column]:
@@ -109,7 +93,7 @@ def field_rules() -> dict[str, Column]:
     )
 
     freqs = list(FREQ_ISO_TO_CODE)
-    rules = compile_rules("field", _FIELD_COLUMNS)
+    rules = compile_rules("field", SCHEMAS["fields"].names)
     rules.update(
         {
             "field_time_index_frequency": (

@@ -12,19 +12,22 @@ catalog-scoped), and report frames carry ``catalog_id`` so a caller can
 split them. The Spark job count of a pass does not grow with the number
 of catalogs; a single catalog is the one-entry case of the same pass.
 
-Metadata is tiny and joined everywhere, so planning collects each
-metadata frame once (under the driver-memory cap) and hands it on as an
-Arrow local relation (``session.local_frame``): downstream plans start
-at a ``LocalRelation`` instead of carrying the JSON scan and its
-explodes, and no metadata frame is cached. Every other frame the driver
-builds on the pass (the bulk reader's path dimension, the workbook path
-list and map, the empty observation frame) is a local relation too, so
-none runs a Python-worker job.
+Metadata is tiny and joined everywhere, so it is read and normalized
+on the driver (``sources/catalog_json.py``, ``sources/xlsx.py``) and
+handed to Spark once: planning concatenates each entity's rows over the
+pass (under the driver-memory cap) and builds its frame as one Arrow
+local relation (``session.local_frame``). Downstream plans start at a
+``LocalRelation``, no metadata frame is cached, and planning runs no
+Spark job. Every other frame the driver builds on the pass (the bulk
+reader's path dimension, the workbook path list and map, the empty
+observation frame) is a local relation too, so none runs a
+Python-worker job.
 """
 
 from __future__ import annotations
 
 import functools
+import json
 import os
 from collections.abc import Mapping
 from dataclasses import dataclass, field
@@ -63,7 +66,10 @@ from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
     scrub_scraping_metadata,
     write_wide_csvs_bulk,
 )
-from series_tiempo_ar_scraping_spark.sources.catalog_json import read_catalog_json
+from series_tiempo_ar_scraping_spark.sources.catalog_json import (
+    catalog_frames,
+    normalize_catalog,
+)
 from series_tiempo_ar_scraping_spark.sources.cells import extract_cells
 from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
     read_distributions_bulk,
@@ -75,7 +81,7 @@ from series_tiempo_ar_scraping_spark.sources.scrape import (
     scraping_params,
 )
 
-# The metadata frames (and the routing list, one row per routed
+# The metadata rows (and the routing list, one row per routed
 # distribution, drawn from them) are metadata-plane driver state —
 # thousands of rows at reference scale. This cap turns "someone pointed
 # the ETL at a 10M-distribution catalog" into a clear error naming the
@@ -92,34 +98,18 @@ _OBSERVATIONS_SCHEMA = (
 )
 
 
-def read_catalog(spark: SparkSession, path: str, catalog_id: str) -> dict[str, DataFrame]:
-    """S4/S5 — one catalog's metadata file → normalized frames: the
-    formato=xlsx branch for workbooks (``base.py:393-421,932-938``),
-    ``data.json`` otherwise."""
+def read_catalog(path: str, catalog_id: str) -> dict[str, list[tuple]]:
+    """S4/S5 — one catalog's metadata file → each entity's normalized
+    rows: the formato=xlsx branch for workbooks
+    (``base.py:393-421,932-938``), ``data.json`` otherwise."""
     if path.endswith((".xlsx", ".xls")):
         from series_tiempo_ar_scraping_spark.sources.xlsx import (
             read_xlsx_catalog,
         )
 
-        return read_xlsx_catalog(spark, path, catalog_id)
-    return read_catalog_json(spark, path, catalog_id)
-
-
-def _collect_routing(df: DataFrame, what: str) -> list:
-    """The capped driver-side collect of a metadata-plane frame."""
-    # one partition: a limit collect scans partitions in growing rounds,
-    # one job per round, and the metadata frames hold a partition per
-    # catalog — without it the job count would grow with the index
-    rows = df.coalesce(1).limit(_ROUTING_COLLECT_CAP + 1).collect()
-    if len(rows) > _ROUTING_COLLECT_CAP:
-        raise RuntimeError(
-            f"{what} exceeds {_ROUTING_COLLECT_CAP} rows; "
-            "this driver-side collect is metadata-plane only — use the "
-            "executor-side fleet path (sources.landing.download_many) or "
-            "raise SPARK_GRAFT_ROUTING_COLLECT_CAP (SCALE.md: Routing "
-            "collects)"
-        )
-    return rows
+        return read_xlsx_catalog(path, catalog_id)
+    with open(path, encoding="utf-8") as fh:
+        return normalize_catalog(json.load(fh), catalog_id)
 
 
 @dataclass
@@ -145,7 +135,7 @@ class CatalogPipeline:
     ``catalog_path`` is one catalog's metadata file (named by
     ``catalog_id``), or a ``{catalog_id: source}`` mapping of several
     catalogs (``catalog_id`` None), where a source is a metadata file or
-    the frames ``read_catalog`` already returned for it.
+    the rows ``read_catalog`` already returned for it.
 
     ``file_resolver`` maps a source URL/file reference to a local landing
     path (tests point it at fixtures; production points it at the landing
@@ -155,7 +145,7 @@ class CatalogPipeline:
     def __init__(
         self,
         spark: SparkSession,
-        catalog_path: str | Mapping[str, str | dict[str, DataFrame]],
+        catalog_path: str | Mapping[str, str | dict[str, list[tuple]]],
         catalog_id: str | None,
         output_dir: str,
         file_resolver=None,
@@ -194,28 +184,31 @@ class CatalogPipeline:
     # -- phase 1: pure planning -------------------------------------------
 
     def plan(self) -> dict[str, DataFrame]:
-        """The pass's normalized metadata frames, each collected once
-        (capped) and returned as a local relation."""
+        """The pass's normalized metadata frames, each built once, as a
+        local relation, from its entity's rows over every catalog
+        (capped); no Spark job."""
         parts = [
-            src if isinstance(src, dict) else read_catalog(self.spark, src, cid)
+            src if isinstance(src, dict) else read_catalog(src, cid)
             for cid, src in self.catalogs.items()
         ]
-        frames = {
-            k: functools.reduce(DataFrame.unionByName, [p[k] for p in parts])
-            for k in parts[0]
-        }
+        rows = {k: [r for p in parts for r in p[k]] for k in parts[0]}
+        for k, rs in rows.items():
+            if len(rs) > _ROUTING_COLLECT_CAP:
+                raise RuntimeError(
+                    f"catalog metadata frame '{k}' exceeds "
+                    f"{_ROUTING_COLLECT_CAP} rows; this driver-side collect "
+                    "is metadata-plane only — use the executor-side fleet "
+                    "path (sources.landing.download_many) or raise "
+                    "SPARK_GRAFT_ROUTING_COLLECT_CAP (SCALE.md: Routing "
+                    "collects)"
+                )
+        frames = catalog_frames(self.spark, rows)
+        # F8/F5/F3 fold into each relation: still a bare LocalRelation
         frames["fields"] = clean_field_keyspace(frames["fields"])
         frames["distributions"] = filter_distribution_id(
             with_method(frames["distributions"]), self.distribution_id_filter
         )
-        return {
-            k: local_frame(
-                self.spark,
-                _collect_routing(df, f"catalog metadata frame '{k}'"),
-                df.schema,
-            )
-            for k, df in frames.items()
-        }
+        return frames
 
     # -- phase 2: execution ------------------------------------------------
 

@@ -18,6 +18,8 @@ from pyspark.sql.types import StructType
 # SMJ->SHJ local-map threshold (which must be >= the advisory size to
 # ever fire) — see the conf comments in get_spark.
 _ADVISORY_PARTITION_BYTES = 64 * 1024 * 1024
+# Tungsten page size: the floor of every broadcast hash relation's heap
+_PAGE_BYTES = 2 * 1024 * 1024
 
 
 def get_spark(
@@ -37,6 +39,8 @@ def get_spark(
       AQE coalesces down, so oversizing is cheap.
     - Arrow enabled for the pandas-UDF islands (cells extraction, multimodal
       decode) — batch transfer instead of row pickling.
+    - 2 MB Tungsten pages, so a broadcast of a few metadata rows costs
+      2 MB of heap, not Spark's heap-sized page.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -76,6 +80,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # A broadcast hash relation takes at least one whole Tungsten
+        # page, however few its rows, and keeps it on the driver heap
+        # while a cached plan or a live frame still holds its join.
+        # Spark sizes the page from heap / cores (16 MB on a 2g
+        # local[4] driver), so the kilobyte metadata dims, broadcast a
+        # few dozen times a pass, pinned hundreds of MB. 2 MB is inside
+        # Spark's own 1-64 MB range; a larger record gets its own page.
+        .config("spark.buffer.pageSize", str(_PAGE_BYTES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

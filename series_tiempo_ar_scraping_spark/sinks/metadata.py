@@ -2,14 +2,15 @@
 
 The reference rewrites the filtered catalog after processing: ``data.json``
 via pydatajson ``write_json_catalog`` (``base.py:494-498``) and
-``catalog.xlsx`` via ``metadata.to_xlsx`` (``base.py:500-504``). Here the
-normalized frames re-nest via ``renest_catalog`` (collect_list(struct)
-bottom-up) for the JSON form, and the 5-sheet relational form writes
-directly through the stdlib OOXML writer. Catalog metadata is tiny, so
-both sinks are driver-side collects by design. On a pipeline pass the
-metadata frames are Arrow local relations (``CatalogPipeline.plan``), so
-collecting a sheet that is still one (or a projection of one) runs no
-Spark job; the K2 re-nest's joins and aggregates still do.
+``catalog.xlsx`` via ``metadata.to_xlsx`` (``base.py:500-504``). Here each
+published frame is collected once for every catalog of the pass; the
+JSON form re-nests the rows in Python (``catalog_json.nest_catalogs``,
+the inverse of the reader's table) and the 5-sheet relational form
+writes them directly through the stdlib OOXML writer. Catalog metadata
+is tiny, so both sinks are driver-side collects by design. On a pipeline
+pass the metadata frames are Arrow local relations
+(``CatalogPipeline.plan``), so collecting one that is still a local
+relation (or a projection or filter of one) runs no Spark job.
 """
 
 from __future__ import annotations
@@ -18,17 +19,7 @@ import json
 
 from series_tiempo_ar_scraping_spark.sinks.atomic import atomic_output_path
 from series_tiempo_ar_scraping_spark.sinks.reports import split_by_catalog
-from series_tiempo_ar_scraping_spark.sources.catalog_json import renest_catalog
-
-
-def _prune_nulls(obj):
-    """Drop null keys/entries — pydatajson omits absent metadata keys
-    rather than writing ``null``."""
-    if isinstance(obj, dict):
-        return {k: _prune_nulls(v) for k, v in obj.items() if v is not None}
-    if isinstance(obj, list):
-        return [_prune_nulls(v) for v in obj if v is not None]
-    return obj
+from series_tiempo_ar_scraping_spark.sources.catalog_json import nest_catalogs
 
 
 def _published(frames: dict) -> dict:
@@ -48,13 +39,13 @@ def _published(frames: dict) -> dict:
 def write_json_catalog(frames: dict, path: dict[str, str]) -> list[str]:
     """K2 — re-nest the (published) frames → one ``data.json`` per
     catalog. ``path`` is ``{catalog_id: path}``; every catalog's document
-    comes from the same one collect. Returns the paths written."""
-    by_id = {}
-    for r in renest_catalog(_published(frames)).toJSON().collect():
-        doc = _prune_nulls(json.loads(r))
-        if "catalog_id" in doc:
-            doc["identifier"] = doc.pop("catalog_id")
-        by_id[doc.get("identifier")] = doc
+    comes from the same one collect per frame. Returns the paths
+    written."""
+    by_id = nest_catalogs({
+        name: (df.columns, [tuple(r) for r in df.collect()])
+        for name, df in _published(frames).items()
+        if df is not None
+    })
     for cid, target in path.items():
         # stage + atomic replace: a crash mid-dump must never leave a
         # truncated data.json at the path consumers read

@@ -1,300 +1,275 @@
-"""S4 — JSON catalog reader + normalization to relational frames.
+"""S4/K2 — the catalog document and its normalized rows, both ways.
 
-The reference parses ``data.json`` into a nested dict tree
-(``base.py:408-421`` via pydatajson) and navigates it as objects. Here the
-nested document is read once with ``spark.read.json`` and **normalized**
-into five flat frames (``catalogs``, ``datasets``, ``distributions``,
-``fields``, ``themes``) with explicit foreign keys — the shape the
-reference's own XLSX catalog format already uses (5 sheets, SURVEY §1.3).
+The reference parses ``data.json`` into a dict tree on the driver
+(``base.py:408-421`` via pydatajson) and writes the filtered tree back
+(``base.py:494-498``). Here the document is normalized into five flat
+entities (``catalogs``, ``datasets``, ``distributions``, ``fields``,
+``themes``) with explicit foreign keys — the shape the reference's own
+XLSX catalog format already uses (5 sheets, SURVEY §1.3).
 
-Everything downstream (validation, routing, scraping, reporting) is a join
-against these frames; catalog metadata is tiny so they broadcast.
+One table, ``_ENTITIES``, maps each entity's document keys to its
+columns and drives both directions in plain Python: ``normalize_catalog``
+turns a ``json.load``-ed document into row tuples under ``SCHEMAS``, and
+``nest_catalogs`` turns collected rows back into documents. Catalog
+metadata is tiny, so it never goes through a Spark scan: the pipeline
+builds each entity's frame once from the rows, as an Arrow local
+relation (``CatalogPipeline.plan``).
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from series_tiempo_ar_scraping_spark.session import local_frame
+
+_STR = T.StringType()
+_LIST = T.ArrayType(T.StringType())
+
+# entity → (document array holding it, parent entity, own columns as
+# (document key, column, type)). A row is the parent's id columns, then
+# the own columns; the first own column is the entity's id. A dotted key
+# reads one nested object level. ``field_order`` has no key: it is the
+# field's position in its distribution's ``field`` array.
+_ENTITIES = {
+    "catalogs": (None, None, [
+        ("identifier", "catalog_id", _STR),
+        ("title", "title", _STR),
+        ("description", "description", _STR),
+        ("publisher.name", "publisher_name", _STR),
+        ("publisher.mbox", "publisher_mbox", _STR),
+        ("superThemeTaxonomy", "superThemeTaxonomy", _STR),
+        ("issued", "issued", _STR),
+        ("modified", "modified", _STR),
+        ("license", "license", _STR),
+        ("homepage", "homepage", _STR),
+        ("rights", "rights", _STR),
+    ]),
+    "datasets": ("dataset", "catalogs", [
+        ("identifier", "dataset_id", _STR),
+        ("title", "title", _STR),
+        ("description", "description", _STR),
+        ("publisher.name", "publisher_name", _STR),
+        ("publisher.mbox", "publisher_mbox", _STR),
+        ("accrualPeriodicity", "accrualPeriodicity", _STR),
+        ("issued", "issued", _STR),
+        ("modified", "modified", _STR),
+        ("temporal", "temporal", _STR),
+        ("landingPage", "landingPage", _STR),
+        ("source", "source", _STR),
+        ("superTheme", "superTheme", _LIST),
+        ("theme", "theme", _LIST),
+        ("keyword", "keyword", _LIST),
+    ]),
+    "distributions": ("distribution", "datasets", [
+        ("identifier", "distribution_id", _STR),
+        ("title", "title", _STR),
+        ("description", "description", _STR),
+        ("fileName", "fileName", _STR),
+        ("format", "format", _STR),
+        ("downloadURL", "downloadURL", _STR),
+        ("accessURL", "accessURL", _STR),
+        ("scrapingFileURL", "scrapingFileURL", _STR),
+        ("scrapingFileSheet", "scrapingFileSheet", _STR),
+        ("issued", "issued", _STR),
+        ("byteSize", "byteSize", _STR),
+    ]),
+    "fields": ("field", "distributions", [
+        (None, "field_order", T.IntegerType()),
+        ("id", "field_id", _STR),
+        ("title", "title", _STR),
+        ("type", "type", _STR),
+        ("description", "description", _STR),
+        ("units", "units", _STR),
+        ("specialType", "specialType", _STR),
+        ("specialTypeDetail", "specialTypeDetail", _STR),
+        ("scrapingIdentifierCell", "scrapingIdentifierCell", _STR),
+        ("scrapingDataStartCell", "scrapingDataStartCell", _STR),
+    ]),
+    "themes": ("themeTaxonomy", "catalogs", [
+        ("id", "theme_id", _STR),
+        ("label", "label", _STR),
+        ("description", "description", _STR),
+    ]),
+}
 
 
-def _opt(df: DataFrame, name: str, dtype: str = "string"):
-    """Column if present in the inferred schema, else typed NULL — catalog
-    files omit optional keys freely (JSON Schema marks few required)."""
-    parts = name.split(".")
-    cur = df.schema
-    for p in parts:
-        names = [f.name for f in cur.fields] if hasattr(cur, "fields") else []
-        if p not in names:
-            return F.lit(None).cast(dtype)
-        cur = dict(zip(names, [f.dataType for f in cur.fields]))[p]
-    return F.col(name).cast(dtype)
+def _children(entity: str) -> list[str]:
+    return [e for e, (_a, parent, _o) in _ENTITIES.items() if parent == entity]
 
 
-def _has(df: DataFrame, name: str) -> bool:
-    """Whether a (possibly dotted) path exists in the inferred schema."""
-    cur = df.schema
-    for p in name.split("."):
-        names = [f.name for f in cur.fields] if hasattr(cur, "fields") else []
-        if p not in names:
-            return False
-        cur = dict(zip(names, [f.dataType for f in cur.fields]))[p]
-    return True
+def _key_columns(entity: str | None) -> list[str]:
+    """The id columns that key ``entity`` (its ancestors' ids, then its
+    own): the columns its children's rows start with."""
+    if entity is None:
+        return []
+    _array, parent, own = _ENTITIES[entity]
+    return _key_columns(parent) + [own[0][1]]
 
 
-# A present-but-empty stand-in for a missing array-of-objects key:
-# explode_outer yields one all-null struct row, every _opt() projection
-# of it is NULL, and the not-null id filters drop it — so a catalog that
-# omits `dataset`/`distribution`/`field`/`themeTaxonomy` (all optional
-# per the schemas) normalizes to EMPTY frames instead of crashing on an
-# unresolved column.
-_MISSING_ARRAY = "array<struct<__missing:string>>"
-
-
-def _opt_explode(df: DataFrame, name: str, alias: str, pos: bool = False):
-    col = (
-        F.col(name)
-        if _has(df, name)
-        else F.lit(None).cast(_MISSING_ARRAY)
+# every entity's frame schema: the parent's key columns, then its own
+SCHEMAS: dict[str, T.StructType] = {
+    e: T.StructType(
+        [T.StructField(c, _STR) for c in _key_columns(parent)]
+        + [T.StructField(c, t) for _k, c, t in own]
     )
-    if pos:
-        return F.posexplode_outer(col).alias("pos", alias)
-    return F.explode_outer(col).alias(alias)
+    for e, (_a, parent, own) in _ENTITIES.items()
+}
+
+# a row is kept when one of these columns is not null (catalogs always)
+_KEEP_IF = {
+    e: [SCHEMAS[e].names.index(c) for c in cols]
+    for e, cols in {
+        "datasets": ["dataset_id"],
+        "distributions": ["distribution_id"],
+        "fields": ["field_id", "title"],
+        "themes": ["theme_id"],
+    }.items()
+}
+
+
+def _text(v):
+    """A string stays as is; any other non-null value becomes compact
+    JSON text (``12``, ``true``, ``{"a":1}``)."""
+    if v is None or isinstance(v, str):
+        return v
+    return json.dumps(v, separators=(",", ":"), ensure_ascii=False)
+
+
+def _array(obj: dict, key: str) -> list | None:
+    v = obj.get(key)
+    if v is not None and not isinstance(v, list):
+        raise ValueError(f"catalog key {key!r} is not a list: {v!r}")
+    return v
+
+
+def _value(obj: dict, key: str, dtype):
+    if dtype == _LIST:
+        v = _array(obj, key)
+        return None if v is None else [_text(x) for x in v]
+    for part in key.split("."):
+        obj = obj.get(part) if isinstance(obj, dict) else None
+    return _text(obj)
+
+
+def normalize_catalog(doc, catalog_id: str | None = None) -> dict[str, list[tuple]]:
+    """A ``json.load``-ed ``data.json`` → each entity's rows, in document
+    order, under ``SCHEMAS``.
+
+    ``catalog_id`` overrides the document's ``identifier`` (the
+    reference keys catalogs by their index.yaml name,
+    ``base.py:1073-1091``); with neither the id is ``"catalog"``. An
+    array element that is not an object reads as an empty object, so the
+    id filters drop its row; a list-typed key holding anything but a
+    list or null raises ``ValueError`` naming the key.
+    """
+    if not isinstance(doc, dict):
+        raise ValueError("catalog document is not a JSON object")
+    if catalog_id is None:
+        catalog_id = _text(doc.get("identifier"))
+    own = _ENTITIES["catalogs"][2]
+    catalog = ("catalog" if catalog_id is None else catalog_id,
+               *[_value(doc, k, t) for k, _c, t in own[1:]])
+    out: dict[str, list[tuple]] = {e: [] for e in _ENTITIES}
+    out["catalogs"].append(catalog)
+
+    def walk(entity: str, parent: dict, keys: tuple) -> None:
+        array, _p, own = _ENTITIES[entity]
+        for pos, obj in enumerate(_array(parent, array) or []):
+            obj = obj if isinstance(obj, dict) else {}
+            row = (*keys, *[
+                pos if k is None else _value(obj, k, t) for k, _c, t in own
+            ])
+            if any(row[i] is not None for i in _KEEP_IF[entity]):
+                out[entity].append(row)
+            # the children of a dropped row keep theirs
+            for child in _children(entity):
+                walk(child, obj, row[:len(keys) + 1])
+
+    for child in _children("catalogs"):
+        walk(child, doc, catalog[:1])
+    return out
 
 
 def read_catalog_json(spark: SparkSession, path: str, catalog_id: str | None = None) -> dict[str, DataFrame]:
-    """Read one ``data.json`` catalog file → normalized frames.
-
-    ``catalog_id`` overrides the file's ``identifier`` (the reference keys
-    catalogs by their index.yaml name, ``base.py:1073-1091``).
-    """
-    raw = spark.read.option("multiLine", True).json(path)
-    return normalize_catalog(raw, catalog_id=catalog_id)
+    """One ``data.json`` file → its five frames, as local relations."""
+    with open(path, encoding="utf-8") as fh:
+        rows = normalize_catalog(json.load(fh), catalog_id)
+    return catalog_frames(spark, rows)
 
 
-def normalize_catalog(raw: DataFrame, catalog_id: str | None = None) -> dict[str, DataFrame]:
-    """Nested catalog document → 5 relational frames (SURVEY §1.3)."""
-    cid = (
-        F.lit(catalog_id)
-        if catalog_id is not None
-        else F.coalesce(_opt(raw, "identifier"), F.lit("catalog"))
-    )
+def catalog_frames(spark: SparkSession, rows: dict[str, list[tuple]]) -> dict[str, DataFrame]:
+    """Each entity's rows → its frame, an Arrow local relation."""
+    return {e: local_frame(spark, rows[e], SCHEMAS[e]) for e in _ENTITIES}
 
-    catalogs = raw.select(
-        cid.alias("catalog_id"),
-        _opt(raw, "title").alias("title"),
-        _opt(raw, "description").alias("description"),
-        _opt(raw, "publisher.name").alias("publisher_name"),
-        _opt(raw, "publisher.mbox").alias("publisher_mbox"),
-        _opt(raw, "superThemeTaxonomy").alias("superThemeTaxonomy"),
-        _opt(raw, "issued").alias("issued"),
-        _opt(raw, "modified").alias("modified"),
-        _opt(raw, "license").alias("license"),
-        _opt(raw, "homepage").alias("homepage"),
-        _opt(raw, "rights").alias("rights"),
-    )
 
-    with_cid = raw.select(cid.alias("catalog_id"), "*")
+def _sort_key(v):
+    """Spark's ascending order of a struct/array value: nulls first,
+    then field by field (element by element)."""
+    if v is None:
+        return (0,)
+    if isinstance(v, dict):
+        v = list(v.values())
+    if isinstance(v, list):
+        return (1, [_sort_key(x) for x in v])
+    return (1, v)
 
-    ds_exploded = with_cid.select(
-        "catalog_id", _opt_explode(with_cid, "dataset", "ds")
-    )
-    datasets = ds_exploded.select(
-        "catalog_id",
-        _opt(ds_exploded, "ds.identifier").alias("dataset_id"),
-        _opt(ds_exploded, "ds.title").alias("title"),
-        _opt(ds_exploded, "ds.description").alias("description"),
-        _opt(ds_exploded, "ds.publisher.name").alias("publisher_name"),
-        _opt(ds_exploded, "ds.publisher.mbox").alias("publisher_mbox"),
-        _opt(ds_exploded, "ds.accrualPeriodicity").alias("accrualPeriodicity"),
-        _opt(ds_exploded, "ds.issued").alias("issued"),
-        _opt(ds_exploded, "ds.modified").alias("modified"),
-        _opt(ds_exploded, "ds.temporal").alias("temporal"),
-        _opt(ds_exploded, "ds.landingPage").alias("landingPage"),
-        _opt(ds_exploded, "ds.source").alias("source"),
-        _opt(ds_exploded, "ds.superTheme", "array<string>").alias("superTheme"),
-        _opt(ds_exploded, "ds.theme", "array<string>").alias("theme"),
-        _opt(ds_exploded, "ds.keyword", "array<string>").alias("keyword"),
-    ).filter(F.col("dataset_id").isNotNull())
 
-    dist_exploded = ds_exploded.select(
-        "catalog_id",
-        _opt(ds_exploded, "ds.identifier").alias("dataset_id"),
-        _opt_explode(ds_exploded, "ds.distribution", "di"),
-    )
-    distributions = dist_exploded.select(
-        "catalog_id",
-        "dataset_id",
-        _opt(dist_exploded, "di.identifier").alias("distribution_id"),
-        _opt(dist_exploded, "di.title").alias("title"),
-        _opt(dist_exploded, "di.description").alias("description"),
-        _opt(dist_exploded, "di.fileName").alias("fileName"),
-        _opt(dist_exploded, "di.format").alias("format"),
-        _opt(dist_exploded, "di.downloadURL").alias("downloadURL"),
-        _opt(dist_exploded, "di.accessURL").alias("accessURL"),
-        _opt(dist_exploded, "di.scrapingFileURL").alias("scrapingFileURL"),
-        _opt(dist_exploded, "di.scrapingFileSheet").alias("scrapingFileSheet"),
-        _opt(dist_exploded, "di.issued").alias("issued"),
-        _opt(dist_exploded, "di.byteSize").alias("byteSize"),
-    ).filter(F.col("distribution_id").isNotNull())
+def _prune_nulls(obj):
+    """Drop null keys/entries — pydatajson omits absent metadata keys
+    rather than writing ``null``."""
+    if isinstance(obj, dict):
+        return {k: _prune_nulls(v) for k, v in obj.items() if v is not None}
+    if isinstance(obj, list):
+        return [_prune_nulls(v) for v in obj if v is not None]
+    return obj
 
-    field_exploded = dist_exploded.select(
-        "catalog_id",
-        "dataset_id",
-        _opt(dist_exploded, "di.identifier").alias("distribution_id"),
-        _opt_explode(dist_exploded, "di.field", "f", pos=True),
-    )
-    fields = field_exploded.select(
-        "catalog_id",
-        "dataset_id",
-        "distribution_id",
-        F.col("pos").alias("field_order"),
-        _opt(field_exploded, "f.id").alias("field_id"),
-        _opt(field_exploded, "f.title").alias("title"),
-        _opt(field_exploded, "f.type").alias("type"),
-        _opt(field_exploded, "f.description").alias("description"),
-        _opt(field_exploded, "f.units").alias("units"),
-        _opt(field_exploded, "f.specialType").alias("specialType"),
-        _opt(field_exploded, "f.specialTypeDetail").alias("specialTypeDetail"),
-        _opt(field_exploded, "f.scrapingIdentifierCell").alias("scrapingIdentifierCell"),
-        _opt(field_exploded, "f.scrapingDataStartCell").alias("scrapingDataStartCell"),
-    ).filter(F.col("title").isNotNull() | F.col("field_id").isNotNull())
 
-    theme_exploded = with_cid.select(
-        "catalog_id", _opt_explode(with_cid, "themeTaxonomy", "t")
-    )
-    themes = theme_exploded.select(
-        "catalog_id",
-        _opt(theme_exploded, "t.id").alias("theme_id"),
-        _opt(theme_exploded, "t.label").alias("label"),
-        _opt(theme_exploded, "t.description").alias("description"),
-    ).filter(F.col("theme_id").isNotNull())
+def nest_catalogs(rows: dict[str, tuple[list[str], list[tuple]]]) -> dict[str, dict]:
+    """K2 — collected rows ``{entity: (columns, rows)}`` → one document
+    per catalog id, the inverse of ``normalize_catalog``.
 
+    Only the keys whose column the rows carry are written (published
+    rows have the scraping keys scrubbed, K8). A child array holds the
+    rows whose key columns match its parent's (a null key matches
+    nothing); datasets, distributions and themes sort by identifier,
+    fields by declaration order, so the document is deterministic. A
+    missing ``themes`` entry writes no ``themeTaxonomy``; null keys and
+    entries are dropped."""
+    nested: dict[str, dict[tuple, list[dict]]] = {}
+    for entity in ("fields", "distributions", "datasets", "themes", "catalogs"):
+        if entity not in rows:
+            continue
+        array, parent, own = _ENTITIES[entity]
+        cols, data = rows[entity]
+        at = {c: i for i, c in enumerate(cols)}
+        groups = nested[entity] = {}
+        for r in data:
+            obj, sub = {}, {}
+            for k, c, _t in own:
+                if c not in at:
+                    continue
+                if k is not None and "." in k:
+                    head, tail = k.split(".")
+                    sub.setdefault(head, {})[tail] = r[at[c]]
+                else:  # field_order (no key) only sorts, see below
+                    obj[k or c] = r[at[c]]
+            for head, inner in sub.items():
+                obj[head] = inner if any(v is not None for v in inner.values()) else None
+            key = tuple(r[at[c]] for c in _key_columns(entity))
+            for child in _children(entity):
+                obj[_ENTITIES[child][0]] = nested.get(child, {}).get(key)
+            parent_key = key[:-1]
+            if None not in parent_key:
+                groups.setdefault(parent_key, []).append(obj)
+        if parent is not None:
+            for objs in groups.values():
+                objs.sort(key=_sort_key)
+                for obj in objs:
+                    obj.pop("field_order", None)
     return {
-        "catalogs": catalogs,
-        "datasets": datasets,
-        "distributions": distributions,
-        "fields": fields,
-        "themes": themes,
+        doc["identifier"]: _prune_nulls(doc)
+        for doc in nested["catalogs"].get((), [])
     }
-
-
-# Publication key order per entity (pydatajson document shape). Only keys
-# the frame actually carries are emitted — published frames have the
-# scraping keys scrubbed (K8), unpublished ones keep them.
-_FIELD_PUB_KEYS = [
-    ("field_id", "id"), ("title", "title"), ("type", "type"),
-    ("description", "description"), ("units", "units"),
-    ("specialType", "specialType"), ("specialTypeDetail", "specialTypeDetail"),
-    ("scrapingIdentifierCell", "scrapingIdentifierCell"),
-    ("scrapingDataStartCell", "scrapingDataStartCell"),
-]
-_DIST_PUB_KEYS = [
-    "title", "description", "fileName", "format", "downloadURL",
-    "accessURL", "scrapingFileURL", "scrapingFileSheet", "issued",
-    "byteSize",
-]
-_DS_PUB_KEYS = [
-    "title", "description", "accrualPeriodicity", "issued", "modified",
-    "temporal", "landingPage", "source", "superTheme", "theme", "keyword",
-]
-
-
-def _nest_publisher(df: DataFrame) -> DataFrame:
-    """Re-nest the flattened ``publisher_name``/``publisher_mbox`` columns
-    into the document's ``publisher: {name, mbox}`` object."""
-    if "publisher_name" not in df.columns:
-        return df
-    return df.withColumn(
-        "publisher",
-        F.when(
-            F.col("publisher_name").isNotNull()
-            | F.col("publisher_mbox").isNotNull(),
-            F.struct(
-                F.col("publisher_name").alias("name"),
-                F.col("publisher_mbox").alias("mbox"),
-            ),
-        ),
-    ).drop("publisher_name", "publisher_mbox")
-
-
-def renest_catalog(frames: dict[str, DataFrame]) -> DataFrame:
-    """K2 inverse-normalization — re-nest the relational frames back into
-    the catalog document shape for publication (``base.py:494-498``):
-    ``collect_list(struct(...))`` bottom-up, full key fidelity (nested
-    ``publisher``, fields keyed ``id`` as in the source document, every
-    metadata key the frames carry). Entity arrays sort by identifier
-    (fields by declaration order) so the emitted document is
-    deterministic."""
-    fields = frames["fields"]
-    fkeys = [(c, out) for c, out in _FIELD_PUB_KEYS if c in fields.columns]
-    fields_n = (
-        fields.groupBy("catalog_id", "dataset_id", "distribution_id")
-        .agg(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct("field_order", *[c for c, _o in fkeys])
-                    )
-                ),
-                lambda s: F.struct(*[s[c].alias(out) for c, out in fkeys]),
-            ).alias("field")
-        )
-    )
-    dists = frames["distributions"]
-    dkeys = [c for c in _DIST_PUB_KEYS if c in dists.columns]
-    dist_n = (
-        dists.join(fields_n, ["catalog_id", "dataset_id", "distribution_id"], "left")
-        .groupBy("catalog_id", "dataset_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("distribution_id").alias("identifier"),
-                        *dkeys,
-                        "field",
-                    )
-                )
-            ).alias("distribution")
-        )
-    )
-    datasets = _nest_publisher(frames["datasets"])
-    dskeys = [c for c in _DS_PUB_KEYS if c in datasets.columns] + (
-        ["publisher"] if "publisher" in datasets.columns else []
-    )
-    ds_n = (
-        datasets.join(dist_n, ["catalog_id", "dataset_id"], "left")
-        .groupBy("catalog_id")
-        .agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("dataset_id").alias("identifier"),
-                        *dskeys,
-                        "distribution",
-                    )
-                )
-            ).alias("dataset")
-        )
-    )
-    doc = _nest_publisher(frames["catalogs"]).join(ds_n, "catalog_id", "left")
-    # themeTaxonomy: dataset.theme ids reference it — dropping it on
-    # republication would dangle them (reference writes the full catalog,
-    # base.py:494-498)
-    themes = frames.get("themes")
-    if themes is not None and "theme_id" in themes.columns:
-        themes_n = themes.groupBy("catalog_id").agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        F.col("theme_id").alias("id"),
-                        *[
-                            c
-                            for c in ("label", "description")
-                            if c in themes.columns
-                        ],
-                    )
-                )
-            ).alias("themeTaxonomy")
-        )
-        doc = doc.join(themes_n, "catalog_id", "left")
-    return doc

@@ -11,7 +11,8 @@ This powers three reference surfaces:
 - **S5** XLSX catalog reader (``base.py:932-938`` via pydatajson
   ``read_xlsx_catalog``): 5 sheets ``catalog/dataset/distribution/field/
   theme`` — already the normalized relational form (SURVEY §1.3) — mapped
-  straight into the same frames ``normalize_catalog`` produces.
+  straight into the same rows ``catalog_json.normalize_catalog`` produces,
+  under its ``SCHEMAS``.
 - **S8** workbook→cells extraction for scraping (``cells.py``).
 - **K3/K4** XLSX catalog + report writers (``base.py:500-504,679-703``).
 
@@ -149,14 +150,11 @@ def read_sheets(path: str) -> dict[str, list[dict[str, str]]]:
     return out
 
 
-# --- S5: pydatajson 5-sheet catalog → normalized frames -------------------
+# --- S5: pydatajson 5-sheet catalog → normalized rows ----------------------
 
 # pydatajson's xlsx layout prefixes every column with its level name
 # (evidenced by tests/project/mock/test2.xlsx sharedStrings:
 # catalog_identifier, dataset_identifier, distribution_scrapingFileURL, …).
-_LIST_FIELDS = {"superTheme", "theme", "keyword"}
-
-
 def _strip_prefix(rec: dict[str, str], prefix: str) -> dict[str, str]:
     out = {}
     for k, v in rec.items():
@@ -165,19 +163,20 @@ def _strip_prefix(rec: dict[str, str], prefix: str) -> dict[str, str]:
     return out
 
 
-def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
-    """S5 — 5-sheet XLSX catalog → the same normalized frames as
-    ``read_catalog_json`` (``base.py:932-938``). Two sheet layouts: the
-    pydatajson one (``tests/project/mock/test2.xlsx``: columns prefixed
-    by entity, ``catalog_title``, ``dataset_identifier``, …) and the one
-    K3 writes (``sinks.metadata.write_xlsx_catalog``: columns named as
-    in the frames), so a published ``catalog.xlsx`` reads back.
-    Parsed in Python, not in Spark (catalog workbooks are small);
-    distributed reading of *data* stays in parquet/CSV land.
+def read_xlsx_catalog(path: str, catalog_id: str | None = None) -> dict[str, list[tuple]]:
+    """S5 — 5-sheet XLSX catalog → the same rows, under the same
+    ``catalog_json.SCHEMAS``, as the JSON reader (``base.py:932-938``).
+    Two sheet layouts: the pydatajson one
+    (``tests/project/mock/test2.xlsx``: columns prefixed by entity,
+    ``catalog_title``, ``dataset_identifier``, …) and the one K3 writes
+    (``sinks.metadata.write_xlsx_catalog``: columns named as in the
+    frames), so a published ``catalog.xlsx`` reads back. Parsed in
+    Python, not in Spark (catalog workbooks are small); distributed
+    reading of *data* stays in parquet/CSV land.
     """
     from pyspark.sql import types as T
 
-    from series_tiempo_ar_scraping_spark.session import local_frame
+    from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
     sheets = read_sheets(path)
     cat_rec = (sheets.get("catalog") or [{}])[0]
@@ -187,47 +186,26 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         or cat_rec.get("catalog_id" if own else "catalog_identifier")
         or "catalog"
     )
-
-    def frame(records: list[dict], columns: list[str]):
-        schema = T.StructType(
-            [T.StructField(c, T.StringType()) for c in columns]
-        )
-        rows = [tuple(r.get(c) for c in columns) for r in records]
-        return local_frame(spark, rows, schema)
+    lists = [
+        f.name for f in SCHEMAS["datasets"]
+        if isinstance(f.dataType, T.ArrayType)
+    ]
 
     cat = dict(cat_rec) if own else _strip_prefix(cat_rec, "catalog_")
-    catalogs = frame(
-        [{**cat, "catalog_id": cid}],
-        ["catalog_id", "title", "description", "publisher_name",
-         "publisher_mbox", "superThemeTaxonomy", "issued", "modified",
-         "license", "homepage", "rights"],
-    )
+    recs: dict[str, list[dict]] = {"catalogs": [{**cat, "catalog_id": cid}]}
 
-    ds_recs = []
+    ds_recs = recs["datasets"] = []
     for r in sheets.get("dataset", []):
         d = dict(r) if own else _strip_prefix(r, "dataset_")
         d["catalog_id"] = cid
         if not own:
             d["dataset_id"] = d.pop("identifier", None)
-        for lf in _LIST_FIELDS:
+        for lf in lists:
             if lf in d:
                 d[lf] = [s.strip() for s in str(d[lf]).split(",") if s.strip()]
         ds_recs.append(d)
-    ds_schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in
-         ["catalog_id", "dataset_id", "title", "description",
-          "publisher_name", "publisher_mbox", "accrualPeriodicity",
-          "issued", "modified", "temporal", "landingPage", "source"]]
-        + [T.StructField(c, T.ArrayType(T.StringType())) for c in
-           ["superTheme", "theme", "keyword"]]
-    )
-    datasets = local_frame(
-        spark,
-        [tuple(d.get(f.name) for f in ds_schema.fields) for d in ds_recs],
-        ds_schema,
-    )
 
-    di_recs = []
+    di_recs = recs["distributions"] = []
     for r in sheets.get("distribution", []):
         d = dict(r) if own else _strip_prefix(r, "distribution_")
         d["catalog_id"] = cid
@@ -235,14 +213,8 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
             d["dataset_id"] = r.get("dataset_identifier")
             d["distribution_id"] = d.pop("identifier", None)
         di_recs.append(d)
-    distributions = frame(
-        di_recs,
-        ["catalog_id", "dataset_id", "distribution_id", "title",
-         "description", "fileName", "format", "downloadURL", "accessURL",
-         "scrapingFileURL", "scrapingFileSheet", "issued", "byteSize"],
-    )
 
-    f_recs = []
+    f_recs = recs["fields"] = []
     order: dict[str, int] = {}
     for r in sheets.get("field", []):
         d = dict(r) if own else _strip_prefix(r, "field_")
@@ -255,36 +227,20 @@ def read_xlsx_catalog(spark, path: str, catalog_id: str | None = None):
         d["field_order"] = order.get(key, 0)
         order[key] = d["field_order"] + 1
         f_recs.append(d)
-    f_cols = ["catalog_id", "dataset_id", "distribution_id", "field_order",
-              "field_id", "title", "type", "description", "units",
-              "specialType", "specialTypeDetail", "scrapingIdentifierCell",
-              "scrapingDataStartCell"]
-    f_schema = T.StructType(
-        [T.StructField(c, T.IntegerType() if c == "field_order" else T.StringType())
-         for c in f_cols]
-    )
-    fields = local_frame(
-        spark, [tuple(d.get(c) for c in f_cols) for d in f_recs], f_schema
-    )
 
-    th_recs = []
-    for r in sheets.get("theme", []):
-        th_recs.append({
+    recs["themes"] = [
+        {
             "catalog_id": cid,
             "theme_id": r.get("theme_id") or r.get("theme_identifier"),
             "label": r.get("label" if own else "theme_label"),
             "description": r.get("description" if own else "theme_description"),
-        })
-    themes = frame(th_recs, ["catalog_id", "theme_id", "label", "description"])
-
-    frames = {
-        "catalogs": catalogs,
-        "datasets": datasets,
-        "distributions": distributions,
-        "fields": fields,
-        "themes": themes,
+        }
+        for r in sheets.get("theme", [])
+    ]
+    return {
+        name: [tuple(d.get(c) for c in SCHEMAS[name].names) for d in entity]
+        for name, entity in recs.items()
     }
-    return frames
 
 
 # --- K3/K4: minimal conforming XLSX writer --------------------------------

@@ -235,14 +235,16 @@ def test_write_json_catalog_every_crash_point(spark, tmp_path):
     from series_tiempo_ar_scraping_spark.sinks.metadata import (
         write_json_catalog,
     )
+    from series_tiempo_ar_scraping_spark.sources.catalog_json import (
+        catalog_frames,
+    )
     from series_tiempo_ar_scraping_spark.sources.xlsx import (
         read_xlsx_catalog,
     )
 
-    frames = read_xlsx_catalog(
-        spark,
+    frames = catalog_frames(spark, read_xlsx_catalog(
         os.path.join(os.path.dirname(__file__), "fixtures", "catalog.xlsx"),
-    )
+    ))
     target = str(tmp_path / "data.json")
 
     def read_back():

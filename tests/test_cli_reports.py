@@ -376,14 +376,19 @@ def test_catalog_failure_is_isolated(spark, tmp_path):
     def resolver(ref):
         return os.path.join(fix, "files", ref.rsplit("/", 1)[-1])
 
+    # a data.json that is not JSON is a parse failure, not an empty catalog
+    notjson = tmp_path / "notjson.json"
+    notjson.write_text("{not json")
     index = {
         "good": {"metadata_path": os.path.join(fix, "catalog.json")},
         "broken": {"metadata_path": str(tmp_path / "nope.json")},
+        "notjson": {"metadata_path": str(notjson)},
     }
     results = run_etl(
         index, str(tmp_path / "out"), spark=spark, file_resolver=resolver
     )
     assert "error" in results["broken"]
+    assert "JSONDecodeError" in results["notjson"]["error"]
     assert results["good"]["written"] > 0
 
 

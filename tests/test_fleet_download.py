@@ -133,11 +133,21 @@ def test_download_many_partition_by_host_plan(spark, tmp_path):
     assert "parse_url" in p or "ParseUrl" in p
 
 
-def test_routing_collect_cap(spark, monkeypatch):
+def test_routing_collect_cap(spark, monkeypatch, tmp_path):
+    """The cap bounds each metadata entity's parsed rows: the fixture's
+    largest entity (10 fields) passes a cap of 10 and fails one of 9,
+    with a message naming the entity and the fleet path."""
     from series_tiempo_ar_scraping_spark.plans import pipeline as P
 
-    df = spark.range(50).toDF("x")
-    assert len(P._collect_routing(df, "test")) == 50
+    catalog = os.path.join(os.path.dirname(__file__), "fixtures", "catalog.json")
+
+    def plan():
+        return P.CatalogPipeline(spark, catalog, "acme", str(tmp_path)).plan()
+
     monkeypatch.setattr(P, "_ROUTING_COLLECT_CAP", 10)
-    with pytest.raises(RuntimeError, match="download_many"):
-        P._collect_routing(df, "test")
+    assert plan()["fields"].count() == 10
+    monkeypatch.setattr(P, "_ROUTING_COLLECT_CAP", 9)
+    with pytest.raises(
+        RuntimeError, match="metadata frame 'fields' exceeds 9 rows.*download_many"
+    ):
+        plan()

@@ -1,10 +1,12 @@
 """Driver-side frames of the one-pass ETL are Arrow local relations.
 
-``CatalogPipeline.plan`` collects each metadata frame once and returns
-it as a ``LocalRelation``; the bulk reader's path dimension and the
-workbook path list are local relations too. Arrow conversion can fall
-back to a list-built (Python-worker) frame without a word, so the plan
-shape is read here from the optimized plan, node by node.
+``CatalogPipeline.plan`` builds each metadata frame once, from the
+rows the driver parsed, as a ``LocalRelation``, and neither planning nor
+the K2 write over its frames runs a Spark job; the bulk reader's path
+dimension and the workbook path list are local relations too. Arrow
+conversion can fall back to a list-built (Python-worker) frame without a
+word, so the plan shape is read here from the optimized plan, node by
+node.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ from __future__ import annotations
 import functools
 import json
 import os
+import time
+import uuid
 
 import pytest
 from pyspark.sql import DataFrame
@@ -29,6 +33,7 @@ from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
 CATALOG = os.path.join(FIX, "catalog.json")
+CATALOG_XLSX = os.path.join(FIX, "catalog.xlsx")
 
 
 def _nodes(plan) -> list:
@@ -127,6 +132,49 @@ def test_plan_collect_is_capped(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(P, "_ROUTING_COLLECT_CAP", 1)
     with pytest.raises(RuntimeError, match="download_many"):
         _pipeline(spark, {"acme": CATALOG}, tmp_path).plan()
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched, counted under
+    a job group of its own. The status tracker learns of jobs through the
+    listener bus, in order, so once it lists a later job of another
+    group it lists every job ``fn`` ran."""
+    sc = spark.sparkContext
+    group, marker = (f"job-count-{uuid.uuid4().hex}" for _ in range(2))
+    try:
+        sc.setJobGroup(group, "job count")
+        out = fn()
+        sc.setJobGroup(marker, "job count marker")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never listed"
+        time.sleep(0.05)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_plan_and_k2_write_launch_no_job(spark, tmp_path):
+    """Planning a JSON and an XLSX catalog parses both on the driver and
+    builds local relations; the K2 write over those frames collects and
+    re-nests them without a job either."""
+    from series_tiempo_ar_scraping_spark.sinks.metadata import (
+        write_json_catalog,
+    )
+
+    catalogs = {"acme": CATALOG, "xl": CATALOG_XLSX}
+    frames, planned = _jobs(
+        spark, lambda: _pipeline(spark, catalogs, tmp_path).plan()
+    )
+    assert planned == 0
+    targets = {cid: str(tmp_path / f"{cid}.json") for cid in catalogs}
+    written, wrote = _jobs(spark, lambda: write_json_catalog(frames, targets))
+    assert wrote == 0
+    assert written == list(targets.values())
+    with open(targets["xl"], encoding="utf-8") as fh:
+        assert len(json.load(fh)["dataset"]) == 3
 
 
 def test_reader_frames_are_local_relations(spark, tmp_path):

@@ -55,6 +55,15 @@ def test_file_extension_and_basename(spark):
     ]
 
 
+def test_ascii_case_folds_skip_icu(spark):
+    # Spark 4's lower()/upper() go through ICU, whose first use in a JVM
+    # allocates ~2.9 GB building its tables; the pass's folds are ASCII
+    for expr in (file_extension(F.col("x")), cell_coord_col(F.col("x"))):
+        text = str(expr).lower()
+        assert "translate(" in text
+        assert "lower(" not in text and "upper(" not in text
+
+
 def test_missing_tokens(spark):
     # parity: processors.py:90-95 token list; malformed numerics -> NULL
     vals = _vals(

@@ -16,25 +16,14 @@ from series_tiempo_ar_scraping_spark.operators.validation import (
     catalog_rules,
     dataset_rules,
     distribution_rules,
+    field_rules,
 )
 from series_tiempo_ar_scraping_spark.registry import load_queries
+from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
 ENTITY_COLUMNS = {
-    "field": ["title", "type", "description"],
-    "catalog": [
-        "title", "description", "publisher_name", "publisher_mbox",
-        "superThemeTaxonomy", "issued", "modified", "license", "homepage",
-        "rights",
-    ],
-    "dataset": [
-        "title", "description", "publisher_name", "publisher_mbox",
-        "accrualPeriodicity", "issued", "modified", "temporal",
-        "landingPage", "superTheme", "theme", "keyword",
-    ],
-    "distribution": [
-        "title", "description", "fileName", "format", "downloadURL",
-        "accessURL", "issued", "byteSize",
-    ],
+    e: SCHEMAS[f"{e}s"].names
+    for e in ("catalog", "dataset", "distribution", "field")
 }
 
 
@@ -63,6 +52,39 @@ def test_rule_names_stable(spark):
     assert "dataset_accrualPeriodicity_required" in dataset_rules()
     assert "catalog_publisher_mbox_format" in catalog_rules()
     assert "distribution_has_source_url" in distribution_rules()
+
+
+def test_compiled_rule_names_in_order(spark):
+    """Rules compile over ``catalog_json.SCHEMAS``' columns: a schema
+    property without a column (distribution ``modified``) yields no rule,
+    and the ids, ``source`` and the scraping keys get none."""
+    def names(prefix, cols):
+        return [f"{prefix}_{c}" for c in cols.split()]
+
+    assert list(catalog_rules()) == names("catalog", (
+        "title_required title_format description_required "
+        "description_format publisher_name_required publisher_name_format "
+        "publisher_mbox_required publisher_mbox_format "
+        "superThemeTaxonomy_required superThemeTaxonomy_format "
+        "issued_format modified_format license_format homepage_format "
+        "rights_format"
+    ))
+    assert list(dataset_rules()) == names("dataset", (
+        "title_required title_format description_required "
+        "description_format publisher_name_required publisher_name_format "
+        "publisher_mbox_format accrualPeriodicity_required "
+        "accrualPeriodicity_format issued_required issued_format "
+        "modified_format temporal_format landingPage_format "
+        "superTheme_required"
+    ))
+    assert list(distribution_rules()) == names("distribution", (
+        "title_required title_format issued_required issued_format "
+        "downloadURL_format accessURL_format byteSize_format has_source_url"
+    ))
+    assert list(field_rules()) == names("field", (
+        "title_required title_format type_enum time_index_frequency "
+        "identifier_cell_coord data_start_cell_coord"
+    ))
 
 
 def _fired(spark, df_spec, rules):

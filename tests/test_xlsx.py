@@ -16,6 +16,7 @@ import os
 import pytest
 
 from series_tiempo_ar_scraping_spark.sources.catalog_json import (
+    catalog_frames,
     read_catalog_json,
 )
 from series_tiempo_ar_scraping_spark.sources.xlsx import (
@@ -46,7 +47,7 @@ def test_reference_workbook_parity(spark):
     assert cat["catalog_identifier"] == "example_catalog1"
     # shared strings with accents decode correctly
     assert "Macroecon" in cat["catalog_title"]
-    frames = read_xlsx_catalog(spark, REF_XLSX)
+    frames = catalog_frames(spark, read_xlsx_catalog(REF_XLSX))
     assert frames["fields"].count() == 22
     ti = frames["fields"].filter("specialType = 'time_index'")
     assert ti.count() == 3  # one per distribution
@@ -88,7 +89,7 @@ def test_iter_cells_shape():
 def test_read_xlsx_catalog_normalized(spark):
     """K3's workbook reads back into exactly the frames the JSON reader
     made it from: same columns, same rows (lists split back to arrays)."""
-    frames = read_xlsx_catalog(spark, FIX_XLSX)
+    frames = catalog_frames(spark, read_xlsx_catalog(FIX_XLSX))
     want = read_catalog_json(spark, FIX_JSON)
     assert set(frames) == set(want)
     for name, df in frames.items():
@@ -162,7 +163,7 @@ def test_write_xlsx_catalog_roundtrip(spark, tmp_path):
         write_xlsx_catalog,
     )
 
-    frames = read_xlsx_catalog(spark, FIX_XLSX)
+    frames = catalog_frames(spark, read_xlsx_catalog(FIX_XLSX))
     out = str(tmp_path / "catalog.xlsx")
     write_xlsx_catalog(frames, {"acme": out})
     back = read_sheets(out)
