@@ -118,14 +118,3 @@ def stable_hash64(s: Column | str) -> Column:
     c = _col(s)
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
-
-def status_sort_key(status: Column | str) -> Column:
-    """O1 — explicit categorical order ERROR < WARNING < OK
-    (``base.py:903-913``)."""
-    c = _col(status)
-    return (
-        F.when(c == "ERROR", 0)
-        .when(c == "WARNING", 1)
-        .when(c == "OK", 2)
-        .otherwise(3)
-    )

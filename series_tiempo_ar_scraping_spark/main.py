@@ -1,6 +1,7 @@
 """EP1 CLI — parity with the reference's ``etl`` console script
 (``main.py:40-73``): run the full pipeline over an ``index.yaml`` of
-catalogs with the same flag surface.
+catalogs with the same flag surface, as one pass whose report rows
+``run_etl`` splits by catalog into per-catalog workbooks (K4/K5).
 
 S9 config readers are here too (``main.py:15-20``, ``base.py:1098-1109``):
 YAML index + general config, plain dicts on the driver.
@@ -130,16 +131,22 @@ def run_etl(
             pipe.unpersist()
 
     def report_pass(res, loaded: dict[str, dict]) -> dict[str, dict]:
+        from series_tiempo_ar_scraping_spark.operators.expectations import (
+            pipeline_contract_report,
+        )
+        from series_tiempo_ar_scraping_spark.session import local_frame
         from series_tiempo_ar_scraping_spark.sinks.reports import (
+            DatasetStatus,
+            DistributionStatus,
+            MetadataError,
             split_by_catalog,
             write_report_xlsx,
         )
 
-        # Every report frame below is collected once for the whole pass
-        # and split by catalog_id in Python.
-        ind_cols, ind_rows = split_by_catalog(res.indicators)
+        # The pass returns the report rows of every catalog; each report
+        # splits by catalog_id here.
         indicators = {
-            cid: dict(zip(ind_cols, rows[0])) for cid, rows in ind_rows.items()
+            r.catalog_id: dict(zip(r._fields[1:], r[1:])) for r in res.indicators
         }
         # K4/K5 — per-catalog report workbooks next to the outputs
         # (reporte-datasets / reporte-distributions, base.py:679-703)
@@ -149,11 +156,15 @@ def run_etl(
         # count (small by V1-V3 contract — one row per rule violation);
         # that workbook keeps its own catalog_id column.
         reports = {
-            "reporte-datasets": split_by_catalog(res.dataset_report),
-            "reporte-errores-metadata": split_by_catalog(
-                res.metadata_errors, keep_id=True
+            "reporte-datasets": split_by_catalog(
+                DatasetStatus._fields, res.dataset_report
             ),
-            "reporte-distributions": split_by_catalog(res.distribution_report),
+            "reporte-errores-metadata": split_by_catalog(
+                MetadataError._fields, res.metadata_errors, keep_id=True
+            ),
+            "reporte-distributions": split_by_catalog(
+                DistributionStatus._fields, res.distribution_report
+            ),
         }
         # EP1 — declarative data contracts over the run's OWN produced
         # frames (operators/expectations.py), per catalog: scraped
@@ -161,14 +172,17 @@ def run_etl(
         # dataset-status enum stays closed. Violations export through
         # the same K4 channel as the other report workbooks and ride
         # the stage emails.
-        from series_tiempo_ar_scraping_spark.operators.expectations import (
-            pipeline_contract_report,
+        contracts = pipeline_contract_report(
+            res.observations,
+            local_frame(
+                spark,
+                res.dataset_report,
+                ", ".join(f"{c} string" for c in DatasetStatus._fields),
+            ),
+            by=["catalog_id"],
         )
-
         reports["reporte-expectations"] = split_by_catalog(
-            pipeline_contract_report(
-                res.observations, res.dataset_report, by=["catalog_id"]
-            )
+            contracts.columns, contracts.collect()
         )
 
         out: dict[str, dict] = {}

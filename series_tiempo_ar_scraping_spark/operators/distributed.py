@@ -57,13 +57,19 @@ def two_phase_prefix_sum(
     reset_cols = list(reset_cols or [])
     spark = df.sparkSession
     n_parts = n_parts or max(spark.sparkContext.defaultParallelism, 8)
-    ranged = (
-        df.repartitionByRange(n_parts, *reset_cols, *order_cols)
-        .withColumn("part_id", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
+    ranged = df.repartitionByRange(
+        n_parts, *reset_cols, *order_cols
+    ).withColumn("part_id", F.spark_partition_id())
+    # the reset columns travel as one struct, never NULL, that groups
+    # and joins with NULL fields equal: a NULL reset key is a group too,
+    # and the offsets join stays an equi-join on the offsets' unique key
+    # (a plain join on a NULL key drops the group's rows)
+    reset = ["_reset"] if reset_cols else []
+    if reset_cols:
+        ranged = ranged.withColumn("_reset", F.struct(*reset_cols))
+    ranged = ranged.localCheckpoint(eager=False)
     local_w = (
-        Window.partitionBy("part_id", *reset_cols)
+        Window.partitionBy("part_id", *reset)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -74,12 +80,12 @@ def two_phase_prefix_sum(
     # (partition, reset group), so this window is O(#parts · #groups
     # touching a boundary), never O(rows)
     carry_w = (
-        Window.partitionBy(*reset_cols)
+        Window.partitionBy(*reset)
         .orderBy("part_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
-        ranged.groupBy("part_id", *reset_cols)
+        ranged.groupBy("part_id", *reset)
         .agg(
             *[
                 F.sum(v).alias(f"_part_total_{v}")
@@ -88,7 +94,7 @@ def two_phase_prefix_sum(
         )
         .select(
             "part_id",
-            *reset_cols,
+            *reset,
             *[
                 F.coalesce(
                     F.sum(f"_part_total_{v}").over(carry_w), F.lit(0)
@@ -97,7 +103,7 @@ def two_phase_prefix_sum(
             ],
         )
     )
-    out = local.join(F.broadcast(offsets), ["part_id", *reset_cols])
+    out = local.join(F.broadcast(offsets), ["part_id", *reset]).drop(*reset)
     for v, o in pairs:
         out = out.withColumn(
             o, F.col(f"_local_{v}") + F.col(f"_carry_{v}")

@@ -22,20 +22,6 @@ from series_tiempo_ar_scraping_spark.functions.scalars import (
 )
 
 
-def harvestable_datasets(datasets: DataFrame, dataset_errors: DataFrame) -> DataFrame:
-    """F1 — keep metadata-valid datasets (``base.py:455-463`` →
-    pydatajson ``generate_harvestable_catalogs(harvest='valid')``).
-
-    Anti-join against the error set on (catalog, dataset): dataset ids
-    are catalog-scoped, so one catalog's invalid dataset must not drop
-    another catalog's same-id dataset. The (small) error frame is
-    broadcast so no shuffle of the dataset frame is needed.
-    """
-    keys = ["catalog_id", "dataset_id"]
-    errs = dataset_errors.select(*keys).distinct()
-    return datasets.join(F.broadcast(errs), on=keys, how="left_anti")
-
-
 def time_series_distributions(distributions: DataFrame, fields: DataFrame) -> DataFrame:
     """F2 — distributions having a ``time_index`` field
     (``base.py:478-487,519-528`` → ``get_distributions(only_time_series=True)``).

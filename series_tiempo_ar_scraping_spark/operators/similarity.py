@@ -800,7 +800,10 @@ def pq_encode(vectors: DataFrame, codebook: DataFrame, dim: int,
     grouped aggregate planned a SortAggregate over |vectors|·K rows
     (struct buffers are not hash-aggregatable) plus a |vectors|-row
     shuffle. At 64-dim float32 → 4 bytes/vector, a 64× memory cut for
-    the search structure."""
+    the search structure.
+
+    Precondition: ``codebook`` is not empty (``pq_codebook``'s never
+    is); an empty one still collapses to one row, giving NULL codes."""
     sub_dim = dim // m
     cb_row = codebook.agg(
         F.collect_list(
@@ -844,7 +847,10 @@ def pq_query_tables(queries: DataFrame, codebook: DataFrame, dim: int,
     former K-way cross join + collect_list/sort_array grouped
     aggregate paid an ObjectHashAggregate shuffle of |queries|·K rows.
     centroid_ids are dense and distinct, so the sorted struct array is
-    a total order and the table index stays exact."""
+    a total order and the table index stays exact.
+
+    Precondition: ``codebook`` is not empty, as in ``pq_encode``; an
+    empty one gives every query empty tables."""
     sub_dim = dim // m
     cb_row = codebook.agg(
         F.sort_array(

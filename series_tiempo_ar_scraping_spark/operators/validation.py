@@ -164,30 +164,6 @@ def validate_metadata(frames: dict[str, DataFrame]) -> DataFrame:
     return cat_errs.unionByName(ds_errs).unionByName(dist_errs).unionByName(fld_errs)
 
 
-def datasets_report(datasets: DataFrame, metadata_errors: DataFrame) -> DataFrame:
-    """V3 — per-dataset harvest/validity report (``base.py:443-451``),
-    keyed by ``catalog_id``: dataset ids are catalog-scoped, so errors
-    join on (catalog, dataset)."""
-    keys = ["catalog_id", "dataset_id"]
-    bad = (
-        metadata_errors.filter(F.col("dataset_id").isNotNull())
-        .select(*keys)
-        .distinct()
-        .withColumn("dataset_status", F.lit("ERROR"))
-    )
-    return (
-        datasets.select(
-            *keys, F.col("dataset_id").alias("dataset_identifier")
-        )
-        .join(F.broadcast(bad), keys, "left")
-        .select(
-            "catalog_id",
-            "dataset_identifier",
-            F.coalesce("dataset_status", F.lit("OK")).alias("dataset_status"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # V4/V6 — time-series data validation
 # ---------------------------------------------------------------------------
@@ -223,29 +199,6 @@ def validate_observations(obs: DataFrame) -> DataFrame:
         )
         .when(F.col("n_gaps") > 0, F.lit("WARNING"))
         .otherwise(F.lit("OK")),
-    )
-
-
-def distribution_statuses(events: DataFrame) -> DataFrame:
-    """Roll status events ``(catalog_id, dataset_id, distribution_id,
-    status)`` up to one status per distribution (worst status wins —
-    ERROR < WARNING < OK ordering, ``base.py:903-913``)."""
-    rank = (
-        F.when(F.col("status") == "ERROR", 0)
-        .when(F.col("status") == "WARNING", 1)
-        .otherwise(2)
-    )
-    return (
-        events.withColumn("_rank", rank)
-        .groupBy("catalog_id", "dataset_id", "distribution_id")
-        .agg(F.min("_rank").alias("_worst"))
-        .withColumn(
-            "distribution_status",
-            F.when(F.col("_worst") == 0, "ERROR")
-            .when(F.col("_worst") == 1, "WARNING")
-            .otherwise("OK"),
-        )
-        .drop("_worst")
     )
 
 

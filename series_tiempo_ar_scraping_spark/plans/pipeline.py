@@ -4,11 +4,13 @@ The reference interleaves planning and effects (constructing a ``Catalog``
 already downloads, validates and writes — ``base.py:65-73,376-504``); here
 phase 1 is **pure planning** (build normalized frames + a routed task
 frame, zero side effects) and phase 2 executes DataFrame actions. Statuses
-are data (V7); reports and indicators come out as frames.
+are data (V7); after the K1 write the pass collects its status events
+and V1 error rows once each and builds every report from them in plain
+Python (``sinks/reports.py``).
 
 One pass runs any number of catalogs: their frames are unioned, every
 join keys on ``catalog_id`` (dataset and distribution ids are
-catalog-scoped), and report frames carry ``catalog_id`` so a caller can
+catalog-scoped), and report rows carry ``catalog_id`` so a caller can
 split them. The Spark job count of a pass does not grow with the number
 of catalogs; a single catalog is the one-entry case of the same pass.
 
@@ -42,20 +44,13 @@ from series_tiempo_ar_scraping_spark.config import (
     METHOD_EXCEL,
     METHOD_TXT,
 )
-from series_tiempo_ar_scraping_spark.operators.aggregations import (
-    catalog_indicators,
-    sort_reports_by_status,
-)
 from series_tiempo_ar_scraping_spark.operators.filters import (
     clean_field_keyspace,
     filter_distribution_id,
-    harvestable_datasets,
     time_series_distributions,
     with_method,
 )
 from series_tiempo_ar_scraping_spark.operators.validation import (
-    datasets_report,
-    distribution_statuses,
     trim_warnings,
     validate_metadata,
     validate_observations,
@@ -66,6 +61,7 @@ from series_tiempo_ar_scraping_spark.sinks.csv_wide import (
     scrub_scraping_metadata,
     write_wide_csvs_bulk,
 )
+from series_tiempo_ar_scraping_spark.sinks import reports
 from series_tiempo_ar_scraping_spark.sources.catalog_json import (
     catalog_frames,
     normalize_catalog,
@@ -115,12 +111,13 @@ def read_catalog(path: str, catalog_id: str) -> dict[str, list[tuple]]:
 @dataclass
 class PipelineResult:
     frames: dict[str, DataFrame]
-    metadata_errors: DataFrame
     observations: DataFrame
     series_report: DataFrame
-    distribution_report: DataFrame
-    dataset_report: DataFrame
-    indicators: DataFrame
+    # the report rows of every catalog of the pass
+    metadata_errors: list[reports.MetadataError]
+    dataset_report: list[reports.DatasetStatus]
+    distribution_report: list[reports.DistributionStatus]
+    indicators: list[reports.Indicators]
     written_files: list[str] = field(default_factory=list)
     processor_errors: list[tuple[str, str, str, str]] = field(
         default_factory=list
@@ -215,13 +212,6 @@ class CatalogPipeline:
     def run(self) -> PipelineResult:
         # local relations: no metadata frame needs a cache
         frames = self.plan()
-        meta_errors = self._cache(validate_metadata(frames))
-        # report over the UNFILTERED datasets: a dataset with metadata
-        # errors must appear as an ERROR row (reference base.py:443-451),
-        # not vanish — the harvest filter applies only to further
-        # processing
-        ds_report = datasets_report(frames["datasets"], meta_errors)
-        frames["datasets"] = harvestable_datasets(frames["datasets"], meta_errors)
         ts_dists = self._cache(
             time_series_distributions(frames["distributions"], frames["fields"])
         )
@@ -369,17 +359,6 @@ class CatalogPipeline:
             .join(v4, keys, "left")
             .fillna("ERROR", subset=["status"])
         )
-        dist_report = self._cache(sort_reports_by_status(
-            distribution_statuses(
-                functools.reduce(DataFrame.unionByName, events)
-            ).select(
-                "catalog_id",
-                F.col("dataset_id").alias("dataset_identifier"),
-                F.col("distribution_id").alias("distribution_identifier"),
-                "distribution_status",
-            )
-        ))
-        indicators = catalog_indicators(ds_report, dist_report)
 
         # K1: every catalog's wide CSVs in one partitionBy text write
         # plus a filesystem rename pass — the job count grows with
@@ -393,6 +372,25 @@ class CatalogPipeline:
             {(r.catalog_id, r.dataset_id, r.distribution_id): r.fileName
              for r in routed},
             replace=self.replace,
+        )
+
+        # The report plane: after K1 has materialized the data plane,
+        # one collect of the status events and one of the V1 error rows;
+        # the rest is Python over them and over the dataset rows of
+        # plan()'s local relation (a collect of it runs no job).
+        dist_report = reports.distribution_report(
+            functools.reduce(DataFrame.unionByName, events).collect()
+        )
+        meta_errors = [
+            reports.MetadataError(**r.asDict())
+            for r in validate_metadata(frames).collect()
+        ]
+        # V3 reports every dataset; F1 publishes only the valid ones
+        ds_report, harvested = reports.dataset_report(
+            frames["datasets"].collect(), meta_errors
+        )
+        frames["datasets"] = local_frame(
+            self.spark, harvested, frames["datasets"].schema
         )
 
         # K7/K8: publishable metadata.
@@ -425,12 +423,12 @@ class CatalogPipeline:
 
         return PipelineResult(
             frames=frames,
-            metadata_errors=meta_errors,
             observations=observations,
             series_report=series_rep,
-            distribution_report=dist_report,
+            metadata_errors=meta_errors,
             dataset_report=ds_report,
-            indicators=indicators,
+            distribution_report=dist_report,
+            indicators=reports.indicator_records(ds_report, dist_report),
             written_files=written,
             processor_errors=processor_errors,
         )

@@ -8,9 +8,9 @@ JSON form re-nests the rows in Python (``catalog_json.nest_catalogs``,
 the inverse of the reader's table) and the 5-sheet relational form
 writes them directly through the stdlib OOXML writer. Catalog metadata
 is tiny, so both sinks are driver-side collects by design. On a pipeline
-pass the metadata frames are Arrow local relations
-(``CatalogPipeline.plan``), so collecting one that is still a local
-relation (or a projection or filter of one) runs no Spark job.
+pass every published frame is an Arrow local relation, or a projection
+or filter of one (``CatalogPipeline.plan``; the harvested datasets
+``CatalogPipeline.run`` builds), so collecting it runs no Spark job.
 """
 
 from __future__ import annotations
@@ -77,7 +77,8 @@ def write_xlsx_catalog(frames: dict, path: dict[str, str]) -> list[str]:
     if pub["themes"] is not None:
         sheets["theme"] = pub["themes"]
     split = {
-        name: split_by_catalog(df, keep_id=True) for name, df in sheets.items()
+        name: split_by_catalog(df.columns, df.collect(), keep_id=True)
+        for name, df in sheets.items()
     }
     return [
         xlsx.write_xlsx(

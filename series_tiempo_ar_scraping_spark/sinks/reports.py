@@ -1,37 +1,137 @@
-"""K4/K5/K6 — report writers and notification composition.
+"""K4/K5/K6 — the pass's report rows, report writers and notification
+composition.
 
-The reference writes XLSX reports (``base.py:679-703``) and sends SMTP
-mail with attachments (``base.py:707-743``); subjects/messages are built
-at ``base.py:836-871``. Here: each report frame is collected once for a
-whole pass and split by catalog, each catalog's sheet writes as XLSX
-through the stdlib OOXML writer, mail composition is pure functions over
-the indicator rows, and the SMTP send is a driver-side callable that
-defaults to dry-run (no network in the data plane).
+As the reference does in pandas (``base.py:873-915,1007-1043``), the
+reports are built on the driver: from the status events and
+metadata-error rows a pass collects once, a few dozen rows. Each report
+splits by catalog and writes as XLSX through the stdlib OOXML writer
+(``base.py:679-703``); mail (``base.py:707-743,836-871``) is composed by
+pure functions over the indicator rows and sent dry-run by default.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import os
+from collections import Counter, namedtuple
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import DataFrame
+from series_tiempo_ar_scraping_spark.config import (
+    STATUS_ERROR,
+    STATUS_OK,
+    STATUS_ORDER,
+)
+
+# the report rows of a pass, catalog-keyed; the workbook columns are
+# the fields after ``catalog_id`` (all of them for the metadata errors)
+MetadataError = namedtuple(
+    "MetadataError", "entity catalog_id dataset_id distribution_id rule"
+)
+DatasetStatus = namedtuple(
+    "DatasetStatus", "catalog_id dataset_identifier dataset_status"
+)
+DistributionStatus = namedtuple(
+    "DistributionStatus",
+    "catalog_id dataset_identifier distribution_identifier distribution_status",
+)
+Indicators = namedtuple(
+    "Indicators",
+    "catalog_id datasets datasets_ok datasets_error distributions "
+    "distributions_ok distributions_error distributions_percentage",
+)
+_RANK = {s: i for i, s in enumerate(STATUS_ORDER)}
 
 
 def split_by_catalog(
-    df: DataFrame, keep_id: bool = False
+    columns: list[str], rows: list[tuple], keep_id: bool = False
 ) -> tuple[list[str], dict[str, list[tuple]]]:
-    """Collect a small frame once and split its rows by ``catalog_id``:
-    ``(columns, {catalog_id: [row tuples]})``, with the ``catalog_id``
-    column dropped unless ``keep_id``. Catalogs without rows are absent."""
-    cols = df.columns
+    """Split rows by their ``catalog_id`` column: ``(columns,
+    {catalog_id: [row tuples]})``, with the ``catalog_id`` column dropped
+    unless ``keep_id``. Catalogs without rows are absent."""
+    cols = list(columns)
     at = cols.index("catalog_id")
-    rows: dict[str, list[tuple]] = {}
-    for r in df.collect():
+    out: dict[str, list[tuple]] = {}
+    for r in rows:
         t = tuple(r)
-        rows.setdefault(t[at], []).append(
+        out.setdefault(t[at], []).append(
             t if keep_id else t[:at] + t[at + 1:]
         )
-    return (cols if keep_id else cols[:at] + cols[at + 1:]), rows
+    return (cols if keep_id else cols[:at] + cols[at + 1:]), out
+
+
+def dataset_report(
+    datasets: list, errors: list[MetadataError]
+) -> tuple[list[DatasetStatus], list]:
+    """V3 report rows for every dataset, in order (``base.py:443-451``),
+    and the F1-harvested dataset rows (``base.py:455-463``): a dataset
+    is ERROR and not harvested when a metadata error names its
+    (catalog, dataset) key. A catalog-level error names no dataset, not
+    even one whose id is null."""
+    bad = {
+        (e.catalog_id, e.dataset_id) for e in errors if e.dataset_id is not None
+    }
+    report, harvested = [], []
+    for d in datasets:
+        ok = (d.catalog_id, d.dataset_id) not in bad
+        report.append(DatasetStatus(
+            d.catalog_id, d.dataset_id, STATUS_OK if ok else STATUS_ERROR
+        ))
+        if ok:
+            harvested.append(d)
+    return report, harvested
+
+
+def distribution_report(events: list[tuple]) -> list[DistributionStatus]:
+    """Roll status events ``(catalog_id, dataset_id, distribution_id,
+    status)`` up to one status per distribution, worst first, sorted by
+    status in ``STATUS_ORDER`` then distribution id (O1, ``base.py:903-913``; the
+    reference's order within a status is pandas-stable-sort incidental,
+    SURVEY §7 hard part (c))."""
+    worst: dict[tuple, int] = {}
+    for *key, status in events:
+        rank = _RANK[status]
+        worst[tuple(key)] = min(worst.get(tuple(key), rank), rank)
+    return sorted(
+        (DistributionStatus(*k, STATUS_ORDER[r]) for k, r in worst.items()),
+        key=lambda d: (_RANK[d.distribution_status], d.distribution_identifier),
+    )
+
+
+def ok_percentage(ok: int, n: int) -> float:
+    """A4 — ``100 * ok / n`` to 3 places, as Spark's ``round`` gives it:
+    HALF_UP on the double's shortest decimal form (Python's ``round``
+    is half-even on the binary value)."""
+    x = Decimal(repr(100.0 * ok / n))
+    return float(x.quantize(Decimal("0.001"), ROUND_HALF_UP))
+
+
+def indicator_records(
+    datasets: list[DatasetStatus], distributions: list[DistributionStatus]
+) -> list[Indicators]:
+    """A5 — the 7-metric indicator record (``base.py:1007-1018``) per
+    catalog. A catalog gets a record only when it has distribution rows;
+    one without dataset rows reads ``datasets`` 0 and no dataset status
+    counts."""
+    ds: dict[str, Counter] = {}
+    for d in datasets:
+        ds.setdefault(d.catalog_id, Counter())[d.dataset_status] += 1
+    dist: dict[str, Counter] = {}
+    for d in distributions:
+        dist.setdefault(d.catalog_id, Counter())[d.distribution_status] += 1
+    out = []
+    for cid, n in dist.items():
+        c = ds.get(cid)
+        out.append(Indicators(
+            cid,
+            c.total() if c else 0,
+            c[STATUS_OK] if c else None,
+            c[STATUS_ERROR] if c else None,
+            n.total(),
+            n[STATUS_OK],
+            n[STATUS_ERROR],
+            ok_percentage(n[STATUS_OK], n.total()),
+        ))
+    return out
 
 
 def write_report_xlsx(

@@ -58,7 +58,7 @@ def test_run_etl_releases_its_cached_frames(spark, tmp_path):
         spark, path, "released", str(tmp_path / "held"), file_resolver=_resolver
     )
     res = held.run()
-    mine = [*res.frames.values(), res.metadata_errors, res.observations]
+    mine = [*res.frames.values(), res.observations, res.series_report]
     cached = [df for df in mine if df.storageLevel != StorageLevel.NONE]
     try:
         run_etl(index, out, spark=spark, file_resolver=_resolver)
@@ -653,3 +653,24 @@ def test_cli_flag_parity_with_reference():
         "--interactive",
     ):
         assert flag in spellings, flag
+
+
+def test_ok_percentage_rounds_like_spark(spark):
+    """A4 — the indicator percentage equals Spark's
+    ``round(100.0 * ok / n, 3)`` (HALF_UP on the double's shortest
+    decimal) for every 0 <= ok <= n <= 300, n >= 1; Python's ``round``
+    differs on some of these pairs."""
+    from pyspark.sql import functions as F
+
+    from series_tiempo_ar_scraping_spark.sinks.reports import ok_percentage
+
+    pairs = (
+        spark.range(1, 301).withColumnRenamed("id", "n")
+        .crossJoin(spark.range(0, 301).withColumnRenamed("id", "ok"))
+        .filter("ok <= n")
+        .select("ok", "n", F.round(100.0 * F.col("ok") / F.col("n"), 3).alias("pct"))
+        .collect()
+    )
+    assert len(pairs) == 300 * 303 // 2
+    assert [r.pct for r in pairs] == [ok_percentage(r.ok, r.n) for r in pairs]
+    assert any(round(100.0 * r.ok / r.n, 3) != r.pct for r in pairs)

@@ -84,16 +84,16 @@ def test_all_distributions_ok(result):
     res, _ = result
     statuses = {
         r.distribution_identifier: r.distribution_status
-        for r in res.distribution_report.collect()
+        for r in res.distribution_report
     }
     assert statuses == {"1.1": "OK", "1.2": "OK", "200.1": "OK"}
-    ds = {r.dataset_identifier: r.dataset_status for r in res.dataset_report.collect()}
+    ds = {r.dataset_identifier: r.dataset_status for r in res.dataset_report}
     assert ds == {"1": "OK", "200": "OK"}
 
 
 def test_no_metadata_errors(result):
     res, _ = result
-    assert res.metadata_errors.count() == 0
+    assert res.metadata_errors == []
 
 
 def test_data_json_k7_k8(result):

@@ -177,6 +177,37 @@ def test_plan_and_k2_write_launch_no_job(spark, tmp_path):
         assert len(json.load(fh)["dataset"]) == 3
 
 
+def test_k2_k3_writes_after_a_run_launch_no_job(spark, tmp_path):
+    """After a pass, every frame K2/K3 publish is still a local
+    relation (the F1-harvested datasets included), so rewriting the
+    catalogs from ``res.frames`` runs no Spark job."""
+    from series_tiempo_ar_scraping_spark.sinks.metadata import (
+        write_json_catalog,
+        write_xlsx_catalog,
+    )
+
+    def resolver(ref: str) -> str:
+        return os.path.join(FIX, "files", ref.rsplit("/", 1)[-1])
+
+    pipe = _pipeline(
+        spark, {"acme": CATALOG, "xl": CATALOG_XLSX}, tmp_path,
+        file_resolver=resolver,
+    )
+    try:
+        frames = pipe.run().frames
+        # ds-broken, invalid in both catalogs, is not published
+        assert {
+            (r.catalog_id, r.dataset_id) for r in frames["datasets"].collect()
+        } == {(c, d) for c in ("acme", "xl") for d in ("ds-energy", "ds-prices")}
+        for writer, ext in ((write_json_catalog, "json"), (write_xlsx_catalog, "xlsx")):
+            targets = {c: str(tmp_path / f"{c}.{ext}") for c in ("acme", "xl")}
+            written, jobs = _jobs(spark, lambda: writer(frames, targets))
+            assert (ext, jobs) == (ext, 0)
+            assert written == list(targets.values())
+    finally:
+        pipe.unpersist()
+
+
 def test_reader_frames_are_local_relations(spark, tmp_path):
     """The workbook path list under ``extract_cells`` and the bulk
     reader's path dimension are local relations, not list-built RDDs."""
@@ -222,6 +253,6 @@ def test_unresolvable_file_records_a_reason(spark, tmp_path, dist_id, ref):
     assert res.processor_errors == [
         ("acme", ds, dist_id, f"file not found: {ref}")
     ]
-    assert [tuple(r) for r in res.distribution_report.collect()] == [
+    assert [tuple(r) for r in res.distribution_report] == [
         ("acme", ds, dist_id, "ERROR")
     ]

@@ -53,12 +53,12 @@ def test_metadata_normalization(result):
 
 def test_metadata_validation_flags_broken_dataset(result):
     res, _ = result
-    errs = res.metadata_errors.collect()
+    errs = res.metadata_errors
     assert any(
         e.dataset_id == "ds-broken" and e.rule == "dataset_accrualPeriodicity_format"
         for e in errs
     )
-    ds_rep = {r.dataset_identifier: r.dataset_status for r in res.dataset_report.collect()}
+    ds_rep = {r.dataset_identifier: r.dataset_status for r in res.dataset_report}
     # the broken dataset must APPEAR as an ERROR row (reference
     # base.py:443-451 reports invalid datasets; it does not drop them)
     assert ds_rep == {
@@ -108,17 +108,21 @@ def test_statuses(result):
     res, _ = result
     statuses = {
         r.distribution_identifier: r.distribution_status
-        for r in res.distribution_report.collect()
+        for r in res.distribution_report
     }
     assert statuses["2.1"] == "OK"
     assert statuses["1.1"] == "WARNING"  # V6 trim
     assert statuses["1.3"] == "ERROR"  # V5 header mismatch
     assert statuses["1.2"] == "OK"
+    # O1: worst status first, then by distribution id
+    assert [r.distribution_identifier for r in res.distribution_report] == [
+        "1.3", "1.1", "1.2", "2.1",
+    ]
 
 
 def test_indicators(result):
     res, _ = result
-    ind = res.indicators.collect()[0]
+    ind = res.indicators[0]
     # 3 datasets total: 2 OK + the metadata-broken one counted as error
     assert ind.datasets == 3 and ind.datasets_ok == 2
     assert ind.datasets_error == 1
@@ -176,7 +180,7 @@ def test_corrupt_data_file_is_error_row_not_crash(spark, tmp_path):
     res = pipe.run()
     statuses = {
         r.distribution_identifier: r.distribution_status
-        for r in res.distribution_report.collect()
+        for r in res.distribution_report
     }
     assert statuses["2.1"] == "ERROR"
     # scraped distributions still process

@@ -58,3 +58,37 @@ def test_no_reset_cols_unchanged(spark):
         .agg(F.max("cum").alias("cum"))
     )
     assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_reset_cols_null_group_kept(spark):
+    # a NULL reset key is one more group: its rows keep their running
+    # sum instead of vanishing from the offsets join
+    rows = [
+        (g, (i * 5) % 31, 1 + (i % 2))
+        for g in (None, 0, 1)
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "g int, v int, cnt int")
+    got = (
+        two_phase_prefix_sum(
+            df, ["v"], "cnt", out_col="cum", n_parts=6, reset_cols=["g"]
+        )
+        .groupBy("g", "v")
+        .agg(F.max("cum").alias("cum"))
+    )
+    w = (
+        Window.partitionBy("g")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    want = (
+        df.withColumn("cum", F.sum("cnt").over(w))
+        .groupBy("g", "v")
+        .agg(F.max("cum").alias("cum"))
+    )
+
+    def key(r):
+        return (r.g is not None, r.g or 0, r.v)
+
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+    assert any(r.g is None for r in got.collect())

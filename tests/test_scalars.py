@@ -12,7 +12,6 @@ from series_tiempo_ar_scraping_spark.functions.scalars import (
     host_rewrite,
     missing_to_null,
     stable_hash64,
-    status_sort_key,
     strip_spaces,
     url_basename,
 )
@@ -87,13 +86,6 @@ def test_host_rewrite(spark):
         lambda c: host_rewrite(c, "/out", "http://h"),
     )
     assert out == ["http://h/catalog/x.csv", ""]
-
-
-def test_status_sort_key(spark):
-    # parity: base.py:903-913 ERROR < WARNING < OK
-    assert _vals(spark, ["ERROR", "WARNING", "OK", "??"], status_sort_key) == [
-        0, 1, 2, 3,
-    ]
 
 
 def test_stable_hash64_matches_duckdb(spark):

@@ -156,7 +156,7 @@ def test_xls_scrape_matches_jsonl_twin(spark, xls_twin_run, tmp_path):
 def test_xls_statuses_match_twin(xls_twin_run):
     rep = {
         r.distribution_identifier: r.distribution_status
-        for r in xls_twin_run.distribution_report.collect()
+        for r in xls_twin_run.distribution_report
     }
     # Same statuses the jsonl-based run produces (test_pipeline.py):
     # 1.1 scraped OK but trim-warned, 1.2 OK, 1.3 header ERROR, 2.1 OK.
