@@ -53,7 +53,9 @@ def run_etl(
     (V7 at catalog level). Inside the pass, a bad input file costs its
     distribution one ERROR report row (V7 at distribution level). The
     pass runs once: should it still raise, every catalog in it gets an
-    ``error`` entry, and no catalog runs twice."""
+    ``error`` entry, and no catalog runs twice. Every Spark job runs
+    inside the pass: the reports, the EP1 contracts included, are Python
+    over the rows it returns."""
     from series_tiempo_ar_scraping_spark.plans.pipeline import (
         CatalogPipeline,
         read_catalog,
@@ -131,14 +133,12 @@ def run_etl(
             pipe.unpersist()
 
     def report_pass(res, loaded: dict[str, dict]) -> dict[str, dict]:
-        from series_tiempo_ar_scraping_spark.operators.expectations import (
-            pipeline_contract_report,
-        )
-        from series_tiempo_ar_scraping_spark.session import local_frame
         from series_tiempo_ar_scraping_spark.sinks.reports import (
+            ContractCheck,
             DatasetStatus,
             DistributionStatus,
             MetadataError,
+            contract_rows,
             split_by_catalog,
             write_report_xlsx,
         )
@@ -166,23 +166,15 @@ def run_etl(
                 DistributionStatus._fields, res.distribution_report
             ),
         }
-        # EP1 — declarative data contracts over the run's OWN produced
-        # frames (operators/expectations.py), per catalog: scraped
+        # EP1 — data contracts over the run's OWN outputs, per catalog,
+        # from the V4 series rows and the dataset report: scraped
         # observations must carry routing ids + a time index, the
         # dataset-status enum stays closed. Violations export through
         # the same K4 channel as the other report workbooks and ride
         # the stage emails.
-        contracts = pipeline_contract_report(
-            res.observations,
-            local_frame(
-                spark,
-                res.dataset_report,
-                ", ".join(f"{c} string" for c in DatasetStatus._fields),
-            ),
-            by=["catalog_id"],
-        )
         reports["reporte-expectations"] = split_by_catalog(
-            contracts.columns, contracts.collect()
+            ContractCheck._fields,
+            contract_rows(res.series_report, res.dataset_report),
         )
 
         out: dict[str, dict] = {}

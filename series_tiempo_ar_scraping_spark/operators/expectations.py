@@ -121,35 +121,3 @@ def run_expectations(
         out = rows if out is None else out.unionByName(rows)
     return out
 
-
-def pipeline_contract_report(
-    observations: DataFrame,
-    dataset_report: DataFrame,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """EP1 — the default data contracts the nightly ETL applies to its
-    OWN produced frames, inside ``main.run_etl`` (not just as a catalog
-    entry): every scraped observation must carry its routing ids and a
-    time index, and the dataset report's status enum must stay closed.
-    Returns the long (table, column, check, n_rows, n_violations,
-    passed) report. One aggregate scan per frame, as always — at fleet
-    scale these contracts ride the scan the reports already paid for.
-    ``by`` groups the report as in ``run_expectations``: by
-    ``catalog_id``, each catalog of a pass gets its own rows (none for a
-    frame where it has no rows)."""
-    return run_expectations(
-        {"observations": observations, "dataset_report": dataset_report},
-        [
-            Expectation("observations", "distribution_id", "not_null"),
-            Expectation("observations", "series_id", "not_null"),
-            Expectation("observations", "ts", "not_null"),
-            Expectation("dataset_report", "dataset_identifier", "not_null"),
-            Expectation(
-                "dataset_report",
-                "dataset_status",
-                "accepted_values",
-                ("OK", "ERROR"),
-            ),
-        ],
-        by,
-    )

@@ -1,6 +1,8 @@
 """Filters / projections / routing (SURVEY §2.3: F1-F8).
 
-All are plain Catalyst filter/join expressions — pushdown-able, prune-able.
+All but F2 are plain Catalyst filter expressions — pushdown-able,
+prune-able, and folded into the local relations planning builds. F2
+filters metadata-plane rows the driver already holds, on the driver.
 """
 
 from __future__ import annotations
@@ -20,22 +22,31 @@ from series_tiempo_ar_scraping_spark.functions.scalars import (
     file_extension,
     strip_spaces,
 )
+from series_tiempo_ar_scraping_spark.session import local_frame
 
 
 def time_series_distributions(distributions: DataFrame, fields: DataFrame) -> DataFrame:
     """F2 — distributions having a ``time_index`` field
     (``base.py:478-487,519-528`` → ``get_distributions(only_time_series=True)``).
 
-    Semi-join on (catalog, distribution): distribution ids are
-    catalog-scoped.
+    A semi-join on (catalog, distribution), null keys matching nothing
+    (distribution ids are catalog-scoped), over collected rows: on the
+    local relations ``CatalogPipeline.plan`` builds, both collects and
+    the result, itself a local relation, run no Spark job.
     """
     keys = ["catalog_id", "distribution_id"]
-    ts_fields = (
-        fields.filter(F.col("specialType") == "time_index")
+    ts_keys = {
+        tuple(r)
+        for r in fields.filter(F.col("specialType") == "time_index")
         .select(*keys)
-        .distinct()
-    )
-    return distributions.join(F.broadcast(ts_fields), on=keys, how="left_semi")
+        .collect()
+    }
+    rows = [
+        r for r in distributions.collect()
+        if None not in (k := (r.catalog_id, r.distribution_id))
+        and k in ts_keys
+    ]
+    return local_frame(distributions.sparkSession, rows, distributions.schema)
 
 
 def filter_distribution_id(df: DataFrame, distribution_id: str | None) -> DataFrame:

@@ -5,8 +5,12 @@ already downloads, validates and writes — ``base.py:65-73,376-504``); here
 phase 1 is **pure planning** (build normalized frames + a routed task
 frame, zero side effects) and phase 2 executes DataFrame actions. Statuses
 are data (V7); after the K1 write the pass collects its status events
-and V1 error rows once each and builds every report from them in plain
-Python (``sinks/reports.py``).
+(V4 series rows, V5 header failures, V6 trims) and V1 error rows once
+each and builds every report from them in plain Python
+(``sinks/reports.py``). Each data-plane result is computed once: the
+scraped table (observations and V6 trims in one frame) and the
+observations are cached, so the event collect reads what K1 already
+computed.
 
 One pass runs any number of catalogs: their frames are unioned, every
 join keys on ``catalog_id`` (dataset and distribution ids are
@@ -19,11 +23,11 @@ on the driver (``sources/catalog_json.py``, ``sources/xlsx.py``) and
 handed to Spark once: planning concatenates each entity's rows over the
 pass (under the driver-memory cap) and builds its frame as one Arrow
 local relation (``session.local_frame``). Downstream plans start at a
-``LocalRelation``, no metadata frame is cached, and planning runs no
-Spark job. Every other frame the driver builds on the pass (the bulk
-reader's path dimension, the workbook path list and map, the empty
-observation frame) is a local relation too, so none runs a
-Python-worker job.
+``LocalRelation``, no metadata frame is cached, and neither planning nor
+the routing collect (F2 over the plan's rows) runs a Spark job. Every
+other frame the driver builds on the pass (the bulk reader's path
+dimension, the workbook path list and map, the empty observation frame)
+is a local relation too, so none runs a Python-worker job.
 """
 
 from __future__ import annotations
@@ -73,8 +77,9 @@ from series_tiempo_ar_scraping_spark.sources.distribution_csv import (
 )
 from series_tiempo_ar_scraping_spark.sources.scrape import (
     check_headers,
-    scrape_observations,
+    scrape_table,
     scraping_params,
+    split_scraped,
 )
 
 # The metadata rows (and the routing list, one row per routed
@@ -112,8 +117,8 @@ def read_catalog(path: str, catalog_id: str) -> dict[str, list[tuple]]:
 class PipelineResult:
     frames: dict[str, DataFrame]
     observations: DataFrame
-    series_report: DataFrame
     # the report rows of every catalog of the pass
+    series_report: list[reports.SeriesStatus]
     metadata_errors: list[reports.MetadataError]
     dataset_report: list[reports.DatasetStatus]
     distribution_report: list[reports.DistributionStatus]
@@ -212,13 +217,13 @@ class CatalogPipeline:
     def run(self) -> PipelineResult:
         # local relations: no metadata frame needs a cache
         frames = self.plan()
-        ts_dists = self._cache(
-            time_series_distributions(frames["distributions"], frames["fields"])
+        ts_dists = time_series_distributions(
+            frames["distributions"], frames["fields"]
         )
 
         # ONE routing collect (one row per routed distribution, bounded
-        # by the distributions plan() capped) serves every reader and the
-        # K1 fileName map.
+        # by the distributions plan() capped; a local relation, so no
+        # job) serves every reader and the K1 fileName map.
         keys = ["catalog_id", "dataset_id", "distribution_id"]
         routed = ts_dists.select(
             *keys, "method", "downloadURL", "scrapingFileURL", "fileName"
@@ -284,8 +289,8 @@ class CatalogPipeline:
                     (c, d, r, repr(exc)) for c, d, r, _p in items
                 )
 
-        # Status events (catalog, dataset, distribution, status), rolled
-        # up worst-first below; the workbook route adds V5/V6 events.
+        # The workbook route's V5/V6 status events (catalog, dataset,
+        # distribution, status), collected with the V4 rows below.
         events: list[DataFrame] = []
         # excel route (S8): extract cells once per distinct workbook (A1),
         # then scrape every series relationally. Cells key on the resolved
@@ -308,9 +313,12 @@ class CatalogPipeline:
                 frames["fields"], located, workbook=F.col("workbook")
             )
             headered = self._cache(check_headers(cells, sp))
-            obs_sc, table_ends = scrape_observations(
-                cells, headered.filter(F.col("header_ok")), tp
+            # one scrape: K1 fills the cache, the event collect reads
+            # the V6 trims from it
+            scraped = self._cache(
+                scrape_table(cells, headered.filter(F.col("header_ok")), tp)
             )
+            obs_sc, table_ends = split_scraped(scraped)
             obs_parts.append(obs_sc)
             # V5 header failures are ERROR; V6 trims are WARNING
             events.append(
@@ -344,20 +352,16 @@ class CatalogPipeline:
                 )[F.col("specialTypeDetail")].alias("freq_code"),
             )
         )
-        series_rep = self._cache(validate_observations(
+        v4 = validate_observations(
             observations.join(
                 F.broadcast(freq), ["catalog_id", "distribution_id"], "left"
             )
-        ))
-        # Every routed ts-distribution appears in the report — one that
-        # yielded no observations at all is an ERROR (the reference's
-        # per-distribution try/except would have caught the processor
-        # failure, V7 ``base.py:198-207``).
-        v4 = series_rep.select(*keys, F.col("series_status").alias("status"))
-        events.append(
-            ts_dists.select(*keys)
-            .join(v4, keys, "left")
-            .fillna("ERROR", subset=["status"])
+        ).select(
+            *keys,
+            F.col("series_status").alias("status"),
+            "series_id",
+            "n_obs",
+            "n_null_ts",
         )
 
         # K1: every catalog's wide CSVs in one partitionBy text write
@@ -375,11 +379,23 @@ class CatalogPipeline:
         )
 
         # The report plane: after K1 has materialized the data plane,
-        # one collect of the status events and one of the V1 error rows;
-        # the rest is Python over them and over the dataset rows of
-        # plan()'s local relation (a collect of it runs no job).
+        # one collect of the status events with the V4 series rows and
+        # one of the V1 error rows; the rest is Python over them and
+        # over the dataset rows of plan()'s local relation (a collect of
+        # it runs no job). Every routed distribution appears in the
+        # report: one without V4 rows is an ERROR.
+        collected = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            events,
+            v4,
+        ).collect()
+        # V5/V6 events have no series count; a V4 row counts at least 1
+        series_rep = [
+            reports.SeriesStatus(*r) for r in collected if r.n_obs is not None
+        ]
         dist_report = reports.distribution_report(
-            functools.reduce(DataFrame.unionByName, events).collect()
+            [r[:4] for r in collected if r.n_obs is None]
+            + reports.series_events([tuple(r[:3]) for r in routed], series_rep)
         )
         meta_errors = [
             reports.MetadataError(**r.asDict())

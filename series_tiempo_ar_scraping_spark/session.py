@@ -88,6 +88,10 @@ def get_spark(
         # few dozen times a pass, pinned hundreds of MB. 2 MB is inside
         # Spark's own 1-64 MB range; a larger record gets its own page.
         .config("spark.buffer.pageSize", str(_PAGE_BYTES))
+        # On by default, it makes every DataFrame API call walk the
+        # Python stack (and retry importing IPython) to tag the plan
+        # with its call site; errors lose those lines, nothing else
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -2,10 +2,11 @@
 composition.
 
 As the reference does in pandas (``base.py:873-915,1007-1043``), the
-reports are built on the driver: from the status events and
-metadata-error rows a pass collects once, a few dozen rows. Each report
-splits by catalog and writes as XLSX through the stdlib OOXML writer
-(``base.py:679-703``); mail (``base.py:707-743,836-871``) is composed by
+reports are built on the driver, the EP1 data-contract report too: from
+the status events, V4 series rows and metadata-error rows a pass
+collects once, a few dozen rows. Each report splits by catalog and
+writes as XLSX through the stdlib OOXML writer (``base.py:679-703``);
+mail (``base.py:707-743,836-871``) is composed by
 pure functions over the indicator rows and sent dry-run by default.
 """
 
@@ -38,6 +39,17 @@ Indicators = namedtuple(
     "Indicators",
     "catalog_id datasets datasets_ok datasets_error distributions "
     "distributions_ok distributions_error distributions_percentage",
+)
+# V4: one row per series, as the pass collects them
+SeriesStatus = namedtuple(
+    "SeriesStatus",
+    "catalog_id dataset_id distribution_id series_status series_id "
+    "n_obs n_null_ts",
+)
+# EP1: one row per (catalog, contract), the reporte-expectations columns
+ContractCheck = namedtuple(
+    "ContractCheck",
+    "catalog_id table_name column_name check n_rows n_violations passed",
 )
 _RANK = {s: i for i, s in enumerate(STATUS_ORDER)}
 
@@ -95,6 +107,77 @@ def distribution_report(events: list[tuple]) -> list[DistributionStatus]:
         (DistributionStatus(*k, STATUS_ORDER[r]) for k, r in worst.items()),
         key=lambda d: (_RANK[d.distribution_status], d.distribution_identifier),
     )
+
+
+def series_events(
+    routed: list[tuple], series: list[SeriesStatus]
+) -> list[tuple]:
+    """V4 status events ``(catalog_id, dataset_id, distribution_id,
+    status)``: each routed distribution's series statuses, or one ERROR
+    when it has none (it yielded no observations: the reference's
+    per-distribution try/except would have caught the processor failure,
+    V7 ``base.py:198-207``). Keys match as in a SQL join, so a key with a
+    null part matches no series."""
+    statuses: dict[tuple, list[str]] = {}
+    for s in series:
+        statuses.setdefault(tuple(s[:3]), []).append(s.series_status)
+    return [
+        (*k, status)
+        for k in routed
+        for status in (None not in k and statuses.get(k)) or [STATUS_ERROR]
+    ]
+
+
+# (column, check) of each EP1 contract on a table, in report order
+_OBSERVATION_CONTRACTS = (
+    ("distribution_id", "not_null"),
+    ("series_id", "not_null"),
+    ("ts", "not_null"),
+)
+_DATASET_CONTRACTS = (
+    ("dataset_identifier", "not_null"),
+    ("dataset_status", "accepted_values"),
+)
+
+
+def contract_rows(
+    series: list[SeriesStatus], datasets: list[DatasetStatus]
+) -> list[ContractCheck]:
+    """EP1 — the default data contracts over the pass's own outputs, per
+    catalog: every scraped observation carries its routing ids and a time
+    index, and the dataset report's status enum stays closed. The
+    observation counts come from the V4 rows, which group every
+    observation (null keys included) by series: ``n_rows`` is their
+    ``n_obs`` sum, a null ``distribution_id`` or ``series_id`` costs its
+    group's ``n_obs``, a null ``ts`` is counted in ``n_null_ts``. A
+    catalog reports on a table only when it has rows in it; within a
+    catalog the observation contracts come first."""
+    obs: dict[str, list[int]] = {}
+    for s in series:
+        c = obs.setdefault(s.catalog_id, [0, 0, 0, 0])
+        c[0] += s.n_obs
+        c[1] += s.n_obs if s.distribution_id is None else 0
+        c[2] += s.n_obs if s.series_id is None else 0
+        c[3] += s.n_null_ts
+    ds: dict[str, list[int]] = {}
+    for d in datasets:
+        c = ds.setdefault(d.catalog_id, [0, 0, 0])
+        c[0] += 1
+        c[1] += d.dataset_identifier is None
+        c[2] += d.dataset_status not in (None, STATUS_OK, STATUS_ERROR)
+    out = []
+    for cid in dict.fromkeys([*obs, *ds]):
+        for table, counts, contracts in (
+            ("observations", obs.get(cid), _OBSERVATION_CONTRACTS),
+            ("dataset_report", ds.get(cid), _DATASET_CONTRACTS),
+        ):
+            if counts:
+                n, *violations = counts
+                out.extend(
+                    ContractCheck(cid, table, col, check, n, v, int(v == 0))
+                    for (col, check), v in zip(contracts, violations)
+                )
+    return out
 
 
 def ok_percentage(ok: int, n: int) -> float:

@@ -7,7 +7,10 @@ a time-index column with its own start cell and declared frequency, the
 missing-token list, the header-id check (V5), and the ``table_end`` /
 ``end`` trim signal (V6). No pandas in the hot path — everything is joins
 and window expressions, so a catalog with 10⁶ scraped series runs as a
-handful of shuffles.
+handful of shuffles. As in the reference, where one xlseries call per
+workbook yields both, the observations and the trim signal come from one
+frame: the value cells full-outer-joined to the time cells once
+(``scrape_table``), which a pass caches and splits (``split_scraped``).
 
 Time-index semantics: the time column's cells are parsed as dates; rows
 whose cell fails to parse get a **synthesized** timestamp from the series
@@ -115,12 +118,20 @@ def check_headers(cells: DataFrame, series_params: DataFrame) -> DataFrame:
     )
 
 
-def scrape_observations(cells: DataFrame, series_params: DataFrame, time_params: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Extract long observations for every scraped series in one pass.
+_DIST = ["catalog_id", "dataset_id", "distribution_id"]
 
-    Returns ``(observations, table_ends)`` where table_ends carries the V6
-    trim signal per distribution (``table_end`` = last row with any data
-    value, ``end`` = last row with a parseable date).
+
+def scrape_table(cells: DataFrame, series_params: DataFrame, time_params: DataFrame) -> DataFrame:
+    """Every scraped distribution's bounded value cells and time cells,
+    full-outer-joined once on (distribution, row offset).
+
+    A row with both sides is one observation; a value cell with no time
+    row (the V6 continuation past the last time row) has null time
+    columns, and a time row with no value cell (a date whose values are
+    all blank) has null value columns. ``cell_row`` / ``time_row`` mark
+    the sides (a null ``field_id`` is still a value cell). One frame
+    yields the observations and the V6 trim signal, so a caller that
+    caches it scrapes each workbook once (``split_scraped``).
 
     Plan shape: cells is the big frame; params are broadcast. Two joins
     (values→params, time→params), one join values⋈time on (distribution,
@@ -239,31 +250,53 @@ def scrape_observations(cells: DataFrame, series_params: DataFrame, time_params:
         "ts", F.coalesce("parsed_ts", synthesized)
     )
 
-    obs = vals.join(
-        times_filled.select(
-            "catalog_id", "dataset_id", "distribution_id", "offset", "ts", "parsed_ts"
-        ),
-        ["catalog_id", "dataset_id", "distribution_id", "offset"],
-        "inner",
+    return vals.join(
+        times_filled.select(*_DIST, "offset", "time_row", "parsed_ts", "ts"),
+        [*_DIST, "offset"],
+        "full",
+    )
+
+
+def split_scraped(table: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``scrape_table``'s frame → ``(observations, table_ends)``.
+
+    The observations are the rows with both sides. ``table_ends`` carries
+    the V6 trim signal per distribution with a data value: ``table_end``
+    = last row with a data value, ``end`` = last row with a parseable
+    date (0 when none). A time row repeats once per value cell at its
+    offset, which a max does not see.
+    """
+    obs = table.filter(
+        F.col("cell_row").isNotNull() & F.col("time_row").isNotNull()
     ).select(
-        "catalog_id",
-        "dataset_id",
-        "distribution_id",
+        *_DIST,
         F.col("field_id").alias("series_id"),
         "series_title",
         "ts",
         "value",
     )
-
-    # V6 trim signal: last data row vs last parsed-date row.
-    table_end = vals.filter(F.col("raw_value").isNotNull()).groupBy(
-        "catalog_id", "dataset_id", "distribution_id"
-    ).agg(F.max("cell_row").alias("table_end"))
-    end = times.filter(F.col("parsed_ts").isNotNull()).groupBy(
-        "catalog_id", "dataset_id", "distribution_id"
-    ).agg(F.max("time_row").alias("end"))
-    table_ends = table_end.join(
-        end, ["catalog_id", "dataset_id", "distribution_id"], "left"
-    ).withColumn("end", F.coalesce("end", F.lit(0)))
-
+    table_ends = (
+        table.groupBy(*_DIST)
+        .agg(
+            F.max(
+                F.when(F.col("raw_value").isNotNull(), F.col("cell_row"))
+            ).alias("table_end"),
+            F.coalesce(
+                F.max(
+                    F.when(F.col("parsed_ts").isNotNull(), F.col("time_row"))
+                ),
+                F.lit(0),
+            ).alias("end"),
+        )
+        .filter(F.col("table_end").isNotNull())
+    )
     return obs, table_ends
+
+
+def scrape_observations(cells: DataFrame, series_params: DataFrame, time_params: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Extract long observations for every scraped series in one pass.
+
+    Returns ``(observations, table_ends)``: ``split_scraped`` over
+    ``scrape_table``.
+    """
+    return split_scraped(scrape_table(cells, series_params, time_params))

@@ -58,7 +58,7 @@ def test_run_etl_releases_its_cached_frames(spark, tmp_path):
         spark, path, "released", str(tmp_path / "held"), file_resolver=_resolver
     )
     res = held.run()
-    mine = [*res.frames.values(), res.observations, res.series_report]
+    mine = [*res.frames.values(), res.observations]
     cached = [df for df in mine if df.storageLevel != StorageLevel.NONE]
     try:
         run_etl(index, out, spark=spark, file_resolver=_resolver)

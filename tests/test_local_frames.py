@@ -1,9 +1,10 @@
 """Driver-side frames of the one-pass ETL are Arrow local relations.
 
 ``CatalogPipeline.plan`` builds each metadata frame once, from the
-rows the driver parsed, as a ``LocalRelation``, and neither planning nor
-the K2 write over its frames runs a Spark job; the bulk reader's path
-dimension and the workbook path list are local relations too. Arrow
+rows the driver parsed, as a ``LocalRelation``, and neither planning,
+the routing rows (F2) nor the K2 write over its frames runs a Spark job;
+the bulk reader's path dimension and the workbook path list are local
+relations too, and ``run_etl`` runs no job outside the pass. Arrow
 conversion can fall back to a list-built (Python-worker) frame without a
 word, so the plan shape is read here from the optimized plan, node by
 node.
@@ -134,13 +135,19 @@ def test_plan_collect_is_capped(spark, tmp_path, monkeypatch):
         _pipeline(spark, {"acme": CATALOG}, tmp_path).plan()
 
 
-def _jobs(spark, fn):
+def _group() -> str:
+    return f"job-count-{uuid.uuid4().hex}"
+
+
+def _jobs(spark, fn, *groups: str):
     """``fn()`` and the number of Spark jobs it launched, counted under
-    a job group of its own. The status tracker learns of jobs through the
-    listener bus, in order, so once it lists a later job of another
-    group it lists every job ``fn`` ran."""
+    a job group of its own; with ``groups``, also the number of jobs
+    ``fn`` launched under each of them (groups it sets itself). The
+    status tracker learns of jobs through the listener bus, in order, so
+    once it lists a later job of another group it lists every job ``fn``
+    ran."""
     sc = spark.sparkContext
-    group, marker = (f"job-count-{uuid.uuid4().hex}" for _ in range(2))
+    group, marker = _group(), _group()
     try:
         sc.setJobGroup(group, "job count")
         out = fn()
@@ -153,7 +160,10 @@ def _jobs(spark, fn):
     while not sc.statusTracker().getJobIdsForGroup(marker):
         assert time.monotonic() < deadline, "marker job never listed"
         time.sleep(0.05)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    counts = [
+        len(sc.statusTracker().getJobIdsForGroup(g)) for g in (group, *groups)
+    ]
+    return (out, *counts)
 
 
 def test_plan_and_k2_write_launch_no_job(spark, tmp_path):
@@ -256,3 +266,65 @@ def test_unresolvable_file_records_a_reason(spark, tmp_path, dist_id, ref):
     assert [tuple(r) for r in res.distribution_report] == [
         ("acme", ds, dist_id, "ERROR")
     ]
+
+
+def test_routing_rows_launch_no_job(spark, tmp_path):
+    """F2 over the plan's frames filters rows the driver holds: building
+    it and collecting its routing rows runs no Spark job."""
+    from series_tiempo_ar_scraping_spark.operators.filters import (
+        time_series_distributions,
+    )
+
+    frames = _pipeline(spark, {"acme": CATALOG, "xl": CATALOG_XLSX}, tmp_path).plan()
+    routed, jobs = _jobs(
+        spark,
+        lambda: time_series_distributions(
+            frames["distributions"], frames["fields"]
+        ).collect(),
+    )
+    assert jobs == 0
+    # 1.4 has no time-index field in either catalog
+    assert sorted((r.catalog_id, r.distribution_id) for r in routed) == [
+        (c, d) for c in ("acme", "xl") for d in ("1.1", "1.2", "1.3", "2.1")
+    ]
+
+
+def test_run_etl_launches_no_job_outside_the_pass(spark, tmp_path, monkeypatch):
+    """Every Spark job of ``run_etl`` runs inside ``CatalogPipeline.run``:
+    the report workbooks, the EP1 contract report included, are built
+    from the rows the pass returns."""
+    from series_tiempo_ar_scraping_spark.main import run_etl
+
+    sc = spark.sparkContext
+    inside, outside = _group(), _group()
+    run = P.CatalogPipeline.run
+
+    def grouped_run(self):
+        sc.setJobGroup(inside, "pass")
+        try:
+            return run(self)
+        finally:
+            sc.setJobGroup(outside, "after the pass")
+
+    monkeypatch.setattr(P.CatalogPipeline, "run", grouped_run)
+
+    def resolver(ref: str) -> str:
+        return os.path.join(FIX, "files", ref.rsplit("/", 1)[-1])
+
+    index = {
+        "acme": {"metadata_path": CATALOG},
+        "xl": {"metadata_path": CATALOG_XLSX},
+    }
+    results, before, in_pass, after = _jobs(
+        spark,
+        lambda: run_etl(
+            index, str(tmp_path / "out"), spark=spark, file_resolver=resolver
+        ),
+        inside,
+        outside,
+    )
+    assert (before, after) == (0, 0)
+    assert in_pass > 0
+    assert {cid: r["contract_violations"] for cid, r in results.items()} == {
+        "acme": 0, "xl": 0,
+    }

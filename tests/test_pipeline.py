@@ -406,6 +406,63 @@ def test_blank_value_cell_is_missing_not_table_end(spark):
     assert e.end == 5         # last dated row
 
 
+def test_scrape_observations_v6_signal_from_one_join(spark):
+    """The observations and the V6 trim signal come from one join of the
+    value cells and the time cells; pinned values of the two-join form.
+    The sheet holds a trimmed table (data rows 8-9 past the last time
+    row), a second table stacked at rows 12-14, a time row (6) whose
+    values are all blank, and two unparseable date cells (rows 4 and 7,
+    synthesized). Row 6 is the last dated row: only the time side has
+    it, so a join that keeps only rows with a value cell reads end 5."""
+    from series_tiempo_ar_scraping_spark.sources.scrape import (
+        scrape_observations,
+    )
+
+    times = ["2020", "2021", "2022", "s/d", "2024", "2025", "nope"]
+    cells = spark.createDataFrame(
+        [("f", "s", "A", r, v) for r, v in enumerate(times, 1)]
+        + [("f", "s", "A", r, f"{2018 + r}") for r in (12, 13, 14)]
+        + [("f", "s", "B", r, f"{r}.5") for r in (1, 2, 3, 4, 5, 7, 8, 9)]
+        + [("f", "s", "B", r, "99") for r in (12, 13, 14)]
+        + [("f", "s", "C", r, f"-{r}") for r in (1, 2, 3, 4, 5)],
+        "file string, sheet string, col string, row long, value string",
+    )
+    series_params = spark.createDataFrame(
+        [
+            ("f", "s", col, 1, "c", "d", "r1", fid, fid.upper())
+            for col, fid in (("B", "b"), ("C", "c"))
+        ],
+        "file string, sheet string, data_col string, data_start_row long,"
+        " catalog_id string, dataset_id string, distribution_id string,"
+        " field_id string, series_title string",
+    )
+    time_params = spark.createDataFrame(
+        [("f", "s", "A", 1, "c", "d", "r1", "Y")],
+        "file string, sheet string, time_col string, time_start_row long,"
+        " catalog_id string, dataset_id string, distribution_id string,"
+        " freq_code string",
+    )
+    obs, ends = scrape_observations(cells, series_params, time_params)
+    assert obs.schema.simpleString() == (
+        "struct<catalog_id:string,dataset_id:string,distribution_id:string,"
+        "series_id:string,series_title:string,ts:date,value:double>"
+    )
+    got = sorted((r.series_id, r.ts.isoformat(), r.value) for r in obs.collect())
+    assert got == [
+        ("b", "2020-01-01", 1.5), ("b", "2021-01-01", 2.5),
+        ("b", "2022-01-01", 3.5), ("b", "2023-01-01", 4.5),
+        ("b", "2024-01-01", 5.5), ("b", "2026-01-01", 7.5),
+        ("c", "2020-01-01", -1.0), ("c", "2021-01-01", -2.0),
+        ("c", "2022-01-01", -3.0), ("c", "2023-01-01", -4.0),
+        ("c", "2024-01-01", -5.0),
+    ]
+    assert ends.schema.simpleString() == (
+        "struct<catalog_id:string,dataset_id:string,distribution_id:string,"
+        "table_end:bigint,end:bigint>"
+    )
+    assert [tuple(r) for r in ends.collect()] == [("c", "d", "r1", 9, 6)]
+
+
 def test_same_titled_series_across_distributions_not_cross_flagged(spark):
     """series_id is the column TITLE on the CSV routes — two
     distributions both having a 'total' column with overlapping dates

@@ -17,6 +17,7 @@ from series_tiempo_ar_scraping_spark.operators.validation import (
     dataset_rules,
     distribution_rules,
     field_rules,
+    validate_observations,
 )
 from series_tiempo_ar_scraping_spark.registry import load_queries
 from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
@@ -326,34 +327,94 @@ def test_expectation_engine_one_scan_per_table(spark, sf_dir):
 
 
 def test_pipeline_contract_report_frame_availability(spark):
-    """EP1 wiring contract: empty produced frames (a pass whose readers
-    all failed) violate nothing, and a planted violation in either frame
-    surfaces in the long report."""
+    """EP1 wiring contract: the contract rows come from the V4 series
+    rows and the dataset report. Empty outputs (a pass whose readers all
+    failed) report nothing, as the Spark report grouped by catalog does;
+    a planted violation in either output surfaces in the long report,
+    which equals the grouped Spark report over the observations the V4
+    rows summarize."""
     from series_tiempo_ar_scraping_spark.operators.expectations import (
-        pipeline_contract_report,
+        Expectation,
+        run_expectations,
+    )
+    from series_tiempo_ar_scraping_spark.sinks.reports import (
+        ContractCheck,
+        DatasetStatus,
+        SeriesStatus,
+        contract_rows,
+        split_by_catalog,
     )
 
+    specs = [
+        Expectation("observations", "distribution_id", "not_null"),
+        Expectation("observations", "series_id", "not_null"),
+        Expectation("observations", "ts", "not_null"),
+        Expectation("dataset_report", "dataset_identifier", "not_null"),
+        Expectation(
+            "dataset_report", "dataset_status", "accepted_values", ("OK", "ERROR")
+        ),
+    ]
+
+    def spark_report(obs, rep):
+        df = run_expectations(
+            {"observations": obs, "dataset_report": rep}, specs, ["catalog_id"]
+        )
+        return split_by_catalog(df.columns, df.collect())
+
+    # c1 plants a null series id and a status outside the enum; c2 a
+    # null distribution id and a null ts and has no dataset rows; c3
+    # has a null dataset id and no observations
     obs = spark.createDataFrame(
-        [("d1", "s1", "2024-01-01"), ("d2", None, "2024-01-02")],
-        "distribution_id string, series_id string, ts string",
-    )
+        [
+            ("c1", "ds", "d1", "s1", "2024-01-01", 1.0),
+            ("c1", "ds", "d2", None, "2024-01-02", 2.0),
+            ("c2", "ds", None, "s1", "2024-01-01", 3.0),
+            ("c2", "ds", "d1", "s1", None, 4.0),
+            ("c2", "ds", "d1", "s1", "2024-02-01", None),
+        ],
+        "catalog_id string, dataset_id string, distribution_id string,"
+        " series_id string, ts string, value double",
+    ).withColumns({"ts": F.col("ts").cast("date"), "freq_code": F.lit("M")})
+    datasets = [
+        DatasetStatus("c1", "a", "OK"),
+        DatasetStatus("c1", "b", "BOGUS"),
+        DatasetStatus("c3", None, "ERROR"),
+    ]
     rep = spark.createDataFrame(
-        [("a", "OK"), ("b", "BOGUS")],
-        "dataset_identifier string, dataset_status string",
+        datasets, ", ".join(f"{c} string" for c in DatasetStatus._fields)
     )
-    # an EMPTY produced frame violates nothing — the conditional sums
-    # must coalesce to 0, not surface SUM-over-nothing NULLs (which
-    # would crash the run_etl summary sum)
-    empty_rows = pipeline_contract_report(obs.limit(0), rep.limit(0)).collect()
-    assert len(empty_rows) == 5
-    assert {r.n_violations for r in empty_rows} == {0}
-    assert {r.n_rows for r in empty_rows} == {0}
-    assert {r.passed for r in empty_rows} == {1}
+    series = [
+        SeriesStatus(*r)
+        for r in validate_observations(obs)
+        .select(
+            "catalog_id", "dataset_id", "distribution_id", "series_status",
+            "series_id", "n_obs", "n_null_ts",
+        )
+        .collect()
+    ]
 
+    # EMPTY outputs violate nothing: grouped by catalog, they report no
+    # row at all (and no SUM-over-nothing NULL reaches the run_etl sum)
+    assert contract_rows([], []) == []
+    assert spark_report(obs.limit(0), rep.limit(0)) == (
+        list(ContractCheck._fields[1:]), {}
+    )
+
+    rows = contract_rows(series, datasets)
+    assert split_by_catalog(ContractCheck._fields, rows) == spark_report(obs, rep)
     both = {
-        (r.table_name, r.column_name, r.check): r.n_violations
-        for r in pipeline_contract_report(obs, rep).collect()
+        (r.catalog_id, r.table_name, r.column_name, r.check): r.n_violations
+        for r in rows
     }
-    assert both[("observations", "series_id", "not_null")] == 1
-    assert both[("observations", "distribution_id", "not_null")] == 0
-    assert both[("dataset_report", "dataset_status", "accepted_values")] == 1
+    assert both[("c1", "observations", "series_id", "not_null")] == 1
+    assert both[("c1", "observations", "distribution_id", "not_null")] == 0
+    assert both[("c1", "dataset_report", "dataset_status", "accepted_values")] == 1
+    assert both[("c2", "observations", "distribution_id", "not_null")] == 1
+    assert both[("c2", "observations", "ts", "not_null")] == 1
+    assert both[("c3", "dataset_report", "dataset_identifier", "not_null")] == 1
+    assert {r.table_name for r in rows if r.catalog_id == "c2"} == {"observations"}
+    assert {r.table_name for r in rows if r.catalog_id == "c3"} == {"dataset_report"}
+    assert {(r.catalog_id, r.n_rows) for r in rows} == {
+        ("c1", 2), ("c2", 3), ("c3", 1)
+    }
+    assert [r.passed for r in rows] == [int(r.n_violations == 0) for r in rows]
