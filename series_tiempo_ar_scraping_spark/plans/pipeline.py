@@ -4,13 +4,30 @@ The reference interleaves planning and effects (constructing a ``Catalog``
 already downloads, validates and writes — ``base.py:65-73,376-504``); here
 phase 1 is **pure planning** (build normalized frames + a routed task
 frame, zero side effects) and phase 2 executes DataFrame actions. Statuses
-are data (V7); after the K1 write the pass collects its status events
-(V4 series rows, V5 header failures, V6 trims) and V1 error rows once
-each and builds every report from them in plain Python
-(``sinks/reports.py``). Each data-plane result is computed once: the
-scraped table (observations and V6 trims in one frame) and the
-observations are cached, so the event collect reads what K1 already
-computed.
+are data (V7); the pass collects its status events (V4 series rows, V5
+header failures, V6 trims) and V1 error rows once each and builds every
+report from them in plain Python (``sinks/reports.py``). Each data-plane
+result is computed once: the workbook cells, the scraped table
+(observations and V6 trims in one frame) and the observations are
+cached, and the event collect and K1 share those caches.
+
+Three actions depend on nothing the pass still builds, so each runs on
+a background thread from the moment its inputs exist and is joined where
+its rows are first needed: the V1 error collect (after ``plan()``), the
+cells cache fill (after the routing loop, joined before K1) and the
+status-event collect (started just before K1, joined after it). Each
+action alone is a short, latency-bound query that leaves most cores
+idle; overlapped, their fixed planning and scheduling costs run beside
+the bulk reads and K1. The set is fixed, not a pool: these are the only
+actions whose inputs are complete before the main thread needs their
+results, and every other Spark call of the pass stays on the main
+thread, in order. Filling the cells cache before K1 also keeps K1's
+concurrent AQE jobs from both running the extraction and one waiting on
+the other's block lock. The fill is still one task per workbook, so on
+a cluster it spreads over the executors like any other stage. The
+threads are ``InheritableThread``s, so their jobs carry the caller's job
+group; ``run`` joins every one it started, raised or not, and a
+background exception re-raises there.
 
 One pass runs any number of catalogs: their frames are unioned, every
 join keys on ``catalog_id`` (dataset and distribution ids are
@@ -35,10 +52,11 @@ from __future__ import annotations
 import functools
 import json
 import os
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark import StorageLevel
+from pyspark import InheritableThread, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -111,6 +129,55 @@ def read_catalog(path: str, catalog_id: str) -> dict[str, list[tuple]]:
         return read_xlsx_catalog(path, catalog_id)
     with open(path, encoding="utf-8") as fh:
         return normalize_catalog(json.load(fh), catalog_id)
+
+
+class _Overlap:
+    """The pass's background Spark actions. ``start`` runs one on an
+    ``InheritableThread``, which copies the caller's local properties
+    (job group, description) at start, so its jobs are charged where the
+    caller's are; ``result()`` joins it and re-raises what it raised.
+    Leaving the ``with`` block joins every started action; with no
+    exception on the way out, a background one re-raises there."""
+
+    def __init__(self) -> None:
+        self._started: list[_Action] = []
+
+    def start(self, action: Callable[[], Any]) -> _Action:
+        self._started.append(_Action(action))
+        return self._started[-1]
+
+    def __enter__(self) -> _Overlap:
+        return self
+
+    def __exit__(self, exc_type, *_exc) -> None:
+        for action in self._started:
+            action.join()
+        if exc_type is None:
+            for action in self._started:
+                action.result()
+
+
+class _Action:
+    def __init__(self, action: Callable[[], Any]) -> None:
+        self._out = self._exc = None
+
+        def target() -> None:
+            try:
+                self._out = action()
+            except BaseException as exc:  # noqa: BLE001 — re-raised by result()
+                self._exc = exc
+
+        self._thread = InheritableThread(target)
+        self._thread.start()
+
+    def join(self) -> None:
+        self._thread.join()
+
+    def result(self) -> Any:
+        self._thread.join()
+        if self._exc is not None:
+            raise self._exc
+        return self._out
 
 
 @dataclass
@@ -215,8 +282,17 @@ class CatalogPipeline:
     # -- phase 2: execution ------------------------------------------------
 
     def run(self) -> PipelineResult:
+        with _Overlap() as overlap:
+            return self._execute(overlap)
+
+    def _execute(self, overlap: _Overlap) -> PipelineResult:
         # local relations: no metadata frame needs a cache
         frames = self.plan()
+        # V1 needs nothing but the plan: its collect runs beside the rest
+        # of the pass, over the frames as planned (F1 replaces
+        # frames["datasets"] below)
+        planned = dict(frames)
+        meta_rows = overlap.start(lambda: validate_metadata(planned).collect())
         ts_dists = time_series_distributions(
             frames["distributions"], frames["fields"]
         )
@@ -272,6 +348,17 @@ class CatalogPipeline:
                     processor_errors.append((*tup[:3], repr(exc)))
             else:
                 csv_items.append(tup)
+
+        # excel route (S8): extract cells once per distinct workbook (A1),
+        # then scrape every series relationally. Cells key on the resolved
+        # path, not the file name: two catalogs' different workbooks may
+        # share one. The cache fills now, beside the bulk reads and the
+        # scrape planning, so every later reader finds it full.
+        if workbooks:
+            paths = sorted({p for p in workbooks.values() if p})
+            cells = self._cache(extract_cells(self.spark, paths, by_path=True))
+            cells_filled = overlap.start(cells.count)
+
         bulk_groups = [(",", False, csv_items)] + [
             (sep, True, its) for sep, its in sorted(txt_groups.items())
         ]
@@ -292,13 +379,7 @@ class CatalogPipeline:
         # The workbook route's V5/V6 status events (catalog, dataset,
         # distribution, status), collected with the V4 rows below.
         events: list[DataFrame] = []
-        # excel route (S8): extract cells once per distinct workbook (A1),
-        # then scrape every series relationally. Cells key on the resolved
-        # path, not the file name: two catalogs' different workbooks may
-        # share one.
         if workbooks:
-            paths = sorted({p for p in workbooks.values() if p})
-            cells = self._cache(extract_cells(self.spark, paths, by_path=True))
             located = ts_dists.filter(F.col("method") == METHOD_EXCEL).join(
                 F.broadcast(
                     local_frame(
@@ -364,6 +445,24 @@ class CatalogPipeline:
             "n_null_ts",
         )
 
+        # Every reader from here on finds the cells cache full: no two
+        # jobs race to fill it.
+        if workbooks:
+            cells_filled.result()
+        # The report plane: one collect of the status events with the V4
+        # series rows, run beside K1 (both read the scrape and
+        # observation caches); the rest is Python over them, the V1 rows
+        # and the dataset rows of plan()'s local relation (a collect of
+        # it runs no job). Every routed distribution appears in the
+        # report: one without V4 rows is an ERROR.
+        status_rows = overlap.start(
+            functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                events,
+                v4,
+            ).collect
+        )
+
         # K1: every catalog's wide CSVs in one partitionBy text write
         # plus a filesystem rename pass — the job count grows with
         # neither the distribution nor the catalog count; the fileName
@@ -378,17 +477,7 @@ class CatalogPipeline:
             replace=self.replace,
         )
 
-        # The report plane: after K1 has materialized the data plane,
-        # one collect of the status events with the V4 series rows and
-        # one of the V1 error rows; the rest is Python over them and
-        # over the dataset rows of plan()'s local relation (a collect of
-        # it runs no job). Every routed distribution appears in the
-        # report: one without V4 rows is an ERROR.
-        collected = functools.reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            events,
-            v4,
-        ).collect()
+        collected = status_rows.result()
         # V5/V6 events have no series count; a V4 row counts at least 1
         series_rep = [
             reports.SeriesStatus(*r) for r in collected if r.n_obs is not None
@@ -399,7 +488,7 @@ class CatalogPipeline:
         )
         meta_errors = [
             reports.MetadataError(**r.asDict())
-            for r in validate_metadata(frames).collect()
+            for r in meta_rows.result()
         ]
         # V3 reports every dataset; F1 publishes only the valid ones
         ds_report, harvested = reports.dataset_report(

@@ -142,13 +142,18 @@ def _group() -> str:
 def _jobs(spark, fn, *groups: str):
     """``fn()`` and the number of Spark jobs it launched, counted under
     a job group of its own; with ``groups``, also the number of jobs
-    ``fn`` launched under each of them (groups it sets itself). The
-    status tracker learns of jobs through the listener bus, in order, so
-    once it lists a later job of another group it lists every job ``fn``
-    ran."""
+    ``fn`` launched under each of them (groups it sets itself). Every
+    job launched between a start marker job and an end marker job must
+    carry one of these groups: a job ``fn`` launched on a thread that
+    lost the caller's group fails the count. Job ids grow in submission
+    order, and the status tracker learns of jobs through the listener
+    bus, in order, so once it lists the end marker it lists every job
+    ``fn`` ran."""
     sc = spark.sparkContext
-    group, marker = _group(), _group()
+    start, group, marker = _group(), _group(), _group()
     try:
+        sc.setJobGroup(start, "job count start")
+        spark.range(1).collect()
         sc.setJobGroup(group, "job count")
         out = fn()
         sc.setJobGroup(marker, "job count marker")
@@ -156,13 +161,24 @@ def _jobs(spark, fn, *groups: str):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
     deadline = time.monotonic() + 30
-    while not sc.statusTracker().getJobIdsForGroup(marker):
+    while not tracker.getJobIdsForGroup(marker):
         assert time.monotonic() < deadline, "marker job never listed"
         time.sleep(0.05)
-    counts = [
-        len(sc.statusTracker().getJobIdsForGroup(g)) for g in (group, *groups)
-    ]
+    store = sc._jsc.sc().statusStore()
+    counted = {group, *groups}
+    stray = []
+    for jid in range(
+        max(tracker.getJobIdsForGroup(start)) + 1,
+        min(tracker.getJobIdsForGroup(marker)),
+    ):
+        job_group = store.job(jid).jobGroup()
+        name = None if job_group.isEmpty() else job_group.get()
+        if name not in counted:
+            stray.append((jid, name))
+    assert stray == [], "jobs launched outside the counted groups"
+    counts = [len(tracker.getJobIdsForGroup(g)) for g in (group, *groups)]
     return (out, *counts)
 
 
@@ -292,7 +308,10 @@ def test_routing_rows_launch_no_job(spark, tmp_path):
 def test_run_etl_launches_no_job_outside_the_pass(spark, tmp_path, monkeypatch):
     """Every Spark job of ``run_etl`` runs inside ``CatalogPipeline.run``:
     the report workbooks, the EP1 contract report included, are built
-    from the rows the pass returns."""
+    from the rows the pass returns. The pass's background actions (V1
+    collect, cells fill, status-event collect) keep the caller's job
+    group: ``_jobs`` fails on any job of the run outside the counted
+    groups."""
     from series_tiempo_ar_scraping_spark.main import run_etl
 
     sc = spark.sparkContext
