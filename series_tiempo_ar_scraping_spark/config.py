@@ -51,17 +51,6 @@ STATUS_WARNING = "WARNING"
 STATUS_OK = "OK"
 STATUS_ORDER: list[str] = [STATUS_ERROR, STATUS_WARNING, STATUS_OK]
 
-# accrualPeriodicity validation regex (reference
-# ``config/schemas/dataset.json:39-45``): R/P<n>[YMWD] | R/PT<n>[HMS] |
-# eventual.
-ACCRUAL_PERIODICITY_REGEX = (
-    r"^(R/P\d+(\.\d+)?[YMWD]|R/PT\d+(\.\d+)?[HMS]|eventual)$"
-)
-
-# ISO interval 'start/end' for dataset.temporal
-# (``config/schemas/mixed-types.json:35-41``).
-TEMPORAL_REGEX = r"^\d{4}-\d{2}-\d{2}(T[\d:+.Zz-]+)?/\d{4}-\d{2}-\d{2}(T[\d:+.Zz-]+)?$"
-
 # A1-style cell coordinate (``processors.py:223-228``).
 CELL_COORD_REGEX = r"^[A-Za-z]+(\d+)$"
 

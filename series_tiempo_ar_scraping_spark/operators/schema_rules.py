@@ -1,12 +1,12 @@
-"""V1 rule compiler: JSON Schema (draft-04 subset) → Column expressions.
+"""V1 rule compiler: JSON Schema (draft-04 subset) → Python predicates.
 
 The reference validates metadata by running pydatajson's JSON-Schema
 validation (``base.py:434-441``) against the draft-04 documents in
 ``config/schemas/``. This module makes the engine's V1 rules *derive*
 from schema documents instead of being hand-transcribed: each scalar
 property's ``required`` / ``format`` / ``pattern`` / ``minLength``
-constraints compile to one boolean Column per rule, evaluated in a
-single pass by ``validation.apply_rules``.
+constraints compile to one predicate per rule, which
+``validate_metadata`` runs over the metadata rows the driver holds.
 
 Supported subset (everything the catalog schemas use):
 
@@ -24,16 +24,24 @@ they're the normalization relationships themselves (SURVEY §1.3).
 Naming contract: ``{entity}_{column}_required`` for presence,
 ``{entity}_{column}_format`` for value shape — so rule names stay
 stable for report consumers regardless of how the schema evolves.
+Patterns keep Spark ``rlike``'s ``java.util.regex`` semantics
+(``java_search``).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-from functools import reduce
+import re
+from collections.abc import Callable, Mapping, Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from series_tiempo_ar_scraping_spark.config import (
+    CELL_COORD_REGEX,
+    FREQ_ISO_TO_CODE,
+)
+from series_tiempo_ar_scraping_spark.sinks.reports import MetadataError
+from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
 SCHEMA_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -53,74 +61,72 @@ FORMAT_REGEX: dict[str, str] = {
     ),
 }
 
+INTEGER_REGEX = r"^-?\d+$"
+
+# a row (a ``Row`` or a dict, read by column name) → whether it
+# satisfies the rule
+Rule = Callable[[Mapping], bool]
+
+# java.util.regex outside MULTILINE/DOTALL: ``$`` also matches before one
+# final line terminator (``\r\n`` as one, never between its two chars),
+# and ``.`` matches no line terminator
+_JAVA_TOKENS = {
+    "$": r"(?=(?:\r\n|(?<!\r)\n|[\r\x85\u2028\u2029])?\Z)",
+    ".": r"[^\n\r\x85\u2028\u2029]",
+}
+
+
+@functools.cache
+def java_search(pattern: str) -> Callable[[str], bool]:
+    """Spark's ``rlike``: a ``java.util.regex`` match anywhere in the
+    value. ``$`` and ``.`` outside escapes and classes are rewritten to
+    their Java meaning, and ``re.ASCII`` keeps ``\\d``/``\\s``/``\\S``
+    to Java's ASCII classes."""
+    rewritten = re.sub(
+        r"\\.|\[(?:\\.|[^\]\\])*\]|[$.]",
+        lambda m: _JAVA_TOKENS.get(m[0], m[0]),
+        pattern,
+    )
+    search = re.compile(rewritten, re.ASCII).search
+    return lambda v: search(v) is not None
+
 
 def load_schema(entity: str) -> dict:
     with open(os.path.join(SCHEMA_DIR, f"{entity}.json")) as fh:
         return json.load(fh)
 
 
-def _string_branch_ok(col: Column, branch: dict) -> Column:
-    conds: list[Column] = []
-    if "minLength" in branch:
-        conds.append(F.length(col) >= branch["minLength"])
-    if "maxLength" in branch:
-        conds.append(F.length(col) <= branch["maxLength"])
-    if "format" in branch:
-        conds.append(col.rlike(FORMAT_REGEX[branch["format"]]))
-    if "pattern" in branch:
-        conds.append(col.rlike(branch["pattern"]))
-    if "enum" in branch:
-        conds.append(col.isin(*branch["enum"]))
-    if not conds:
-        return F.lit(True)
-    return reduce(lambda a, b: a & b, conds)
+def _string_ok(v: str, branch: dict) -> bool:
+    return (
+        branch.get("minLength", 0) <= len(v) <= branch.get("maxLength", len(v))
+        and ("format" not in branch
+             or java_search(FORMAT_REGEX[branch["format"]])(v))
+        and ("pattern" not in branch or java_search(branch["pattern"])(v))
+        and ("enum" not in branch or v in branch["enum"])
+    )
 
 
-def _branch_ok(col: Column, branch: dict) -> Column | None:
+def _branch_ok(v: str, branch: dict) -> bool:
+    """Whether a present (non-null) value satisfies one ``anyOf``
+    branch."""
     t = branch.get("type")
-    if t == "null":
-        return col.isNull()
-    if t == "array":
-        # Array typing is enforced by the frame schema itself.
-        return F.lit(True)
     if t == "integer":
         # Normalized frames carry metadata scalars as strings.
-        return col.cast("string").rlike(r"^-?\d+$")
-    if t == "string":
-        return _string_branch_ok(col, branch)
-    if t == "object":
-        return None  # handled via path flattening
-    if t is None and _is_constrained(branch):
+        return java_search(INTEGER_REGEX)(v)
+    if t == "string" or (t is None and _is_constrained(branch)):
         # draft-04 allows type-less constrained branches (e.g.
-        # {"format": "uri"}): the string-class keywords still apply.
-        # Falling through to lit(True) here would silently compile the
-        # constraint into an always-pass rule that the coverage
-        # inventory still counts as covered.
-        return _string_branch_ok(col, branch)
-    return F.lit(True)
+        # {"format": "uri"}): the string-class keywords still apply, or
+        # the inventory would count an always-pass rule as covered.
+        return _string_ok(v, branch)
+    # Array typing is enforced by the frame schema itself; an object is
+    # flattened into its own columns.
+    return t not in ("null", "object")
 
 
-def _value_ok(col: Column, prop_schema: dict) -> Column | None:
-    """OK-expression for a present (non-null) value, or None if the
-    schema imposes no value constraint (plain stringOrNull)."""
-    if "anyOf" in prop_schema:
-        branches = [
-            _branch_ok(col, b)
-            for b in prop_schema["anyOf"]
-        ]
-        branches = [b for b in branches if b is not None]
-        if not branches:
-            return None
-        ok = reduce(lambda a, b: a | b, branches)
-        # anyOf of only unconstrained branches compiles to literal True —
-        # treat as no rule.
-        if all(not _is_constrained(b) for b in prop_schema["anyOf"]):
-            return None
-        return ok
-    return (
-        _branch_ok(col, prop_schema)
-        if _is_constrained(prop_schema)
-        else None
+def _value_rule(col: str, branches: list[dict]) -> Rule:
+    """A null value passes; a present one must satisfy some branch."""
+    return lambda row: row[col] is None or any(
+        _branch_ok(row[col], b) for b in branches
     )
 
 
@@ -158,41 +164,13 @@ def _scalar_paths(schema: dict) -> list[tuple[str, dict, bool]]:
             continue
         if ps.get("type") == "object":
             sub_required = set(ps.get("required", []))
-            for sub, sub_ps in ps.get("properties", {}).items():
-                out.append(
-                    (
-                        f"{prop}_{sub}",
-                        sub_ps,
-                        prop in required and sub in sub_required,
-                    )
-                )
+            out.extend(
+                (f"{prop}_{sub}", sub_ps, prop in required and sub in sub_required)
+                for sub, sub_ps in ps.get("properties", {}).items()
+            )
         else:
             out.append((prop, ps, prop in required))
     return out
-
-
-def compile_rules(
-    entity: str, columns: list[str] | None = None
-) -> dict[str, Column]:
-    """Compile ``config/schemas/{entity}.json`` into named rules.
-
-    ``columns`` (when given) restricts rules to properties present in the
-    normalized frame — schema properties the engine doesn't materialize
-    (e.g. ``spatial``) produce no rule rather than a crash."""
-    schema = load_schema(entity)
-    rules: dict[str, Column] = {}
-    for col_name, ps, is_required in _scalar_paths(schema):
-        if columns is not None and col_name not in columns:
-            continue
-        col = F.col(col_name)
-        if is_required:
-            rules[f"{entity}_{col_name}_required"] = col.isNotNull()
-        ok = _value_ok(col, ps)
-        if ok is not None:
-            rules[f"{entity}_{col_name}_{_rule_suffix(ps)}"] = (
-                col.isNull() | ok
-            )
-    return rules
 
 
 def schema_constraint_inventory(entity: str) -> dict[str, set[str]]:
@@ -210,3 +188,82 @@ def schema_constraint_inventory(entity: str) -> dict[str, set[str]]:
         if kinds:
             out[col_name] = kinds
     return out
+
+
+# The engine's rules beyond the schemas: routing needs a source URL
+# (``base.py:123-153``); the field rules guard scraping extensions
+# (``tests/project/mock/test1.json:52-60``): a supported time-index
+# frequency (``processors.py:230-238``) and A1 cell coordinates
+# (``processors.py:223-228``).
+_ENGINE_RULES: dict[str, dict[str, Rule]] = {
+    "distribution": {
+        "distribution_has_source_url": lambda row: (
+            row["downloadURL"] is not None
+            or row["scrapingFileURL"] is not None
+        ),
+    },
+    "field": {
+        "field_time_index_frequency": lambda row: (
+            row["specialType"] != "time_index"
+            or row["specialTypeDetail"] in FREQ_ISO_TO_CODE
+        ),
+        "field_identifier_cell_coord": _value_rule(
+            "scrapingIdentifierCell", [{"pattern": CELL_COORD_REGEX}]
+        ),
+        "field_data_start_cell_coord": _value_rule(
+            "scrapingDataStartCell", [{"pattern": CELL_COORD_REGEX}]
+        ),
+    },
+}
+
+# frame → (schema document, how many of the ids catalog, dataset,
+# distribution its error rows carry)
+_ENTITIES = {
+    "catalogs": ("catalog", 1),
+    "datasets": ("dataset", 2),
+    "distributions": ("distribution", 3),
+    "fields": ("field", 3),
+}
+_IDS = ("catalog_id", "dataset_id", "distribution_id")
+
+
+def entity_rules(frame: str) -> dict[str, Rule]:
+    """Every V1 rule of one normalized frame, in evaluation order: its
+    schema document's rules, then the engine's own. Rules compile over
+    the frame's ``SCHEMAS`` columns: a schema property the engine doesn't
+    materialize (e.g. ``spatial``) produces no rule rather than a crash,
+    and one whose branches are all unconstrained (plain stringOrNull) no
+    value rule."""
+    entity, _n = _ENTITIES[frame]
+    rules: dict[str, Rule] = {}
+    for col, ps, is_required in _scalar_paths(load_schema(entity)):
+        if col not in SCHEMAS[frame].names:
+            continue
+        if is_required:
+            rules[f"{entity}_{col}_required"] = (
+                lambda row, c=col: row[c] is not None
+            )
+        branches = ps.get("anyOf", [ps])
+        if any(_is_constrained(b) for b in branches):
+            rules[f"{entity}_{col}_{_rule_suffix(ps)}"] = _value_rule(
+                col, branches
+            )
+    return {**rules, **_ENGINE_RULES.get(entity, {})}
+
+
+def validate_metadata(rows: Mapping[str, Sequence[Mapping]]) -> list[MetadataError]:
+    """V1 — one error per (row, violated rule) over each frame's rows
+    (``Row``s or dicts; a frame with no rows has no error), in frame,
+    row and rule order. Parity with ``validate_catalog(only_errors=True,
+    fmt='list')`` at ``base.py:434-441``."""
+    errors = []
+    for frame, (entity, n) in _ENTITIES.items():
+        rules = entity_rules(frame)
+        for row in rows.get(frame, ()):
+            ids = [row[c] for c in _IDS[:n]] + [None] * (len(_IDS) - n)
+            errors.extend(
+                MetadataError(entity, *ids, name)
+                for name, ok in rules.items()
+                if not ok(row)
+            )
+    return errors

@@ -4,30 +4,30 @@ The reference interleaves planning and effects (constructing a ``Catalog``
 already downloads, validates and writes — ``base.py:65-73,376-504``); here
 phase 1 is **pure planning** (build normalized frames + a routed task
 frame, zero side effects) and phase 2 executes DataFrame actions. Statuses
-are data (V7); the pass collects its status events (V4 series rows, V5
-header failures, V6 trims) and V1 error rows once each and builds every
-report from them in plain Python (``sinks/reports.py``). Each data-plane
-result is computed once: the workbook cells, the scraped table
-(observations and V6 trims in one frame) and the observations are
+are data (V7); V1 runs in plain Python over the plan's metadata rows
+(``operators/schema_rules.py``), the pass collects its status events
+(V4 series rows, V5 header failures, V6 trims) once, and every report is
+built from those rows in plain Python (``sinks/reports.py``). Each
+data-plane result is computed once: the workbook cells, the scraped
+table (observations and V6 trims in one frame) and the observations are
 cached, and the event collect and K1 share those caches.
 
-Three actions depend on nothing the pass still builds, so each runs on
-a background thread from the moment its inputs exist and is joined where
-its rows are first needed: the V1 error collect (after ``plan()``), the
-cells cache fill (after the routing loop, joined before K1) and the
-status-event collect (started just before K1, joined after it). Each
-action alone is a short, latency-bound query that leaves most cores
-idle; overlapped, their fixed planning and scheduling costs run beside
-the bulk reads and K1. The set is fixed, not a pool: these are the only
-actions whose inputs are complete before the main thread needs their
-results, and every other Spark call of the pass stays on the main
-thread, in order. Filling the cells cache before K1 also keeps K1's
-concurrent AQE jobs from both running the extraction and one waiting on
-the other's block lock. The fill is still one task per workbook, so on
-a cluster it spreads over the executors like any other stage. The
-threads are ``InheritableThread``s, so their jobs carry the caller's job
-group; ``run`` joins every one it started, raised or not, and a
-background exception re-raises there.
+Two actions depend on nothing the pass still builds, so each runs on a
+background thread from the moment its inputs exist and is joined where
+its rows are first needed: the cells cache fill (after the routing loop,
+joined before K1) and the status-event collect (started just before K1,
+joined after it). Each action alone is a short, latency-bound query that
+leaves most cores idle; overlapped, their fixed planning and scheduling
+costs run beside the bulk reads and K1. The set is fixed, not a pool:
+these are the only actions whose inputs are complete before the main
+thread needs their results, and every other Spark call of the pass
+stays on the main thread, in order. Filling the cells cache before K1
+also keeps K1's concurrent AQE jobs from both running the extraction
+and one waiting on the other's block lock. The fill is still one task
+per workbook, so on a cluster it spreads over the executors like any
+other stage. The threads are ``InheritableThread``s, so their jobs
+carry the caller's job group; ``run`` joins every one it started, raised
+or not, and a background exception re-raises there.
 
 One pass runs any number of catalogs: their frames are unioned, every
 join keys on ``catalog_id`` (dataset and distribution ids are
@@ -40,9 +40,9 @@ on the driver (``sources/catalog_json.py``, ``sources/xlsx.py``) and
 handed to Spark once: planning concatenates each entity's rows over the
 pass (under the driver-memory cap) and builds its frame as one Arrow
 local relation (``session.local_frame``). Downstream plans start at a
-``LocalRelation``, no metadata frame is cached, and neither planning nor
-the routing collect (F2 over the plan's rows) runs a Spark job. Every
-other frame the driver builds on the pass (the bulk reader's path
+``LocalRelation``, no metadata frame is cached, and neither planning,
+V1, nor the routing collect (F2 over the plan's rows) runs a Spark job.
+Every other frame the driver builds on the pass (the bulk reader's path
 dimension, the workbook path list and map, the empty observation frame)
 is a local relation too, so none runs a Python-worker job.
 """
@@ -72,9 +72,11 @@ from series_tiempo_ar_scraping_spark.operators.filters import (
     time_series_distributions,
     with_method,
 )
+from series_tiempo_ar_scraping_spark.operators.schema_rules import (
+    validate_metadata,
+)
 from series_tiempo_ar_scraping_spark.operators.validation import (
     trim_warnings,
-    validate_metadata,
     validate_observations,
 )
 from series_tiempo_ar_scraping_spark.session import local_frame
@@ -288,11 +290,9 @@ class CatalogPipeline:
     def _execute(self, overlap: _Overlap) -> PipelineResult:
         # local relations: no metadata frame needs a cache
         frames = self.plan()
-        # V1 needs nothing but the plan: its collect runs beside the rest
-        # of the pass, over the frames as planned (F1 replaces
-        # frames["datasets"] below)
-        planned = dict(frames)
-        meta_rows = overlap.start(lambda: validate_metadata(planned).collect())
+        # V1 over the planned rows: a local relation's collect runs no job
+        planned_rows = {k: df.collect() for k, df in frames.items()}
+        meta_errors = validate_metadata(planned_rows)
         ts_dists = time_series_distributions(
             frames["distributions"], frames["fields"]
         )
@@ -451,10 +451,9 @@ class CatalogPipeline:
             cells_filled.result()
         # The report plane: one collect of the status events with the V4
         # series rows, run beside K1 (both read the scrape and
-        # observation caches); the rest is Python over them, the V1 rows
-        # and the dataset rows of plan()'s local relation (a collect of
-        # it runs no job). Every routed distribution appears in the
-        # report: one without V4 rows is an ERROR.
+        # observation caches); the rest is Python over them, the V1
+        # errors and the planned dataset rows. Every routed distribution
+        # appears in the report: one without V4 rows is an ERROR.
         status_rows = overlap.start(
             functools.reduce(
                 lambda a, b: a.unionByName(b, allowMissingColumns=True),
@@ -486,13 +485,9 @@ class CatalogPipeline:
             [r[:4] for r in collected if r.n_obs is None]
             + reports.series_events([tuple(r[:3]) for r in routed], series_rep)
         )
-        meta_errors = [
-            reports.MetadataError(**r.asDict())
-            for r in meta_rows.result()
-        ]
         # V3 reports every dataset; F1 publishes only the valid ones
         ds_report, harvested = reports.dataset_report(
-            frames["datasets"].collect(), meta_errors
+            planned_rows["datasets"], meta_errors
         )
         frames["datasets"] = local_frame(
             self.spark, harvested, frames["datasets"].schema

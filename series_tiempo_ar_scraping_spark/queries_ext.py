@@ -13,13 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from series_tiempo_ar_scraping_spark.operators.validation import (
-    apply_rules,
-    field_rules,
+from series_tiempo_ar_scraping_spark.operators.schema_rules import (
+    validate_metadata,
 )
 from series_tiempo_ar_scraping_spark.functions.scalars import freq_iso_to_code
 from series_tiempo_ar_scraping_spark.registry import register
-from series_tiempo_ar_scraping_spark.session import load_table
+from series_tiempo_ar_scraping_spark.session import load_table, local_frame
+from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
 # ---------------------------------------------------------------------------
 # Pivot / unpivot (J1 presentation + inverse)
@@ -123,9 +123,11 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Metadata-rule validation on literal fixtures (V1 in the oracle gate)
 # ---------------------------------------------------------------------------
 
+_FIELD_COLUMNS = (
+    "distribution_id", "field_id", "title", "type", "specialType",
+    "specialTypeDetail", "scrapingIdentifierCell", "scrapingDataStartCell",
+)
 _FIELD_FIXTURE = [
-    # (distribution_id, field_id, title, type, specialType, specialTypeDetail,
-    #  scrapingIdentifierCell, scrapingDataStartCell)
     ("d1", "f1", "serie_a", "number", None, None, "B8", "B9"),
     ("d1", "f2", "indice_tiempo", "date", "time_index", "R/P3M", None, "A9"),
     ("d2", "f3", "", "number", None, None, "C8", "C9"),  # empty title
@@ -176,16 +178,19 @@ _FIELD_FIXTURE_SQL = ", ".join(
 )
 def meta_field_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1 — rule-driven metadata validation (pydatajson JSON-Schema checks
-    recast as expressions, ``base.py:434-441``) exercised through the
-    engine's actual ``apply_rules``/``field_rules`` machinery on a literal
-    fixture containing each violation class."""
-    df = spark.createDataFrame(
-        _FIELD_FIXTURE,
-        "distribution_id string, field_id string, title string, type string,"
-        " specialType string, specialTypeDetail string,"
-        " scrapingIdentifierCell string, scrapingDataStartCell string",
+    recast as Python predicates, ``base.py:434-441``) exercised through
+    the engine's actual ``validate_metadata`` on a literal fixture of
+    field rows (other columns null) containing each violation class."""
+    rows = [
+        {**dict.fromkeys(SCHEMAS["fields"].names), **dict(zip(_FIELD_COLUMNS, r))}
+        for r in _FIELD_FIXTURE
+    ]
+    return local_frame(
+        spark,
+        [(e.distribution_id, e.rule, "ERROR")
+         for e in validate_metadata({"fields": rows})],
+        "distribution_id string, rule string, status string",
     )
-    return apply_rules(df, field_rules(), ["distribution_id"])
 
 
 _FREQ_FIXTURE = ["R/P1Y", "R/P6M", "R/P3M", "R/P1M", "R/P1D", "R/P2M", "eventual"]

@@ -2,7 +2,8 @@
 
 ``CatalogPipeline.plan`` builds each metadata frame once, from the
 rows the driver parsed, as a ``LocalRelation``, and neither planning,
-the routing rows (F2) nor the K2 write over its frames runs a Spark job;
+V1 over the planned rows, the routing rows (F2) nor the K2 write over
+its frames runs a Spark job;
 the bulk reader's path dimension and the workbook path list are local
 relations too, and ``run_etl`` runs no job outside the pass. Arrow
 conversion can fall back to a list-built (Python-worker) frame without a
@@ -203,6 +204,31 @@ def test_plan_and_k2_write_launch_no_job(spark, tmp_path):
         assert len(json.load(fh)["dataset"]) == 3
 
 
+def test_plan_and_v1_launch_no_job(spark, tmp_path):
+    """V1 is Python over the rows of the plan's local relations:
+    planning a JSON and an XLSX catalog, collecting its metadata rows
+    and validating them runs no Spark job, and the broken fixture
+    dataset's error shows in both catalogs."""
+    from series_tiempo_ar_scraping_spark.operators.schema_rules import (
+        validate_metadata,
+    )
+
+    pipe = _pipeline(spark, {"acme": CATALOG, "xl": CATALOG_XLSX}, tmp_path)
+
+    def plan_and_validate():
+        frames = pipe.plan()
+        return validate_metadata({k: df.collect() for k, df in frames.items()})
+
+    errors, jobs = _jobs(spark, plan_and_validate)
+    assert jobs == 0
+    assert {
+        (e.catalog_id, e.dataset_id, e.rule)
+        for e in errors
+        if e.rule == "dataset_accrualPeriodicity_format"
+    } == {(c, "ds-broken", "dataset_accrualPeriodicity_format")
+          for c in ("acme", "xl")}
+
+
 def test_k2_k3_writes_after_a_run_launch_no_job(spark, tmp_path):
     """After a pass, every frame K2/K3 publish is still a local
     relation (the F1-harvested datasets included), so rewriting the
@@ -308,10 +334,10 @@ def test_routing_rows_launch_no_job(spark, tmp_path):
 def test_run_etl_launches_no_job_outside_the_pass(spark, tmp_path, monkeypatch):
     """Every Spark job of ``run_etl`` runs inside ``CatalogPipeline.run``:
     the report workbooks, the EP1 contract report included, are built
-    from the rows the pass returns. The pass's background actions (V1
-    collect, cells fill, status-event collect) keep the caller's job
-    group: ``_jobs`` fails on any job of the run outside the counted
-    groups."""
+    from the rows the pass returns, and V1 is Python over the plan's
+    rows. The pass's background actions (cells fill, status-event
+    collect) keep the caller's job group: ``_jobs`` fails on any job of
+    the run outside the counted groups."""
     from series_tiempo_ar_scraping_spark.main import run_etl
 
     sc = spark.sparkContext

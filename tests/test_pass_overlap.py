@@ -1,8 +1,7 @@
 """The pass's background Spark actions (``plans/pipeline.py``).
 
-``CatalogPipeline.run`` runs three actions beside the rest of the pass:
-the V1 metadata-error collect, the workbook cells cache fill and the
-status-event collect. An exception raised by one re-raises in ``run``,
+``CatalogPipeline.run`` runs two actions beside the rest of the pass:
+the workbook cells cache fill and the status-event collect. An exception raised by one re-raises in ``run``,
 ``run_etl`` turns it into an ``error`` entry per catalog like any other
 failed pass, and no thread the pass started is alive once ``run``
 returns or raises, even when the main thread raised first. K1 reads a
@@ -52,16 +51,29 @@ def _raise(exc: BaseException):
     raise exc
 
 
+class _StatusRows:
+    """Stands in for the V4 frame, so the status events (V4 rows plus
+    the V5/V6 events unioned onto them) collect through ``collect``."""
+
+    def __init__(self, collect):
+        self.collect = collect
+
+    def select(self, *_cols):
+        return self
+
+    def unionByName(self, _other, **_kw):
+        return self
+
+
 def test_background_error_raises_in_run_and_run_etl(spark, tmp_path, monkeypatch):
-    """The V1 collect raising on its thread raises that same exception in
-    ``run``; ``run_etl`` gives every catalog of the pass an ``error``
-    entry; no thread started by either pass is left alive."""
-    boom = Boom("V1 failed")
-
-    def failing(frames):
-        raise boom
-
-    monkeypatch.setattr(P, "validate_metadata", failing)
+    """The status-event collect raising on its thread raises that same
+    exception in ``run``; ``run_etl`` gives every catalog of the pass an
+    ``error`` entry; no thread started by either pass is left alive."""
+    boom = Boom("status collect failed")
+    monkeypatch.setattr(
+        P, "validate_observations",
+        lambda obs: _StatusRows(lambda: _raise(boom)),
+    )
     before = set(threading.enumerate())
     with pytest.raises(Boom) as raised:
         _run_and_release(_pipeline(spark, tmp_path))
@@ -95,26 +107,27 @@ def test_cells_fill_error_raises_in_run(spark, tmp_path, monkeypatch):
 
 
 def test_main_thread_error_waits_for_running_actions(spark, tmp_path, monkeypatch):
-    """K1 raising on the main thread while the V1 collect still runs:
-    ``run`` raises K1's exception only after that collect has finished,
-    and leaves no thread behind."""
+    """K1 raising on the main thread while the status-event collect
+    still runs: ``run`` raises K1's exception only after that collect has
+    finished, and leaves no thread behind."""
     boom = Boom("K1 failed")
     release = threading.Event()
     finished: list[str] = []
 
-    class SlowRows:
-        def collect(self):
-            release.wait(30)
-            time.sleep(0.5)
-            finished.append(threading.current_thread().name)
-            return []
+    def slow_collect():
+        release.wait(30)
+        time.sleep(0.5)
+        finished.append(threading.current_thread().name)
+        return []
 
     def failing_k1(*args, **kwargs):
         assert not finished  # the collect is still running
         release.set()
         raise boom
 
-    monkeypatch.setattr(P, "validate_metadata", lambda frames: SlowRows())
+    monkeypatch.setattr(
+        P, "validate_observations", lambda obs: _StatusRows(slow_collect)
+    )
     monkeypatch.setattr(P, "write_wide_csvs_bulk", failing_k1)
     before = set(threading.enumerate())
     with pytest.raises(Boom) as raised:

@@ -1,25 +1,32 @@
 """V1 schema-driven validation: every constraint declared in
-``config/schemas/*.json`` must compile to a rule, and each rule must
-actually fire on a violating row (negative fixtures)."""
+``config/schemas/*.json`` must compile to a rule, each rule must
+actually fire on a violating row (negative fixtures), and the Python
+patterns must keep the verdicts of the Spark ``rlike`` rules they
+replace (Java regex semantics)."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from series_tiempo_ar_scraping_spark.config import CELL_COORD_REGEX
 from series_tiempo_ar_scraping_spark.operators.schema_rules import (
-    compile_rules,
+    FORMAT_REGEX,
+    INTEGER_REGEX,
+    entity_rules,
+    java_search,
+    load_schema,
     schema_constraint_inventory,
+    validate_metadata,
 )
 from series_tiempo_ar_scraping_spark.operators.validation import (
-    apply_rules,
-    catalog_rules,
-    dataset_rules,
-    distribution_rules,
-    field_rules,
     validate_observations,
 )
 from series_tiempo_ar_scraping_spark.registry import load_queries
+from series_tiempo_ar_scraping_spark.session import local_frame
+from series_tiempo_ar_scraping_spark.sinks.reports import MetadataError
 from series_tiempo_ar_scraping_spark.sources.catalog_json import SCHEMAS
 
 ENTITY_COLUMNS = {
@@ -31,10 +38,10 @@ ENTITY_COLUMNS = {
 @pytest.mark.parametrize(
     "entity", ["catalog", "dataset", "distribution", "field"]
 )
-def test_every_schema_constraint_has_a_rule(spark, entity):
+def test_every_schema_constraint_has_a_rule(entity):
     """Walk the schema document: each required/format/pattern constraint
     on a materialized column must map to a compiled rule."""
-    rules = compile_rules(entity, ENTITY_COLUMNS[entity])
+    rules = entity_rules(f"{entity}s")
     inventory = schema_constraint_inventory(entity)
     assert inventory, f"{entity} schema declares no constraints?"
     for col, kinds in inventory.items():
@@ -46,23 +53,23 @@ def test_every_schema_constraint_has_a_rule(spark, entity):
             )
 
 
-def test_rule_names_stable(spark):
+def test_rule_names_stable():
     """Report consumers depend on these names (test_pipeline asserts
     dataset_accrualPeriodicity_format on the broken fixture)."""
-    assert "dataset_accrualPeriodicity_format" in dataset_rules()
-    assert "dataset_accrualPeriodicity_required" in dataset_rules()
-    assert "catalog_publisher_mbox_format" in catalog_rules()
-    assert "distribution_has_source_url" in distribution_rules()
+    assert "dataset_accrualPeriodicity_format" in entity_rules("datasets")
+    assert "dataset_accrualPeriodicity_required" in entity_rules("datasets")
+    assert "catalog_publisher_mbox_format" in entity_rules("catalogs")
+    assert "distribution_has_source_url" in entity_rules("distributions")
 
 
-def test_compiled_rule_names_in_order(spark):
+def test_compiled_rule_names_in_order():
     """Rules compile over ``catalog_json.SCHEMAS``' columns: a schema
     property without a column (distribution ``modified``) yields no rule,
     and the ids, ``source`` and the scraping keys get none."""
     def names(prefix, cols):
         return [f"{prefix}_{c}" for c in cols.split()]
 
-    assert list(catalog_rules()) == names("catalog", (
+    assert list(entity_rules("catalogs")) == names("catalog", (
         "title_required title_format description_required "
         "description_format publisher_name_required publisher_name_format "
         "publisher_mbox_required publisher_mbox_format "
@@ -70,7 +77,7 @@ def test_compiled_rule_names_in_order(spark):
         "issued_format modified_format license_format homepage_format "
         "rights_format"
     ))
-    assert list(dataset_rules()) == names("dataset", (
+    assert list(entity_rules("datasets")) == names("dataset", (
         "title_required title_format description_required "
         "description_format publisher_name_required publisher_name_format "
         "publisher_mbox_format accrualPeriodicity_required "
@@ -78,36 +85,88 @@ def test_compiled_rule_names_in_order(spark):
         "modified_format temporal_format landingPage_format "
         "superTheme_required"
     ))
-    assert list(distribution_rules()) == names("distribution", (
+    assert list(entity_rules("distributions")) == names("distribution", (
         "title_required title_format issued_required issued_format "
         "downloadURL_format accessURL_format byteSize_format has_source_url"
     ))
-    assert list(field_rules()) == names("field", (
+    assert list(entity_rules("fields")) == names("field", (
         "title_required title_format type_enum time_index_frequency "
         "identifier_cell_coord data_start_cell_coord"
     ))
 
 
-def _fired(spark, df_spec, rules):
-    df = spark.createDataFrame(*df_spec)
-    errs = apply_rules(df, rules, ["rid"])
-    return {r.rule for r in errs.collect()}
+# the id column ``rid`` stands for: the one each frame's errors end with
+_RID = {
+    "catalogs": "catalog_id",
+    "datasets": "dataset_id",
+    "distributions": "distribution_id",
+    "fields": "distribution_id",
+}
 
 
-CATALOG_SCHEMA_STR = (
-    "rid string, title string, description string, publisher_name string,"
-    " publisher_mbox string, superThemeTaxonomy string, issued string,"
-    " modified string, license string, homepage string, rights string"
+def _rows(frame: str, cols: str, values: list[tuple]) -> list[dict]:
+    """Rows of ``frame`` holding ``values`` under ``cols``; every other
+    column is null."""
+    names = [_RID[frame] if c == "rid" else c for c in cols.split(", ")]
+    return [
+        {**dict.fromkeys(SCHEMAS[frame].names), **dict(zip(names, v))}
+        for v in values
+    ]
+
+
+def _errors(frame: str, cols: str, values: list[tuple]) -> set[tuple[str, str]]:
+    """(rid, rule) of every V1 error over the rows."""
+    return {
+        (getattr(e, _RID[frame]), e.rule)
+        for e in validate_metadata({frame: _rows(frame, cols, values)})
+    }
+
+
+def _fired(frame: str, cols: str, values: list[tuple]) -> set[str]:
+    return {rule for _rid, rule in _errors(frame, cols, values)}
+
+
+def test_errors_in_entity_row_and_rule_order():
+    """One error per (row, violated rule): catalogs, datasets,
+    distributions, fields; within one, row order, then rule order. The
+    error names the ids its entity carries."""
+    catalog = _rows("catalogs", "title", [(None,)])
+    for r in catalog:
+        r.update(catalog_id="c", publisher_name="p", publisher_mbox="a@b.cl",
+                 description="d", superThemeTaxonomy="http://x")
+    datasets = _rows("datasets", "title, issued", [("", "x"), ("t", None)])
+    for i, r in enumerate(datasets):
+        r.update(catalog_id="c", dataset_id=f"ds{i}", description="d",
+                 publisher_name="p", accrualPeriodicity="R/P1Y",
+                 superTheme=["ECON"])
+    fields = _rows("fields", "rid, type, scrapingDataStartCell",
+                   [("d1", "float", "9Z")])
+    for r in fields:
+        r.update(catalog_id="c", dataset_id="ds0", title="t")
+    errors = validate_metadata(
+        {"fields": fields, "datasets": datasets, "catalogs": catalog}
+    )
+    assert errors == [
+        MetadataError("catalog", "c", None, None, "catalog_title_required"),
+        MetadataError("dataset", "c", "ds0", None, "dataset_title_format"),
+        MetadataError("dataset", "c", "ds0", None, "dataset_issued_format"),
+        MetadataError("dataset", "c", "ds1", None, "dataset_issued_required"),
+        MetadataError("field", "c", "ds0", "d1", "field_type_enum"),
+        MetadataError("field", "c", "ds0", "d1", "field_data_start_cell_coord"),
+    ]
+
+
+CATALOG_COLS = (
+    "rid, title, description, publisher_name, publisher_mbox,"
+    " superThemeTaxonomy, issued, modified, license, homepage, rights"
 )
 
 
-def test_catalog_negative_fixtures(spark):
-    bad = (
-        [("x", "", "d", None, "not-an-email", "ftp:/bad", "13-01-2020",
-          None, "", "nota url", None)],
-        CATALOG_SCHEMA_STR,
-    )
-    fired = _fired(spark, bad, catalog_rules())
+def test_catalog_negative_fixtures():
+    fired = _fired("catalogs", CATALOG_COLS, [
+        ("x", "", "d", None, "not-an-email", "ftp:/bad", "13-01-2020",
+         None, "", "nota url", None),
+    ])
     assert "catalog_title_format" in fired  # minLength 1
     assert "catalog_publisher_name_required" in fired
     assert "catalog_publisher_mbox_format" in fired
@@ -117,31 +176,26 @@ def test_catalog_negative_fixtures(spark):
     assert "catalog_homepage_format" in fired
 
 
-def test_catalog_positive_fixture(spark):
-    good = (
-        [("x", "Título", "desc", "ACME", "a@b.cl",
-          "http://datos.gob.ar/superThemeTaxonomy.json", "2021-03-01",
-          "2024-06-30T10:00:00Z", "CC-BY", "https://acme.test", "open")],
-        CATALOG_SCHEMA_STR,
-    )
-    assert _fired(spark, good, catalog_rules()) == set()
+def test_catalog_positive_fixture():
+    assert _fired("catalogs", CATALOG_COLS, [
+        ("x", "Título", "desc", "ACME", "a@b.cl",
+         "http://datos.gob.ar/superThemeTaxonomy.json", "2021-03-01",
+         "2024-06-30T10:00:00Z", "CC-BY", "https://acme.test", "open"),
+    ]) == set()
 
 
-DATASET_SCHEMA_STR = (
-    "rid string, title string, description string, publisher_name string,"
-    " publisher_mbox string, accrualPeriodicity string, issued string,"
-    " modified string, temporal string, landingPage string,"
-    " superTheme array<string>, theme array<string>, keyword array<string>"
+DATASET_COLS = (
+    "rid, title, description, publisher_name, publisher_mbox,"
+    " accrualPeriodicity, issued, modified, temporal, landingPage,"
+    " superTheme, theme, keyword"
 )
 
 
-def test_dataset_negative_fixtures(spark):
-    bad = (
-        [("x", None, "d", "ACME", "bad@", "weekly-ish", None, "soon",
-          "2019-01-01..2020-01-01", "gopher:x", None, None, None)],
-        DATASET_SCHEMA_STR,
-    )
-    fired = _fired(spark, bad, dataset_rules())
+def test_dataset_negative_fixtures():
+    fired = _fired("datasets", DATASET_COLS, [
+        ("x", None, "d", "ACME", "bad@", "weekly-ish", None, "soon",
+         "2019-01-01..2020-01-01", "gopher:x", None, None, None),
+    ])
     assert "dataset_title_required" in fired
     assert "dataset_publisher_mbox_format" in fired
     assert "dataset_accrualPeriodicity_format" in fired
@@ -152,45 +206,32 @@ def test_dataset_negative_fixtures(spark):
     assert "dataset_superTheme_required" in fired
 
 
-def test_dataset_accrual_pattern_vocabulary(spark):
+def test_dataset_accrual_pattern_vocabulary():
     """The schema's three accrualPeriodicity alternations, exercised the
     way the reference's regex admits them (R/P…, R/PT…, eventual)."""
-    rows = [
+    values = [
         ("ok1", "R/P1Y"), ("ok2", "R/P0.5M"), ("ok3", "R/PT1H"),
         ("ok4", "eventual"), ("bad1", "P1Y"), ("bad2", "R/X"),
         ("bad3", "R/PT1Y"),
     ]
-    df_spec = (
-        [(rid, "t", "d", "p", None, v, "2020-01-01", None, None, None,
-          ["ECON"], None, None) for rid, v in rows],
-        DATASET_SCHEMA_STR.replace("rid string, title", "rid string, title"),
-    )
-    fired = {
-        r.rid
-        for r in apply_rules(
-            spark.createDataFrame(*df_spec),
-            {"dataset_accrualPeriodicity_format":
-                dataset_rules()["dataset_accrualPeriodicity_format"]},
-            ["rid"],
-        ).collect()
-    }
-    assert fired == {"bad1", "bad2", "bad3"}
+    errors = _errors("datasets", "rid, accrualPeriodicity", values)
+    assert {
+        rid for rid, rule in errors
+        if rule == "dataset_accrualPeriodicity_format"
+    } == {"bad1", "bad2", "bad3"}
 
 
-DIST_SCHEMA_STR = (
-    "rid string, title string, description string, fileName string,"
-    " format string, downloadURL string, accessURL string, issued string,"
-    " byteSize string, scrapingFileURL string"
+DIST_COLS = (
+    "rid, title, description, fileName, format, downloadURL, accessURL,"
+    " issued, byteSize, scrapingFileURL"
 )
 
 
-def test_distribution_negative_fixtures(spark):
-    bad = (
-        [("x", "", "d", "f.csv", "CSV", "not a url", None, "yesterday",
-          "12MB", None)],
-        DIST_SCHEMA_STR,
-    )
-    fired = _fired(spark, bad, distribution_rules())
+def test_distribution_negative_fixtures():
+    fired = _fired("distributions", DIST_COLS, [
+        ("x", "", "d", "f.csv", "CSV", "not a url", None, "yesterday",
+         "12MB", None),
+    ])
     assert "distribution_title_format" in fired
     assert "distribution_downloadURL_format" in fired
     assert "distribution_issued_format" in fired
@@ -198,74 +239,127 @@ def test_distribution_negative_fixtures(spark):
     assert "distribution_has_source_url" not in fired  # downloadURL present
 
 
-def test_distribution_positive_fixture(spark):
-    good = (
-        [("x", "Serie", None, "s.csv", "CSV",
-          "https://acme.test/s.csv", "http://acme.test/land", "2020-06-01",
-          "20480", None)],
-        DIST_SCHEMA_STR,
-    )
-    assert _fired(spark, good, distribution_rules()) == set()
+def test_distribution_positive_fixture():
+    assert _fired("distributions", DIST_COLS, [
+        ("x", "Serie", None, "s.csv", "CSV",
+         "https://acme.test/s.csv", "http://acme.test/land", "2020-06-01",
+         "20480", None),
+    ]) == set()
 
 
-def test_byte_size_empty_string_allowed(spark):
-    ok = (
-        [("x", "Serie", None, None, None, "https://a.b/c", None,
-          "2020-06-01", "", "http://a.b/wb.xlsx")],
-        DIST_SCHEMA_STR,
-    )
-    fired = _fired(spark, ok, distribution_rules())
+def test_byte_size_empty_string_allowed():
+    fired = _fired("distributions", DIST_COLS, [
+        ("x", "Serie", None, None, None, "https://a.b/c", None,
+         "2020-06-01", "", "http://a.b/wb.xlsx"),
+    ])
     assert "distribution_byteSize_format" not in fired
 
 
-FIELD_SCHEMA_STR = (
-    "rid string, title string, type string, description string,"
-    " specialType string, specialTypeDetail string,"
-    " scrapingIdentifierCell string, scrapingDataStartCell string"
+FIELD_COLS = (
+    "rid, title, type, description, specialType, specialTypeDetail,"
+    " scrapingIdentifierCell, scrapingDataStartCell"
 )
 
 
-def test_field_negative_fixtures(spark):
-    """Field BASE rules now compile from config/schemas/field.json
-    (title required+minLength, type enum); the scraping-extension rules
-    stay explicit. One violating row per rule."""
-    from series_tiempo_ar_scraping_spark.operators.validation import (
-        field_rules,
-    )
-
-    bad = (
-        [
-            ("null_title", None, "number", None, None, None, None, None),
-            ("empty_title", "", "number", None, None, None, None, None),
-            ("bad_type", "s", "float", None, None, None, None, None),
-            ("bad_freq", "t", "date", None, "time_index", "R/P2M", None, None),
-            ("bad_coord", "u", "number", None, None, None, "8B", "Z0x"),
-        ],
-        FIELD_SCHEMA_STR,
-    )
-    df = spark.createDataFrame(*bad)
-    errs = apply_rules(df, field_rules(), ["rid"])
-    fired = {(r.rid, r.rule) for r in errs.collect()}
+def test_field_negative_fixtures():
+    """Field BASE rules compile from config/schemas/field.json (title
+    required+minLength, type enum); the scraping-extension rules stay
+    explicit. One violating row per rule."""
+    fired = _errors("fields", FIELD_COLS, [
+        ("null_title", None, "number", None, None, None, None, None),
+        ("empty_title", "", "number", None, None, None, None, None),
+        ("bad_type", "s", "float", None, None, None, None, None),
+        ("bad_freq", "t", "date", None, "time_index", "R/P2M", None, None),
+        ("no_freq", "t", "date", None, "time_index", None, None, None),
+        ("bad_coord", "u", "number", None, None, None, "8B", "Z0x"),
+    ])
     assert ("null_title", "field_title_required") in fired
     assert ("empty_title", "field_title_format") in fired
     assert ("empty_title", "field_title_required") not in fired
     assert ("bad_type", "field_type_enum") in fired
     assert ("bad_freq", "field_time_index_frequency") in fired
+    # a NULL detail is no supported frequency: the rule is violated
+    # unless it holds, as a NULL verdict was under Spark
+    assert ("no_freq", "field_time_index_frequency") in fired
     assert ("bad_coord", "field_identifier_cell_coord") in fired
     assert ("bad_coord", "field_data_start_cell_coord") in fired
 
 
-def test_field_positive_fixture(spark):
-    from series_tiempo_ar_scraping_spark.operators.validation import (
-        field_rules,
-    )
+def test_field_positive_fixture():
+    assert _fired("fields", FIELD_COLS, [
+        ("x", "serie_a", "number", "desc", "time_index", "R/P3M", "B8", "B9"),
+    ]) == set()
 
-    good = (
-        [("x", "serie_a", "number", "desc", "time_index", "R/P3M", "B8", "B9")],
-        FIELD_SCHEMA_STR,
-    )
-    df = spark.createDataFrame(*good)
-    assert {r.rule for r in apply_rules(df, field_rules(), ["rid"]).collect()} == set()
+
+# Strings where java.util.regex and Python's re part ways: a final line
+# terminator (Java's ``$`` matches before \r, \r\n, \x85, \u2028 and
+# \u2029 as well as \n; ``.`` matches none of them), non-ASCII digits
+# (Java's ``\d`` is ASCII) and a non-ASCII space (Java's ``\s`` is ASCII).
+_BASES = [
+    "2020-01-01", "2024-06-30T10:00:00Z", "2024-06-30T10:00:00.5+03:00",
+    "2019-01-01/2020-01-01T00:00:00Z", "a@b.cl", "http://a.b/c",
+    "R/P1Y", "R/PT1H", "R/P0.5M", "eventual", "12", "-3", "B8", "ab12",
+]
+_EDGES = ["\r", "\r\n", "\n", "\x85", "\u2028", "\u2029", "\r\r", "\n\n",
+          "\n\r", "\r\n\n"]
+EDGE_STRINGS = [
+    *[b + e for b in _BASES for e in _EDGES],
+    *[e + b for b in ("2020-01-01", "B8") for e in _EDGES],
+    "2020-01-01\rx", "\uff12\uff10\uff12\uff10-01-01", "\u0661\u0662",
+    "B\uff18", "R/P\u0661Y", "A\u0668", "2020-\u0660\u0661-01",
+    "a\xa0@b.c", "a@b\xa0.c", "http://a\xa0b", "\xa0", "", "x",
+    "2024-06-30T10:00:00\u2028Z", "a.b\n@c.d", "http://a\u2028b",
+    "R/P1\rY", "R/P1Y|", "R/P|",
+]
+
+
+def _schema_patterns() -> list[str]:
+    out = []
+
+    def walk(node):
+        if isinstance(node, dict):
+            if isinstance(node.get("pattern"), str):
+                out.append(node["pattern"])
+            for v in node.values():
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+
+    for entity in ("catalog", "dataset", "distribution", "field"):
+        walk(load_schema(entity))
+    return out
+
+
+def test_python_patterns_keep_spark_rlike_verdicts(spark):
+    """No V1 rule calls ``rlike`` any more: for every pattern V1 uses,
+    ``java_search`` must give Spark's ``rlike`` verdict on every edge
+    string, read from one local frame."""
+    patterns = [
+        *FORMAT_REGEX.values(), *_schema_patterns(), INTEGER_REGEX,
+        CELL_COORD_REGEX,
+    ]
+    assert len(_schema_patterns()) == 4
+    df = local_frame(spark, [(s,) for s in EDGE_STRINGS], "v string")
+    got = df.select(
+        "v", *[F.col("v").rlike(p).alias(f"p{i}") for i, p in enumerate(patterns)]
+    ).collect()
+    assert [r.v for r in got] == EDGE_STRINGS
+    mismatches = [
+        (p, r.v, r[i + 1])
+        for r in got
+        for i, p in enumerate(patterns)
+        if java_search(p)(r.v) != r[i + 1]
+    ]
+    assert mismatches == []
+    # the edges are real: plain Python ``re`` would disagree on them
+    plain = [
+        (p, r.v)
+        for r in got
+        for i, p in enumerate(patterns)
+        if (re.search(p, r.v) is not None) != r[i + 1]
+    ]
+    assert len(plain) > 20
 
 
 def test_expectation_engine_detects_violations(spark):
